@@ -8,7 +8,8 @@ Run from the root of a checkout:
 Workloads: ingest, analyst, curation (see perfbench/README.md).
 The first run in a checkout builds the engine and the benchmark with sbt
 into the checkout's own target directories; later runs reuse the build
-while the sources are unchanged.
+while the sources and the jars on its classpath are unchanged. Every run
+measures afresh.
 
 --trace 0 prints the end-to-end metrics; --trace 1 runs the workload once
 untraced and once traced, prints the per-layer metrics and the tracing
@@ -85,7 +86,10 @@ class BenchError(Exception):
 
 # ---------------------------------------------------------------- build
 
-def source_stamp():
+def source_stamp(cp=""):
+    """Hash of the sources, build files and pins, and of the size and
+    modification time of every jar on the classpath `cp` and every jar
+    beside them (the engine's build takes whole jar directories)."""
     h = hashlib.sha256()
     roots = [os.path.join(ROOT, "src", "main"), os.path.join(BENCH, "src")]
     files = [os.path.join(ROOT, "build.sbt"), os.path.join(ROOT, "project", "build.properties"),
@@ -100,20 +104,29 @@ def source_stamp():
         h.update(os.path.relpath(f, ROOT).encode())
         with open(f, "rb") as fh:
             h.update(hashlib.sha256(fh.read()).digest())
+    jar_dirs = sorted({os.path.dirname(e) for e in cp.split(os.pathsep) if e.endswith(".jar")})
+    for d in jar_dirs:
+        h.update(d.encode())
+        for name in sorted(os.listdir(d)) if os.path.isdir(d) else []:
+            p = os.path.join(d, name)
+            if name.endswith(".jar") and os.path.isfile(p):
+                st = os.stat(p)
+                h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()
 
 
 def build():
     """Compile engine + benchmark with sbt and generate the query tables;
-    both are cached in .bench_build until a source or the pins change."""
+    both are cached in .bench_build until a source, the pins or a jar on
+    the classpath change."""
     cp_file = os.path.join(BUILD, "classpath.txt")
     stamp_file = os.path.join(BUILD, "stamp.txt")
-    stamp = source_stamp()
     if os.path.exists(cp_file) and os.path.exists(stamp_file):
+        with open(cp_file) as g:
+            cp = g.read().strip()
         with open(stamp_file) as f:
-            if f.read().strip() == stamp:
-                with open(cp_file) as g:
-                    return g.read().strip()
+            if f.read().strip() == source_stamp(cp):
+                return cp
     os.makedirs(BUILD, exist_ok=True)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
@@ -136,21 +149,17 @@ def build():
     if p.returncode != 0 or "perfbench" not in cp or cp.startswith("["):
         raise BenchError(f"build failed (see {os.path.join(BUILD, 'build.log')})")
     log(f"build done in {time.time() - t:.0f} s")
-    if os.path.exists(PINNED):
-        with open(PINNED) as f:
-            pins = json.load(f)
-        shutil.rmtree(TABLES, ignore_errors=True)
-        scratch = os.path.join(BUILD, "runs", f"gen-{os.getpid()}")
-        os.makedirs(scratch, exist_ok=True)
-        try:
-            run_jvm(cp, "gen", {"tables": TABLES, "sf": pins["sf"], "data_seed": pins["data_seed"]},
-                    scratch, time.time())
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
+    shutil.rmtree(TABLES, ignore_errors=True)
+    scratch = os.path.join(BUILD, "runs", f"gen-{os.getpid()}")
+    os.makedirs(scratch, exist_ok=True)
+    try:
+        run_jvm(cp, "gen", {"tables": TABLES}, scratch, time.time())
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
     with open(cp_file, "w") as f:
         f.write(cp)
     with open(stamp_file, "w") as f:
-        f.write(stamp)
+        f.write(source_stamp(cp))
     return cp
 
 
@@ -328,15 +337,6 @@ def print_table(title, rows):
 
 
 def one_run(cp, workload, seed, seconds, trace, t_start):
-    kept = os.path.join(BUILD, "results", f"{workload}-seed{seed}-s{seconds}-"
-                        f"{'traced' if trace else 'untraced'}.json")
-    if not trace and os.path.exists(kept):
-        # A traced run reuses this build's untraced run of the same
-        # workload, seed and length instead of repeating it.
-        with open(kept) as f:
-            res = json.load(f)
-        if res.get("stamp") == source_stamp():
-            return res
     scratch = os.path.join(BUILD, "runs", f"{workload}-{seed}-{'t' if trace else 'u'}-{os.getpid()}")
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch)
@@ -357,8 +357,9 @@ def one_run(cp, workload, seed, seconds, trace, t_start):
     if leaked:
         log(f"run wrote into the checkout: {leaked[:10]}")
     res["leaked"] = leaked
-    res["stamp"] = source_stamp()
-    # Keep the raw samples of every run for later inspection.
+    # Keep the raw samples of the run for inspection; nothing reads them back.
+    kept = os.path.join(BUILD, "results", f"{workload}-seed{seed}-s{seconds}-"
+                        f"{'traced' if trace else 'untraced'}.json")
     os.makedirs(os.path.dirname(kept), exist_ok=True)
     with open(kept, "w") as f:
         json.dump(res, f)
@@ -373,8 +374,6 @@ def main():
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--selftest", action="store_true")
     ap.add_argument("--pin", action="store_true")
-    ap.add_argument("--pin-sf", type=float, default=0.001)
-    ap.add_argument("--pin-data-seed", type=int, default=42)
     a = ap.parse_args()
     t_start = time.time()
     if not (os.path.exists(os.path.join(ROOT, "build.sbt"))
@@ -384,7 +383,7 @@ def main():
     cp = build()
     t_start = time.time()
     if a.pin:
-        return pin(cp, a, t_start)
+        return pin(cp, t_start)
     if a.selftest:
         return selftest(cp, a, t_start)
     if not a.workload:
@@ -429,13 +428,13 @@ def main():
     return 0 if correct else 1
 
 
-def pin(cp, a, t_start):
+def pin(cp, t_start):
     global DEADLINE_S
     DEADLINE_S = 3600.0
     scratch = os.path.join(BUILD, "runs", f"pin-{os.getpid()}")
     os.makedirs(scratch, exist_ok=True)
     try:
-        res = run_jvm(cp, "pin", {"sf": a.pin_sf, "data_seed": a.pin_data_seed}, scratch, t_start)
+        res = run_jvm(cp, "pin", {}, scratch, t_start)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     bad = [o["name"] for o in res["ops"] if not o["ok"]]

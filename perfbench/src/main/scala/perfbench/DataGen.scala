@@ -39,6 +39,12 @@ object DataGen {
     private val EventTypes = Array("click", "purchase", "error", "signup", "view")
     private val Regions = Array("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
 
+    /** Scale and data seed of the benchmark dataset; `pinned.json` holds
+      * the digests of every query on it.
+      */
+    val Sf = 0.001
+    val Seed = 42L
+
     private def money(r: SplittableRandom, lo: Double, hi: Double): Double =
       math.round((lo + r.nextDouble() * (hi - lo)) * 100.0) / 100.0
 

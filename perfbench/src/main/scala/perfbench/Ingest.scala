@@ -5,6 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ObjectNode, TextNode}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -26,7 +29,7 @@ object Ingest {
 
   /** Per-batch progress of the two legs (Spark emits it untraced). */
   final class Progress extends StreamingQueryListener {
-    val batches = ArrayBuffer.empty[Json.Obj]
+    val batches = ArrayBuffer.empty[JsonNode]
     val rows = ArrayBuffer.empty[(String, Long, Long, Long, Long)] // leg, batch, rows, start µs, ms
     var stateRows = 0L; var stateBytes = 0L; var lateDropped = 0L
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -35,12 +38,12 @@ object Ingest {
       val p = e.progress
       val d = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.withDefaultValue(0L)
       val startUs = java.time.Instant.parse(p.timestamp).toEpochMilli * 1000L
-      batches += new Json.Obj().str("leg", p.name).num("batch", p.batchId)
-        .num("rows", p.numInputRows).num("start_us", startUs)
-        .num("trigger_ms", d("triggerExecution"))
-        .num("source_ms", d("latestOffset") + d("getBatch"))
-        .num("planning_ms", d("queryPlanning")).num("add_batch_ms", d("addBatch"))
-        .num("commit_ms", d("walCommit") + d("commitOffsets"))
+      batches += Json.obj.put("leg", p.name).put("batch", p.batchId)
+        .put("rows", p.numInputRows).put("start_us", startUs)
+        .put("trigger_ms", d("triggerExecution"))
+        .put("source_ms", d("latestOffset") + d("getBatch"))
+        .put("planning_ms", d("queryPlanning")).put("add_batch_ms", d("addBatch"))
+        .put("commit_ms", d("walCommit") + d("commitOffsets"))
       rows += ((p.name, p.batchId, p.numInputRows, startUs, d("triggerExecution")))
       p.stateOperators.headOption.foreach { s =>
         stateRows = s.numRowsTotal; stateBytes = s.memoryUsedBytes
@@ -51,7 +54,7 @@ object Ingest {
 
   /** Compaction calls as seen from the benchmark's own wrapper. */
   final class CompactionLog {
-    val calls = ArrayBuffer.empty[Json.Obj]
+    val calls = ArrayBuffer.empty[JsonNode]
     var lastWritten = 1L
   }
 
@@ -93,9 +96,9 @@ object Ingest {
         val (outBytes, outFiles) = fresh.toSeq.map(f => Fs.usage(Paths.get(d.compacted, f),
           p => p.getFileName.toString.startsWith("part-"))).foldLeft((0L, 0L)) {
           case ((b, n), (b2, n2)) => (b + b2, n + n2) }
-        log.calls += new Json.Obj().num("batch", id).num("ms", ms).bool("fired", fired)
-          .num("files_in", if (fired) before + log.lastWritten else 0)
-          .num("files_out", outFiles).num("rewrite_bytes", outBytes)
+        log.calls += Json.obj.put("batch", id).put("ms", ms).put("fired", fired)
+          .put("files_in", if (fired) before + log.lastWritten else 0L)
+          .put("files_out", outFiles).put("rewrite_bytes", outBytes)
         spans.add(Span(spans.nextId(), 0L, s"compaction call batch $id", s0, Clock.nowUs,
           Map("leg" -> "archive", "batch" -> id.toString, "fired" -> fired.toString)))
       }
@@ -150,7 +153,7 @@ object Ingest {
     (problems.toSeq, dead)
   }
 
-  def run(spark: SparkSession, kv: Map[String, String], out: Json.Obj): Unit = {
+  def run(spark: SparkSession, kv: Map[String, String], out: ObjectNode): Unit = {
     val seed = kv("seed").toLong
     val seconds = kv("seconds").toInt
     val trace = kv("trace") == "1"
@@ -167,7 +170,7 @@ object Ingest {
     val (wp, wd) = SensorPipeline.parseWireOrDeadLetter(spark.read.text(s"${d.wire}/frames-00000.json"))
     SensorPipeline.ruleSelect(wp).write.format("noop").mode("overwrite").save()
     wd.write.format("noop").mode("overwrite").save()
-    out.obj("setup", new Json.Obj().num("warmup_ms", (System.nanoTime() - tw) / 1e6))
+    out.set[ObjectNode]("setup", Json.obj.put("warmup_ms", (System.nanoTime() - tw) / 1e6))
     val progress = new Progress
     spark.streams.addListener(progress)
     val spans = new Spans
@@ -176,9 +179,9 @@ object Ingest {
     val heap = new HeapWatch
     val log = new CompactionLog
     val firstOpMs = System.currentTimeMillis()
-    heap.armed = true
     val wall = pipeline(spark, d, trace, log, spans)
-    heap.armed = false
+    val gcS = heap.gcSeconds
+    val liveMb = heap.liveMbAfterFullGc()
     org.apache.spark.ListenerDrain(spark.sparkContext)
     spark.streams.removeListener(progress)
     val (problems, dead) = check(spark, d, truth, staged)
@@ -194,22 +197,22 @@ object Ingest {
     val written = Fs.usage(Paths.get(d.sink))._1 + Fs.usage(Paths.get(s"${d.root}/ck"))._1 +
       jsonFiles(d.logs).filterNot(_.getFileName.toString.startsWith("part-staged"))
         .map(Files.size(_)).sum + compactedBytes * runShare
-    out.num("first_op_ms", firstOpMs.toDouble).num("timed_s", wall)
-      .num("live_heap_mb", heap.maxLiveMb).num("gc_s", heap.gcSeconds)
-      .bool("correct", problems.isEmpty)
-      .raw("problems", problems.map(Json.str).mkString("[", ",", "]"))
-      .num("frames", truth.frames).num("valid_frames", truth.validFrames)
-      .num("malformed", truth.malformed).num("dead_letters", dead)
-      .num("redelivered", truth.redelivered)
-      .num("late", truth.late).num("wire_bytes", truth.wireBytes)
-      .num("written_bytes", written).num("sink_bytes", sinkBytes)
-      .num("sink_files", sinkFiles + jsonFiles(d.logs).size)
-      .num("checkpoint_bytes", Fs.usage(Paths.get(d.ckIndex))._1)
-      .num("state_rows", progress.stateRows).num("state_bytes", progress.stateBytes)
-      .num("late_dropped", progress.lateDropped)
-      .objs("batches", progress.batches)
+    out.put("first_op_ms", firstOpMs).put("timed_s", wall)
+      .put("live_heap_mb", liveMb).put("gc_s", gcS)
+      .put("correct", problems.isEmpty)
+      .set[ObjectNode]("problems", Json.arr(problems.map(TextNode.valueOf)))
+      .put("frames", truth.frames).put("valid_frames", truth.validFrames)
+      .put("malformed", truth.malformed).put("dead_letters", dead)
+      .put("redelivered", truth.redelivered)
+      .put("late", truth.late).put("wire_bytes", truth.wireBytes)
+      .put("written_bytes", written).put("sink_bytes", sinkBytes)
+      .put("sink_files", sinkFiles + jsonFiles(d.logs).size)
+      .put("checkpoint_bytes", Fs.usage(Paths.get(d.ckIndex))._1)
+      .put("state_rows", progress.stateRows).put("state_bytes", progress.stateBytes)
+      .put("late_dropped", progress.lateDropped)
+      .set[ObjectNode]("batches", Json.arr(progress.batches))
     if (trace) {
-      out.objs("compaction", log.calls)
+      out.set[ObjectNode]("compaction", Json.arr(log.calls))
       // Micro-batch spans from progress events; each compaction call is
       // parented to its archive batch.
       val batchSpan = progress.rows.map { case (leg, id, _, _, _) =>
@@ -233,7 +236,7 @@ object Ingest {
     * same frames as 1,000-frame and as 500-frame files and check both
     * runs against the one truth.
     */
-  def selfTest(spark: SparkSession, kv: Map[String, String], out: Json.Obj): Unit = {
+  def selfTest(spark: SparkSession, kv: Map[String, String], out: ObjectNode): Unit = {
     val seed = kv("seed").toLong
     val results = Seq((10, 1000), (20, 500)).map { case (files, per) =>
       val d = Dirs(s"${kv("scratch")}/selftest-$per")
@@ -241,11 +244,11 @@ object Ingest {
       val staged = DataGen.Wire.stageArchive(d.logs, seed, 95, per)
       pipeline(spark, d, trace = false, new CompactionLog, new Spans)
       val (problems, _) = check(spark, d, truth, staged)
-      new Json.Obj().num("frames_per_file", per).num("late", truth.late)
-        .num("malformed", truth.malformed).num("redelivered", truth.redelivered)
-        .num("keys", truth.onTimeKeys.size)
-        .raw("problems", problems.map(Json.str).mkString("[", ",", "]"))
+      Json.obj.put("frames_per_file", per).put("late", truth.late)
+        .put("malformed", truth.malformed).put("redelivered", truth.redelivered)
+        .put("keys", truth.onTimeKeys.size)
+        .set[ObjectNode]("problems", Json.arr(problems.map(TextNode.valueOf)))
     }
-    out.objs("selftest", results)
+    out.set[ObjectNode]("selftest", Json.arr(results))
   }
 }

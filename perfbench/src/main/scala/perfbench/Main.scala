@@ -1,10 +1,11 @@
 package perfbench
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,78 +43,59 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sessionMs = System.currentTimeMillis()
-    val out = new Json.Obj
-    out.num("launch_ms", launchMs.toDouble).num("session_ready_ms", sessionMs.toDouble)
-      .num("cores", cores.toDouble)
+    val out = Json.obj
+    out.put("launch_ms", launchMs).put("session_ready_ms", sessionMs).put("cores", cores)
     try mode match {
       case "gen" =>
         val t = System.nanoTime()
-        DataGen.Tables.write(spark, kv("tables"), kv("sf").toDouble, kv("data_seed").toLong)
-        out.num("gen_ms", (System.nanoTime() - t) / 1e6)
+        DataGen.Tables.write(spark, kv("tables"), DataGen.Tables.Sf, DataGen.Tables.Seed)
+        out.put("gen_ms", (System.nanoTime() - t) / 1e6)
       case "run" => Workloads.run(spark, kv, out)
       case "pin" => Workloads.pin(spark, kv, out)
       case "canary" => Workloads.canary(spark, kv, out)
       case "ingest-selftest" => Ingest.selfTest(spark, kv, out)
     } finally {
-      Files.write(Paths.get(kv("out")), out.render.getBytes(StandardCharsets.UTF_8))
+      Files.write(Paths.get(kv("out")), Json.mapper.writeValueAsBytes(out))
       spark.stop()
     }
   }
 }
 
-/** Minimal JSON writer for the result file. */
+/** Result-file JSON: Jackson trees. */
 object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"
-    case '\t' => "\\t"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  } + "\""
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null"
-    else if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
-    else java.lang.Double.toString(d)
-
-  final class Obj {
-    private val fields = ArrayBuffer.empty[(String, String)]
-    def raw(k: String, v: String): Obj = { fields += k -> v; this }
-    def num(k: String, v: Double): Obj = raw(k, Json.num(v))
-    def num(k: String, v: Long): Obj = raw(k, v.toString)
-    def str(k: String, v: String): Obj = raw(k, Json.str(v))
-    def bool(k: String, v: Boolean): Obj = raw(k, v.toString)
-    def nums(k: String, vs: Iterable[Double]): Obj = raw(k, vs.map(Json.num).mkString("[", ",", "]"))
-    def objs(k: String, vs: Iterable[Obj]): Obj = raw(k, vs.map(_.render).mkString("[", ",", "]"))
-    def obj(k: String, v: Obj): Obj = raw(k, v.render)
-    def render: String = fields.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
-  }
+  val mapper = new ObjectMapper()
+  def obj: ObjectNode = mapper.createObjectNode()
+  def arr(nodes: Iterable[JsonNode]): ArrayNode = mapper.createArrayNode().addAll(nodes.asJavaCollection)
 }
 
-/** Heap occupancy right after each collection (all heap pools), and GC
-  * time, from the JVM's collection notifications.
+/** GC time since construction, and the heap a run keeps: occupancy
+  * right after full collections at its end. A collection that happens to
+  * fall inside an op would also count that op's garbage, which moves the
+  * figure by up to 25 % between runs.
   */
 final class HeapWatch {
-  @volatile var armed = false
-  @volatile private var maxAfterGc = 0L
   private val t0 = gcMs
   private def gcMs: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).filter(_ > 0).sum
   def gcSeconds: Double = (gcMs - t0) / 1e3
-  def maxLiveMb: Double = maxAfterGc / 1048576.0
 
-  java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
-    case e: javax.management.NotificationEmitter =>
-      e.addNotificationListener((n: javax.management.Notification, _: AnyRef) => {
-        if (armed && n.getType ==
-            com.sun.management.GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
-          val info = com.sun.management.GarbageCollectionNotificationInfo.from(
-            n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData])
-          val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-            .filter(_.getType == java.lang.management.MemoryType.HEAP).map(_.getName).toSet
-          val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
-            .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
-          synchronized { if (used > maxAfterGc) maxAfterGc = used }
-        }
-      }, null, null)
-    case _ => ()
+  /** Spark's ContextCleaner drops broadcast and shuffle blocks only after
+    * a collection has found their handles unreachable, so one collection
+    * leaves 5-70 MB that the next would free: collect until occupancy
+    * stops falling (at most five times).
+    */
+  def liveMbAfterFullGc(): Double = {
+    def collect(): Double = {
+      System.gc()
+      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    }
+    var (last, cur, n) = (Double.MaxValue, collect(), 1)
+    while (n < 5 && cur < last - 1.0) {
+      Thread.sleep(500)
+      last = cur; cur = collect(); n += 1
+    }
+    cur
   }
 }
 

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 import graft.SparkEntry
@@ -26,17 +28,12 @@ object Workloads {
     else name.stripPrefix("q_").takeWhile(_.isLetter)
 
   /** Pinned per-query result digests for the benchmark dataset. */
-  final case class Pinned(sf: Double, dataSeed: Long, digest: Map[String, String])
+  def readPinned(path: String): Map[String, String] =
+    Json.mapper.readTree(new java.io.File(path)).get("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.get("digest").asText).toMap
 
-  def readPinned(path: String): Pinned = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new java.io.File(path))
-    val qs = root.get("queries").properties().asScala.map(e => e.getKey -> e.getValue).toSeq
-    Pinned(root.get("sf").asDouble, root.get("data_seed").asLong,
-      qs.map { case (k, v) => k -> v.get("digest").asText }.toMap)
-  }
-
-  /** Each workload's fixed query mix, sized so one round takes ~15 s in
-    * a fresh JVM on a 4-core host. Every round starts with a cold pass,
+  /** Each workload's fixed query mix, sized so one round takes 15-25 s
+    * in a fresh JVM on a 4-core host. Every round starts with a cold pass,
     * each query once in a fixed order: in a fresh JVM a query's first run
     * pays JIT and code generation that depend on what ran before it, so
     * a seeded cold order would move latencies by up to 3x between seeds.
@@ -44,11 +41,11 @@ object Workloads {
     */
   val AnalystCold: Seq[String] = Seq( // dashboard panels and one-off reports
     "q_agg1_hourly_avg", "q_rel33_snapshot_diff", "q_agg4_hourly_counts",
-    "q_src4_rule_filter", "q_rel31_profile", "q_agg9_m4_downsample",
-    "q_adv6_range_join", "q_dd2_dedup_latest")
+    "q_src4_rule_filter", "q_rel31_profile", "q_agg8_dd_quantile_by_type",
+    "q_adv6_range_join", "q_adv5b_asof_tolerance", "q_rel10h_kmv_set_algebra",
+    "q_adv14b_salted_join", "q_dd2_dedup_latest")
   /** Panel refreshes: the k-th most popular panel repeats ceil(6/k) - 1 times. */
-  val AnalystPanels: Seq[String] = Seq(
-    "q_agg1_hourly_avg", "q_agg4_hourly_counts", "q_agg9_m4_downsample")
+  val AnalystPanels: Seq[String] = Seq("q_agg1_hourly_avg", "q_agg4_hourly_counts")
   val CurationCold: Seq[String] = Seq( // one query per curation family
     "q_txt17_bpe_merges", "q_sim3_ivf", "q_mm7_image_resize", "q_dd5_minhash_lsh",
     "q_ml10_token_chunks", "q_adv8_triangles")
@@ -84,12 +81,12 @@ object Workloads {
     var buildNs = 0L; var execNs = 0L; var ok = false; var correct = false
     var digest = ""; var error = ""
     var memoHits = 0L; var memoMisses = 0L; var memoEvictions = 0L; var persisted = 0
-    def toJson: Json.Obj = new Json.Obj().num("i", idx).str("name", name)
-      .str("family", familyOf(name)).bool("repeat", repeat)
-      .num("build_ms", buildNs / 1e6).num("exec_ms", execNs / 1e6)
-      .bool("ok", ok).bool("correct", correct).str("digest", digest).str("error", error)
-      .num("memo_hits", memoHits).num("memo_misses", memoMisses)
-      .num("memo_evictions", memoEvictions).num("persisted_rdds", persisted)
+    def toJson: ObjectNode = Json.obj.put("i", idx).put("name", name)
+      .put("family", familyOf(name)).put("repeat", repeat)
+      .put("build_ms", buildNs / 1e6).put("exec_ms", execNs / 1e6)
+      .put("ok", ok).put("correct", correct).put("digest", digest).put("error", error)
+      .put("memo_hits", memoHits).put("memo_misses", memoMisses)
+      .put("memo_evictions", memoEvictions).put("persisted_rdds", persisted)
   }
 
   private def memoTotals: (Long, Long, Long) = {
@@ -143,7 +140,7 @@ object Workloads {
     }
   }
 
-  def run(spark: SparkSession, kv: Map[String, String], out: Json.Obj): Unit = {
+  def run(spark: SparkSession, kv: Map[String, String], out: ObjectNode): Unit = {
     val workload = kv("workload")
     if (workload == "ingest") return Ingest.run(spark, kv, out)
     val seed = kv("seed").toLong
@@ -153,7 +150,7 @@ object Workloads {
     val pinned = readPinned(kv("digests"))
     val tw = System.nanoTime()
     warmup(spark, dir)
-    out.obj("setup", new Json.Obj().num("warmup_ms", (System.nanoTime() - tw) / 1e6))
+    out.set[ObjectNode]("setup", Json.obj.put("warmup_ms", (System.nanoTime() - tw) / 1e6))
 
     val spans = new Spans
     val ledger = if (trace) Some(new OpLedger(spans)) else None
@@ -165,38 +162,35 @@ object Workloads {
     val recs = ArrayBuffer.empty[OpRec]
     val firstOpMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
-    heap.armed = true
-    // The mix is sized for ~10 s, so the run repeats it seconds/10 times
-    // (a fixed count: every run of a given length does the same work).
+    // The run repeats the mix seconds/10 times (a fixed count: every run
+    // of a given length does the same work).
     for (rep <- 0 until math.max(1, seconds / 10); (name, repeat) <- round(workload, seed + rep)) {
       val rec = new OpRec(recs.size, name, repeat || rep > 0)
       queries.get(name) match {
         case Some(fn) => timedOp(spark, dir, rec, fn, ledger, spans)
         case None => rec.error = "query not in SparkEntry.queries"
       }
-      rec.correct = rec.ok && pinned.digest.get(name).contains(rec.digest)
+      rec.correct = rec.ok && pinned.get(name).contains(rec.digest)
       if (rec.ok && !rec.correct)
         System.err.println(s"[perfbench] digest mismatch ${rec.name}: ${rec.digest}")
       recs += rec
     }
     val timedS = (System.nanoTime() - t0) / 1e9
-    heap.armed = false
-    out.num("first_op_ms", firstOpMs.toDouble).num("timed_s", timedS)
-      .num("live_heap_mb", heap.maxLiveMb)
-      .num("gc_s", heap.gcSeconds)
-      .num("artifact_bytes", Fs.usage(Paths.get(System.getProperty("java.io.tmpdir")),
-        _.toString.contains("graft_artifacts_"))._1.toDouble)
-      .objs("ops", recs.map(_.toJson))
+    out.put("first_op_ms", firstOpMs).put("timed_s", timedS).put("gc_s", heap.gcSeconds)
+      .put("live_heap_mb", heap.liveMbAfterFullGc())
+      .put("artifact_bytes", Fs.usage(Paths.get(System.getProperty("java.io.tmpdir")),
+        _.toString.contains("graft_artifacts_"))._1)
+      .set[ObjectNode]("ops", Json.arr(recs.map(_.toJson)))
     ledger.foreach { l =>
       org.apache.spark.ListenerDrain(spark.sparkContext)
-      out.objs("op_stats", recs.map { r =>
+      out.set[ObjectNode]("op_stats", Json.arr(recs.map { r =>
         val s = l.stats(s"op-${r.idx}")
-        new Json.Obj().num("i", r.idx).num("jobs", s.jobs.sum).num("build_jobs", s.buildJobs.sum)
-          .num("stages", s.stages.sum).num("tasks", s.tasks.sum).num("run_ms", s.runNs.sum / 1e6)
-          .num("shuffle_read", s.shuffleRead.sum).num("shuffle_write", s.shuffleWrite.sum)
-          .num("spill", s.spill.sum).num("analysis_ms", s.analysisMs.sum)
-          .num("optimize_ms", s.optimizeMs.sum).num("plan_ms", s.planMs.sum)
-      })
+        Json.obj.put("i", r.idx).put("jobs", s.jobs.sum).put("build_jobs", s.buildJobs.sum)
+          .put("stages", s.stages.sum).put("tasks", s.tasks.sum).put("run_ms", s.runNs.sum / 1e6)
+          .put("shuffle_read", s.shuffleRead.sum).put("shuffle_write", s.shuffleWrite.sum)
+          .put("spill", s.spill.sum).put("analysis_ms", s.analysisMs.sum)
+          .put("optimize_ms", s.optimizeMs.sum).put("plan_ms", s.planMs.sum)
+      }))
       writeSpans(kv("spans"), spans)
     }
     val bad = recs.count(r => !r.correct)
@@ -205,10 +199,11 @@ object Workloads {
 
   def writeSpans(path: String, spans: Spans): Unit = {
     val body = spans.all.sortBy(s => (s.startUs, s.id)).map { s =>
-      new Json.Obj().num("id", s.id).num("parent", s.parent).str("name", s.name)
-        .num("start_us", s.startUs).num("end_us", s.endUs)
-        .raw("attrs", s.attrs.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
-          .mkString("{", ",", "}")).render
+      val attrs = Json.obj
+      s.attrs.foreach { case (k, v) => attrs.put(k, v) }
+      Json.mapper.writeValueAsString(Json.obj.put("id", s.id).put("parent", s.parent)
+        .put("name", s.name).put("start_us", s.startUs).put("end_us", s.endUs)
+        .set[ObjectNode]("attrs", attrs))
     }.mkString("[\n", ",\n", "\n]\n")
     Files.write(Paths.get(path), body.getBytes(StandardCharsets.UTF_8))
   }
@@ -216,28 +211,26 @@ object Workloads {
   /** Run every query of the three query workloads once on the benchmark
     * dataset and record its digest and cold cost.
     */
-  def pin(spark: SparkSession, kv: Map[String, String], out: Json.Obj): Unit = {
-    val sf = kv("sf").toDouble; val dataSeed = kv("data_seed").toLong
+  def pin(spark: SparkSession, kv: Map[String, String], out: ObjectNode): Unit = {
     val dir = s"${kv("scratch")}/data"
-    DataGen.Tables.write(spark, dir, sf, dataSeed)
+    DataGen.Tables.write(spark, dir, DataGen.Tables.Sf, DataGen.Tables.Seed)
     warmup(spark, dir)
-    val only = kv.get("only").map(_.split(',').toSet)
     val recs = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
       .zipWithIndex.map { case ((name, fn), i) =>
         val rec = new OpRec(i, name, false)
         timedOp(spark, dir, rec, fn, None, new Spans)
         if (!rec.ok) System.err.println(s"[perfbench] ${rec.name} failed: ${rec.error}")
         rec
       }
-    out.num("sf", sf).num("data_seed", dataSeed).objs("ops", recs.map(_.toJson))
+    out.put("sf", DataGen.Tables.Sf).put("data_seed", DataGen.Tables.Seed)
+      .set[ObjectNode]("ops", Json.arr(recs.map(_.toJson)))
   }
 
   /** The timed call must pay for every output column: for each canary,
     * time `count()` (which Catalyst may prune to almost nothing) against
     * the benchmark's timed call on a fresh build of the same query.
     */
-  def canary(spark: SparkSession, kv: Map[String, String], out: Json.Obj): Unit = {
+  def canary(spark: SparkSession, kv: Map[String, String], out: ObjectNode): Unit = {
     val pinned = readPinned(kv("digests"))
     val dir = kv("tables")
     warmup(spark, dir)
@@ -248,10 +241,10 @@ object Workloads {
       graft.util.ScratchCheckpoints.drain()
       val rec = new OpRec(0, name, false)
       timedOp(spark, dir, rec, fn, None, new Spans)
-      new Json.Obj().str("name", name).num("count_ms", countMs)
-        .num("timed_ms", (rec.buildNs + rec.execNs) / 1e6)
-        .bool("correct", rec.ok && pinned.digest.get(name).contains(rec.digest))
+      Json.obj.put("name", name).put("count_ms", countMs)
+        .put("timed_ms", (rec.buildNs + rec.execNs) / 1e6)
+        .put("correct", rec.ok && pinned.get(name).contains(rec.digest))
     }
-    out.objs("canary", rows)
+    out.set[ObjectNode]("canary", Json.arr(rows))
   }
 }

@@ -584,8 +584,7 @@ object Dedup {
     * count past convergence.
     */
   def dupClusters(pairs: DataFrame, aCol: String = "doc_a",
-      bCol: String = "doc_b", maxIters: Int = 30,
-      onIter: (Int, Double, Long) => Unit = (_, _, _) => ()): DataFrame = {
+      bCol: String = "doc_b", maxIters: Int = 30): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // With zero iterations the initial labels would be returned
     // unmaterialized and the edge-list unpersist below would force a
@@ -615,7 +614,6 @@ object Dedup {
       var iter = 0
       var converged = false
       while (!converged && iter < maxIters) {
-        val iterT0 = System.nanoTime()
         // Propagate: each node takes the min of its own label and its
         // neighbors' labels (one shuffle on dst, one aggregate on src).
         val nbr = sym.join(labels.select(col("node").as("dst"), col("lbl").as("nlbl")), Seq("dst"))
@@ -657,9 +655,6 @@ object Dedup {
         labelsPersisted = false
         converged = changed == 0L
         iter += 1
-        // Diagnostic hook (iteration index, seconds, changed-label
-        // count) — ClusterProbe feeds SCALE.md; default is a no-op.
-        onIter(iter, (System.nanoTime() - iterT0) / 1e9, changed)
       }
       // labels is persisted/checkpointed + already materialized (by the
       // convergence count), so the edge list is no longer needed.

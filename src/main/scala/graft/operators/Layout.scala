@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * pure function of its keys, and the layout operator is
   * `repartitionByRange` + `sortWithinPartitions` on that value — one
   * range exchange at write time, zero cost at read time.
-  * [[graft.tools.LayoutProbe]] measures what it buys: the row-group
-  * skip ratio of a 2-d box predicate under natural / single-sort /
-  * z-order layouts (SCALE.md round-15).
+  * What it buys is measured in the SCALE.md round-15 z-order table: the
+  * fraction of rows read under a 2-d box predicate drops from 10.3%
+  * (single sort) to 3.8% (z-order) at 6M rows, while a 1-d band on
+  * the sort column alone still favours the single sort.
   */
 object Layout {
 

@@ -323,22 +323,6 @@ object Similarity {
     }
   }
 
-  /** Scale rule for the IVF centroid count — IN CODE, not prose: the
-    * classic k ≈ √n balance point, where cell size (n/k) and probe cost
-    * (k) grow together as √n. At n = 2·10³ (the sf0.01 corpus) this
-    * gives 45; at n = 10⁹ (a 100 TB embedding store) ~32k centroids —
-    * still a broadcastable centroid table (32k × 64 doubles ≈ 16 MB)
-    * with ~31k-vector cells. Pair with `nProbe` chosen for the recall
-    * target: on THIS synthetic corpus (no cluster structure — held-out
-    * recall ≈ probed fraction, the ANN worst case) the measured curve
-    * at k=16 is nProbe 4 → 0.605, 6 → 0.715, 8 → 0.815, so the shipped
-    * default nProbe=8 is the ≥0.8 point; corpora with real cluster
-    * structure reach the same recall at far smaller probed fractions
-    * (SimilaritySpec's clustered corpus hits 0.9+ at nProbe=1).
-    */
-  def autoCentroids(corpusSize: Long): Int =
-    math.max(4, math.round(math.sqrt(corpusSize.toDouble)).toInt)
-
   /** The q_sim15/16/17 deterministic ±1 sign family (Achlioptas 2003's
     * database-friendly JL construction, md5-parity entries over the
     * literal key "rp:j:i"): rung k is a PREFIX of rung k+1, so serving
@@ -674,12 +658,13 @@ object Similarity {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     // The sign-bucket seeding can produce at most 2^seedPlanes distinct
     // seeds — a fixed plane count silently CAPS the centroid count (the
-    // round-4 SimScalingProbe caught autoCentroids(50k)=224 collapsing
-    // to 64 cells at the old fixed 6 planes). Derive the effective plane
-    // count as ceil(log2(nCentroids)) + 2 (4× bucket headroom so enough
-    // buckets are actually filled), floored at the caller's value; at
-    // the q_sim3/q_sim5 oracle shape (nCentroids=16, seedPlanes=6) the
-    // derived value is exactly 6, so pinned oracles are unaffected.
+    // round-4 50k-vector measurement, SCALE.md, caught a √n count of
+    // 224 collapsing to 64 cells at the old fixed 6 planes). Derive the
+    // effective plane count as ceil(log2(nCentroids)) + 2 (4× bucket
+    // headroom so enough buckets are actually filled), floored at the
+    // caller's value; at the q_sim3/q_sim5 oracle shape (nCentroids=16,
+    // seedPlanes=6) the derived value is exactly 6, so pinned oracles
+    // are unaffected.
     val sp = math.max(seedPlanes,
       (if (nCentroids <= 1) 0 else 32 - Integer.numberOfLeadingZeros(nCentroids - 1)) + 2)
     val keyed = corpus
@@ -735,8 +720,9 @@ object Similarity {
       // components — the cosine-geometry centroid (centroid scale never
       // matters downstream, only direction). On the synthetic corpus the
       // norms are concentrated so raw and spherical measure the same
-      // (graft.tools.IvfProbe); on real corpora with heavy-tailed norms
-      // the raw mean is pulled toward high-norm members.
+      // (SCALE.md round-4 SIM table, IVF quantizer notes); on real
+      // corpora with heavy-tailed norms the raw mean is pulled toward
+      // high-norm members.
       val updated = assigned
         .select(col("cid"), col("nrm"), posexplode(col("embedding")).as(Seq("d", "x")))
         .groupBy("cid", "d")
@@ -789,6 +775,17 @@ object Similarity {
     * Cell assignment is a broadcast join + windowed argmax — the corpus
     * shuffles once, on the cell id; at 100 TB the cell-assigned corpus
     * is the persisted index and queries touch nProbe/nCentroids of it.
+    *
+    * Defaults: scale `nCentroids` as ≈ √n (cell size n/k and probe cost
+    * k then grow together as √n — 32k cells at 10⁹ vectors is still a
+    * ~16 MB broadcast table). Pick `nProbe` for the recall target: on
+    * the synthetic corpus (no cluster structure, so held-out recall ≈
+    * probed fraction — the ANN worst case) the measured curve at 16
+    * cells is nProbe 4 → 0.605, 6 → 0.715, 8 → 0.815, so the default
+    * nProbe=8 is the ≥0.8 point; corpora with real cluster structure
+    * reach it at far smaller probed fractions (SimilaritySpec's
+    * clustered corpus hits 0.9+ at nProbe=1). SCALE.md "Int8 IVF index
+    * (round 4)" has the table.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       nCentroids: Int = 16, nProbe: Int = 8,
@@ -849,9 +846,9 @@ object Similarity {
 
   /** Recall@k audit of the IVF probe against brute-force ground truth —
     * the serving-quality measurement a production ANN deployment runs
-    * whenever the index or the probe budget changes (the docstring
-    * curve on [[autoCentroids]] came from exactly this computation,
-    * here made a first-class oracled operator).
+    * whenever the index or the probe budget changes (the nProbe curve
+    * on [[ivfTopK]] came from exactly this computation, here made a
+    * first-class oracled operator).
     *
     * One row per entry of `nProbes`: `n_hit` counts ground-truth
     * neighbors the probe recovered (`recall` = n_hit/n_truth), and
@@ -1420,8 +1417,8 @@ object Similarity {
   /** LSH candidate pairs BEFORE the exact re-rank — the bucket-collision
     * stage of [[lshTopK]], exposed (like
     * [[graft.operators.Dedup.simhashCandidates]]) so candidate volume —
-    * the operator's true scale cost — is measurable directly
-    * (graft.tools.SimScalingProbe). Returns distinct (`query_id`,
+    * the operator's true scale cost — is measurable directly (SCALE.md
+    * round-4 SIM table, "LSH cand frac"). Returns distinct (`query_id`,
     * `neighbor_id`) rows. Candidate generation and dedup carry ONLY id
     * pairs — at corpus scale the dedup shuffle is 16 bytes/row, not two
     * embeddings/row.

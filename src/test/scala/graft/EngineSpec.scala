@@ -42,6 +42,26 @@ class EngineSpec extends SparkSpec {
     assert(math.abs(mv.variance - expectVar) < 1e-12)
   }
 
+  test("entry points: the only mains are graft.Bench, graft.Verify and graft.tools.Explain") {
+    // Measurement lives in perfbench (`run.py --trace 1`) and graft.Bench;
+    // a new per-experiment main is the probe zoo growing back.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
+    val allowed = Set("graft/Bench.scala", "graft/Verify.scala", "graft/tools/Explain.scala")
+    val mainDef = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val stream = Files.walk(root)
+    val withMain = try stream.iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => mainDef.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString)
+      .toSet
+    finally stream.close()
+    val unexpected = (withMain -- allowed).toSeq.sorted
+    assert(unexpected.isEmpty, "mains outside the three entry points")
+  }
+
   test("STR-7: maxFilesPerTrigger caps micro-batch intake") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-rate")

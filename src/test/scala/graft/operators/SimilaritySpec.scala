@@ -161,13 +161,14 @@ class SimilaritySpec extends SparkSpec {
 
   test("k-means IVF recall beats the first-N quantizer on unbiased queries") {
     // Measured on queries DISJOINT from both seed sets (vec_id 100-119;
-    // graft.tools.IvfProbe): first-N-vec_ids quantizer 0.440, hash seeds
-    // alone 0.525, + 2 Lloyd iterations 0.605 — all at the same probed
-    // fraction (~4/16 of the corpus). Round 2's "first-N recall 0.88"
-    // was measurement leakage: the vec_id<5 oracle queries ARE first-N
-    // centroids, so each query owned a dedicated cell of exactly its own
-    // neighbors. This pins the unbiased numbers: trained strictly above
-    // seeds-only, and well above the measured first-N baseline.
+    // SCALE.md round-4 SIM table, IVF quantizer notes): first-N-vec_ids
+    // quantizer 0.440, hash seeds alone 0.525, + 2 Lloyd iterations
+    // 0.605 — all at the same probed fraction (~4/16 of the corpus).
+    // Round 2's "first-N recall 0.88" was measurement leakage: the
+    // vec_id<5 oracle queries ARE first-N centroids, so each query owned
+    // a dedicated cell of exactly its own neighbors. This pins the
+    // unbiased numbers: trained strictly above seeds-only, and well
+    // above the measured first-N baseline.
     val embs = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val q = embs.where(col("vec_id") >= 100 && col("vec_id") < 120)
     val exact = Similarity.bruteForceTopK(q, embs, k = 10).collect()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.schema.SensorReading
+import graft.schema.{Schemas, SensorReading}
 
 /** Streaming semantics (SURVEY.md §2.5): at-least-once dedup (STR-2),
   * event-time hourly windows with watermark/late data (STR-3/5), driven
@@ -19,6 +19,35 @@ class StreamingSpec extends SparkSpec {
   private def reading(ts: String, count: Long, temp: Double = 30.0): SensorReading =
     SensorReading("raspberrypi", Timestamp.valueOf(ts), 50.0, temp, 1012.0,
       0.0, 0.0, 0.0, count)
+
+  test("SRC-1: 1 Hz synthetic sensor stream runs micro-batches; wire round-trip keeps the sensor schema") {
+    // The reference's sampling loop at its own rate (1 row/s). Three
+    // non-empty micro-batches land in a memory sink; the rows must carry
+    // the declared sensor schema, survive parseWire(toWire(_)) at the
+    // wire's second granularity, and number the publish counter 0, 1, 2…
+    // in event-time order with no gap or repeat.
+    import org.apache.spark.sql.functions.{col, date_trunc}
+    val sensor = SensorPipeline.syntheticSensorStream(spark)
+    val q = sensor.writeStream.format("memory").queryName("src1_out")
+      .outputMode("append").start()
+    try {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def nonEmptyBatches = q.recentProgress.count(_.numInputRows > 0)
+      while (nonEmptyBatches < 3 && System.nanoTime() < deadline) Thread.sleep(200)
+      assert(nonEmptyBatches >= 3, s"3 non-empty micro-batches within 60 s: ${q.recentProgress.toSeq}")
+    } finally q.stop()
+    def typed(s: org.apache.spark.sql.types.StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+    val raw = spark.table("src1_out")
+    assert(typed(raw.schema) == typed(Schemas.sensor))
+    val wire = SensorPipeline.parseWire(SensorPipeline.toWire(raw))
+    assert(typed(wire.schema) == typed(Schemas.sensor))
+    val expected = raw.withColumn("timestamp", date_trunc("second", col("timestamp")))
+    assert(wire.exceptAll(expected).isEmpty && expected.exceptAll(wire).isEmpty,
+      "parseWire(toWire(_)) returns the generated rows, timestamps at second granularity")
+    val counts = raw.orderBy("timestamp").collect().map(_.getAs[Long]("count")).toSeq
+    assert(counts.size >= 3 && counts == counts.indices.map(_.toLong),
+      s"count increases by one per sample in event-time order: $counts")
+  }
 
   test("STR-2: watermarked dropDuplicates makes at-least-once effectively-once") {
     implicit val sqlCtx = spark.sqlContext

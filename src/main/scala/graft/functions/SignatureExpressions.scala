@@ -461,8 +461,6 @@ case class HyperplaneBuckets(child: Expression, weights: Seq[Seq[Double]],
     if (n != dim) throw new IllegalStateException(
       s"signBuckets: embedding dim must be $dim (got $n)")
 
-  private[graft] def weightRows: Array[Array[Double]] = w
-
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     dimCheck(arr.numElements())

@@ -139,6 +139,17 @@ object DDSketch {
     * single-window walk for any grouping (integer addition is
     * order-free) — DDSketchSpec pins row-set equality against the
     * direct single-window form.
+    *
+    * KEY-CARDINALITY ASSUMPTION: the three broadcasts (`right`, `offs`,
+    * `totals`) are forced, and each holds up to one row per
+    * (key, exponent group) — ≤ ~2,100 × |distinct keys| rows, and the
+    * `right` side of the triangular join is matched per key. That is
+    * small for the callers this serves (`keys = Nil`, or a handful of
+    * event types/sensors), but it grows linearly in key cardinality: a
+    * high-cardinality `keys` (per-user, per-device at fleet scale)
+    * would push those tables past the broadcast threshold and driver
+    * memory, where the single-window form only shuffled. Such a caller
+    * needs shuffle joins here instead.
     */
   private[graft] def valueCumTwoLevel(values: DataFrame,
       keys: Seq[String] = Nil): DataFrame = {

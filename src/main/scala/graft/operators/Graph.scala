@@ -160,10 +160,15 @@ object Graph {
     * ≥ 1, so there is no dangling-mass term). Returns (`node`, `rank`)
     * for every node in ≥ 1 pair.
     *
-    * A SINGLE lazy plan: with `iters` fixed there is no convergence
-    * count, so the whole computation — degree table, `iters` unrolled
-    * join+aggregate rounds, final projection — is one declarative
-    * composition with zero driver actions. The edge list is referenced
+    * EAGER AT CALL TIME, then lazy: [[nodeTable]] runs a
+    * `localCheckpoint` of the distinct node set plus its `count`
+    * before this returns — two jobs over the prepared edges, paid by
+    * the caller even if the result is never consumed. Everything after
+    * it (degree table, `iters` unrolled join+aggregate rounds, final
+    * projection) is one declarative composition with no further driver
+    * action; with `iters` fixed there is no convergence count. The
+    * checkpointed node table is registered with
+    * [[graft.util.ScratchCheckpoints]]. The edge list is referenced
     * 2 + 2·iters times; callers whose pair PIPELINE is expensive must
     * materialize it first (`pairs.localCheckpoint()`, as q_adv7 does):
     * static planning dedups the identical subtrees via ReusedExchange,
@@ -212,8 +217,10 @@ object Graph {
     * reachable, so eps down to 1e-9 terminates) or `maxIters` is hit,
     * whichever first.
     *
-    * Unlike [[pageRank]]'s single lazy plan, each round here ends in a
-    * driver-side scalar action (the convergence max), so this adopts
+    * Fully eager: like [[pageRank]] it materializes the node table
+    * (`localCheckpoint` + `count`) at call time, and each round then
+    * ends in a driver-side scalar action (the convergence max), so the
+    * returned frame is already computed. This adopts
     * [[Dedup.dupClusters]]'s lineage discipline wholesale: edges and
     * weight totals are persisted once (re-read every round — without it
     * each round would re-run the whole upstream pair pipeline as a

@@ -1775,24 +1775,27 @@ object Similarity {
     * (the IVF cell) through the pivot. One broadcast join (the m·ksub
     * codeword self-dot table) + one partial-aggregated pivot pass; the
     * exchange carries one row per vector of m codes + a double — the
-    * §2.3 "shuffle keys and metadata" minimum for this table. MEMOIZED
-    * ([[memoized]]): the packed per-vector code row is the PQ index's
-    * serving LAYOUT (what FAISS physically stores) — a deterministic
-    * reshape of the already-memoized code table, i.e. build artifact,
-    * not per-query work; q_sim7 keeps the direct encode pipeline
-    * declared.
+    * §2.3 "shuffle keys and metadata" minimum for this table. LAZY
+    * here; the builders whose code table is itself a memoized,
+    * plan-stable artifact ([[pqAdcTopK]], [[ivfPqTopK]]) memoize the
+    * pivot as `adcvecs` — the packed per-vector code row is the PQ
+    * index's serving LAYOUT (what FAISS physically stores), a build
+    * artifact rather than per-query work. [[queryIvfPqIndex]] does not:
+    * its codes arrive pruned per query batch, so a memo key would never
+    * hit and every batch would pay an eager persist+count and cycle the
+    * LRU. q_sim7 keeps the direct encode pipeline declared.
     */
   private def adcCorpusSide(codes: DataFrame, codebooks: DataFrame,
       m: Int, extraCols: Seq[String] = Nil): DataFrame = {
     val cc = broadcast(codebooks.select(col("sub"), col("cid").as("code"),
       VF.dot(col("ce"), col("ce")).as("cc")))
-    memoized("adcvecs", codes.join(cc, Seq("sub", "code"))
+    codes.join(cc, Seq("sub", "code"))
       .groupBy(col("vec_id") +: extraCols.map(col): _*)
       .agg(
         array((0 until m).map(i =>
           first(when(col("sub") === i, col("code")), ignoreNulls = true)): _*)
           .as("ncodes"),
-        subspaceSum(m, col("sub"), col("cc")).as("rn2")))
+        subspaceSum(m, col("sub"), col("cc")).as("rn2"))
   }
 
   /** dot(query, reconstruction) as m array-indexed lookups into the
@@ -1820,7 +1823,7 @@ object Similarity {
     */
   def pqAdcTopK(queries: DataFrame, codes: DataFrame,
       codebooks: DataFrame, k: Int, m: Int = 4, dim: Int = 64): DataFrame = {
-    val vecs = adcCorpusSide(codes, codebooks, m)
+    val vecs = memoized("adcvecs", adcCorpusSide(codes, codebooks, m))
     val qside = adcQuerySide(queries, codebooks, m, dim)
     val w = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
     vecs.join(broadcast(qside), col("vec_id") =!= col("query_id"))
@@ -1901,7 +1904,9 @@ object Similarity {
     val cells = memoized("ivfcells", ivfCellAssign(corpus, centroids))
     val cb = trainPqCodebooks(corpus, m, ksub, lloydIters, trainN, dim)
     val codes = pqCodes(corpus, cb, m, dim).join(cells, "vec_id")
-    ivfPqQuery(queries, codes, centroids, cb, corpus, k, rerankDepth,
+    val vecs = memoized("adcvecs",
+      adcCorpusSide(codes, cb, m, extraCols = Seq("cell")))
+    ivfPqQuery(queries, vecs, centroids, cb, corpus, k, rerankDepth,
       nProbe, m, dim)
   }
 
@@ -1921,8 +1926,9 @@ object Similarity {
     require(rerankDepth >= k, s"rerankDepth=$rerankDepth must cover k=$k")
     val cents = centroids.select(col("cid"), col("ce"),
       VF.l2Norm(col("ce")).as("cn"))
-    ivfPqQuery(queries, codes, cents, codebooks, corpus, k, rerankDepth,
-      nProbe, m, dim)
+    ivfPqQuery(queries,
+      adcCorpusSide(codes, codebooks, m, extraCols = Seq("cell")), cents,
+      codebooks, corpus, k, rerankDepth, nProbe, m, dim)
   }
 
   /** The DISTINCT coarse cells a query batch will probe — the same
@@ -1952,9 +1958,11 @@ object Similarity {
 
   /** Query tail shared by [[ivfPqTopK]] (in-plan build) and
     * [[queryIvfPqIndex]] (persisted store): coarse probe → ADC over the
-    * probed cells' codes → exact float re-rank of the survivors.
+    * probed cells' codes → exact float re-rank of the survivors. `vecs`
+    * is the pivoted corpus side ([[adcCorpusSide]] with the `cell`
+    * column), memoized or not as the caller decides.
     */
-  private def ivfPqQuery(queries: DataFrame, codes: DataFrame,
+  private def ivfPqQuery(queries: DataFrame, vecs: DataFrame,
       centroids: DataFrame, cb: DataFrame, corpus: DataFrame, k: Int,
       rerankDepth: Int, nProbe: Int, m: Int, dim: Int): DataFrame = {
     val wProbe = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
@@ -1974,7 +1982,7 @@ object Similarity {
     // per-query LUT — no (query, vec, sub) row explosion, no
     // re-aggregation; bit-identical scores/ranks (see pqAdcTopK).
     val wAdc = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
-    val cands = adcCorpusSide(codes, cb, m, extraCols = Seq("cell"))
+    val cands = vecs
       .join(broadcast(probed), Seq("cell"))
       .join(broadcast(adcQuerySide(queries, cb, m, dim)), Seq("query_id"))
       .where(col("query_id") =!= col("vec_id") && col("rn2") > 0)

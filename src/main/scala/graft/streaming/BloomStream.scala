@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -50,40 +50,21 @@ object BloomStream {
     StructField("batch_id", LongType), StructField("k", LongType),
     StructField("m", LongType)))
 
+  private val store = new GenStore.Folded("bloom", stateSchema, 1,
+      Some("bit"))(r =>
+    (r.getLong(1), r.getLong(2), r.getLong(3).toInt, r.getLong(4).toInt))
+
   /** The committed meta under `stateDir`: (total, high-water batch_id,
     * k, m); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int, Int)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bit").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"bloom state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val r = meta.head
-      Some((r.getLong(1), r.getLong(2), r.getLong(3).toInt, r.getLong(4).toInt))
-    }
-  }
+      : Option[(Long, Long, Int, Int)] = store.meta(spark, stateDir)
 
   /** The committed bit table (`bit`) — a lazy read, ≤ m rows by
     * construction; empty for a fresh dir.
     */
-  def bits(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(1)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bit").isNotNull)
-        .select("bit")
-    }
-  }
+  def bits(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler over batches carrying a `text` column
     * (benchmark docs; each contributes its distinct `n`-gram shingles).
@@ -96,53 +77,32 @@ object BloomStream {
     require(k > 0 && m > 0, s"bloom dims must be positive, got k=$k m=$m")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pk, pm) =>
-        if (pk != k || pm != m) throw new IllegalStateException(
-          s"bloom state at $stateDir was built at k=$pk m=$pm; this " +
-            s"pipeline runs k=$k m=$m — probing mismatched geometry can " +
-            "FALSE-NEGATIVE, the one error a Bloom filter excludes; refusing")
-      }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"bloom state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val grams = batch.select(
-            explode(graft.functions.TextFunctions.shingles(col("text"), n))
-              .as("item"))
-            .distinct()
-          // Batch inserted-gram count: a 1-row bounded pin (distinct
-          // grams, not occurrences — what the FP bound is a function of).
-          val bTotal = grams.agg(count(lit(1))).head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // Distributed merge: union ∘ distinct IS build over the
-          // concatenated stream. <= m rows in, <= m out.
-          val merged = bits(spark, stateDir)
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, pk, pm) =>
+          if (pk != k || pm != m) throw new IllegalStateException(
+            s"bloom state at $stateDir was built at k=$pk m=$pm; this " +
+              s"pipeline runs k=$k m=$m — probing mismatched geometry can " +
+              "FALSE-NEGATIVE, the one error a Bloom filter excludes; " +
+              "refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val grams = batch.select(
+          explode(graft.functions.TextFunctions.shingles(col("text"), n))
+            .as("item"))
+          .distinct()
+        // Batch inserted-gram count: a 1-row bounded pin (distinct
+        // grams, not occurrences — what the FP bound is a function of).
+        val bTotal = grams.agg(count(lit(1))).head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        // Distributed merge: union ∘ distinct IS build over the
+        // concatenated stream. <= m rows in, <= m out.
+        gen.writeWithMeta(bits(spark, stateDir)
             .unionByName(Bloom.build(grams, k, m))
-            .distinct()
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("k", lit(null).cast("long"))
-            .withColumn("m", lit(null).cast("long"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, total, batchId, k.toLong, m.toLong)),
-            stateSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .distinct(),
+          total, batchId, k.toLong, m.toLong)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 

@@ -147,15 +147,20 @@ private[streaming] object FeedViewKeys {
 
   def joined(keys: Seq[String]): String = keys.mkString(",")
 
-  /** Read the committed `view_keys` off the latest generation —
-    * projected by NAME under a 1-column explicit schema, the one read
-    * that cannot depend on the caller's declared keys (schema
-    * inference would also trip over the zero-length COMMITTED marker)
-    * — and refuse a mismatch.
+  /** Every view access's preamble: validate the declared keys, read
+    * the committed `view_keys` off the latest generation — projected by
+    * NAME under a 1-column explicit schema, the one read that cannot
+    * depend on the caller's declared keys (schema inference would also
+    * trip over the zero-length COMMITTED marker) — and refuse a
+    * mismatch. Returns the view's store: `nData` state columns, the
+    * meta row discriminated on a null first key.
     */
-  def check(spark: SparkSession, viewDir: String, gens: Seq[Long],
-      keys: Seq[String], what: String,
-      derived: Seq[DerivedKey] = Nil): Unit =
+  def store[M](spark: SparkSession, viewDir: String, keys: Seq[String],
+      derived: Seq[DerivedKey], what: String, schema: StructType,
+      nData: Int)(decode: Row => M): GenStore.Folded[M] = {
+    validate(keys)
+    validateDerived(spark, derived, keys)
+    val gens = GenStore.committed(spark, viewDir)
     if (gens.nonEmpty) {
       val stored = spark.read
         .schema(StructType(Seq(StructField("view_keys", StringType))))
@@ -169,6 +174,8 @@ private[streaming] object FeedViewKeys {
             s"this call declares ($want) — a view cannot regroup " +
             "committed state, refusing")
     }
+    new GenStore.Folded(s"$what view", schema, nData, Some(keys.head))(decode)
+  }
 }
 
 /** Incremental materialized-view maintenance off the CDC feed — the
@@ -217,51 +224,26 @@ object ChangeFeedView {
       StructField("sum_micro", LongType),
       StructField("view_keys", StringType)))
 
+  private def store(spark: SparkSession, viewDir: String,
+      keys: Seq[String], derived: Seq[DerivedKey]) = {
+    val n = keys.size + derived.size
+    FeedViewKeys.store(spark, viewDir, keys, derived, "change-feed",
+      viewSchema(keys, derived), n + 2)(m => (m.getLong(n), m.getLong(n + 1)))
+  }
+
   /** Committed meta: (high-water feed gen, view rows); None = fresh. */
   def readMeta(spark: SparkSession, viewDir: String,
       keys: Seq[String] = Seq("event_type"),
-      derived: Seq[DerivedKey] = Nil): Option[(Long, Long)] = {
-    FeedViewKeys.validate(keys)
-    FeedViewKeys.validateDerived(spark, derived, keys)
-    val gens = GenStore.committed(spark, viewDir)
-    if (gens.isEmpty) None
-    else {
-      FeedViewKeys.check(spark, viewDir, gens, keys, "change-feed",
-        derived)
-      val n = keys.size + derived.size
-      val meta = spark.read.schema(viewSchema(keys, derived))
-        .parquet(GenStore.dir(viewDir, gens.max))
-        .where(col(keys.head).isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"view state generation ${gens.max} has ${meta.length} meta rows " +
-          "(want exactly 1) — foreign or corrupt state")
-      Some((meta.head.getLong(n), meta.head.getLong(n + 1)))
-    }
-  }
+      derived: Seq[DerivedKey] = Nil): Option[(Long, Long)] =
+    store(spark, viewDir, keys, derived).meta(spark, viewDir)
 
   /** The live view: (keys…, derived…, n_rows, sum_micro) — a straight
     * read of committed state, zero recompute.
     */
   def table(spark: SparkSession, viewDir: String,
       keys: Seq[String] = Seq("event_type"),
-      derived: Seq[DerivedKey] = Nil): DataFrame = {
-    FeedViewKeys.validate(keys)
-    FeedViewKeys.validateDerived(spark, derived, keys)
-    val gens = GenStore.committed(spark, viewDir)
-    if (gens.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(viewSchema(keys, derived).dropRight(1)))
-    else {
-      FeedViewKeys.check(spark, viewDir, gens, keys, "change-feed",
-        derived)
-      spark.read.schema(viewSchema(keys, derived))
-        .parquet(GenStore.dir(viewDir, gens.max))
-        .where(col(keys.head).isNotNull)
-        .select((keys ++ derived.map(_.name) ++
-          Seq("n_rows", "sum_micro")).map(col): _*)
-    }
-  }
+      derived: Seq[DerivedKey] = Nil): DataFrame =
+    store(spark, viewDir, keys, derived).rows(spark, viewDir)
 
   /** Fold every unseen committed feed generation of the upsert store
     * at `stateDir` into the view at `viewDir`. Idempotent: a refresh
@@ -278,7 +260,8 @@ object ChangeFeedView {
     val feedGens = GenStore.committed(spark, stateDir)
     if (feedGens.isEmpty) return 0L
     val frontier = feedGens.max
-    val prior = readMeta(spark, viewDir, keys, derived)
+    val st = store(spark, viewDir, keys, derived)
+    val prior = st.meta(spark, viewDir)
     val hw = prior.map(_._1).getOrElse(-1L)
     if (frontier <= hw) return 0L
     // Bound the fold to (hw, frontier] EXPLICITLY: a generation the
@@ -304,28 +287,25 @@ object ChangeFeedView {
           .as("dmicro")): _*)
       .groupBy(groupNames.map(col): _*)
       .agg(sum("dn").as("n_rows"), sum("dmicro").as("sum_micro"))
-    val merged = table(spark, viewDir, keys, derived).unionByName(deltas)
+    val merged = st.rows(spark, viewDir).unionByName(deltas)
       .groupBy(groupNames.map(col): _*)
       .agg(sum("n_rows").as("n_rows"), sum("sum_micro").as("sum_micro"))
       // a fully-deleted key folds to n=0 (and, exactly then, Σ=0):
       // the one-shot aggregate has no such row, so neither do we
       .where(col("n_rows") =!= 0L)
-      .withColumn("view_keys", lit(null).cast("string"))
     val folded = fresh.count()
-    val gens = GenStore.committed(spark, viewDir)
-    val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-    val genDir = GenStore.dir(viewDir, gen)
-    merged.coalesce(1).write.mode("overwrite").parquet(genDir)
-    val rows = spark.read.schema(viewSchema(keys, derived))
-      .parquet(genDir).count()
-    val metaDf = spark.createDataFrame(
-      java.util.Collections.singletonList(
-        Row.fromSeq(keys.map(_ => null) ++ derived.map(_ => null) ++
-          Seq(frontier, rows, FeedViewKeys.joinedWith(keys, derived)))),
-      viewSchema(keys, derived))
-    metaDf.coalesce(1).write.mode("append").parquet(genDir)
-    GenStore.commit(spark, viewDir, gen)
-    GenStore.dropBelow(spark, viewDir, gen)
+    // The meta row reuses the value columns (hw feed gen in n_rows,
+    // view rows in sum_micro), so it is appended here, not padded.
+    st.next(spark, viewDir) { gen =>
+      gen.write(merged)(_.coalesce(1))
+      spark.createDataFrame(
+        java.util.Collections.singletonList(
+          Row.fromSeq(keys.map(_ => null) ++ derived.map(_ => null) ++
+            Seq(frontier, gen.written,
+              FeedViewKeys.joinedWith(keys, derived)))),
+        viewSchema(keys, derived))
+        .coalesce(1).write.mode("append").parquet(gen.dir)
+    }
     folded
   }
 }

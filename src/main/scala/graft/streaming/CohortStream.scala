@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -72,40 +72,20 @@ object CohortStream {
     StructField("total", LongType), StructField("batch_id", LongType),
     StructField("week_us", LongType)))
 
+  private val store = new GenStore.Folded("cohort", stateSchema, 2,
+      Some("user_id"))(m => (m.getLong(2), m.getLong(3), m.getLong(4)))
+
   /** The committed meta under `stateDir`: (distinctPairs, high-water
     * batch_id, weekUs); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"cohort state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(2), m.getLong(3), m.getLong(4)))
-    }
-  }
+      : Option[(Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The committed distinct (user_id, week) pairs; empty for a fresh
     * dir.
     */
-  def pairs(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(2)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNotNull)
-        .select("user_id", "week")
-    }
-  }
+  def pairs(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler over batches carrying (`user_id`,
     * `ts_us`). `onBatch(batchId, distinctPairs)` fires after the
@@ -120,59 +100,36 @@ object CohortStream {
       s"targetRowsPerFile must be positive, got $targetRowsPerFile")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pw) =>
-        if (pw != weekUs) throw new IllegalStateException(
-          s"cohort state at $stateDir is bucketed at week=$pw µs; this " +
-            s"pipeline runs week=$weekUs µs — two grains cannot merge, " +
-            "refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, pw) =>
+          if (pw != weekUs) throw new IllegalStateException(
+            s"cohort state at $stateDir is bucketed at week=$pw µs; this " +
+              s"pipeline runs week=$weekUs µs — two grains cannot merge, " +
+              "refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val bPairs = batch
+          .where(col("user_id").isNotNull && col("ts_us").isNotNull)
+          .select(col("user_id"),
+            expr(s"ts_us div $weekUs").as("week")).distinct()
+        // Hash-partitioned rewrite: file count from the COMMITTED
+        // total (last batch's pin — a one-batch lag in sizing, never
+        // an extra action), each file written by its own task.
+        val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
+          targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        // Idempotent distributed merge: union-distinct of (long,
+        // long) pairs. <= users·weeks rows out.
+        gen.write(pairs(spark, stateDir).unionByName(bPairs).distinct())(
+          _.repartition(nFiles, col("user_id")))
+        // Exact distinct-pair total — a metadata count over the
+        // written pair files (the merge executes ONCE: the old
+        // count-then-write form re-derived the union-distinct for
+        // the write action).
+        val total = gen.written
+        gen.appendMeta(total, batchId, weekUs)
+        total
       }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"cohort state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val bPairs = batch
-            .where(col("user_id").isNotNull && col("ts_us").isNotNull)
-            .select(col("user_id"),
-              expr(s"ts_us div $weekUs").as("week")).distinct()
-          // Idempotent distributed merge: union-distinct of (long,
-          // long) pairs. <= users·weeks rows out.
-          val merged = pairs(spark, stateDir)
-            .unionByName(bPairs)
-            .distinct()
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("week_us", lit(null).cast("long"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          // Hash-partitioned rewrite: file count from the COMMITTED
-          // total (last batch's pin — a one-batch lag in sizing, never
-          // an extra action), each file written by its own task.
-          val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
-            targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          merged.repartition(nFiles, col("user_id"))
-            .write.mode("overwrite").parquet(genDir)
-          // Exact distinct-pair total — a metadata count over the
-          // written pair files (the merge executes ONCE: the old
-          // count-then-write form re-derived the union-distinct for
-          // the write action).
-          val total = spark.read.schema(stateSchema).parquet(genDir).count()
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, total, batchId, weekUs)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

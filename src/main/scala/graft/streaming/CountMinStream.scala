@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -48,40 +48,21 @@ object CountMinStream {
     StructField("batch_id", LongType), StructField("d", LongType),
     StructField("w", LongType)))
 
+  private val store = new GenStore.Folded("count-min", stateSchema, 3,
+      Some("hrow"))(m =>
+    (m.getLong(3), m.getLong(4), m.getLong(5).toInt, m.getLong(6).toInt))
+
   /** The committed meta under `stateDir`: (total, high-water batch_id,
     * d, w); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int, Int)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("hrow").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"count-min state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(3), m.getLong(4), m.getLong(5).toInt, m.getLong(6).toInt))
-    }
-  }
+      : Option[(Long, Long, Int, Int)] = store.meta(spark, stateDir)
 
   /** The committed cell table (hrow, bucket, c) — a lazy read, ≤ d·w
     * rows by construction; empty for a fresh dir.
     */
-  def cells(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(3)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("hrow").isNotNull)
-        .select("hrow", "bucket", "c")
-    }
-  }
+  def cells(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler over batches carrying a `text` column.
     * `onBatch(batchId, total)` fires after the commit (or replay skip)
@@ -93,57 +74,35 @@ object CountMinStream {
     require(d > 0 && w > 0, s"sketch dims must be positive, got d=$d w=$w")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pd, pw) =>
-        if (pd != d || pw != w) throw new IllegalStateException(
-          s"count-min state at $stateDir was sketched at d=$pd w=$pw; " +
-            s"this pipeline runs d=$d w=$w — estimates against mismatched " +
-            "geometry hash to the wrong cells, refusing")
-      }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          // Replay after the state commit: adding the batch again would
-          // double-count it — and CMS only ever overcounts, so the
-          // corruption would pass the est >= true invariant silently.
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"count-min state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId " +
-              "— the streaming checkpoint was restored from an older " +
-              "snapshot than the state dir; restore a matching pair")
-        case _ =>
-          val toks = batch.select(
-            explode(graft.functions.TextFunctions.tokens(col("text")))
-              .as("item"))
-          val bSketch = CountMin.sketch(toks, d, w)
-          // Batch total = any single hash row's cell mass (every row
-          // counts every token once) — a 1-row bounded pin.
-          val bTotal = bSketch.where(col("hrow") === 0)
-            .agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // Distributed merge: summed sketches ARE the sketch of the
-          // concatenated stream. <= d*w rows in, <= d*w out.
-          val merged = cells(spark, stateDir)
+      // A replay after the state commit is skipped: adding the batch
+      // again would double-count it — and CMS only ever overcounts, so
+      // the corruption would pass the est >= true invariant silently.
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, pd, pw) =>
+          if (pd != d || pw != w) throw new IllegalStateException(
+            s"count-min state at $stateDir was sketched at d=$pd w=$pw; " +
+              s"this pipeline runs d=$d w=$w — estimates against " +
+              "mismatched geometry hash to the wrong cells, refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val toks = batch.select(
+          explode(graft.functions.TextFunctions.tokens(col("text")))
+            .as("item"))
+        val bSketch = CountMin.sketch(toks, d, w)
+        // Batch total = any single hash row's cell mass (every row
+        // counts every token once) — a 1-row bounded pin.
+        val bTotal = bSketch.where(col("hrow") === 0)
+          .agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        // Distributed merge: summed sketches ARE the sketch of the
+        // concatenated stream. <= d*w rows in, <= d*w out.
+        gen.writeWithMeta(cells(spark, stateDir)
             .unionByName(bSketch)
-            .groupBy("hrow", "bucket").agg(sum("c").as("c"))
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("d", lit(null).cast("long"))
-            .withColumn("w", lit(null).cast("long"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, total, batchId, d.toLong, w.toLong)),
-            stateSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .groupBy("hrow", "bucket").agg(sum("c").as("c")),
+          total, batchId, d.toLong, w.toLong)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 

@@ -46,13 +46,15 @@ object CowCohortStream {
 
   private val dataCols = Seq("user_id", "week")
 
+  private val store = new GenStore.Folded("cow-cohort", stateSchema, 2, None,
+      bucketed = true)(m =>
+    (m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5)))
+
   /** Committed meta: (distinctPairs, high-water batch_id, weekUs,
     * n_buckets); `None` = fresh.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long, Long)] =
-    CowStore.readMetaRow(spark, stateDir, stateSchema, "cow-cohort")
-      .map(m => (m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5)))
+      : Option[(Long, Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The committed distinct (user_id, week) pairs; empty for a fresh
     * dir. Bytes read ∝ live pairs, never ∝ history.
@@ -102,72 +104,46 @@ object CowCohortStream {
       s"compactEvery must be positive, got $compactEvery")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pw, nb) =>
-        if (pw != weekUs) throw new IllegalStateException(
-          s"cow-cohort state at $stateDir is bucketed at week=$pw µs; " +
-            s"this pipeline runs week=$weekUs µs — two grains cannot " +
-            "merge, refusing")
-        if (nb != buckets) throw new IllegalStateException(
-          s"cow-cohort state at $stateDir is hashed $nb ways; this " +
-            s"pipeline runs $buckets — the layouts cannot merge, refusing")
+      val total = store.step(spark, stateDir, batchId, compactEvery)(
+        check = { case (_, _, pw, nb) =>
+          if (pw != weekUs) throw new IllegalStateException(
+            s"cow-cohort state at $stateDir is bucketed at week=$pw µs; " +
+              s"this pipeline runs week=$weekUs µs — two grains cannot " +
+              "merge, refusing")
+          if (nb != buckets) throw new IllegalStateException(
+            s"cow-cohort state at $stateDir is hashed $nb ways; this " +
+              s"pipeline runs $buckets — the layouts cannot merge, refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val bPairs = batch
+          .where(col("user_id").isNotNull && col("ts_us").isNotNull)
+          .select(col("user_id").cast("long").as("user_id"),
+            expr(s"cast(ts_us as bigint) div $weekUs").as("week"))
+          .distinct()
+          .withColumn("bucket", CowStore.bucketOf(buckets, col("user_id")))
+          .localCheckpoint()
+        val touched = bPairs.select("bucket").distinct()
+          .collect().map(_.getInt(0)).toSet
+        val priorSel =
+          if (gen.prior.isEmpty || (touched.isEmpty && !gen.compacting))
+            CowStore.emptyData(spark, stateSchema, dataCols)
+          else CowStore.readBuckets(spark, stateDir, gen.prior,
+            if (gen.compacting) None else Some(touched),
+            stateSchema, dataCols)
+        val priorCnt = priorSel.count()
+        // Idempotent union-distinct over the touched scope only;
+        // compaction generations optionally z-order each rewritten
+        // bucket.
+        gen.writeBuckets(priorSel.unionByName(bPairs).distinct(),
+          if (gen.compacting) zOrderOn else None)
+        // Incremental exact total: written − prior over the SAME
+        // scope (touched buckets, or all on a compaction gen) —
+        // two pruned metadata counts, never a full-state count.
+        val total = prior.map(_._1).getOrElse(0L) + (gen.written - priorCnt)
+        gen.appendMeta(total, batchId, weekUs, buckets.toLong)
+        total
       }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"cow-cohort state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId — " +
-              "the streaming checkpoint was restored from an older " +
-              "snapshot than the state dir; restore a matching pair")
-        case _ =>
-          val bPairs = batch
-            .where(col("user_id").isNotNull && col("ts_us").isNotNull)
-            .select(col("user_id").cast("long").as("user_id"),
-              expr(s"cast(ts_us as bigint) div $weekUs").as("week"))
-            .distinct()
-            .withColumn("bucket", CowStore.bucketOf(buckets, col("user_id")))
-            .localCheckpoint()
-          val touched = bPairs.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val isCompact = gen > 0 && gen % compactEvery == 0
-          val priorSel =
-            if (gens.isEmpty || (touched.isEmpty && !isCompact))
-              CowStore.emptyData(spark, stateSchema, dataCols)
-            else CowStore.readBuckets(spark, stateDir, gens,
-              if (isCompact) None else Some(touched),
-              stateSchema, dataCols)
-          val priorCnt = priorSel.count()
-          // Idempotent union-distinct over the touched scope only.
-          val merged = priorSel.unionByName(bPairs)
-            .distinct()
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("week_us", lit(null).cast("long"))
-            .withColumn("n_buckets", lit(null).cast("long"))
-          val genDir = GenStore.dir(stateDir, gen)
-          // One write path for the whole CoW family
-          // ([[CowStore.writeGenData]]); compaction generations
-          // optionally z-order each rewritten bucket.
-          CowStore.writeGenData(spark, genDir, merged,
-            zOrder = if (isCompact) zOrderOn else None)
-          // Incremental exact total: written − prior over the SAME
-          // scope (touched buckets, or all on a compaction gen) —
-          // two pruned metadata counts, never a full-state count.
-          val written = spark.read.schema(stateSchema).parquet(genDir)
-            .count()
-          val total = prior.map(_._1).getOrElse(0L) + (written - priorCnt)
-          CowStore.appendMeta(spark, genDir,
-            Row(null, null, total, batchId, weekUs, buckets.toLong,
-              Integer.valueOf(-1)),
-            stateSchema)
-          GenStore.commit(spark, stateDir, gen)
-          if (isCompact) GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 }

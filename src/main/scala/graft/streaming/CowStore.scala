@@ -35,8 +35,9 @@ final case class ZOrder(aCol: String, bCol: String, bits: Int = 16,
   * data columns, then its meta columns, then `bucket` LAST (the
   * partition directory column; −1 is the meta partition); the bucket
   * function is pmod(xxhash64(entity key), B) with B committed in the
-  * meta and validated on every merge; [[GenStore]] provides the
-  * commit/replay protocol unchanged.
+  * meta and validated on every merge; [[GenStore.Folded]] provides the
+  * meta read (the `bucket=-1` partition) and the commit/replay
+  * protocol, shared with the flat stores.
   */
 private[streaming] object CowStore {
 
@@ -154,45 +155,13 @@ private[streaming] object CowStore {
     else parts.reduce(_ unionByName _)
   }
 
-  /** The latest committed generation's meta row, addressed directly at
-    * its `bucket=-1` partition (never base-dir discovery); loud on a
-    * foreign or corrupt store. None = fresh.
-    */
-  def readMetaRow(spark: SparkSession, stateDir: String,
-      schema: StructType, what: String): Option[Row] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read
-        .schema(StructType(schema.dropRight(1)))
-        .parquet(s"${GenStore.dir(stateDir, gens.max)}/bucket=-1")
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"$what state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      Some(meta.head)
-    }
-  }
-
-  /** Write a generation: the merged rows (data cols + `bucket`, meta
-    * cols nulled by the caller) partitioned one task per bucket, then
-    * the meta row appended under `bucket=-1`. The caller commits.
-    * With `zOrder` set, rows are laid out z-ordered WITHIN each bucket
-    * (intended for compaction generations — the one write that
-    * rewrites whole buckets anyway, so the layout comes at the cost of
-    * one extra min/max aggregate and an in-task sort, not extra IO).
-    */
-  def writeGen(spark: SparkSession, genDir: String, merged: DataFrame,
-      metaRow: Row, schema: StructType,
-      zOrder: Option[ZOrder] = None): Unit = {
-    writeGenData(spark, genDir, merged, zOrder)
-    appendMeta(spark, genDir, metaRow, schema)
-  }
-
-  /** The data half of [[writeGen]] — for stores whose meta row depends
-    * on the WRITTEN rows (an incremental total folded from the new
-    * bucket dirs' footer counts): write data, count, then
-    * [[appendMeta]]. Every generation write in the family routes
+  /** Write a generation's data: the merged rows (data cols + `bucket`,
+    * meta cols nulled) partitioned one task per bucket; follow with
+    * [[appendMeta]], then commit. With `zOrder` set, rows are laid out
+    * z-ordered WITHIN each bucket (intended for compaction generations
+    * — the one write that rewrites whole buckets anyway, so the layout
+    * comes at the cost of one extra min/max aggregate and an in-task
+    * sort, not extra IO). Every generation write in the family routes
     * through here so the layout (one dir per bucket, optional z-order)
     * cannot fork per store.
     */
@@ -229,8 +198,8 @@ private[streaming] object CowStore {
     laid.write.mode("overwrite").partitionBy("bucket").parquet(genDir)
   }
 
-  /** The meta half of [[writeGen]]: one row appended under
-    * `bucket=-1`. The caller commits after.
+  /** A generation's meta row, appended under `bucket=-1` after
+    * [[writeGenData]]. The caller commits after.
     */
   def appendMeta(spark: SparkSession, genDir: String, metaRow: Row,
       schema: StructType): Unit = {

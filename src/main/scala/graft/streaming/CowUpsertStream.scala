@@ -74,6 +74,9 @@ object CowUpsertStream {
   private val dataCols =
     Seq("user_id", "event_type", "ts_us", "event_id", "value")
 
+  private val store = new GenStore.Folded("cow-upsert", stateSchema, 5, None,
+      bucketed = true)(m => (m.getLong(5), m.getLong(6), m.getLong(7)))
+
   /** Changelog rows: key, op ('insert' | 'update'), after-image,
     * before-image (null on insert), provenance.
     */
@@ -94,9 +97,7 @@ object CowUpsertStream {
     * `None` = fresh store.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long)] =
-    CowStore.readMetaRow(spark, stateDir, stateSchema, "cow-upsert")
-      .map(m => (m.getLong(5), m.getLong(6), m.getLong(7)))
+      : Option[(Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The live current-row table (q_dd2's shape) — bytes read ∝ state,
     * never ∝ history.
@@ -294,7 +295,8 @@ object CowUpsertStream {
       .withColumn("total", lit(null).cast("long"))
       .withColumn("batch_id", lit(null).cast("long"))
       .withColumn("n_buckets", lit(null).cast("long"))
-    CowStore.writeGen(spark, gTmp, remaining,
+    CowStore.writeGenData(spark, gTmp, remaining)
+    CowStore.appendMeta(spark, gTmp,
       Row(null, null, null, null, null,
         total - nDeleted, hw, nb, Integer.valueOf(-1)),
       stateSchema)
@@ -368,132 +370,111 @@ object CowUpsertStream {
       s"compactEvery must be positive, got $compactEvery")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, nb) =>
-        if (nb != buckets) throw new IllegalStateException(
-          s"cow-upsert state at $stateDir is bucketed $nb ways; this " +
-            s"pipeline runs $buckets — the hash layouts cannot merge, " +
-            "refusing")
-      }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"cow-upsert state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId — " +
-              "the streaming checkpoint was restored from an older " +
-              "snapshot than the state dir; restore a matching pair")
-        case _ =>
-          val bRows = batch
-            .where(col("user_id").isNotNull && col("event_type").isNotNull &&
-              col("ts_us").isNotNull && col("event_id").isNotNull)
-            .select(col("user_id").cast("long").as("user_id"),
-              col("event_type").cast("string").as("event_type"),
-              col("ts_us").cast("long").as("ts_us"),
-              col("event_id").cast("long").as("event_id"),
-              col("value").cast("double").as("value"))
-          val w = Window.partitionBy("user_id", "event_type")
-            .orderBy(col("ts_us").desc, col("event_id").desc)
-          // Batch winners, checkpointed once (batch-sized) — reused by
-          // the touched-set read, the changelog join and the merge.
-          val winners = bRows
+      val total = store.step(spark, stateDir, batchId, compactEvery)(
+        check = { case (_, _, nb) =>
+          if (nb != buckets) throw new IllegalStateException(
+            s"cow-upsert state at $stateDir is bucketed $nb ways; this " +
+              s"pipeline runs $buckets — the hash layouts cannot merge, " +
+              "refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val bRows = batch
+          .where(col("user_id").isNotNull && col("event_type").isNotNull &&
+            col("ts_us").isNotNull && col("event_id").isNotNull)
+          .select(col("user_id").cast("long").as("user_id"),
+            col("event_type").cast("string").as("event_type"),
+            col("ts_us").cast("long").as("ts_us"),
+            col("event_id").cast("long").as("event_id"),
+            col("value").cast("double").as("value"))
+        val w = Window.partitionBy("user_id", "event_type")
+          .orderBy(col("ts_us").desc, col("event_id").desc)
+        // Batch winners, checkpointed once (batch-sized) — reused by
+        // the touched-set read, the changelog join and the merge.
+        val winners = bRows
+          .withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1).drop("rn")
+          .withColumn("bucket",
+            CowStore.bucketOf(buckets, col("user_id"), col("event_type")))
+          .localCheckpoint()
+        val touched = winners.select("bucket").distinct()
+          .collect().map(_.getInt(0)).toSet
+        val priorTouched =
+          if (gen.prior.isEmpty || touched.isEmpty)
+            CowStore.emptyData(spark, stateSchema, dataCols)
+          else CowStore.readBuckets(spark, stateDir, gen.prior,
+            Some(touched), stateSchema, dataCols)
+        // CDC delta off the SAME pruned incumbent read: a winner
+        // beats its incumbent strictly (ties = redelivered current
+        // row = silence).
+        val beats = col("ts_us") > col("old_ts_us") ||
+          (col("ts_us") === col("old_ts_us") &&
+            col("event_id") > col("old_event_id"))
+        val incumbent = priorTouched.select(col("user_id"),
+          col("event_type"), col("ts_us").as("old_ts_us"),
+          col("event_id").as("old_event_id"),
+          col("value").as("old_value"))
+        val delta = if (!rawChangelog)
+          winners.join(incumbent, Seq("user_id", "event_type"), "left")
+            .where(col("old_event_id").isNull || beats)
+            .select(col("user_id"), col("event_type"),
+              when(col("old_event_id").isNull, lit("insert"))
+                .otherwise(lit("update")).as("op"),
+              col("ts_us"), col("event_id"), col("value"),
+              col("old_ts_us"), col("old_event_id"), col("old_value"),
+              lit(batchId).as("batch_id"), lit(gen.n).as("gen"))
+        else {
+          // The per-event chain: batch rows beating the incumbent,
+          // ascending — in that order EVERY such row is a running
+          // maximum, i.e. a state the key actually passed through;
+          // each links back to its predecessor (the incumbent for
+          // the first). Ties on (ts, event_id) collapse to one row
+          // first (redelivery immunity — a duplicate would otherwise
+          // emit a self-transition).
+          val wAsc = Window.partitionBy("user_id", "event_type")
+            .orderBy(col("ts_us").asc, col("event_id").asc)
+          bRows
+            .dropDuplicates(Seq("user_id", "event_type", "ts_us",
+              "event_id"))
+            .join(incumbent, Seq("user_id", "event_type"), "left")
+            .where(col("old_event_id").isNull || beats)
+            .withColumn("prev_ts", lag(col("ts_us"), 1).over(wAsc))
+            .withColumn("prev_eid", lag(col("event_id"), 1).over(wAsc))
+            .withColumn("prev_val", lag(col("value"), 1).over(wAsc))
+            .select(col("user_id"), col("event_type"),
+              when(col("prev_eid").isNull && col("old_event_id").isNull,
+                lit("insert")).otherwise(lit("update")).as("op"),
+              col("ts_us"), col("event_id"), col("value"),
+              coalesce(col("prev_ts"), col("old_ts_us")).as("old_ts_us"),
+              coalesce(col("prev_eid"), col("old_event_id"))
+                .as("old_event_id"),
+              // NOT coalesce: a chain predecessor with a null VALUE is
+              // still the true before-image (value is nullable)
+              when(col("prev_eid").isNotNull, col("prev_val"))
+                .otherwise(col("old_value")).as("old_value"),
+              lit(batchId).as("batch_id"), lit(gen.n).as("gen"))
+        }
+        val cDir = changeDir(stateDir, gen.n)
+        delta.write.mode("overwrite").parquet(cDir)
+        val nInserts = spark.read.schema(changeSchema).parquet(cDir)
+          .where(col("op") === "insert").count()
+        // State write: touched buckets only — or everything on a
+        // compaction generation.
+        val priorSel =
+          if (!gen.compacting) priorTouched
+          else CowStore.readBuckets(spark, stateDir, gen.prior, None,
+            stateSchema, dataCols)
+        val total = prior.map(_._1).getOrElse(0L) + nInserts
+        // Compaction generations optionally z-order every rewritten
+        // bucket (the one write already touching all of them) — the
+        // REL-30 skip law inside the upsert store's buckets.
+        gen.writeBuckets(priorSel.unionByName(winners)
             .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1).drop("rn")
-            .withColumn("bucket",
-              CowStore.bucketOf(buckets, col("user_id"), col("event_type")))
-            .localCheckpoint()
-          val touched = winners.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val isCompact = gen > 0 && gen % compactEvery == 0
-          val priorTouched =
-            if (gens.isEmpty || touched.isEmpty)
-              CowStore.emptyData(spark, stateSchema, dataCols)
-            else CowStore.readBuckets(spark, stateDir, gens, Some(touched),
-              stateSchema, dataCols)
-          // CDC delta off the SAME pruned incumbent read: a winner
-          // beats its incumbent strictly (ties = redelivered current
-          // row = silence).
-          val beats = col("ts_us") > col("old_ts_us") ||
-            (col("ts_us") === col("old_ts_us") &&
-              col("event_id") > col("old_event_id"))
-          val incumbent = priorTouched.select(col("user_id"),
-            col("event_type"), col("ts_us").as("old_ts_us"),
-            col("event_id").as("old_event_id"),
-            col("value").as("old_value"))
-          val delta = if (!rawChangelog)
-            winners.join(incumbent, Seq("user_id", "event_type"), "left")
-              .where(col("old_event_id").isNull || beats)
-              .select(col("user_id"), col("event_type"),
-                when(col("old_event_id").isNull, lit("insert"))
-                  .otherwise(lit("update")).as("op"),
-                col("ts_us"), col("event_id"), col("value"),
-                col("old_ts_us"), col("old_event_id"), col("old_value"),
-                lit(batchId).as("batch_id"), lit(gen).as("gen"))
-          else {
-            // The per-event chain: batch rows beating the incumbent,
-            // ascending — in that order EVERY such row is a running
-            // maximum, i.e. a state the key actually passed through;
-            // each links back to its predecessor (the incumbent for
-            // the first). Ties on (ts, event_id) collapse to one row
-            // first (redelivery immunity — a duplicate would otherwise
-            // emit a self-transition).
-            val wAsc = Window.partitionBy("user_id", "event_type")
-              .orderBy(col("ts_us").asc, col("event_id").asc)
-            bRows
-              .dropDuplicates(Seq("user_id", "event_type", "ts_us",
-                "event_id"))
-              .join(incumbent, Seq("user_id", "event_type"), "left")
-              .where(col("old_event_id").isNull || beats)
-              .withColumn("prev_ts", lag(col("ts_us"), 1).over(wAsc))
-              .withColumn("prev_eid", lag(col("event_id"), 1).over(wAsc))
-              .withColumn("prev_val", lag(col("value"), 1).over(wAsc))
-              .select(col("user_id"), col("event_type"),
-                when(col("prev_eid").isNull && col("old_event_id").isNull,
-                  lit("insert")).otherwise(lit("update")).as("op"),
-                col("ts_us"), col("event_id"), col("value"),
-                coalesce(col("prev_ts"), col("old_ts_us")).as("old_ts_us"),
-                coalesce(col("prev_eid"), col("old_event_id"))
-                  .as("old_event_id"),
-                // NOT coalesce: a chain predecessor with a null VALUE is
-                // still the true before-image (value is nullable)
-                when(col("prev_eid").isNotNull, col("prev_val"))
-                  .otherwise(col("old_value")).as("old_value"),
-                lit(batchId).as("batch_id"), lit(gen).as("gen"))
-          }
-          val cDir = changeDir(stateDir, gen)
-          delta.write.mode("overwrite").parquet(cDir)
-          val nInserts = spark.read.schema(changeSchema).parquet(cDir)
-            .where(col("op") === "insert").count()
-          // State write: touched buckets only — or everything on a
-          // compaction generation.
-          val priorSel =
-            if (!isCompact) priorTouched
-            else if (gens.isEmpty)
-              CowStore.emptyData(spark, stateSchema, dataCols)
-            else CowStore.readBuckets(spark, stateDir, gens, None,
-              stateSchema, dataCols)
-          val merged = priorSel.unionByName(winners)
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1).drop("rn")
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("n_buckets", lit(null).cast("long"))
-          val total = prior.map(_._1).getOrElse(0L) + nInserts
-          // Compaction generations optionally z-order every rewritten
-          // bucket (the one write already touching all of them) — the
-          // REL-30 skip law inside the upsert store's buckets.
-          CowStore.writeGen(spark, GenStore.dir(stateDir, gen), merged,
-            Row(null, null, null, null, null,
-              total, batchId, buckets.toLong, Integer.valueOf(-1)),
-            stateSchema,
-            zOrder = if (isCompact) zOrderOn else None)
-          GenStore.commit(spark, stateDir, gen)
-          if (isCompact) GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .where(col("rn") === 1).drop("rn"),
+          if (gen.compacting) zOrderOn else None)
+        gen.appendMeta(total, batchId, buckets.toLong)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -65,39 +65,36 @@ object DDSketchStream {
 
   private def alphaMicro(alpha: Double): Long = math.round(alpha * 1e6)
 
+  private val store = new GenStore.Folded("ddsketch", stateSchema, 2,
+      Some("bucket"))(m =>
+    (m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5)))
+
   /** The committed meta under `stateDir`: (total, high-water batch_id,
     * alphaMicro, maxBuckets — 0 = uncapped); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bucket").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"ddsketch state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5)))
-    }
-  }
+      : Option[(Long, Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The committed bucket table (bucket, n) — ≤ #buckets rows; empty
     * for a fresh dir.
     */
-  def buckets(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(2)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bucket").isNotNull)
-        .select("bucket", "n")
-    }
+  def buckets(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
+
+  /** Structural check shared by both forms: α and the collapse cap are
+    * committed with the state.
+    */
+  private def checkGrid(what: String, stateDir: String, alpha: Double,
+      maxBuckets: Int)(m: (Long, Long, Long, Long)): Unit = {
+    val (_, _, pam, pmb) = m
+    if (pam != alphaMicro(alpha)) throw new IllegalStateException(
+      s"$what state at $stateDir was bucketed at alpha=${pam / 1e6}; " +
+        s"this pipeline runs alpha=$alpha — different γ grids cannot " +
+        "merge, refusing")
+    if (pmb != maxBuckets.toLong) throw new IllegalStateException(
+      s"$what state at $stateDir was capped at m=$pmb buckets; " +
+        s"this pipeline runs m=$maxBuckets — collapse levels cannot " +
+        "merge, refusing")
   }
 
   /** One foreachBatch handler over batches carrying a `value` column
@@ -116,60 +113,30 @@ object DDSketchStream {
       s"maxBuckets must be 0 (uncapped) or >= 2, got $maxBuckets")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pam, pmb) =>
-        if (pam != am) throw new IllegalStateException(
-          s"ddsketch state at $stateDir was bucketed at alpha=${pam / 1e6}; " +
-            s"this pipeline runs alpha=$alpha — different γ grids cannot " +
-            "merge, refusing")
-        if (pmb != maxBuckets.toLong) throw new IllegalStateException(
-          s"ddsketch state at $stateDir was capped at m=$pmb buckets; " +
-            s"this pipeline runs m=$maxBuckets — collapse levels cannot " +
-            "merge, refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = checkGrid("ddsketch", stateDir, alpha, maxBuckets),
+        replay = _._1) { (prior, gen) =>
+        val bSketch = DDSketch.sketch(batch.select("value"), alpha)
+        // Batch positive-value total — a 1-row bounded pin.
+        val bTotal = bSketch.agg(coalesce(sum("n"), lit(0L)))
+          .head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        // Distributed merge: summed bucket counts ARE the sketch of
+        // the concatenated stream. <= #buckets rows in and out.
+        val folded = buckets(spark, stateDir)
+          .unionByName(bSketch)
+          .groupBy("bucket").agg(sum("n").as("n"))
+        // The collapsing cap (DDSketch.collapse): committed state is
+        // hard-bounded at m rows; mass only moves UP, so every
+        // quantile answered above the cutoff stays exactly what the
+        // uncapped stream would answer.
+        gen.writeWithMeta(
+          if (maxBuckets >= 2) DDSketch.collapse(folded, maxBuckets)
+          else folded,
+          total, batchId, am, maxBuckets.toLong)
+        total
       }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"ddsketch state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId — " +
-              "the streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val bSketch = DDSketch.sketch(batch.select("value"), alpha)
-          // Batch positive-value total — a 1-row bounded pin.
-          val bTotal = bSketch.agg(coalesce(sum("n"), lit(0L)))
-            .head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // Distributed merge: summed bucket counts ARE the sketch of
-          // the concatenated stream. <= #buckets rows in and out.
-          val folded = buckets(spark, stateDir)
-            .unionByName(bSketch)
-            .groupBy("bucket").agg(sum("n").as("n"))
-          // The collapsing cap (DDSketch.collapse): committed state is
-          // hard-bounded at m rows; mass only moves UP, so every
-          // quantile answered above the cutoff stays exactly what the
-          // uncapped stream would answer.
-          val merged = (if (maxBuckets >= 2) DDSketch.collapse(folded, maxBuckets)
-            else folded)
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("alpha_micro", lit(null).cast("long"))
-            .withColumn("max_buckets", lit(null).cast("long"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, total, batchId, am, maxBuckets.toLong)),
-            stateSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 
@@ -206,37 +173,18 @@ object DDSketchStream {
     StructField("alpha_micro", LongType),
     StructField("max_buckets", LongType)))
 
+  private val keyedStore = new GenStore.Folded("keyed ddsketch",
+      keyedSchema, 3, Some("bucket"))(m =>
+    (m.getLong(3), m.getLong(4), m.getLong(5), m.getLong(6)))
+
   /** Committed keyed meta: (total, high-water batch_id, alphaMicro,
     * maxBuckets — 0 = uncapped). */
   def readKeyedMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(keyedSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bucket").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"keyed ddsketch state generation ${gens.max} has ${meta.length} " +
-          "meta rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(3), m.getLong(4), m.getLong(5), m.getLong(6)))
-    }
-  }
+      : Option[(Long, Long, Long, Long)] = keyedStore.meta(spark, stateDir)
 
   /** The committed keyed bucket table (key, bucket, n). */
-  def keyedBuckets(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(keyedSchema.take(3)))
-    } else {
-      spark.read.schema(keyedSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bucket").isNotNull)
-        .select("key", "bucket", "n")
-    }
-  }
+  def keyedBuckets(spark: SparkSession, stateDir: String): DataFrame =
+    keyedStore.rows(spark, stateDir)
 
   /** One foreachBatch handler over (key, value) batches — the keyed
     * [[pipeline]] with the identical replay/stale/α discipline.
@@ -251,57 +199,28 @@ object DDSketchStream {
       s"maxBuckets must be 0 (uncapped) or >= 2, got $maxBuckets")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readKeyedMeta(spark, stateDir)
-      prior.foreach { case (_, _, pam, pmb) =>
-        if (pam != am) throw new IllegalStateException(
-          s"keyed ddsketch state at $stateDir was bucketed at " +
-            s"alpha=${pam / 1e6}; this pipeline runs alpha=$alpha — " +
-            "different γ grids cannot merge, refusing")
-        if (pmb != maxBuckets.toLong) throw new IllegalStateException(
-          s"keyed ddsketch state at $stateDir was capped at m=$pmb " +
-            s"buckets/key; this pipeline runs m=$maxBuckets — collapse " +
-            "levels cannot merge, refusing")
+      val total = keyedStore.step(spark, stateDir, batchId)(
+        check = checkGrid("keyed ddsketch", stateDir, alpha, maxBuckets),
+        replay = _._1) { (prior, gen) =>
+        val bSketch = DDSketch.sketchBy(
+          batch.select(col("key").cast("string").as("key"), col("value")),
+          alpha, Seq("key"))
+        val bTotal = bSketch.agg(coalesce(sum("n"), lit(0L)))
+          .head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        val folded = keyedBuckets(spark, stateDir)
+          .unionByName(bSketch)
+          .groupBy("key", "bucket").agg(sum("n").as("n"))
+        // Per-key collapsing cap: <= keys·m rows committed no matter
+        // what any one series' value range does.
+        gen.writeWithMeta(
+          if (maxBuckets >= 2)
+            DDSketch.collapseBy(folded, maxBuckets, Seq("key"))
+          else folded,
+          total, batchId, am, maxBuckets.toLong)
+        total
       }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"keyed ddsketch state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId — " +
-              "restore a matching checkpoint/state pair")
-        case _ =>
-          val bSketch = DDSketch.sketchBy(
-            batch.select(col("key").cast("string").as("key"), col("value")),
-            alpha, Seq("key"))
-          val bTotal = bSketch.agg(coalesce(sum("n"), lit(0L)))
-            .head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          val folded = keyedBuckets(spark, stateDir)
-            .unionByName(bSketch)
-            .groupBy("key", "bucket").agg(sum("n").as("n"))
-          // Per-key collapsing cap: <= keys·m rows committed no matter
-          // what any one series' value range does.
-          val merged = (if (maxBuckets >= 2)
-              DDSketch.collapseBy(folded, maxBuckets, Seq("key"))
-            else folded)
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("alpha_micro", lit(null).cast("long"))
-            .withColumn("max_buckets", lit(null).cast("long"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, total, batchId, am, maxBuckets.toLong)),
-            keyedSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 
@@ -100,47 +100,26 @@ object MomentFeedView {
       StructField("hw_gen", LongType), StructField("view_rows", LongType),
       StructField("view_keys", StringType)))
 
+  private def store(spark: SparkSession, viewDir: String,
+      keys: Seq[String], derived: Seq[DerivedKey]) = {
+    val n = keys.size + derived.size
+    FeedViewKeys.store(spark, viewDir, keys, derived, "moment",
+      viewSchema(keys, derived), n + 6)(m =>
+      (m.getLong(n + 6), m.getLong(n + 7)))
+  }
+
   /** Committed meta: (high-water feed gen, view rows); None = fresh. */
   def readMeta(spark: SparkSession, viewDir: String,
       keys: Seq[String] = Seq("event_type"),
-      derived: Seq[DerivedKey] = Nil): Option[(Long, Long)] = {
-    FeedViewKeys.validate(keys)
-    FeedViewKeys.validateDerived(spark, derived, keys)
-    val gens = GenStore.committed(spark, viewDir)
-    if (gens.isEmpty) None
-    else {
-      FeedViewKeys.check(spark, viewDir, gens, keys, "moment", derived)
-      val n = keys.size + derived.size
-      val meta = spark.read.schema(viewSchema(keys, derived))
-        .parquet(GenStore.dir(viewDir, gens.max))
-        .where(col(keys.head).isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"moment view generation ${gens.max} has ${meta.length} meta rows " +
-          "(want exactly 1) — foreign or corrupt state")
-      Some((meta.head.getLong(n + 6), meta.head.getLong(n + 7)))
-    }
-  }
+      derived: Seq[DerivedKey] = Nil): Option[(Long, Long)] =
+    store(spark, viewDir, keys, derived).meta(spark, viewDir)
 
   /** The live moment table (keys…, derived…, n, sx, sy, sxx, syy,
     * sxy). */
   def table(spark: SparkSession, viewDir: String,
       keys: Seq[String] = Seq("event_type"),
-      derived: Seq[DerivedKey] = Nil): DataFrame = {
-    FeedViewKeys.validate(keys)
-    FeedViewKeys.validateDerived(spark, derived, keys)
-    val gens = GenStore.committed(spark, viewDir)
-    if (gens.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(viewSchema(keys, derived).dropRight(3)))
-    else {
-      FeedViewKeys.check(spark, viewDir, gens, keys, "moment", derived)
-      spark.read.schema(viewSchema(keys, derived))
-        .parquet(GenStore.dir(viewDir, gens.max))
-        .where(col(keys.head).isNotNull)
-        .select((keys ++ derived.map(_.name) ++ momentCols).map(col): _*)
-    }
-  }
+      derived: Seq[DerivedKey] = Nil): DataFrame =
+    store(spark, viewDir, keys, derived).rows(spark, viewDir)
 
   /** The one-shot truth over an arbitrary current-row table carrying
     * the key columns plus (ts_us, value) — the aggregate the view must
@@ -173,7 +152,8 @@ object MomentFeedView {
     val feedGens = GenStore.committed(spark, stateDir)
     if (feedGens.isEmpty) return 0L
     val frontier = feedGens.max
-    val hw = readMeta(spark, viewDir, keys, derived).map(_._1).getOrElse(-1L)
+    val st = store(spark, viewDir, keys, derived)
+    val hw = st.meta(spark, viewDir).map(_._1).getOrElse(-1L)
     if (frontier <= hw) return 0L
     val fresh = CowUpsertStream.changes(spark, stateDir)
       .where(col("gen") > hw && col("gen") <= frontier)
@@ -196,7 +176,7 @@ object MomentFeedView {
         d(xSec * xSec, xSecOld * xSecOld).as("sxx"),
         d(yA * yA, yB * yB).as("syy"),
         d(xSec * yA, xSecOld * yB).as("sxy")): _*)
-    val merged = table(spark, viewDir, keys, derived).unionByName(deltas)
+    val merged = st.rows(spark, viewDir).unionByName(deltas)
       .groupBy(groupNames.map(col): _*)
       .agg(sum("n").as("n"),
         sum("sx").cast(Dec).as("sx"), sum("sy").cast(Dec).as("sy"),
@@ -205,25 +185,12 @@ object MomentFeedView {
       // a fully-deleted key telescopes to n=0 (and exactly then the
       // sums are 0) — the one-shot aggregate has no such row
       .where(col("n") =!= 0L)
-      .withColumn("hw_gen", lit(null).cast("long"))
-      .withColumn("view_rows", lit(null).cast("long"))
-      .withColumn("view_keys", lit(null).cast("string"))
     val folded = fresh.count()
-    val gens = GenStore.committed(spark, viewDir)
-    val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-    val genDir = GenStore.dir(viewDir, gen)
-    merged.coalesce(1).write.mode("overwrite").parquet(genDir)
-    val rows = spark.read.schema(viewSchema(keys, derived))
-      .parquet(genDir).count()
-    val metaDf = spark.createDataFrame(
-      java.util.Collections.singletonList(
-        Row.fromSeq(keys.map(_ => null) ++ derived.map(_ => null) ++
-          Seq(null, null, null, null, null, null,
-            frontier, rows, FeedViewKeys.joinedWith(keys, derived)))),
-      viewSchema(keys, derived))
-    metaDf.coalesce(1).write.mode("append").parquet(genDir)
-    GenStore.commit(spark, viewDir, gen)
-    GenStore.dropBelow(spark, viewDir, gen)
+    st.next(spark, viewDir) { gen =>
+      gen.write(merged)(_.coalesce(1))
+      gen.appendMeta(frontier, gen.written,
+        FeedViewKeys.joinedWith(keys, derived))
+    }
     folded
   }
 
@@ -277,57 +244,34 @@ object SketchFeedView {
       StructField("cap_buckets", LongType),
       StructField("view_keys", StringType)))
 
+  private def store(spark: SparkSession, viewDir: String,
+      keys: Seq[String], derived: Seq[DerivedKey]) = {
+    val n = keys.size + derived.size
+    FeedViewKeys.store(spark, viewDir, keys, derived, "sketch",
+        viewSchema(keys, derived), n + 2) { m =>
+      // A sketch view committed BEFORE the cap existed has no
+      // cap_buckets column on disk — the explicit schema reads it as
+      // null, which means exactly "uncapped/exact" (the only mode that
+      // existed then), not corrupt state; default it to 0 instead of
+      // NPEing.
+      (m.getLong(n + 2), m.getLong(n + 3),
+        if (m.isNullAt(n + 4)) 0L else m.getLong(n + 4))
+    }
+  }
+
   /** Committed meta: (high-water feed gen, alphaMicro, capBuckets —
     * 0 = uncapped/exact); None = fresh.
     */
   def readMeta(spark: SparkSession, viewDir: String,
       keys: Seq[String] = Seq("event_type"),
-      derived: Seq[DerivedKey] = Nil): Option[(Long, Long, Long)] = {
-    FeedViewKeys.validate(keys)
-    FeedViewKeys.validateDerived(spark, derived, keys)
-    val gens = GenStore.committed(spark, viewDir)
-    if (gens.isEmpty) None
-    else {
-      FeedViewKeys.check(spark, viewDir, gens, keys, "sketch", derived)
-      val n = keys.size + derived.size
-      val meta = spark.read.schema(viewSchema(keys, derived))
-        .parquet(GenStore.dir(viewDir, gens.max))
-        .where(col(keys.head).isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"sketch view generation ${gens.max} has ${meta.length} meta rows " +
-          "(want exactly 1) — foreign or corrupt state")
-      // meta cols sit after the (bucket, n) value columns. A sketch
-      // view committed BEFORE the cap existed has no cap_buckets
-      // column on disk — the explicit schema reads it as null, which
-      // means exactly "uncapped/exact" (the only mode that existed
-      // then), not corrupt state; default it to 0 instead of NPEing.
-      val capStored =
-        if (meta.head.isNullAt(n + 4)) 0L else meta.head.getLong(n + 4)
-      Some((meta.head.getLong(n + 2), meta.head.getLong(n + 3),
-        capStored))
-    }
-  }
+      derived: Seq[DerivedKey] = Nil): Option[(Long, Long, Long)] =
+    store(spark, viewDir, keys, derived).meta(spark, viewDir)
 
   /** The live (keys…, derived…, bucket, n) table. */
   def table(spark: SparkSession, viewDir: String,
       keys: Seq[String] = Seq("event_type"),
-      derived: Seq[DerivedKey] = Nil): DataFrame = {
-    FeedViewKeys.validate(keys)
-    FeedViewKeys.validateDerived(spark, derived, keys)
-    val gens = GenStore.committed(spark, viewDir)
-    if (gens.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(viewSchema(keys, derived).dropRight(4)))
-    else {
-      FeedViewKeys.check(spark, viewDir, gens, keys, "sketch", derived)
-      spark.read.schema(viewSchema(keys, derived))
-        .parquet(GenStore.dir(viewDir, gens.max))
-        .where(col(keys.head).isNotNull)
-        .select((keys ++ derived.map(_.name) ++ Seq("bucket", "n"))
-          .map(col): _*)
-    }
-  }
+      derived: Seq[DerivedKey] = Nil): DataFrame =
+    store(spark, viewDir, keys, derived).rows(spark, viewDir)
 
   /** Fold every unseen committed feed generation into the view.
     * α is fixed at first refresh and validated thereafter (a different
@@ -360,7 +304,8 @@ object SketchFeedView {
     val feedGens = GenStore.committed(spark, stateDir)
     if (feedGens.isEmpty) return 0L
     val frontier = feedGens.max
-    val prior = readMeta(spark, viewDir, keys, derived)
+    val st = store(spark, viewDir, keys, derived)
+    val prior = st.meta(spark, viewDir)
     prior.foreach { case (_, pam, pcap) =>
       if (pam != am) throw new IllegalStateException(
         s"sketch view at $viewDir was bucketed at alpha=${pam / 1e6}; " +
@@ -391,31 +336,18 @@ object SketchFeedView {
       .select(groupNames.map(col) ++ Seq(
         DDSketch.bucketOf(col("old_value"), alpha).as("bucket"),
         lit(-1L).as("dn")): _*)
-    val summed = table(spark, viewDir, keys, derived)
+    val summed = st.rows(spark, viewDir)
       .unionByName(after.union(before).withColumnRenamed("dn", "n"))
       .groupBy((groupNames :+ "bucket").map(col): _*).agg(sum("n").as("n"))
       .where(col("n") =!= 0L) // exact counters telescope to 0 on full drain
     val merged = maxBuckets
       .map(m => DDSketch.collapseBy(summed, m, groupNames))
       .getOrElse(summed)
-      .withColumn("hw_gen", lit(null).cast("long"))
-      .withColumn("alpha_micro", lit(null).cast("long"))
-      .withColumn("cap_buckets", lit(null).cast("long"))
-      .withColumn("view_keys", lit(null).cast("string"))
     val folded = fresh.count()
-    val gens = GenStore.committed(spark, viewDir)
-    val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-    val genDir = GenStore.dir(viewDir, gen)
-    merged.coalesce(1).write.mode("overwrite").parquet(genDir)
-    val metaDf = spark.createDataFrame(
-      java.util.Collections.singletonList(
-        Row.fromSeq(keys.map(_ => null) ++ derived.map(_ => null) ++
-          Seq(null, null, frontier, am, cap,
-            FeedViewKeys.joinedWith(keys, derived)))),
-      viewSchema(keys, derived))
-    metaDf.coalesce(1).write.mode("append").parquet(genDir)
-    GenStore.commit(spark, viewDir, gen)
-    GenStore.dropBelow(spark, viewDir, gen)
+    st.next(spark, viewDir) { gen =>
+      gen.write(merged)(_.coalesce(1))
+      gen.appendMeta(frontier, am, cap, FeedViewKeys.joinedWith(keys, derived))
+    }
     folded
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
@@ -67,38 +67,18 @@ object FunnelStream {
     StructField("total", LongType), StructField("batch_id", LongType),
     StructField("steps", StringType)))
 
+  private val store = new GenStore.Folded("funnel", stateSchema, 3,
+      Some("user_id"))(m => (m.getLong(3), m.getLong(4), m.getString(5)))
+
   /** The committed meta under `stateDir`: (retainedRows, high-water
     * batch_id, step signature); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, String)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"funnel state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(3), m.getLong(4), m.getString(5)))
-    }
-  }
+      : Option[(Long, Long, String)] = store.meta(spark, stateDir)
 
   /** The committed retained events; empty for a fresh dir. */
-  def events(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(3)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNotNull)
-        .select("user_id", "step", "ts")
-    }
-  }
+  def events(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** Per-user chain over an events table: (user_id, evs, c1..cN).
     * c_k = min step-k ts strictly after c_{k−1} — evaluated as array
@@ -132,64 +112,43 @@ object FunnelStream {
     val sig = steps.mkString(",")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, ps) =>
-        if (ps != sig) throw new IllegalStateException(
-          s"funnel state at $stateDir tracks steps [$ps]; this pipeline " +
-            s"runs [$sig] — two funnels cannot merge, refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, ps) =>
+          if (ps != sig) throw new IllegalStateException(
+            s"funnel state at $stateDir tracks steps [$ps]; this pipeline " +
+              s"runs [$sig] — two funnels cannot merge, refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val stepCol = steps.zipWithIndex.foldLeft(lit(null).cast("int")) {
+          case (acc, (s, i)) => when(col("event_type") === s, lit(i + 1))
+            .otherwise(acc)
+        }
+        val bRows = batch
+          .where(col("user_id").isNotNull && col("ts_us").isNotNull &&
+            col("event_type").isin(steps: _*))
+          .select(col("user_id"), stepCol.as("step"),
+            col("ts_us").cast("long").as("ts"))
+          .distinct()
+        val merged = events(spark, stateDir).unionByName(bRows).distinct()
+        // Chain + retention in ONE per-user row computation: keep a
+        // step-k event iff c_k is undefined or ts <= c_k (pruning
+        // soundness: futures of c_k only decrease, so ts > c_k can
+        // never be an answer).
+        val keepPred = (1 to steps.size).map(k =>
+          s"(e.step = $k AND (c$k IS NULL OR e.ts <= c$k))").mkString(" OR ")
+        val kept = chained(merged, steps.size)
+          .withColumn("kept", expr(s"filter(evs, e -> $keepPred)"))
+          .select(col("user_id"), explode(col("kept")).as("e"))
+          .select(col("user_id"), col("e.step").as("step"),
+            col("e.ts").as("ts"))
+        val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
+          targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        gen.write(kept)(_.repartition(nFiles, col("user_id")))
+        val total = gen.written
+        gen.appendMeta(total, batchId, sig)
+        total
       }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"funnel state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val stepCol = steps.zipWithIndex.foldLeft(lit(null).cast("int")) {
-            case (acc, (s, i)) => when(col("event_type") === s, lit(i + 1))
-              .otherwise(acc)
-          }
-          val bRows = batch
-            .where(col("user_id").isNotNull && col("ts_us").isNotNull &&
-              col("event_type").isin(steps: _*))
-            .select(col("user_id"), stepCol.as("step"),
-              col("ts_us").cast("long").as("ts"))
-            .distinct()
-          val merged = events(spark, stateDir).unionByName(bRows).distinct()
-          // Chain + retention in ONE per-user row computation: keep a
-          // step-k event iff c_k is undefined or ts <= c_k (pruning
-          // soundness: futures of c_k only decrease, so ts > c_k can
-          // never be an answer).
-          val keepPred = (1 to steps.size).map(k =>
-            s"(e.step = $k AND (c$k IS NULL OR e.ts <= c$k))").mkString(" OR ")
-          val kept = chained(merged, steps.size)
-            .withColumn("kept", expr(s"filter(evs, e -> $keepPred)"))
-            .select(col("user_id"), explode(col("kept")).as("e"))
-            .select(col("user_id"), col("e.step").as("step"),
-              col("e.ts").as("ts"))
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("steps", lit(null).cast("string"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
-            targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          kept.repartition(nFiles, col("user_id"))
-            .write.mode("overwrite").parquet(genDir)
-          val total = spark.read.schema(stateSchema).parquet(genDir).count()
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, total, batchId, sig)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

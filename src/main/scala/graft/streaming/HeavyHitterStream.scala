@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -52,24 +52,22 @@ object HeavyHitterStream {
     StructField("item", StringType), StructField("cnt", LongType),
     StructField("total", LongType), StructField("batch_id", LongType)))
 
+  private val store = new GenStore.Folded("heavy-hitter", stateSchema, 2,
+      Some("item"))(m => (m.getLong(2), m.getLong(3)))
+
+  private def committedCounters(spark: SparkSession,
+      stateDir: String): Map[String, Long] =
+    store.rows(spark, stateDir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
   /** The committed summary under `stateDir`:
     * (counters, total, high-water batch_id); `None` = fresh stream.
     */
   def readState(spark: SparkSession, stateDir: String)
-      : Option[(Map[String, Long], Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val rows = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max)).collect()
-      val meta = rows.find(_.isNullAt(0)).getOrElse(throw new IllegalStateException(
-        s"heavy-hitter state generation ${gens.max} has no meta row — " +
-          "foreign or corrupt state"))
-      val counters = rows.filterNot(_.isNullAt(0))
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      Some((counters, meta.getLong(2), meta.getLong(3)))
+      : Option[(Map[String, Long], Long, Long)] =
+    store.meta(spark, stateDir).map { case (total, hw) =>
+      (committedCounters(spark, stateDir), total, hw)
     }
-  }
 
   /** One foreachBatch handler over batches carrying a `text` column.
     * `onBatch(batchId, total, counters)` fires after the commit (or the
@@ -82,51 +80,24 @@ object HeavyHitterStream {
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       import spark.implicits._
-      val prior = readState(spark, stateDir)
-      prior match {
-        case Some((counters, total, hw)) if hw == batchId =>
-          // Replay after the state commit: the summary already includes
-          // this batch — merging again would double-count it.
-          onBatch(batchId, total, counters)
-        case Some((_, _, hw)) if batchId < hw =>
-          // A batch id BELOW the committed high-water is a replay too —
-          // but one the skip-and-re-emit path cannot serve faithfully
-          // (the committed summary has moved past this batch, so there
-          // is no "state as of batch_id" to re-emit). It means the
-          // streaming checkpoint was restored from an older snapshot
-          // than the state dir — merging would double-count every token
-          // in the batch and silently break the N/(m+1) undercount
-          // bound, so refuse loudly instead.
-          throw new IllegalStateException(
-            s"heavy-hitter state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId " +
-              "— the streaming checkpoint was restored from an older " +
-              "snapshot than the state dir; restore a matching pair " +
-              "(merging would double-count the batch)")
-        case _ =>
-          val (bCounters, bTotal) = batch
-            .select(explode(graft.functions.TextFunctions.tokens(col("text")))
-              .as("item"))
-            .as[String]
-            .select(new HeavyHitters.MisraGries(m).toColumn)
-            .head()
-          val merged = mutable.Map.empty[String, Long]
-          val total0 = prior.map(_._2).getOrElse(0L)
-          prior.foreach { case (c, _, _) => merged ++= c }
-          HeavyHitters.mergeCounters(merged, bCounters, m)
-          val total = total0 + bTotal
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val rows = Row(null, 0L, total, batchId) +:
-            merged.toSeq.map { case (k, v) => Row(k, v, total, batchId) }
-          import scala.jdk.CollectionConverters._
-          spark.createDataFrame(rows.asJava, stateSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total, merged.toMap)
+      val (total, counters) = store.step(spark, stateDir, batchId)(
+        replay = { case (total, _) =>
+          (total, committedCounters(spark, stateDir))
+        }) { (prior, gen) =>
+        val (bCounters, bTotal) = batch
+          .select(explode(graft.functions.TextFunctions.tokens(col("text")))
+            .as("item"))
+          .as[String]
+          .select(new HeavyHitters.MisraGries(m).toColumn)
+          .head()
+        val merged = mutable.Map.empty[String, Long]
+        if (prior.nonEmpty) merged ++= committedCounters(spark, stateDir)
+        HeavyHitters.mergeCounters(merged, bCounters, m)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        gen.writeWithMeta(merged.toSeq.toDF("item", "cnt"), total, batchId)
+        (total, merged.toMap)
       }
+      onBatch(batchId, total, counters)
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
@@ -58,42 +60,35 @@ object HllStream {
     StructField("sk", BinaryType), StructField("total", LongType),
     StructField("batch_id", LongType), StructField("lgk", LongType)))
 
+  private val store = new GenStore.Folded("hll", stateSchema, 1,
+      Some("sk"))(m => (m.getLong(1), m.getLong(2), m.getLong(3).toInt))
+
   /** The committed meta under `stateDir`: (rowTotal, high-water
     * batch_id, lgK); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("sk").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"hll state generation ${gens.max} has ${meta.length} meta rows " +
-          "(want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(1), m.getLong(2), m.getLong(3).toInt))
-    }
-  }
+      : Option[(Long, Long, Int)] = store.meta(spark, stateDir)
 
   /** The committed sketch row (single binary), None for a fresh dir. */
   private def sketchRow(spark: SparkSession, stateDir: String)
-      : Option[Array[Byte]] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else spark.read.schema(stateSchema)
-      .parquet(GenStore.dir(stateDir, gens.max))
-      .where(col("sk").isNotNull)
-      .collect() match {
-        case Array() => None // all-empty batches so far: no sketch yet
-        case Array(r) => Some(r.getAs[Array[Byte]](0))
-        case rows => throw new IllegalStateException(
-          s"hll state generation ${gens.max} has ${rows.length} sketch " +
-            "rows (want exactly 1) — foreign or corrupt state")
-      }
-  }
+      : Option[Array[Byte]] =
+    store.rows(spark, stateDir).collect() match {
+      case Array() => None // fresh, or all-empty batches so far
+      case Array(r) => Some(r.getAs[Array[Byte]](0))
+      case rows => throw new IllegalStateException(
+        s"hll state at $stateDir has ${rows.length} sketch rows, not " +
+          "one — foreign or corrupt state")
+    }
+
+  /** lgK is committed with the state: a mixed union silently changes
+    * the error bound.
+    */
+  private def checkLgK(what: String, stateDir: String, lgK: Int)(
+      m: (Long, Long, Int)): Unit =
+    if (m._3 != lgK) throw new IllegalStateException(
+      s"$what state at $stateDir was sketched at lgK=${m._3}; this " +
+        s"pipeline runs lgK=$lgK — a mixed union silently changes the " +
+        "error bound mid-stream, refusing")
 
   /** One foreachBatch handler over batches carrying an `item` column.
     * `onBatch(batchId, estimate, rowTotal)` fires after the commit (or
@@ -106,55 +101,33 @@ object HllStream {
     require(lgK >= 4 && lgK <= 21, s"lgK must be in [4, 21], got $lgK")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, plgk) =>
-        if (plgk != lgK) throw new IllegalStateException(
-          s"hll state at $stateDir was sketched at lgK=$plgk; this " +
-            s"pipeline runs lgK=$lgK — a mixed union silently changes the " +
-            "error bound mid-stream, refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = checkLgK("hll", stateDir, lgK), replay = _._1) {
+        (prior, gen) =>
+        // One partial+final sketch aggregate + the exact row count in
+        // the same job (1-row bounded pin).
+        val agg = batch.agg(
+          hll_sketch_agg(col("item"), lit(lgK)).as("sk"),
+          count(col("item")).as("n")).head()
+        val bSketch = agg.getAs[Array[Byte]](0)
+        val total = prior.map(_._1).getOrElse(0L) + agg.getLong(1)
+        // Register-wise max union with the committed sketch — a
+        // scalar expression over two 4 KB-class literals; the merged
+        // sketch IS the sketch of the concatenated stream. An empty
+        // batch sketches to null and contributes nothing.
+        val merged = (sketchRow(spark, stateDir), Option(bSketch)) match {
+          case (prev, None) => prev
+          case (None, b) => b
+          case (Some(prev), Some(b)) => Some(
+            spark.range(1).select(hll_union(lit(prev), lit(b)).as("sk"))
+              .head().getAs[Array[Byte]](0))
+        }
+        gen.writeWithMeta(spark.createDataFrame(
+            merged.map(Row(_)).toSeq.asJava, StructType(stateSchema.take(1))),
+          total, batchId, lgK.toLong)
+        total
       }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, estimate(spark, stateDir), total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"hll state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          // One partial+final sketch aggregate + the exact row count in
-          // the same job (1-row bounded pin).
-          val agg = batch.agg(
-            hll_sketch_agg(col("item"), lit(lgK)).as("sk"),
-            count(col("item")).as("n")).head()
-          val bSketch = agg.getAs[Array[Byte]](0)
-          val bTotal = agg.getLong(1)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // Register-wise max union with the committed sketch — a
-          // scalar expression over two 4 KB-class literals; the merged
-          // sketch IS the sketch of the concatenated stream. An empty
-          // batch sketches to null and contributes nothing.
-          val merged = (sketchRow(spark, stateDir), Option(bSketch)) match {
-            case (prev, None) => prev.orNull
-            case (None, Some(b)) => b
-            case (Some(prev), Some(b)) =>
-              spark.range(1).select(
-                hll_union(lit(prev), lit(b)).as("sk"))
-                .head().getAs[Array[Byte]](0)
-          }
-          val rows = new java.util.ArrayList[Row]()
-          if (merged != null) rows.add(Row(merged, null, null, null))
-          rows.add(Row(null, total, batchId, lgK.toLong))
-          val out = spark.createDataFrame(rows, stateSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          out.coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, estimate(spark, stateDir), total)
-      }
+      onBatch(batchId, estimate(spark, stateDir), total)
     }
   }
 
@@ -199,41 +172,20 @@ object HllStream {
     StructField("sk", BinaryType), StructField("total", LongType),
     StructField("batch_id", LongType), StructField("lgk", LongType)))
 
-  /** Committed keyed meta: (rowTotal, high-water batch_id, lgK); the
-    * meta row is the one with `sk` null (a null KEY is a legal group,
-    * so key-nullness cannot be the discriminator).
-    */
+  // The meta row is the one with `sk` null (a null KEY is a legal
+  // group, so key-nullness cannot be the discriminator).
+  private val keyedStore = new GenStore.Folded("keyed hll", keyedSchema, 2,
+      Some("sk"))(m => (m.getLong(2), m.getLong(3), m.getLong(4).toInt))
+
+  /** Committed keyed meta: (rowTotal, high-water batch_id, lgK). */
   def readKeyedMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(keyedSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("sk").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"keyed hll state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(2), m.getLong(3), m.getLong(4).toInt))
-    }
-  }
+      : Option[(Long, Long, Int)] = keyedStore.meta(spark, stateDir)
 
   /** The committed keyed sketch table (key, sk) — ≤ keys rows; empty
     * for a fresh dir.
     */
-  def keyedSketches(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(keyedSchema.take(2)))
-    } else {
-      spark.read.schema(keyedSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("sk").isNotNull)
-        .select("key", "sk")
-    }
-  }
+  def keyedSketches(spark: SparkSession, stateDir: String): DataFrame =
+    keyedStore.rows(spark, stateDir)
 
   /** One foreachBatch handler over (key, item) batches — the keyed
     * [[pipeline]] with the identical replay/stale/lgK discipline.
@@ -246,54 +198,29 @@ object HllStream {
     require(lgK >= 4 && lgK <= 21, s"lgK must be in [4, 21], got $lgK")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readKeyedMeta(spark, stateDir)
-      prior.foreach { case (_, _, plgk) =>
-        if (plgk != lgK) throw new IllegalStateException(
-          s"keyed hll state at $stateDir was sketched at lgK=$plgk; this " +
-            s"pipeline runs lgK=$lgK — a mixed union silently changes the " +
-            "error bound mid-stream, refusing")
-      }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"keyed hll state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId — " +
-              "restore a matching checkpoint/state pair")
-        case _ =>
-          // One grouped partial+final sketch job; ≤ keys rows out.
-          val bSketch = batch
-            .select(col("key").cast("string").as("key"), col("item"))
-            .groupBy("key")
-            .agg(hll_sketch_agg(col("item"), lit(lgK)).as("sk"),
-              count(col("item")).as("n"))
-          // Batch row total off the ≤ keys grouped rows (bounded pin).
-          val bTotal = bSketch.agg(coalesce(sum("n"), lit(0L)))
-            .head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // Distributed register-max merge: ≤ 2 sketches per key in,
-          // one out. Every survivor passes through hll_union_agg, so
-          // all committed sketches price the composite estimator.
-          val merged = keyedSketches(spark, stateDir)
+      val total = keyedStore.step(spark, stateDir, batchId)(
+        check = checkLgK("keyed hll", stateDir, lgK), replay = _._1) {
+        (prior, gen) =>
+        // One grouped partial+final sketch job; ≤ keys rows out.
+        val bSketch = batch
+          .select(col("key").cast("string").as("key"), col("item"))
+          .groupBy("key")
+          .agg(hll_sketch_agg(col("item"), lit(lgK)).as("sk"),
+            count(col("item")).as("n"))
+        // Batch row total off the ≤ keys grouped rows (bounded pin).
+        val bTotal = bSketch.agg(coalesce(sum("n"), lit(0L)))
+          .head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        // Distributed register-max merge: ≤ 2 sketches per key in,
+        // one out. Every survivor passes through hll_union_agg, so
+        // all committed sketches price the composite estimator.
+        gen.writeWithMeta(keyedSketches(spark, stateDir)
             .unionByName(bSketch.select("key", "sk"))
-            .groupBy("key").agg(hll_union_agg(col("sk")).as("sk"))
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("lgk", lit(null).cast("long"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, total, batchId, lgK.toLong)),
-            keyedSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .groupBy("key").agg(hll_union_agg(col("sk")).as("sk")),
+          total, batchId, lgK.toLong)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 

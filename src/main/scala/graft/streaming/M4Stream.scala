@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
@@ -70,40 +70,20 @@ object M4Stream {
   private val anchorCols = Seq("key", "bucket", "n", "cents", "t_first_us",
     "t_last_us", "v_min", "v_max", "v_first", "v_last")
 
+  private val store = new GenStore.Folded("m4", stateSchema, 10,
+      Some("bucket"))(m => (m.getLong(10), m.getLong(11), m.getLong(12)))
+
   /** The committed meta under `stateDir`: (rowTotal, high-water
     * batch_id, grainUs); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bucket").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"m4 state generation ${gens.max} has ${meta.length} meta rows " +
-          "(want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(10), m.getLong(11), m.getLong(12)))
-    }
-  }
+      : Option[(Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The committed anchor table — ≤ keys·buckets rows; empty for a
     * fresh dir.
     */
-  def anchors(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(10)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("bucket").isNotNull)
-        .select(anchorCols.head, anchorCols.tail: _*)
-    }
-  }
+  def anchors(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** The associative anchor merge — grouped lexicographic-struct
     * min/max for first/last, plain min/max/sum for the rest. Exact:
@@ -134,72 +114,49 @@ object M4Stream {
       s"targetRowsPerFile must be positive, got $targetRowsPerFile")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pg) =>
-        if (pg != grainUs) throw new IllegalStateException(
-          s"m4 state at $stateDir is bucketed at grain=$pg µs; this " +
-            s"pipeline runs grain=$grainUs µs — two grids cannot merge, " +
-            "refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, pg) =>
+          if (pg != grainUs) throw new IllegalStateException(
+            s"m4 state at $stateDir is bucketed at grain=$pg µs; this " +
+              s"pipeline runs grain=$grainUs µs — two grids cannot merge, " +
+              "refusing")
+        },
+        replay = _._1) { (_, gen) =>
+        // Null guard: a null ts_us would bucket to null and collide
+        // with the meta row's bucket-is-null discriminator, bricking
+        // every later readMeta — and a timeless sample is not a
+        // chart point. Null keys are fine (they group as a series).
+        val bAnchors = EventQueries.m4Anchors(
+          batch.where(col("ts_us").isNotNull).select(
+            col("key").cast("string").as("event_type"),
+            expr(s"ts_us div $grainUs").as("bucket"),
+            col("ts_us"), col("value")))
+          .withColumnRenamed("event_type", "key")
+        // Hash-partitioned rewrite (the CohortStream sizing
+        // discipline): unlike the fixed-geometry sketch stores, this
+        // state grows with stream LIFETIME (buckets ∝ time), so the
+        // file count tracks ⌈anchor rows / targetRowsPerFile⌉ off
+        // the prior generation's footer row count (a metadata-only
+        // read — no filter, no column scan).
+        val prevRows = gen.prior.lastOption.map(g =>
+          spark.read.schema(stateSchema)
+            .parquet(GenStore.dir(stateDir, g)).count()).getOrElse(0L)
+        val nFiles = math.max(1L,
+          (prevRows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        gen.write(mergeAnchors(anchors(spark, stateDir).unionByName(
+            bAnchors.select(anchorCols.head, anchorCols.tail: _*))))(
+          _.repartition(nFiles, col("key"), col("bucket")))
+        // Raw-row total: n sums are preserved by the merge, so the
+        // lifetime total is sum(n) over the COMMITTED anchor rows —
+        // the exact pin off written bytes, and the merge executes
+        // exactly once (the old pre-write batch count re-derived the
+        // batch anchors for the write action).
+        val total = spark.read.schema(stateSchema).parquet(gen.dir)
+          .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
+        gen.appendMeta(total, batchId, grainUs)
+        total
       }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"m4 state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          // Null guard: a null ts_us would bucket to null and collide
-          // with the meta row's bucket-is-null discriminator, bricking
-          // every later readMeta — and a timeless sample is not a
-          // chart point. Null keys are fine (they group as a series).
-          val bAnchors = EventQueries.m4Anchors(
-            batch.where(col("ts_us").isNotNull).select(
-              col("key").cast("string").as("event_type"),
-              expr(s"ts_us div $grainUs").as("bucket"),
-              col("ts_us"), col("value")))
-            .withColumnRenamed("event_type", "key")
-          val merged = mergeAnchors(
-              anchors(spark, stateDir).unionByName(
-                bAnchors.select(anchorCols.head, anchorCols.tail: _*)))
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("grain_us", lit(null).cast("long"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          // Hash-partitioned rewrite (the CohortStream sizing
-          // discipline): unlike the fixed-geometry sketch stores, this
-          // state grows with stream LIFETIME (buckets ∝ time), so the
-          // file count tracks ⌈anchor rows / targetRowsPerFile⌉ off
-          // the prior generation's footer row count (a metadata-only
-          // read — no filter, no column scan).
-          val prevRows = gens.lastOption.map(g =>
-            spark.read.schema(stateSchema)
-              .parquet(GenStore.dir(stateDir, g)).count()).getOrElse(0L)
-          val nFiles = math.max(1L,
-            (prevRows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          merged.repartition(nFiles, col("key"), col("bucket"))
-            .write.mode("overwrite").parquet(genDir)
-          // Raw-row total: n sums are preserved by the merge, so the
-          // lifetime total is sum(n) over the COMMITTED anchor rows —
-          // the exact pin off written bytes, and the merge executes
-          // exactly once (the old pre-write batch count re-derived the
-          // batch anchors for the write action).
-          val total = spark.read.schema(stateSchema).parquet(genDir)
-            .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, null, null, null, null, null,
-                null, total, batchId, grainUs)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 
@@ -61,38 +61,18 @@ object MomentStream {
     StructField("total", LongType), StructField("batch_id", LongType),
     StructField("scale", LongType)))
 
+  private val store = new GenStore.Folded("moment", stateSchema, 7,
+      Some("key"))(m => (m.getLong(7), m.getLong(8), m.getLong(9)))
+
   /** The committed meta under `stateDir`: (keyRows, high-water
     * batch_id, scale); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"moment state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(7), m.getLong(8), m.getLong(9)))
-    }
-  }
+      : Option[(Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The committed per-key moment rows; empty for a fresh dir. */
-  def moments(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(7)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNotNull)
-        .select("key", "n", "sx", "sy", "sxx", "syy", "sxy")
-    }
-  }
+  def moments(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler over batches carrying (`key`, `x`, `y`).
     * `onBatch(batchId, keyRows)` fires after the commit (or replay
@@ -103,65 +83,43 @@ object MomentStream {
       : (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, ps) =>
-        if (ps != Scale) throw new IllegalStateException(
-          s"moment state at $stateDir is quantized at scale=$ps; this " +
-            s"pipeline runs scale=$Scale — moments at different scales " +
-            "cannot merge, refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, ps) =>
+          if (ps != Scale) throw new IllegalStateException(
+            s"moment state at $stateDir is quantized at scale=$ps; this " +
+              s"pipeline runs scale=$Scale — moments at different scales " +
+              "cannot merge, refusing")
+        },
+        replay = _._1) { (_, gen) =>
+        val xm = round(col("x") * lit(Scale), 0).cast(Dec)
+        val ym = round(col("y") * lit(Scale), 0).cast(Dec)
+        val partial = batch
+          .where(col("key").isNotNull && col("x").isNotNull &&
+            col("y").isNotNull)
+          .select(col("key").cast("string").as("key"), xm.as("xm"),
+            ym.as("ym"))
+          .groupBy("key")
+          .agg(count(lit(1)).as("n"),
+            sum(col("xm")).as("sx"), sum(col("ym")).as("sy"),
+            sum(col("xm") * col("xm")).as("sxx"),
+            sum(col("ym") * col("ym")).as("syy"),
+            sum(col("xm") * col("ym")).as("sxy"))
+        gen.write(moments(spark, stateDir).unionByName(
+            partial.select(col("key"), col("n"),
+              col("sx").cast(Dec), col("sy").cast(Dec),
+              col("sxx").cast(Dec), col("syy").cast(Dec),
+              col("sxy").cast(Dec)))
+          .groupBy("key")
+          .agg(sum("n").as("n"),
+            sum("sx").cast(Dec).as("sx"), sum("sy").cast(Dec).as("sy"),
+            sum("sxx").cast(Dec).as("sxx"),
+            sum("syy").cast(Dec).as("syy"),
+            sum("sxy").cast(Dec).as("sxy")))(_.coalesce(1))
+        val total = gen.written
+        gen.appendMeta(total, batchId, Scale)
+        total
       }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"moment state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val xm = round(col("x") * lit(Scale), 0).cast(Dec)
-          val ym = round(col("y") * lit(Scale), 0).cast(Dec)
-          val partial = batch
-            .where(col("key").isNotNull && col("x").isNotNull &&
-              col("y").isNotNull)
-            .select(col("key").cast("string").as("key"), xm.as("xm"),
-              ym.as("ym"))
-            .groupBy("key")
-            .agg(count(lit(1)).as("n"),
-              sum(col("xm")).as("sx"), sum(col("ym")).as("sy"),
-              sum(col("xm") * col("xm")).as("sxx"),
-              sum(col("ym") * col("ym")).as("syy"),
-              sum(col("xm") * col("ym")).as("sxy"))
-          val merged = moments(spark, stateDir).unionByName(
-              partial.select(col("key"), col("n"),
-                col("sx").cast(Dec), col("sy").cast(Dec),
-                col("sxx").cast(Dec), col("syy").cast(Dec),
-                col("sxy").cast(Dec)))
-            .groupBy("key")
-            .agg(sum("n").as("n"),
-              sum("sx").cast(Dec).as("sx"), sum("sy").cast(Dec).as("sy"),
-              sum("sxx").cast(Dec).as("sxx"),
-              sum("syy").cast(Dec).as("syy"),
-              sum("sxy").cast(Dec).as("sxy"))
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("scale", lit(null).cast("long"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          merged.coalesce(1).write.mode("overwrite").parquet(genDir)
-          val total = spark.read.schema(stateSchema).parquet(genDir).count()
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, null, null, null,
-                total, batchId, Scale)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

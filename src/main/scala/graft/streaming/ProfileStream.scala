@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
@@ -62,39 +62,19 @@ object ProfileStream {
     StructField("total", LongType), StructField("batch_id", LongType),
     StructField("lgk", LongType), StructField("sig", StringType)))
 
+  private val store = new GenStore.Folded("profile", stateSchema, 9,
+      Some("column_name"))(m =>
+    (m.getLong(9), m.getLong(10), m.getLong(11), m.getString(12)))
+
   /** The committed meta under `stateDir`: (rowsEver, high-water
     * batch_id, lgK, signature); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long, String)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("column_name").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"profile state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(9), m.getLong(10), m.getLong(11), m.getString(12)))
-    }
-  }
+      : Option[(Long, Long, Long, String)] = store.meta(spark, stateDir)
 
   /** The committed per-column state rows; empty for a fresh dir. */
-  def columnsState(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(9)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("column_name").isNotNull)
-        .select("column_name", "kind", "n", "n_null", "min_l", "max_l",
-          "min_s", "max_s", "sk")
-    }
-  }
+  def columnsState(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler profiling `cols` of each batch.
     * `onBatch(batchId, rowsEver)` fires after the commit (or replay
@@ -112,76 +92,54 @@ object ProfileStream {
         s"profile stream: batch lacks column(s): ${bad.mkString(", ")}")
       val kinds = cols.map(c => c -> Profile.kindOf(batch.schema(c).dataType))
       val sig = kinds.map { case (c, k) => s"$c:$k" }.mkString(",")
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, plg, psig) =>
-        if (psig != sig) throw new IllegalStateException(
-          s"profile state at $stateDir tracks [$psig]; this batch is " +
-            s"shaped [$sig] — profiles of different shapes cannot merge")
-        if (plg != lgK) throw new IllegalStateException(
-          s"profile state at $stateDir sketches at lgK=$plg, pipeline " +
-            s"runs lgK=$lgK — mixed-precision sketches must not merge")
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, plg, psig) =>
+          if (psig != sig) throw new IllegalStateException(
+            s"profile state at $stateDir tracks [$psig]; this batch is " +
+              s"shaped [$sig] — profiles of different shapes cannot merge")
+          if (plg != lgK) throw new IllegalStateException(
+            s"profile state at $stateDir sketches at lgK=$plg, pipeline " +
+              s"runs lgK=$lgK — mixed-precision sketches must not merge")
+        },
+        replay = _._1) { (_, gen) =>
+        val aggs = kinds.flatMap { case (c, k) =>
+          val v = Profile.canon(col(c), batch.schema(c).dataType)
+          Seq(count(col(c)).as(s"__cnt_$c"),
+            min(v).as(s"__min_$c"), max(v).as(s"__max_$c"),
+            hll_sketch_agg(v, lit(lgK)).as(s"__sk_$c"))
+        }
+        val one = batch.agg(count(lit(1)).as("__n"), aggs: _*)
+        val perCol = array(kinds.map { case (c, k) =>
+          struct(lit(c).as("column_name"), lit(k).as("kind"),
+            col("__n").as("n"),
+            (col("__n") - col(s"__cnt_$c")).as("n_null"),
+            (if (k == "long") col(s"__min_$c")
+             else lit(null).cast("long")).as("min_l"),
+            (if (k == "long") col(s"__max_$c")
+             else lit(null).cast("long")).as("max_l"),
+            (if (k == "str") col(s"__min_$c")
+             else lit(null).cast("string")).as("min_s"),
+            (if (k == "str") col(s"__max_$c")
+             else lit(null).cast("string")).as("max_s"),
+            col(s"__sk_$c").as("sk"))
+        }: _*)
+        val bRows = one.select(explode(perCol).as("p")).select("p.*")
+        gen.write(columnsState(spark, stateDir).unionByName(bRows)
+          .groupBy("column_name", "kind")
+          .agg(sum("n").as("n"), sum("n_null").as("n_null"),
+            min("min_l").as("min_l"), max("max_l").as("max_l"),
+            min("min_s").as("min_s"), max("max_s").as("max_s"),
+            hll_union_agg(col("sk")).as("sk")))(_.coalesce(1))
+        // Row total from the committed per-column n (every column
+        // counts all rows) — bounded read, no second batch action.
+        val nRow = spark.read.schema(stateSchema).parquet(gen.dir)
+          .where(col("column_name").isNotNull)
+          .agg(max("n")).head()
+        val total = if (nRow.isNullAt(0)) 0L else nRow.getLong(0)
+        gen.appendMeta(total, batchId, lgK.toLong, sig)
+        total
       }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"profile state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — restore a " +
-              "matching checkpoint/state pair")
-        case _ =>
-          val aggs = kinds.flatMap { case (c, k) =>
-            val v = Profile.canon(col(c), batch.schema(c).dataType)
-            Seq(count(col(c)).as(s"__cnt_$c"),
-              min(v).as(s"__min_$c"), max(v).as(s"__max_$c"),
-              hll_sketch_agg(v, lit(lgK)).as(s"__sk_$c"))
-          }
-          val one = batch.agg(count(lit(1)).as("__n"), aggs: _*)
-          val perCol = array(kinds.map { case (c, k) =>
-            struct(lit(c).as("column_name"), lit(k).as("kind"),
-              col("__n").as("n"),
-              (col("__n") - col(s"__cnt_$c")).as("n_null"),
-              (if (k == "long") col(s"__min_$c")
-               else lit(null).cast("long")).as("min_l"),
-              (if (k == "long") col(s"__max_$c")
-               else lit(null).cast("long")).as("max_l"),
-              (if (k == "str") col(s"__min_$c")
-               else lit(null).cast("string")).as("min_s"),
-              (if (k == "str") col(s"__max_$c")
-               else lit(null).cast("string")).as("max_s"),
-              col(s"__sk_$c").as("sk"))
-          }: _*)
-          val bRows = one.select(explode(perCol).as("p")).select("p.*")
-          val merged = columnsState(spark, stateDir).unionByName(bRows)
-            .groupBy("column_name", "kind")
-            .agg(sum("n").as("n"), sum("n_null").as("n_null"),
-              min("min_l").as("min_l"), max("max_l").as("max_l"),
-              min("min_s").as("min_s"), max("max_s").as("max_s"),
-              hll_union_agg(col("sk")).as("sk"))
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("lgk", lit(null).cast("long"))
-            .withColumn("sig", lit(null).cast("string"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          merged.coalesce(1).write.mode("overwrite").parquet(genDir)
-          // Row total from the committed per-column n (every column
-          // counts all rows) — bounded read, no second batch action.
-          val nRow = spark.read.schema(stateSchema).parquet(genDir)
-            .where(col("column_name").isNotNull)
-            .agg(max("n")).head()
-          val total = if (nRow.isNullAt(0)) 0L else nRow.getLong(0)
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, null, null, null, null, null,
-                total, batchId, lgK.toLong, sig)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

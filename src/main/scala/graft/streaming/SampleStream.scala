@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -44,39 +44,32 @@ object SampleStream {
     StructField("batch_id", LongType), StructField("k", LongType),
     StructField("salt", StringType)))
 
+  private val store = new GenStore.Folded("sample", stateSchema, 3,
+      Some("key"))(r =>
+    (r.getLong(3), r.getLong(4), r.getLong(5).toInt, r.getString(6)))
+
   /** The committed meta under `stateDir`: (total, high-water batch_id,
     * k, salt); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int, String)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"sample state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val r = meta.head
-      Some((r.getLong(3), r.getLong(4), r.getLong(5).toInt, r.getString(6)))
-    }
-  }
+      : Option[(Long, Long, Int, String)] = store.meta(spark, stateDir)
 
   /** The committed sample (key, text, rnk) — ≤ k rows by
     * construction; empty for a fresh dir.
     */
-  def sample(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(3)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNotNull)
-        .select("key", "text", "rnk")
-    }
+  def sample(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
+
+  /** (k, salt) are committed with the state: ranks drawn under another
+    * salt or truncation depth must not merge.
+    */
+  private def checkDraw(what: String, stateDir: String, k: Int,
+      salt: String)(m: (Long, Long, Int, String)): Unit = {
+    val (_, _, pk, ps) = m
+    if (pk != k || ps != salt) throw new IllegalStateException(
+      s"$what state at $stateDir was drawn at k=$pk salt=$ps; this " +
+        s"pipeline runs k=$k salt=$salt — merging ranks across salts " +
+        "(or truncation depths) silently breaks uniformity, refusing")
   }
 
   /** The committed sample READ AS A KMV SYNOPSIS — a cross-batch
@@ -133,41 +126,21 @@ object SampleStream {
     StructField("batch_id", LongType), StructField("k", LongType),
     StructField("salt", StringType)))
 
+  private val keyedStore = new GenStore.Folded("stratified sample",
+      keyedSchema, 4, Some("key"))(r =>
+    (r.getLong(4), r.getLong(5), r.getLong(6).toInt, r.getString(7)))
+
   /** Committed keyed meta: (total bound, high-water batch_id, k,
     * salt); `None` = fresh stream.
     */
   def readKeyedMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int, String)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(keyedSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"stratified sample state generation ${gens.max} has " +
-          s"${meta.length} meta rows (want exactly 1) — foreign or " +
-          "corrupt state")
-      val r = meta.head
-      Some((r.getLong(4), r.getLong(5), r.getLong(6).toInt, r.getString(7)))
-    }
-  }
+      : Option[(Long, Long, Int, String)] = keyedStore.meta(spark, stateDir)
 
   /** The committed stratified sample (stratum, key, text, rnk) —
     * ≤ strata·k rows by construction; empty for a fresh dir.
     */
-  def stratifiedSample(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(keyedSchema.take(4)))
-    } else {
-      spark.read.schema(keyedSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNotNull)
-        .select("stratum", "key", "text", "rnk")
-    }
-  }
+  def stratifiedSample(spark: SparkSession, stateDir: String): DataFrame =
+    keyedStore.rows(spark, stateDir)
 
   /** Per-stratum KMV distinct-count estimates off the committed
     * stratified state — (stratum, n_sample, est): exact below k (the
@@ -202,60 +175,33 @@ object SampleStream {
     require(k > 0, s"sample size must be positive, got k=$k")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readKeyedMeta(spark, stateDir)
-      prior.foreach { case (_, _, pk, ps) =>
-        if (pk != k || ps != salt) throw new IllegalStateException(
-          s"stratified sample state at $stateDir was drawn at k=$pk " +
-            s"salt=$ps; this pipeline runs k=$k salt=$salt — merging " +
-            "ranks across salts (or truncation depths) silently breaks " +
-            "uniformity, refusing")
-      }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"stratified sample state at $stateDir is ahead of the " +
-              s"stream: committed high-water batch $hw > replayed batch " +
-              s"$batchId — restore a matching checkpoint/state pair")
-        case _ =>
-          val ranked = batch.where(col("doc_id").isNotNull)
-            .select(col("stratum").cast("string").as("stratum"),
-              col("doc_id").as("key"), col("text"),
-              Sampling.rank(col("doc_id"), salt).as("rnk"))
-          // (stratum, doc)-seen bound: a 1-row pin.
-          val bTotal = ranked.select("stratum", "key").distinct()
-            .agg(count(lit(1))).head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // The bottom-k merge law PER STRATUM: dedup on (stratum,
-          // key) — same doc ⇒ same rank ⇒ one survivor per stratum —
-          // then one rank window partitioned by stratum. <= strata·k
-          // rows out.
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("stratum").orderBy(col("rnk"), col("key"))
-          val merged = stratifiedSample(spark, stateDir)
+      val total = keyedStore.step(spark, stateDir, batchId)(
+        check = checkDraw("stratified sample", stateDir, k, salt),
+        replay = _._1) { (prior, gen) =>
+        val ranked = batch.where(col("doc_id").isNotNull)
+          .select(col("stratum").cast("string").as("stratum"),
+            col("doc_id").as("key"), col("text"),
+            Sampling.rank(col("doc_id"), salt).as("rnk"))
+        // (stratum, doc)-seen bound: a 1-row pin.
+        val bTotal = ranked.select("stratum", "key").distinct()
+          .agg(count(lit(1))).head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        // The bottom-k merge law PER STRATUM: dedup on (stratum,
+        // key) — same doc ⇒ same rank ⇒ one survivor per stratum —
+        // then one rank window partitioned by stratum. <= strata·k
+        // rows out.
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("stratum").orderBy(col("rnk"), col("key"))
+        gen.writeWithMeta(stratifiedSample(spark, stateDir)
             .unionByName(ranked)
             .dropDuplicates("stratum", "key")
             .withColumn("smp_rn", row_number().over(w))
             .where(col("smp_rn") <= k)
-            .drop("smp_rn")
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("k", lit(null).cast("long"))
-            .withColumn("salt", lit(null).cast("string"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, total, batchId, k.toLong, salt)),
-            keyedSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .drop("smp_rn"),
+          total, batchId, k.toLong, salt)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 
@@ -269,55 +215,28 @@ object SampleStream {
     require(k > 0, s"sample size must be positive, got k=$k")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pk, ps) =>
-        if (pk != k || ps != salt) throw new IllegalStateException(
-          s"sample state at $stateDir was drawn at k=$pk salt=$ps; this " +
-            s"pipeline runs k=$k salt=$salt — merging ranks across salts " +
-            "(or truncation depths) silently breaks uniformity, refusing")
-      }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"sample state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val ranked = batch.select(col("doc_id").as("key"), col("text"),
-            Sampling.rank(col("doc_id"), salt).as("rnk"))
-          // Docs-seen bound: a 1-row pin (batch distinct keys; batches
-          // may overlap so the running sum is an upper bound).
-          val bTotal = ranked.select("key").distinct()
-            .agg(count(lit(1))).head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          // The bottom-k merge law, distributed: <= k + batch rows in,
-          // <= k out. Key dedup first — same doc always carries the
-          // same rank, so redelivery collapses to one survivor.
-          val merged = sample(spark, stateDir)
+      val total = store.step(spark, stateDir, batchId)(
+        check = checkDraw("sample", stateDir, k, salt),
+        replay = _._1) { (prior, gen) =>
+        val ranked = batch.select(col("doc_id").as("key"), col("text"),
+          Sampling.rank(col("doc_id"), salt).as("rnk"))
+        // Docs-seen bound: a 1-row pin (batch distinct keys; batches
+        // may overlap so the running sum is an upper bound).
+        val bTotal = ranked.select("key").distinct()
+          .agg(count(lit(1))).head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        // The bottom-k merge law, distributed: <= k + batch rows in,
+        // <= k out. Key dedup first — same doc always carries the
+        // same rank, so redelivery collapses to one survivor.
+        gen.writeWithMeta(sample(spark, stateDir)
             .unionByName(ranked)
             .dropDuplicates("key")
             .orderBy(col("rnk"), col("key"))
-            .limit(k)
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("k", lit(null).cast("long"))
-            .withColumn("salt", lit(null).cast("string"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, total, batchId, k.toLong, salt)),
-            stateSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .limit(k),
+          total, batchId, k.toLong, salt)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 }

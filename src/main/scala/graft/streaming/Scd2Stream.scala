@@ -131,22 +131,26 @@ object Scd2Stream {
       keys: StructType = defaultKeys)
       : Option[(Long, Long, Long, Long, Long)] = {
     validateKeys(keys)
+    store(stateDir, attrType, keys).meta(spark, stateDir)
+  }
+
+  private def store(stateDir: String, attrType: DataType,
+      keys: StructType) = {
     val k = keys.size
-    CowStore.readMetaRow(spark, stateDir, stateSchema(attrType, keys),
-        "scd2")
-      .map { m =>
-        // a null stored id only occurs on a pre-key-contract store
-        // (the column reads null under the explicit schema) — treat as
-        // the default key, the only shape that existed then
-        val stored =
-          if (m.isNullAt(k + 9)) keyId(defaultKeys) else m.getString(k + 9)
-        if (stored != keyId(keys)) throw new IllegalStateException(
-          s"scd2 state at $stateDir is keyed on ($stored); this call " +
-            s"declares (${keyId(keys)}) — a history cannot re-key " +
-            "committed state, refusing")
-        (m.getLong(k + 4), m.getLong(k + 5), m.getLong(k + 6),
-          m.getLong(k + 7), m.getLong(k + 8))
-      }
+    new GenStore.Folded("scd2", stateSchema(attrType, keys), k + 4, None,
+        bucketed = true)({ m =>
+      // a null stored id only occurs on a pre-key-contract store
+      // (the column reads null under the explicit schema) — treat as
+      // the default key, the only shape that existed then
+      val stored =
+        if (m.isNullAt(k + 9)) keyId(defaultKeys) else m.getString(k + 9)
+      if (stored != keyId(keys)) throw new IllegalStateException(
+        s"scd2 state at $stateDir is keyed on ($stored); this call " +
+          s"declares (${keyId(keys)}) — a history cannot re-key " +
+          "committed state, refusing")
+      (m.getLong(k + 4), m.getLong(k + 5), m.getLong(k + 6),
+        m.getLong(k + 7), m.getLong(k + 8))
+    })
   }
 
   /** The kept-event rows (post-collapse log: change points below the
@@ -401,144 +405,114 @@ object Scd2Stream {
     val schema = stateSchema(attrType, keys)
     val dCols = dataCols(keys)
     val keyNames = keys.fieldNames.toSeq
+    val st = store(stateDir, attrType, keys)
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir, attrType, keys)
-      prior.foreach { case (_, _, nb, _, lat) =>
-        if (nb != buckets) throw new IllegalStateException(
-          s"scd2 state at $stateDir is bucketed $nb ways; this pipeline " +
-            s"runs $buckets — the hash layouts cannot merge, refusing")
-        if (lat != latenessUs) throw new IllegalStateException(
-          s"scd2 state at $stateDir was collapsed under lateness=$lat µs; " +
-            s"this pipeline declares $latenessUs — rows the old bound " +
-            "already collapsed cannot be un-collapsed, refusing")
+      val total = st.step(spark, stateDir, batchId, compactEvery)(
+        check = { case (_, _, nb, _, lat) =>
+          if (nb != buckets) throw new IllegalStateException(
+            s"scd2 state at $stateDir is bucketed $nb ways; this pipeline " +
+              s"runs $buckets — the hash layouts cannot merge, refusing")
+          if (lat != latenessUs) throw new IllegalStateException(
+            s"scd2 state at $stateDir was collapsed under lateness=$lat " +
+              s"µs; this pipeline declares $latenessUs — rows the old " +
+              "bound already collapsed cannot be un-collapsed, refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val hasDel = batch.columns.contains("is_delete")
+        val notNullKeys = keyNames.map(col(_).isNotNull)
+          .reduce(_ && _)
+        val bRows = batch
+          .where(notNullKeys &&
+            col("ts_us").isNotNull && col("event_id").isNotNull)
+          .select(keys.fields.toSeq.map(f =>
+              col(f.name).cast(f.dataType).as(f.name)) ++ Seq(
+            col("ts_us").cast("long").as("ts_us"),
+            col("event_id").cast("long").as("event_id"),
+            col("tier").cast(attrType).as("tier"),
+            (if (hasDel) coalesce(col("is_delete").cast("boolean"),
+              lit(false)) else lit(false)).as("is_delete")): _*)
+          // redelivery immunity: an exact duplicate row is one event
+          .dropDuplicates(dCols)
+          .withColumn("bucket",
+            CowStore.bucketOf(buckets, keyNames.map(col): _*))
+          .localCheckpoint()
+        // Lateness contract — REFUSE beyond-watermark rows (1-row pin).
+        // priorMax == Long.MinValue is the no-events-yet sentinel (a
+        // committed FIRST batch can be empty or fully null-filtered);
+        // subtracting lateness from it would wrap to a huge positive
+        // watermark and poison the store permanently — no watermark
+        // exists until a real event time has been committed.
+        val priorMax = prior.map(_._4).getOrElse(Long.MinValue)
+        if (prior.isDefined && priorMax != Long.MinValue) {
+          val wm = priorMax - latenessUs
+          val nLate = bRows.where(col("ts_us") < wm).count()
+          if (nLate > 0) throw new IllegalStateException(
+            s"batch $batchId carries $nLate rows older than the " +
+              s"committed watermark $wm µs (max seen $priorMax − " +
+              s"lateness $latenessUs): the collapse already discarded " +
+              "rows a splice this late could need — raise latenessUs " +
+              "or feed the stream in watermark order")
+        }
+        val agg = bRows.agg(max("ts_us")).head()
+        val bMax = if (agg.isNullAt(0)) Long.MinValue else agg.getLong(0)
+        val newMax = math.max(priorMax, bMax)
+        val touched = bRows.select("bucket").distinct()
+          .collect().map(_.getInt(0)).toSet
+        // Touched buckets' kept rows merge with the batch; a
+        // compaction generation rewrites (and re-collapses) ALL.
+        val priorSel =
+          if (gen.prior.isEmpty || (touched.isEmpty && !gen.compacting))
+            CowStore.emptyData(spark, schema, dCols)
+          else CowStore.readBuckets(spark, stateDir, gen.prior,
+            if (gen.compacting) None else Some(touched), schema, dCols)
+        val unioned = priorSel.unionByName(bRows)
+          .dropDuplicates(dCols) // replayed-row ∩ stored-row immunity
+        // The provably-final collapse: below the NEW watermark, a row
+        // equal to its predecessor's state can never become a change
+        // point again (no future row lands between two
+        // below-watermark timestamps) — drop it. Above: keep all.
+        val w = keyWindow(keys)
+        // Same sentinel guard: an all-empty state has nothing to
+        // collapse, so the watermark stays at the floor (no wrap).
+        val wmNew =
+          if (newMax == Long.MinValue) Long.MinValue
+          else newMax - latenessUs
+        // One write path for the whole CoW family
+        // ([[CowStore.writeGenData]]) — compaction generations
+        // optionally z-order every rewritten bucket, giving
+        // time-travel range reads over the history the REL-30 skip
+        // law inside each bucket.
+        gen.writeBuckets(unioned
+          .withColumn("rn", row_number().over(w))
+          .withColumn("prev_tier", lag(col("tier"), 1).over(w))
+          .withColumn("prev_del",
+            coalesce(lag(col("is_delete"), 1).over(w), lit(false)))
+          .where(col("rn") === 1 ||
+            col("ts_us") >= wmNew ||
+            !sameState(col("tier"), col("is_delete"),
+              col("prev_tier"), col("prev_del")))
+          .drop("rn", "prev_tier", "prev_del"),
+          if (gen.compacting) zOrderOn else None)
+        // Kept-row total maintained INCREMENTALLY — the global count
+        // moves by (this gen's rows − the rewritten buckets' prior
+        // rows), both bucket-cost footer counts; recounting the full
+        // state would silently break the ∝-touched-buckets IO law.
+        val priorSelRows =
+          if (gen.prior.isEmpty) 0L else priorSel.count()
+        val total = prior.map(_._1).getOrElse(0L) -
+          priorSelRows + gen.written
+        gen.appendMeta(total, batchId, buckets.toLong, newMax, latenessUs,
+          keyId(keys))
+        // A touched bucket whose rows ALL collapsed away writes no
+        // dir; own it via the _EMPTY marker so an older copy cannot
+        // resurrect (CowStore contract).
+        val written = CowStore.bucketsIn(spark, stateDir, gen.n).toSet
+        CowStore.writeEmptyMarker(spark, gen.dir,
+          (touched -- written).toSeq)
+        total
       }
-      prior match {
-        case Some((total, hw, _, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"scd2 state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val hasDel = batch.columns.contains("is_delete")
-          val notNullKeys = keyNames.map(col(_).isNotNull)
-            .reduce(_ && _)
-          val bRows = batch
-            .where(notNullKeys &&
-              col("ts_us").isNotNull && col("event_id").isNotNull)
-            .select(keys.fields.toSeq.map(f =>
-                col(f.name).cast(f.dataType).as(f.name)) ++ Seq(
-              col("ts_us").cast("long").as("ts_us"),
-              col("event_id").cast("long").as("event_id"),
-              col("tier").cast(attrType).as("tier"),
-              (if (hasDel) coalesce(col("is_delete").cast("boolean"),
-                lit(false)) else lit(false)).as("is_delete")): _*)
-            // redelivery immunity: an exact duplicate row is one event
-            .dropDuplicates(dCols)
-            .withColumn("bucket",
-              CowStore.bucketOf(buckets, keyNames.map(col): _*))
-            .localCheckpoint()
-          // Lateness contract — REFUSE beyond-watermark rows (1-row pin).
-          // priorMax == Long.MinValue is the no-events-yet sentinel (a
-          // committed FIRST batch can be empty or fully null-filtered);
-          // subtracting lateness from it would wrap to a huge positive
-          // watermark and poison the store permanently — no watermark
-          // exists until a real event time has been committed.
-          val priorMax = prior.map(_._4).getOrElse(Long.MinValue)
-          if (prior.isDefined && priorMax != Long.MinValue) {
-            val wm = priorMax - latenessUs
-            val nLate = bRows.where(col("ts_us") < wm).count()
-            if (nLate > 0) throw new IllegalStateException(
-              s"batch $batchId carries $nLate rows older than the " +
-                s"committed watermark $wm µs (max seen $priorMax − " +
-                s"lateness $latenessUs): the collapse already discarded " +
-                "rows a splice this late could need — raise latenessUs " +
-                "or feed the stream in watermark order")
-          }
-          val agg = bRows.agg(max("ts_us")).head()
-          val bMax = if (agg.isNullAt(0)) Long.MinValue else agg.getLong(0)
-          val newMax = math.max(priorMax, bMax)
-          val touched = bRows.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val isCompact = gen > 0 && gen % compactEvery == 0
-          // Touched buckets' kept rows merge with the batch; a
-          // compaction generation rewrites (and re-collapses) ALL.
-          val priorSel =
-            if (gens.isEmpty) CowStore.emptyData(spark, schema, dCols)
-            else if (isCompact) CowStore.readBuckets(spark, stateDir, gens,
-              None, schema, dCols)
-            else if (touched.isEmpty)
-              CowStore.emptyData(spark, schema, dCols)
-            else CowStore.readBuckets(spark, stateDir, gens, Some(touched),
-              schema, dCols)
-          val unioned = priorSel.unionByName(bRows)
-            .dropDuplicates(dCols) // replayed-row ∩ stored-row immunity
-          // The provably-final collapse: below the NEW watermark, a row
-          // equal to its predecessor's state can never become a change
-          // point again (no future row lands between two
-          // below-watermark timestamps) — drop it. Above: keep all.
-          val w = keyWindow(keys)
-          // Same sentinel guard: an all-empty state has nothing to
-          // collapse, so the watermark stays at the floor (no wrap).
-          val wmNew =
-            if (newMax == Long.MinValue) Long.MinValue
-            else newMax - latenessUs
-          val merged = unioned
-            .withColumn("rn", row_number().over(w))
-            .withColumn("prev_tier", lag(col("tier"), 1).over(w))
-            .withColumn("prev_del",
-              coalesce(lag(col("is_delete"), 1).over(w), lit(false)))
-            .where(col("rn") === 1 ||
-              col("ts_us") >= wmNew ||
-              !sameState(col("tier"), col("is_delete"),
-                col("prev_tier"), col("prev_del")))
-            .drop("rn", "prev_tier", "prev_del")
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("n_buckets", lit(null).cast("long"))
-            .withColumn("max_ts_us", lit(null).cast("long"))
-            .withColumn("lateness_us", lit(null).cast("long"))
-            .withColumn("key_cols", lit(null).cast("string"))
-          val genDir = GenStore.dir(stateDir, gen)
-          // One write path for the whole CoW family
-          // ([[CowStore.writeGenData]]) — compaction generations
-          // optionally z-order every rewritten bucket, giving
-          // time-travel range reads over the history the REL-30 skip
-          // law inside each bucket.
-          CowStore.writeGenData(spark, genDir, merged,
-            zOrder = if (isCompact) zOrderOn else None)
-          // Kept-row total maintained INCREMENTALLY — the global count
-          // moves by (this gen's rows − the rewritten buckets' prior
-          // rows), both bucket-cost footer counts; recounting the full
-          // state would silently break the ∝-touched-buckets IO law.
-          val newBucketRows = spark.read.schema(schema)
-            .option("basePath", genDir).parquet(genDir)
-            .where(col("bucket") >= 0).count()
-          val priorSelRows =
-            if (gens.isEmpty) 0L else priorSel.count()
-          val total = prior.map(_._1).getOrElse(0L) -
-            priorSelRows + newBucketRows
-          CowStore.appendMeta(spark, genDir,
-            Row.fromSeq(keyNames.map(_ => null) ++
-              Seq(null, null, null, null,
-                total, batchId, buckets.toLong, newMax, latenessUs,
-                keyId(keys), Integer.valueOf(-1))),
-            schema)
-          // A touched bucket whose rows ALL collapsed away writes no
-          // dir; own it via the _EMPTY marker so an older copy cannot
-          // resurrect (CowStore contract).
-          val written = CowStore.bucketsIn(spark, stateDir, gen).toSet
-          CowStore.writeEmptyMarker(spark, genDir,
-            (touched -- written).toSeq)
-          GenStore.commit(spark, stateDir, gen)
-          if (isCompact) GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 }

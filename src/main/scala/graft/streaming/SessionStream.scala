@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -74,38 +74,18 @@ object SessionStream {
     StructField("total", LongType), StructField("batch_id", LongType),
     StructField("gap_us", LongType)))
 
+  private val store = new GenStore.Folded("session", stateSchema, 5,
+      Some("user_id"))(m => (m.getLong(5), m.getLong(6), m.getLong(7)))
+
   /** The committed meta under `stateDir`: (sessionRows, high-water
     * batch_id, gap_us); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"session state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(5), m.getLong(6), m.getLong(7)))
-    }
-  }
+      : Option[(Long, Long, Long)] = store.meta(spark, stateDir)
 
   /** The committed session intervals; empty for a fresh dir. */
-  def intervals(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(5)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNotNull)
-        .select("user_id", "start_us", "end_us", "n_events", "mass_micro")
-    }
-  }
+  def intervals(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** Islands pass over a table of weighted intervals: merge intervals
     * of the same user whose gap to the running covered frontier is
@@ -144,53 +124,31 @@ object SessionStream {
       s"targetRowsPerFile must be positive, got $targetRowsPerFile")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pg) =>
-        if (pg != gapUs) throw new IllegalStateException(
-          s"session state at $stateDir is merged at gap=$pg µs; this " +
-            s"pipeline runs gap=$gapUs — sessions built at different gaps " +
-            "cannot merge, refusing")
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, pg) =>
+          if (pg != gapUs) throw new IllegalStateException(
+            s"session state at $stateDir is merged at gap=$pg µs; this " +
+              s"pipeline runs gap=$gapUs — sessions built at different " +
+              "gaps cannot merge, refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        val bRows = batch
+          .where(col("user_id").isNotNull && col("ts_us").isNotNull)
+          .select(col("user_id").cast("long").as("user_id"),
+            col("ts_us").cast("long").as("start_us"),
+            col("ts_us").cast("long").as("end_us"),
+            lit(1L).as("n_events"),
+            coalesce(round(col("value") * lit(1000000L), 0).cast("long"),
+              lit(0L)).as("mass_micro"))
+        val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
+          targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        gen.write(islands(intervals(spark, stateDir).unionByName(bRows),
+          gapUs))(_.repartition(nFiles, col("user_id")))
+        val total = gen.written
+        gen.appendMeta(total, batchId, gapUs)
+        total
       }
-      prior match {
-        case Some((total, hw, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"session state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val bRows = batch
-            .where(col("user_id").isNotNull && col("ts_us").isNotNull)
-            .select(col("user_id").cast("long").as("user_id"),
-              col("ts_us").cast("long").as("start_us"),
-              col("ts_us").cast("long").as("end_us"),
-              lit(1L).as("n_events"),
-              coalesce(round(col("value") * lit(1000000L), 0).cast("long"),
-                lit(0L)).as("mass_micro"))
-          val merged = islands(
-              intervals(spark, stateDir).unionByName(bRows), gapUs)
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("gap_us", lit(null).cast("long"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
-            targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          merged.repartition(nFiles, col("user_id"))
-            .write.mode("overwrite").parquet(genDir)
-          val total = spark.read.schema(stateSchema).parquet(genDir).count()
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, null, total, batchId, gapUs)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
-      }
+      onBatch(batchId, total)
     }
   }
 

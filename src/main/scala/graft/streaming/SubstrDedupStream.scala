@@ -107,21 +107,14 @@ object SubstrDedupStream {
   private def manifestEntries(k: Int) =
     Seq("kind" -> "substr-dedup-store", "k" -> k.toString)
 
+  // A meta-only log: every row of a generation is its meta row.
+  private val store = new GenStore.Folded("substring-dedup", metaSchema, 0,
+      None)(r => Meta(r.getLong(0), r.getLong(1), r.getLong(2).toInt,
+    r.getLong(3), r.getLong(4)))
+
   /** The committed meta under `stateDir`; `None` = fresh stream. */
-  def readMeta(spark: SparkSession, stateDir: String): Option[Meta] = {
-    val gens = GenStore.committed(spark, metaRoot(stateDir))
-    if (gens.isEmpty) None
-    else {
-      val rows = spark.read.schema(metaSchema)
-        .parquet(GenStore.dir(metaRoot(stateDir), gens.max)).collect()
-      if (rows.length != 1) throw new IllegalStateException(
-        s"substring-dedup state generation ${gens.max} has ${rows.length} " +
-          "meta rows (want exactly 1) — foreign or corrupt state")
-      val r = rows.head
-      Some(Meta(r.getLong(0), r.getLong(1), r.getLong(2).toInt, r.getLong(3),
-        r.getLong(4)))
-    }
-  }
+  def readMeta(spark: SparkSession, stateDir: String): Option[Meta] =
+    store.meta(spark, metaRoot(stateDir))
 
   /** Committed gram-log batch ids ≤ `upTo` (ascending) — dirs above the
     * meta high-water are dead later attempts and never consulted.
@@ -183,26 +176,17 @@ object SubstrDedupStream {
       val spark = batch.sparkSession
       StoreManifest.sealOrCheck(spark, stateDir, manifestEntries(k),
         "substring-dedup store")
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { m =>
-        if (m.k != k) throw new IllegalStateException(
-          s"substring-dedup state at $stateDir holds k=${m.k} grams; this " +
-            s"pipeline runs k=$k — mixed gram sizes neither collide nor " +
-            "merge into spans, refusing")
-      }
-      prior match {
-        case Some(m) if m.batchId == batchId =>
-          // Replay after the commit: re-adding the batch's grams would
-          // double every count and flag each replayed doc's every
-          // window as duplicated — skip and re-emit.
-          onBatch(batchId, 0L, m.totalGrams)
-        case Some(m) if batchId < m.batchId =>
-          throw new IllegalStateException(
-            s"substring-dedup state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch ${m.batchId} > replayed batch " +
-              s"$batchId — the streaming checkpoint was restored from an " +
-              "older snapshot than the state dir; restore a matching pair")
-        case _ =>
+      // A replay after the commit re-emits: re-adding the batch's grams
+      // would double every count and flag each replayed doc's every
+      // window as duplicated.
+      val (nNewDocs, total, countsGen) =
+        store.step(spark, metaRoot(stateDir), batchId)(
+          check = m =>
+            if (m.k != k) throw new IllegalStateException(
+              s"substring-dedup state at $stateDir holds k=${m.k} grams; " +
+                s"this pipeline runs k=$k — mixed gram sizes neither " +
+                "collide nor merge into spans, refusing"),
+          replay = m => (0L, m.totalGrams, m.countsGen)) { (prior, gen) =>
           val hw = prior.map(_.batchId).getOrElse(-1L)
           // At-least-once dedup at the document level: a doc_id already
           // in the committed log is a cross-batch re-send; keeping it
@@ -232,27 +216,18 @@ object SubstrDedupStream {
             if (batchId - pFolded >= foldEvery) {
               val merged = counts(spark, stateDir,
                 Meta(total, batchId, k, pFolded, pGen))
-              val gen = GenStore.committed(spark, countsRoot(stateDir))
-                .lastOption.map(_ + 1).getOrElse(0L)
-              merged.write.mode("overwrite")
-                .parquet(GenStore.dir(countsRoot(stateDir), gen))
-              GenStore.commit(spark, countsRoot(stateDir), gen)
-              (batchId, gen)
+              (batchId, GenStore.commitNext(spark, countsRoot(stateDir))(
+                merged.write.mode("overwrite").parquet(_)))
             } else (pFolded, pGen)
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(total, batchId, k.toLong, foldedThrough, countsGen)),
-            metaSchema)
-          val mGen = GenStore.committed(spark, metaRoot(stateDir))
-            .lastOption.map(_ + 1).getOrElse(0L)
-          metaDf.coalesce(1).write.mode("overwrite")
-            .parquet(GenStore.dir(metaRoot(stateDir), mGen))
-          GenStore.commit(spark, metaRoot(stateDir), mGen)
-          GenStore.dropBelow(spark, metaRoot(stateDir), mGen)
-          if (countsGen >= 0)
-            GenStore.dropBelow(spark, countsRoot(stateDir), countsGen)
-          onBatch(batchId, nNewDocs, total)
-      }
+          gen.writeWithMeta(spark.emptyDataFrame, // meta only: no state rows
+            total, batchId, k.toLong, foldedThrough, countsGen)
+          (nNewDocs, total, countsGen)
+        }
+      // After the meta commit (a replay repeats it — the committed meta
+      // pins countsGen, so every counts generation below it is dead).
+      if (countsGen >= 0)
+        GenStore.dropBelow(spark, countsRoot(stateDir), countsGen)
+      onBatch(batchId, nNewDocs, total)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -51,41 +51,21 @@ object UpsertStream {
     StructField("value", DoubleType),
     StructField("total", LongType), StructField("batch_id", LongType)))
 
+  private val store = new GenStore.Folded("upsert", stateSchema, 5,
+      Some("user_id"))(m => (m.getLong(5), m.getLong(6)))
+
   /** The committed meta under `stateDir`: (rows, high-water batch_id);
     * `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"upsert state generation ${gens.max} has ${meta.length} meta " +
-          "rows (want exactly 1) — foreign or corrupt state")
-      val m = meta.head
-      Some((m.getLong(5), m.getLong(6)))
-    }
-  }
+      : Option[(Long, Long)] = store.meta(spark, stateDir)
 
   /** The live current-row table — q_dd2's exact output shape over
     * everything the stream has carried; a straight projection of the
     * committed state, zero recompute.
     */
-  def latest(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(5)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("user_id").isNotNull)
-        .select("user_id", "event_type", "ts_us", "event_id", "value")
-    }
-  }
+  def latest(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler over batches carrying (`user_id`,
     * `event_type`, `ts_us`, `event_id`, `value`).
@@ -99,50 +79,30 @@ object UpsertStream {
       s"targetRowsPerFile must be positive, got $targetRowsPerFile")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior match {
-        case Some((total, hw)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"upsert state at $stateDir is ahead of the stream: committed " +
-              s"high-water batch $hw > replayed batch $batchId — the " +
-              "streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          val bRows = batch
-            .where(col("user_id").isNotNull && col("event_type").isNotNull &&
-              col("ts_us").isNotNull && col("event_id").isNotNull)
-            .select(col("user_id").cast("long").as("user_id"),
-              col("event_type").cast("string").as("event_type"),
-              col("ts_us").cast("long").as("ts_us"),
-              col("event_id").cast("long").as("event_id"),
-              col("value").cast("double").as("value"))
-          val w = Window.partitionBy("user_id", "event_type")
-            .orderBy(col("ts_us").desc, col("event_id").desc)
-          val merged = latest(spark, stateDir).unionByName(bRows)
+      val total = store.step(spark, stateDir, batchId)(replay = _._1) {
+        (prior, gen) =>
+        val bRows = batch
+          .where(col("user_id").isNotNull && col("event_type").isNotNull &&
+            col("ts_us").isNotNull && col("event_id").isNotNull)
+          .select(col("user_id").cast("long").as("user_id"),
+            col("event_type").cast("string").as("event_type"),
+            col("ts_us").cast("long").as("ts_us"),
+            col("event_id").cast("long").as("event_id"),
+            col("value").cast("double").as("value"))
+        val w = Window.partitionBy("user_id", "event_type")
+          .orderBy(col("ts_us").desc, col("event_id").desc)
+        val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
+          targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        gen.write(latest(spark, stateDir).unionByName(bRows)
             .withColumn("rn", row_number().over(w))
             .where(col("rn") === 1)
-            .drop("rn")
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          val genDir = GenStore.dir(stateDir, gen)
-          val nFiles = math.max(1L, (prior.map(_._1).getOrElse(0L) +
-            targetRowsPerFile - 1) / targetRowsPerFile).toInt
-          merged.repartition(nFiles, col("user_id"), col("event_type"))
-            .write.mode("overwrite").parquet(genDir)
-          val total = spark.read.schema(stateSchema).parquet(genDir).count()
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, null, total, batchId)),
-            stateSchema)
-          metaDf.coalesce(1).write.mode("append").parquet(genDir)
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .drop("rn"))(
+          _.repartition(nFiles, col("user_id"), col("event_type")))
+        val total = gen.written
+        gen.appendMeta(total, batchId)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 }

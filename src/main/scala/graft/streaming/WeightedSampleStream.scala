@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
@@ -42,40 +42,21 @@ object WeightedSampleStream {
     StructField("total", LongType), StructField("batch_id", LongType),
     StructField("k", LongType), StructField("salt", StringType)))
 
+  private val store = new GenStore.Folded("weighted-sample", stateSchema,
+      4, Some("key"))(r =>
+    (r.getLong(4), r.getLong(5), r.getLong(6).toInt, r.getString(7)))
+
   /** The committed meta under `stateDir`: (total, high-water batch_id,
     * k, salt); `None` = fresh stream.
     */
   def readMeta(spark: SparkSession, stateDir: String)
-      : Option[(Long, Long, Int, String)] = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) None
-    else {
-      val meta = spark.read.schema(stateSchema)
-        .parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNull)
-        .collect()
-      if (meta.length != 1) throw new IllegalStateException(
-        s"weighted-sample state generation ${gens.max} has ${meta.length} " +
-          "meta rows (want exactly 1) — foreign or corrupt state")
-      val r = meta.head
-      Some((r.getLong(4), r.getLong(5), r.getLong(6).toInt, r.getString(7)))
-    }
-  }
+      : Option[(Long, Long, Int, String)] = store.meta(spark, stateDir)
 
   /** The committed sample (key, text, w, rnk) — ≤ k rows by
     * construction; empty for a fresh dir.
     */
-  def sample(spark: SparkSession, stateDir: String): DataFrame = {
-    val gens = GenStore.committed(spark, stateDir)
-    if (gens.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(stateSchema.take(4)))
-    } else {
-      spark.read.schema(stateSchema).parquet(GenStore.dir(stateDir, gens.max))
-        .where(col("key").isNotNull)
-        .select("key", "text", "w", "rnk")
-    }
-  }
+  def sample(spark: SparkSession, stateDir: String): DataFrame =
+    store.rows(spark, stateDir)
 
   /** One foreachBatch handler over batches carrying (`doc_id`, `text`);
     * the weight is the whitespace token count of `text` (the q_ml23
@@ -88,59 +69,37 @@ object WeightedSampleStream {
     require(k > 0, s"sample size must be positive, got k=$k")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val prior = readMeta(spark, stateDir)
-      prior.foreach { case (_, _, pk, ps) =>
-        if (pk != k || ps != salt) throw new IllegalStateException(
-          s"weighted-sample state at $stateDir was drawn at k=$pk salt=$ps; " +
-            s"this pipeline runs k=$k salt=$salt — merging keys across " +
-            "salts (or truncation depths) silently breaks the inclusion " +
-            "law, refusing")
-      }
-      prior match {
-        case Some((total, hw, _, _)) if hw == batchId =>
-          onBatch(batchId, total)
-        case Some((_, hw, _, _)) if batchId < hw =>
-          throw new IllegalStateException(
-            s"weighted-sample state at $stateDir is ahead of the stream: " +
-              s"committed high-water batch $hw > replayed batch $batchId — " +
-              "the streaming checkpoint was restored from an older snapshot " +
-              "than the state dir; restore a matching pair")
-        case _ =>
-          // Rank the batch with the OPERATOR's own key arithmetic
-          // (weightedBottomK over just this batch — <= k rows out),
-          // then merge under the bottom-k law.
-          val ranked = Sampling.weightedBottomK(
-              batch.select(col("doc_id"),
-                col("text"),
-                graft.functions.TextFunctions.tokenCount(col("text")).as("w")),
-              "doc_id", "w", k, salt)
-            .select(col("doc_id").as("key"), col("text"), col("w"),
-              col("wr_key").as("rnk"))
-          val bTotal = batch.select("doc_id").distinct()
-            .agg(count(lit(1))).head().getLong(0)
-          val total = prior.map(_._1).getOrElse(0L) + bTotal
-          val merged = sample(spark, stateDir)
+      val total = store.step(spark, stateDir, batchId)(
+        check = { case (_, _, pk, ps) =>
+          if (pk != k || ps != salt) throw new IllegalStateException(
+            s"weighted-sample state at $stateDir was drawn at k=$pk " +
+              s"salt=$ps; this pipeline runs k=$k salt=$salt — merging " +
+              "keys across salts (or truncation depths) silently breaks " +
+              "the inclusion law, refusing")
+        },
+        replay = _._1) { (prior, gen) =>
+        // Rank the batch with the OPERATOR's own key arithmetic
+        // (weightedBottomK over just this batch — <= k rows out),
+        // then merge under the bottom-k law.
+        val ranked = Sampling.weightedBottomK(
+            batch.select(col("doc_id"),
+              col("text"),
+              graft.functions.TextFunctions.tokenCount(col("text")).as("w")),
+            "doc_id", "w", k, salt)
+          .select(col("doc_id").as("key"), col("text"), col("w"),
+            col("wr_key").as("rnk"))
+        val bTotal = batch.select("doc_id").distinct()
+          .agg(count(lit(1))).head().getLong(0)
+        val total = prior.map(_._1).getOrElse(0L) + bTotal
+        gen.writeWithMeta(sample(spark, stateDir)
             .unionByName(ranked)
             .dropDuplicates("key")
             .orderBy(col("rnk"), col("key"))
-            .limit(k)
-            .withColumn("total", lit(null).cast("long"))
-            .withColumn("batch_id", lit(null).cast("long"))
-            .withColumn("k", lit(null).cast("long"))
-            .withColumn("salt", lit(null).cast("string"))
-          val metaDf = spark.createDataFrame(
-            java.util.Collections.singletonList(
-              Row(null, null, null, null, total, batchId, k.toLong, salt)),
-            stateSchema)
-          val gens = GenStore.committed(spark, stateDir)
-          val gen = gens.lastOption.map(_ + 1).getOrElse(0L)
-          merged.unionByName(metaDf)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(GenStore.dir(stateDir, gen))
-          GenStore.commit(spark, stateDir, gen)
-          GenStore.dropBelow(spark, stateDir, gen)
-          onBatch(batchId, total)
+            .limit(k),
+          total, batchId, k.toLong, salt)
+        total
       }
+      onBatch(batchId, total)
     }
   }
 }

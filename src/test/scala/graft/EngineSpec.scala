@@ -62,6 +62,20 @@ class EngineSpec extends SparkSpec {
     assert(unexpected.isEmpty, "mains outside the three entry points")
   }
 
+  test("Explain resolves query names before any session: unknown names get their candidates") {
+    import graft.tools.Explain.unresolved
+    val keys = Seq("q_agg1_hourly_avg", "q_agg10_ewma", "q_adv7", "q_adv7b")
+    assert(unresolved(Seq("q_adv7", "q_adv7b"), keys).isEmpty)
+    assert(unresolved(Seq("q_agg1"), keys) ==
+      Seq("q_agg1" -> Seq("q_agg1_hourly_avg")))
+    assert(unresolved(Seq("q_ag"), keys) ==
+      Seq("q_ag" -> Seq("q_agg10_ewma", "q_agg1_hourly_avg")))
+    assert(unresolved(Seq("nope"), keys) == Seq("nope" -> keys.sorted))
+    // Against the real registry: a truncated name resolves to its key.
+    assert(unresolved(Seq("q_agg1"), SparkEntry.queries.keys) ==
+      Seq("q_agg1" -> Seq("q_agg1_hourly_avg")))
+  }
+
   test("STR-7: maxFilesPerTrigger caps micro-batch intake") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-rate")

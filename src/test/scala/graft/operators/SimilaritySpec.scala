@@ -500,6 +500,30 @@ class SimilaritySpec extends SparkSpec {
     assert(res == exact, s"IVF×PQ must match brute force here:\n$res\n$exact")
   }
 
+  test("queryIvfPqIndex over per-batch pruned codes adds no adcvecs memo miss") {
+    // The serving pipeline hands queryIvfPqIndex a code table pruned
+    // per query batch: a memo keyed on that plan can never hit, so the
+    // persisted-store read path must stay lazy — two differently
+    // pruned serves leave the adcvecs slot's miss count unchanged.
+    val cb = Similarity.trainPqCodebooks(clustered, m = 2, ksub = 4,
+      iters = 2, trainN = 1024, dim = 8)
+    val cents = Similarity.trainCentroids(clustered, 3, iters = 2,
+      trainN = 1024, dim = 8)
+    val codes = Similarity.pqEncode(clustered, cb, m = 2, dim = 8)
+      .select("vec_id", "sub", "code")
+      .join(Similarity.ivfCellAssign(clustered, cents), "vec_id")
+    val q = clustered.where(col("vec_id") === 0)
+    def misses = Similarity.memoStats.get("adcvecs").map(_._2).getOrElse(0L)
+    val before = misses
+    Seq(codes.where(col("vec_id") < 10), codes.where(col("vec_id") >= 2))
+      .foreach { pruned =>
+        val res = Similarity.queryIvfPqIndex(q, pruned, cents, cb, clustered,
+          k = 2, rerankDepth = 4, nProbe = 3, m = 2, dim = 8).collect()
+        assert(res.nonEmpty, "the pruned serve must still answer")
+      }
+    assert(misses == before, s"adcvecs misses moved $before -> $misses")
+  }
+
   test("PQ encodes codeword-assembled vectors losslessly") {
     // A vector whose every subvector IS a codeword must encode with
     // zero residual in every subspace — the argmin's fixed point, and a

@@ -175,9 +175,9 @@ object Similarity {
     * and then the files, so a subsequent call can never be handed a
     * deleted path — it rebuilds into a fresh directory, which is always
     * correctness-preserving (artifacts are deterministic functions of
-    * their keys). Entries dropped by [[invalidateArtifacts]] keep their
-    * files (in-flight readers) and stay counted against the budget —
-    * conservative; the pid-scoped dir is removed at JVM exit as before.
+    * their keys). Entries dropped by [[invalidateArtifacts]] stay in the
+    * budget and in the eviction order — unreachable to lookups, but
+    * reclaimed like any other entry once idle past the grace.
     */
   private val artBytesTotal = new java.util.concurrent.atomic.AtomicLong(0L)
   private val artEvictLock = new AnyRef
@@ -267,17 +267,24 @@ object Similarity {
     * with different content in one JVM must not serve the previous
     * content's trained artifacts. Store init paths
     * ([[graft.streaming.IndexMaintenance]] guardInit) call this with
-    * the root before seeding. Scratch parquet files are left for the
-    * JVM-exit cleanup — only the mapping is dropped, so an in-flight
-    * reader of the old artifact keeps its files.
+    * the root before seeding. Each matching entry moves under a fresh
+    * [[Invalidated]] key: no lookup can reach it again, while the
+    * evictor still sees its bytes and reclaims its files once it has
+    * been idle past the grace (an in-flight reader of the old artifact
+    * keeps them until then).
     */
   private[graft] def invalidateArtifacts(keyPart: Any): Unit = {
-    val it = artDirs.keySet().iterator()
-    while (it.hasNext) it.next() match {
-      case (_, parts: Seq[_]) if parts.contains(keyPart) => it.remove()
-      case _ => ()
+    import scala.jdk.CollectionConverters._
+    artDirs.entrySet().asScala.toSeq.foreach { e =>
+      e.getKey match {
+        case (_, parts: Seq[_]) if parts.contains(keyPart) &&
+            artDirs.remove(e.getKey, e.getValue) =>
+          artDirs.put(Invalidated(artSeq.incrementAndGet()), e.getValue)
+        case _ => ()
+      }
     }
   }
+  private final case class Invalidated(seq: Long)
 
   private[graft] def storeCached(slot: String, df: DataFrame): DataFrame =
     storeCachedKeyed(slot,

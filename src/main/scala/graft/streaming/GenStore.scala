@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.StructType
   * later retry overwrites), and readers always take the highest
   * committed N. [[PackingStream]]'s offset log, [[IndexMaintenance]]'s
   * quantizer stores and [[StreamingDedup]]'s signature index use the
-  * directory primitives directly.
+  * directory primitives directly; the latter two build generations off
+  * the batch path through [[OffPathBuild]].
   *
   * THE FOLDED-STORE FAMILY ([[Folded]]): every store that folds each
   * micro-batch into one committed state table plus ONE meta row — the
@@ -169,6 +170,75 @@ private[streaming] object GenStore {
   def deleteQuiet(spark: SparkSession, path: String): Unit = {
     val hfs = fs(spark, path)
     if (hfs.exists(new Path(path))) hfs.delete(new Path(path), true)
+  }
+
+  /** The off-path half of the rebuild-and-swap protocol — one
+    * generation built on a daemon thread while the stream thread (the
+    * single writer) keeps appending to the current one. Shared by
+    * [[IndexMaintenance]]'s rebuilding pipelines and
+    * [[StreamingDedup]]'s async compaction; the caller owns what is
+    * built and how the finished generation is swapped in.
+    *
+    * `built`/`failed` cross the builder→stream thread boundary;
+    * `building` (the in-flight target, -1 = none) is stream-thread
+    * only. `failed` carries (batchId, target, error) so [[swap]] can
+    * reap the orphan. `gate` runs in the builder thread before the
+    * build (the deterministic-window test hook); `onError` receives a
+    * failed build on the next batch — after the orphan target dir is
+    * reaped and submission re-armed, so a hook that logs and returns
+    * lets the still-firing trigger re-submit.
+    */
+  final class OffPathBuild(spark: SparkSession, root: String,
+      thread: String, gate: () => Unit, onError: (Long, Throwable) => Unit) {
+    private val built = new java.util.concurrent.atomic.AtomicLong(-1L)
+    private val failed =
+      new java.util.concurrent.atomic.AtomicReference[(Long, Long, Throwable)](null)
+    private var building = -1L
+
+    /** The generation being built, if any. */
+    def target: Option[Long] = if (building >= 0) Some(building) else None
+
+    /** Once per batch, before the batch is processed: surface a failed
+      * build, then — if a build finished — run `commit` on its
+      * generation (stream thread) and re-arm. Returns the swapped-in
+      * generation.
+      */
+    def swap(commit: Long => Unit): Option[Long] = {
+      val f = failed.getAndSet(null)
+      if (f != null) {
+        deleteQuiet(spark, dir(root, f._2))
+        building = -1L
+        onError(f._1, f._3)
+      }
+      val g = built.get()
+      if (g < 0) None
+      else {
+        commit(g)
+        built.set(-1L); building = -1L
+        Some(g)
+      }
+    }
+
+    /** Start building generation `gen` with `build` on a daemon thread,
+      * after reaping any crash orphan of `gen`. Anything `build` reads
+      * from the live store must be snapshotted by the caller first, in
+      * the stream thread, so no append can race it.
+      */
+    def submit(batchId: Long, gen: Long)(build: () => Unit): Unit = {
+      building = gen
+      deleteQuiet(spark, dir(root, gen))
+      val t = new Thread(() => {
+        try {
+          gate()
+          build()
+          built.set(gen)
+        } catch {
+          case e: Throwable => failed.set((batchId, gen, e))
+        }
+      }, s"$thread-gen-$gen")
+      t.setDaemon(true)
+      t.start()
+    }
   }
 
   /** One folded store's layout: `schema` holds its `nData` state

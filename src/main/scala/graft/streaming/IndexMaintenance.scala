@@ -2,48 +2,123 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Similarity
 
-/** Index maintenance as a STREAM — both serving tiers' drift operators
-  * ([[Similarity.pqDrift]] / [[Similarity.indexDrift]]) driven per
-  * micro-batch, so a production index ingests new vectors continuously
-  * and the retrain trigger is a LIVE signal instead of a nightly audit.
+/** Index maintenance as a STREAM — the three quantizer tiers (int8, PQ,
+  * IVF-PQ) kept current per micro-batch, so a production index ingests
+  * new vectors continuously and the retrain trigger is a LIVE signal
+  * instead of a nightly audit.
   *
   * Shape: drift against a FIXED artifact is per-batch arithmetic with
   * no streaming state at all, so it composes as `foreachBatch`. The
-  * indexed side's histogram is constant across batches — aggregated
-  * ONCE at monitor construction and persisted — so each micro-batch
-  * costs one encode pass over the batch plus an m·ksub-row broadcast
-  * join, never a re-scan of the stored code table
-  * ([[Similarity.pqDriftVsHistogram]]).
+  * indexed side's yardstick (fit, code-usage or cell-usage histogram)
+  * is constant across batches — aggregated ONCE at construction and
+  * pinned — so each micro-batch costs one encode pass over the batch
+  * plus a bounded broadcast join, never a re-scan of the stored code
+  * table ([[Similarity.pqDriftVsHistogram]]).
   *
-  * Two tiers of composition:
+  * Each tier is described ONCE ([[Tier]]: manifest shape, quantizer
+  * tables and their training, batch encode, codes layout, drift
+  * yardstick and drift row) and every pipeline drives it through
+  * shared code:
   *  - the *DriftMonitor pair: WATCH-only — drift rows land per batch,
   *    the stored artifact is untouched;
-  *  - the *AppendPipeline pair: the CLOSED production loop — each
-  *    micro-batch is encoded ONCE on the pinned quantizer, the encoded
-  *    rows are appended to the stored parquet artifact, and the SAME
-  *    rows feed the drift row against the PRE-APPEND baseline (ingest →
-  *    append → drift → retrain signal, one foreachBatch). Because the
-  *    quantizer is fixed and the encode is per-row deterministic, the
-  *    artifact after N batches is exactly what one batch
-  *    [[Similarity.appendToInt8Index]]/[[Similarity.appendToPqIndex]]
-  *    over the union of the arrivals would produce — StreamingSpec pins
-  *    the equivalence cross-batch with a late arrival.
+  *  - the *AppendPipeline trio: the CLOSED loop over a bare code
+  *    artifact — each micro-batch is encoded ONCE on the pinned
+  *    quantizer, the codes are appended, and the SAME rows feed the
+  *    drift row against the PRE-APPEND yardstick ([[Pinned.append]],
+  *    the per-batch step). Because the quantizer is fixed and the
+  *    encode is per-row deterministic, the artifact after N batches is
+  *    exactly what one batch encode over the union of the arrivals
+  *    would produce — StreamingSpec pins the equivalence cross-batch
+  *    with a late arrival;
+  *  - the *RebuildingPipeline trio: the same step over a generation
+  *    store, plus the retrain leg — one loop, [[rebuildingPipeline]];
+  *  - the *ServingPipeline pair: the read path over the latest
+  *    committed generation.
+  *
+  * THE REBUILD-AND-SWAP PROTOCOL. A generation store lives under one
+  * root:
+  *  - `root/vectors/` — the raw (vec_id, embedding) log: the corpus
+  *    seed plus every arrival, and the authoritative retrain input (a
+  *    rebuild is a corpus-scale job BY DESIGN — rare and signal-driven,
+  *    it re-reads this log once; appends never do);
+  *  - `root/gen-N/` — one quantizer generation: the tier's quantizer
+  *    tables plus `codes/`;
+  *  - `root/gen-N/COMMITTED` — written LAST, the swap's commit point;
+  *    readers always resolve [[latestGen]] = the max committed N;
+  *  - `root/gen-N/pending-vectors/` — build-window staging of an
+  *    off-path build of generation N.
+  *
+  * Per batch the loop logs the arrivals, parks them in staging while
+  * a build is in flight, encodes and appends them on the current
+  * generation and writes the drift row with `gen`. When the row says
+  * retrain:
+  *  - inline (`async = false`): train generation N+1 on the log deduped
+  *    by vec_id, write its quantizer tables, encode the log on the
+  *    WRITTEN tables read back (each training plan executes once, and
+  *    codes ≡ committed quantizer holds by construction), commit and
+  *    re-pin; the next batch appends to N+1 and measures against the
+  *    new yardstick;
+  *  - off-path (`async = true` — the 100 TB availability stance: inline,
+  *    a rebuild stalls ingestion for the full train+encode; SCALE.md
+  *    "Async swap cost"): list the vector log's files in the stream
+  *    thread (the single writer, so no append races the listing) and
+  *    build N+1 from that frozen snapshot on a daemon thread
+  *    ([[GenStore.OffPathBuild]]) while batches keep appending to N.
+  *    The first batch after the build finishes SWAPS, in the stream
+  *    thread, before it is processed: encode the staged window on the
+  *    new quantizer, anti-joined against the built codes (a vec_id
+  *    re-sent during the window is encoded once — async ≡ inline, which
+  *    dedups the full log), append, write COMMITTED (the atomic point,
+  *    covering the catch-up), re-pin, reap staging. Swap cost is
+  *    O(window) plus one scan of the compact code table for the new
+  *    yardstick, never the raw corpus.
+  *
+  * Pins: the quantizer tables and the yardstick are driver-local
+  * relations, bounded by construction (a 1-row grid, nCentroids
+  * centroids, m·ksub codebook rows, ≤ nCentroids + 1 histogram rows),
+  * taken once at construction and again only on swap. They are never
+  * persisted scans: each append write fires Spark's refreshByPath on
+  * the store paths, which re-caches any cached plan scanning them — a
+  * persisted yardstick would silently recompute over the grown artifact
+  * and measure every batch against a yardstick its own appends keep
+  * moving. A restarted driver re-constructs the pipeline and re-pins
+  * from the committed store; there is no in-memory state to lose.
+  *
+  * Crash windows: an uncommitted generation (staging included) is
+  * invisible to readers and is reaped at the next construction, by the
+  * next submission, or — for a surfaced build failure — in the failure
+  * branch itself, so an orphan never outlives the next observation even
+  * if drift subsides. A staging dir under a COMMITTED generation is a
+  * crash between the swap's commit and its staging delete (its rows
+  * were folded in before the commit) and is reaped at construction.
+  * AsyncRebuildSpec pins both windows. A failed build surfaces through
+  * `onBuildError` on the next batch (default rethrows; a hook that logs
+  * and returns lets the drift signal re-submit — self-healing).
+  * `rebuildGate` runs in the builder thread before any read (a test
+  * hook to hold the build window open); `onRebuild(batchId, gen)`
+  * fires after each swap.
+  *
+  * Replay honesty: the vectors/codes appends stay at-least-once (the
+  * parquet-append caveat), so a replayed batch can duplicate rows in
+  * both logs. Every rebuild trains and encodes over the log deduped by
+  * vec_id, so only inter-rebuild appends can carry duplicates.
   */
 object IndexMaintenance {
 
   // ------------------------------------------------------------------
   // Structural-parameter manifests ([[StoreManifest]]): the generation
-  // store roots persist the artifact SHAPE (`dim`/`nCentroids` for
-  // int8, `dim`/`m`/`ksub` for PQ — written at init, checked at every
-  // rebuilding-pipeline construction), so reconstructing a pipeline
-  // over an existing store with different values refuses loudly
-  // instead of silently mis-encoding future generations. Training
-  // knobs (`lloydIters`/`iters`/`trainN`/`seedPlanes`) are SEMANTIC —
+  // store roots persist the artifact SHAPE (a tier's `shape` entries,
+  // written at init, checked at every rebuilding-pipeline
+  // construction), so reconstructing a pipeline over an existing store
+  // with different values refuses loudly instead of silently
+  // mis-encoding future generations. Training knobs
+  // (`lloydIters`/`iters`/`trainN`/`seedPlanes`) are SEMANTIC —
   // retuning them between runs is legal — and stay out.
   //
   // The append tiers take a bare, already-written code artifact (no
@@ -54,34 +129,209 @@ object IndexMaintenance {
   // digest of the pinned quantizer — a same-shaped but different-valued
   // grid/centroids/codebooks (the mismatch shape params cannot see)
   // refuses too.
-  // ------------------------------------------------------------------
-
+  //
   // `codesLayout` is STRUCTURAL, not a tuning knob: the generation
   // stores whose code tables are cell-partitioned on disk (int8,
-  // ivf-pq — [[writeCellPartitioned]]) must never be appended to by a
-  // writer that would lay files out flat, and vice versa — Spark's
-  // partition discovery rejects a mixed flat+partitioned directory
-  // ("conflicting directory structures"), and the failure would be
-  // silent at write time and surface only at the next read. Recording
-  // the layout in the manifest makes every pipeline construction over
-  // a store with a different (or absent — i.e. pre-layout) marker
-  // refuse loudly before a single mixed file is written.
-  private def int8StoreEntries(dim: Int, nCentroids: Int) = Seq(
-    "kind" -> "int8-vector-store", "dim" -> dim.toString,
-    "nCentroids" -> nCentroids.toString,
-    "codesLayout" -> "cell-partitioned")
+  // ivf-pq — [[writeCodes]]) must never be appended to by a writer
+  // that would lay files out flat, and vice versa — Spark's partition
+  // discovery rejects a mixed flat+partitioned directory ("conflicting
+  // directory structures"), and the failure would be silent at write
+  // time and surface only at the next read. Recording the layout in the
+  // manifest makes every pipeline construction over a store with a
+  // different (or absent — i.e. pre-layout) marker refuse loudly before
+  // a single mixed file is written.
+  // ------------------------------------------------------------------
 
-  private def pqStoreEntries(dim: Int, m: Int, ksub: Int) = Seq(
-    "kind" -> "pq-vector-store", "dim" -> dim.toString,
-    "m" -> m.toString, "ksub" -> ksub.toString,
-    "codesLayout" -> "flat")
+  /** A tier's pinned quantizer tables, by table name. */
+  private type Quant = Map[String, DataFrame]
 
-  private def ivfPqStoreEntries(dim: Int, m: Int, ksub: Int,
-      nCentroids: Int) = Seq(
-    "kind" -> "ivfpq-vector-store", "dim" -> dim.toString,
-    "m" -> m.toString, "ksub" -> ksub.toString,
-    "nCentroids" -> nCentroids.toString,
-    "codesLayout" -> "cell-partitioned")
+  /** A tier's drift yardstick, pinned against one code table: (batch
+    * arrivals, their codes) → (the drift row's metric values, retrain).
+    */
+  private type Drift = (DataFrame, DataFrame) => (Seq[Double], Long)
+
+  /** One quantizer tier, described once:
+    *  - `kind` prefixes the manifest kinds (`<kind>-vector-store`,
+    *    `<kind>-codes`) and names the builder thread; `label` names the
+    *    store in errors; `shape` is the structural manifest entries;
+    *  - `tables` are the quantizer tables under `gen-N/`, in write and
+    *    digest order; `train(vecs, artifactKey)` returns them in that
+    *    order, `encode(rows, q)` turns vectors into code rows on them;
+    *  - `idCol` is the codes' vector-id column; `cells` the (cell,
+    *    partition) columns of a cell-partitioned generation codes table
+    *    (None = flat);
+    *  - `yardstick(codesDir, q)` pins the drift state against a code
+    *    table; `metrics` name its values on the drift row, between
+    *    `n_rows` and `retrain`.
+    */
+  private final class Tier(val spark: SparkSession, val kind: String,
+      val label: String, val shape: Seq[(String, String)],
+      val tables: Seq[String], val idCol: String,
+      val cells: Option[(String, String)], metrics: Seq[String])(
+      val train: (DataFrame, Seq[Any]) => Seq[DataFrame],
+      val encode: (DataFrame, Quant) => DataFrame,
+      val yardstick: (String, Quant) => Drift) {
+
+    def storeEntries: Seq[(String, String)] =
+      (("kind" -> s"$kind-vector-store") +: shape) :+
+        ("codesLayout" -> (if (cells.isDefined) "cell-partitioned" else "flat"))
+
+    def sinkSchema(withGen: Boolean): StructType = StructType(
+      Seq("batch_id", "n_rows").map(StructField(_, LongType, false)) ++
+        metrics.map(StructField(_, DoubleType, false)) ++
+        ("retrain" +: (if (withGen) Seq("gen") else Nil))
+          .map(StructField(_, LongType, false)))
+
+    /** Generation `g`'s quantizer tables under `root`, pinned local. */
+    def pinQuant(root: String, g: Long): Quant = tables.map(t =>
+      t -> pinLocal(spark.read.parquet(s"${GenStore.dir(root, g)}/$t"))).toMap
+  }
+
+  // The append pipelines never train, so they take the training knobs'
+  // defaults; `dim`/`nCentroids`/`ksub` are the shape they seal.
+  private def int8Tier(spark: SparkSession, dim: Int, nCentroids: Int,
+      retrainRatio: Double = 0.9, lloydIters: Int = 2, trainN: Int = 4096,
+      seedPlanes: Int = 6): Tier =
+    new Tier(spark, "int8", "int8",
+      Seq("dim" -> dim.toString, "nCentroids" -> nCentroids.toString),
+      Seq("grid", "centroids"), "neighbor_id", Some(("cid", "pcid")),
+      Seq("fit_new", "drift"))(
+      (vecs, key) => Seq(Similarity.int8Stats(vecs, dim),
+        // generation-addressed artifact id: the plan-keyed cache would
+        // alias rebuilds (same $root/vectors path, grown content)
+        Similarity.trainCentroids(vecs, nCentroids, lloydIters, trainN,
+          seedPlanes, dim, artifactKey = Some(key))),
+      (rows, q) => Similarity.int8Encode(rows, q("grid"), q("centroids")),
+      (dir, q) => {
+        import spark.implicits._
+        val baseline = Seq(Similarity.indexedFit(spark.read.parquet(dir),
+          q("grid"), q("centroids")).head().getDouble(0)).toDF("fit_indexed")
+        (_, encoded) => {
+          val d = Similarity.indexDriftFromCodes(encoded, q("grid"),
+            q("centroids"), baseline, retrainRatio).head()
+          (Seq(d.getAs[Double]("fit_new"), d.getAs[Double]("drift")),
+            d.getAs[Long]("retrain"))
+        }
+      })
+
+  private def pqTier(spark: SparkSession, dim: Int, m: Int, ksub: Int,
+      maxTv: Double = 0.2, iters: Int = 2, trainN: Int = 1024): Tier =
+    new Tier(spark, "pq", "pq",
+      Seq("dim" -> dim.toString, "m" -> m.toString, "ksub" -> ksub.toString),
+      Seq("codebooks"), "vec_id", None, Seq("tv_max"))(
+      (vecs, key) => Seq(Similarity.trainPqCodebooks(vecs, m, ksub, iters,
+        trainN, dim, artifactKey = Some(key))),
+      (rows, q) => Similarity.pqEncode(rows, q("codebooks"), m, dim)
+        .select("vec_id", "sub", "code"),
+      (dir, q) => {
+        import spark.implicits._
+        val codes = spark.read.parquet(dir)
+        // m·ksub + 1 rows — the bounded histogram pin
+        val hIdx = pinLocal(codes.groupBy("sub", "code")
+          .agg(count(lit(1)).as("n_idx")))
+        val tIdx = Seq(codes.agg(countDistinct("vec_id").cast("double"))
+          .head().getDouble(0)).toDF("t_idx")
+        (_, encoded) => {
+          val d = Similarity.pqDriftFromCodes(encoded, hIdx, tIdx,
+            q("codebooks"), maxTv).head()
+          (Seq(d.getAs[Double]("tv_max")), d.getAs[Long]("retrain"))
+        }
+      })
+
+  /** The composite serving tier (q_sim10's artifact). Its drift signal
+    * is the IVF analog of the PQ tier's code-usage total variation:
+    * tv_cell = ½·Σ|p_batch(cell) − p_index(cell)|. A coarse partition
+    * whose arrival mix diverges from the indexed mix is the serving-tier
+    * failure mode — probes concentrate on hot cells and the
+    * bounded-candidate guarantee erodes — and that is precisely a
+    * distribution distance on the cell id, computable from the batch's
+    * own assignments with no corpus access. One `trainN` drives both
+    * trainers — both sample by the same hash-top-N discipline — and the
+    * encode's cell join is inner on vec_id, so zero-norm vectors (which
+    * [[Similarity.ivfCellAssign]] drops) never enter the artifact.
+    */
+  private def ivfPqTier(spark: SparkSession, dim: Int, m: Int, ksub: Int,
+      nCentroids: Int, maxTv: Double = 0.2, lloydIters: Int = 2,
+      trainN: Int = 1024, seedPlanes: Int = 6): Tier =
+    new Tier(spark, "ivfpq", "ivf-pq",
+      Seq("dim" -> dim.toString, "m" -> m.toString, "ksub" -> ksub.toString,
+        "nCentroids" -> nCentroids.toString),
+      Seq("centroids", "codebooks"), "vec_id", Some(("cell", "pcell")),
+      Seq("tv_cell"))(
+      (vecs, key) => Seq(
+        Similarity.trainCentroids(vecs, nCentroids, lloydIters, trainN,
+          seedPlanes, dim, artifactKey = Some(key)),
+        Similarity.trainPqCodebooks(vecs, m, ksub, lloydIters, trainN, dim,
+          artifactKey = Some(key))),
+      (rows, q) => Similarity.pqEncode(rows, q("codebooks"), m, dim)
+        .select("vec_id", "sub", "code")
+        .join(Similarity.ivfCellAssign(rows, q("centroids")), "vec_id"),
+      (dir, q) => {
+        val codes = spark.read.parquet(dir)
+        // ≤ nCentroids + 1 rows — the artifact carries `cell` on every
+        // (vec, sub) row, so distinct vec first.
+        val hIdx = pinLocal(codes.select("vec_id", "cell").distinct()
+          .groupBy("cell").agg(count(lit(1)).as("n_idx")))
+        val tIdx = codes.agg(countDistinct("vec_id").cast("double"))
+          .head().getDouble(0)
+        // Fail-loudly posture of latestGen: an empty code table would
+        // make every per-batch tv division NaN — drift silently disabled.
+        require(tIdx > 0, s"ivf-pq code artifact at $dir holds no vectors " +
+          "— seed the index before constructing the pipeline")
+        (arrivals, _) => {
+          val cells = Similarity.ivfCellAssign(arrivals, q("centroids"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            val tv = cellTv(cells, hIdx, tIdx)
+            (Seq(tv), if (tv > maxTv) 1L else 0L)
+          } finally cells.unpersist(blocking = false)
+        }
+      })
+
+  /** `tier` pinned to the code table at `codesDir` (laid out per
+    * `cells`): quantizer `q` and the drift yardstick over that table as
+    * of now. `gen` = the generation-store generation the drift rows
+    * carry; None for a bare artifact.
+    */
+  private final class Pinned(tier: Tier, q: Quant, codesDir: String,
+      cells: Option[(String, String)], gen: Option[Long]) {
+    private val drift = tier.yardstick(codesDir, q)
+
+    /** The per-batch step of every append and rebuilding pipeline:
+      * encode `arrivals` ONCE on `q`, append the codes, and land one
+      * (batch_id, n_rows, <metrics>, retrain[, gen]) drift row in
+      * `sinkDir` from the SAME encoded rows. Returns whether it says
+      * retrain. O(batch): one encode pass, one append of the batch's
+      * own rows, one bounded drift join.
+      */
+    def append(arrivals: DataFrame, n: Long, batchId: Long,
+        sinkDir: String): Boolean = {
+      val encoded = tier.encode(arrivals, q)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        writeCodes(encoded, cells, codesDir, "append")
+        val (metrics, retrain) = drift(arrivals, encoded)
+        tier.spark.createDataFrame(java.util.Collections.singletonList(
+            Row.fromSeq(Seq(batchId, n) ++ metrics ++ (retrain +: gen.toSeq))),
+            tier.sinkSchema(gen.isDefined))
+          .write.mode("append").parquet(sinkDir)
+        retrain == 1L
+      } finally encoded.unpersist(blocking = false)
+    }
+  }
+
+  /** Run `body(arrivals, n)` over a non-empty micro-batch's (vec_id,
+    * embedding) rows, persisted for the batch.
+    */
+  private def withArrivals(batch: DataFrame)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val n = batch.count()
+    if (n > 0) {
+      val arrivals = batch.select(col("vec_id"), col("embedding"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try body(arrivals, n) finally arrivals.unpersist(blocking = false)
+    }
+  }
 
   /** Cell-usage total variation of one batch's coarse assignments
     * against the pinned index-side histogram: ½·Σ|p_new − p_idx| over
@@ -110,9 +360,7 @@ object IndexMaintenance {
     * reuses those rows — an arbitrary caller plan (e.g. a training DAG)
     * is never re-executed just to seal the store.
     */
-  private def quantizerDigest(
-      parts: Seq[(org.apache.spark.sql.types.StructType, Array[Row])])
-      : String = {
+  private def quantizerDigest(parts: Seq[(StructType, Array[Row])]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     parts.foreach { case (schema, rows) =>
       val order = schema.fieldNames.zipWithIndex.sortBy(_._1).map(_._2)
@@ -129,10 +377,12 @@ object IndexMaintenance {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** [[pinLocal]] that also hands back the collected rows, so a caller
-    * needing both the pinned relation and driver-side access (dim /
-    * row-count / digest derivation) pays exactly ONE execution of the
-    * source plan.
+  /** Bounded driver pin: collect `df` (caller guarantees a small,
+    * construction-bounded row count) into a LOCAL relation, immune to
+    * the refreshByPath re-cache the append writes fire on the store
+    * paths, and hand back the collected rows too — a caller needing
+    * both the pinned relation and driver-side access (dim / row count /
+    * digest) pays exactly ONE execution of the source plan.
     */
   private def pinWithRows(df: DataFrame): (DataFrame, Array[Row]) = {
     import scala.jdk.CollectionConverters._
@@ -140,18 +390,19 @@ object IndexMaintenance {
     (df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema), rows)
   }
 
+  private def pinLocal(df: DataFrame): DataFrame = pinWithRows(df)._1
+
   /** The int8 tier's monitor — same shape as [[pqDriftMonitor]] with
     * the index-side baseline ([[Similarity.indexedFit]], a full scan of
     * the stored codes) computed ONCE at monitor start; each micro-batch
     * then pays one encode+recon pass against the broadcast centroids
     * ([[Similarity.indexDriftVsBaseline]]). One (batch_id, n_rows,
-    * fit_new, drift, retrain) row per non-empty batch.
+    * fit_new, drift, retrain) row per non-empty batch lands in
+    * `sinkDir` — alerting and retrain queues read it there.
     */
   def int8DriftMonitor(index: DataFrame, grid: DataFrame,
-      centroids: DataFrame, sinkDir: String, retrainRatio: Double = 0.9,
-      onBatch: (Long, Row) => Unit = (_, _) => ())
+      centroids: DataFrame, sinkDir: String, retrainRatio: Double = 0.9)
       : (DataFrame, Long) => Unit = {
-    import org.apache.spark.storage.StorageLevel
     val baseline = Similarity.indexedFit(index, grid, centroids)
       .persist(StorageLevel.MEMORY_AND_DISK)
     baseline.count()
@@ -162,10 +413,9 @@ object IndexMaintenance {
         import spark.implicits._
         val d = Similarity.indexDriftVsBaseline(batch, grid, centroids,
           baseline, retrainRatio).head()
-        val row = (batchId, n, d.getAs[Double]("fit_new"),
-          d.getAs[Double]("drift"), d.getAs[Long]("retrain"))
-        onBatch(batchId, Row(row._1, row._2, row._3, row._4, row._5))
-        Seq(row).toDF("batch_id", "n_rows", "fit_new", "drift", "retrain")
+        Seq((batchId, n, d.getAs[Double]("fit_new"),
+            d.getAs[Double]("drift"), d.getAs[Long]("retrain")))
+          .toDF("batch_id", "n_rows", "fit_new", "drift", "retrain")
           .write.mode("append").parquet(sinkDir)
       }
     }
@@ -173,17 +423,14 @@ object IndexMaintenance {
 
   /** One monitoring row (batch_id, n_rows, tv_max, retrain) appended to
     * the parquet `sinkDir` per non-empty micro-batch of embedding
-    * arrivals. `codes`/`codebooks` are the persisted PQ artifact
-    * (q_sim8/q_sim9 shapes). `onBatch` receives each row as it lands —
-    * wire it to alerting or a retrain queue. Returns the function to
-    * attach via `writeStream.foreachBatch(...)`.
+    * arrivals — alerting and retrain queues read the sink.
+    * `codes`/`codebooks` are the persisted PQ artifact (q_sim8/q_sim9
+    * shapes). Returns the function to attach via
+    * `writeStream.foreachBatch(...)`.
     */
   def pqDriftMonitor(codes: DataFrame, codebooks: DataFrame,
-      sinkDir: String, m: Int = 4, dim: Int = 64, maxTv: Double = 0.2,
-      onBatch: (Long, Row) => Unit = (_, _) => ())
+      sinkDir: String, m: Int = 4, dim: Int = 64, maxTv: Double = 0.2)
       : (DataFrame, Long) => Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.storage.StorageLevel
     // The index-side inputs, aggregated once and pinned for the life of
     // the monitor (m·ksub + 1 rows — broadcast-sized by construction).
     val hIdx = codes.groupBy("sub", "code").agg(count(lit(1)).as("n_idx"))
@@ -198,12 +445,33 @@ object IndexMaintenance {
         import spark.implicits._
         val d = Similarity.pqDriftVsHistogram(batch, hIdx, tIdx, codebooks,
           m, dim, maxTv).head()
-        val row = (batchId, n, d.getAs[Double]("tv_max"), d.getAs[Long]("retrain"))
-        onBatch(batchId, Row(row._1, row._2, row._3, row._4))
-        Seq(row).toDF("batch_id", "n_rows", "tv_max", "retrain")
+        Seq((batchId, n, d.getAs[Double]("tv_max"), d.getAs[Long]("retrain")))
+          .toDF("batch_id", "n_rows", "tv_max", "retrain")
           .write.mode("append").parquet(sinkDir)
       }
     }
+  }
+
+  /** The append pipelines' shared body over the bare code artifact at
+    * `dir`: seal-or-check it against the quantizer pinned in `pins` (one
+    * collect per table, already paid — the seal and every per-batch
+    * encode reuse the pinned rows, so an expensive caller plan, e.g. a
+    * training DAG, executes exactly once per construction), pin the
+    * pre-append yardstick, and run [[Pinned.append]] per batch.
+    */
+  private def appendPipeline(tier: Tier, dir: String,
+      pins: Seq[(DataFrame, Array[Row])], sinkDir: String)
+      : (DataFrame, Long) => Unit = {
+    StoreManifest.sealOrCheck(tier.spark, dir,
+      (("kind" -> s"${tier.kind}-codes") +: tier.shape) :+
+        ("quantizerDigest" -> quantizerDigest(pins.map { case (df, rows) =>
+          (df.schema, rows) })),
+      s"${tier.label} code artifact", StoreManifest.InlineFileName)
+    val p = new Pinned(tier, tier.tables.zip(pins.map(_._1)).toMap, dir,
+      None, None)
+    (batch: DataFrame, batchId: Long) =>
+      withArrivals(batch)((arrivals, n) =>
+        p.append(arrivals, n, batchId, sinkDir))
   }
 
   /** The int8 tier's CLOSED loop: per non-empty micro-batch of
@@ -212,72 +480,24 @@ object IndexMaintenance {
     * retraining), append the encoded rows to the stored parquet
     * artifact at `indexDir`, and emit one (batch_id, n_rows, fit_new,
     * drift, retrain) row to `sinkDir` against the PRE-APPEND baseline
-    * ([[Similarity.indexedFit]] over `indexDir` as of pipeline start,
-    * computed once and persisted — appends never shift the yardstick
-    * they are measured against; retrain = 1 is the signal to rebuild
-    * both artifact and baseline). ONE encode pass per batch: the same
-    * persisted encoded rows feed the append write and the drift
-    * ([[Similarity.indexDriftFromCodes]]).
+    * ([[Similarity.indexedFit]] over `indexDir` as of pipeline start —
+    * appends never shift the yardstick they are measured against;
+    * retrain = 1 is the signal to rebuild both artifact and baseline,
+    * which [[int8RebuildingPipeline]] closes over a generation store).
+    * The seal checks the shape (dim from the grid row, centroid count)
+    * plus the quantizer's value digest.
     *
     * At scale each batch costs O(batch) encode + an append write of the
     * batch's own rows; the stored index is scanned exactly once, at
-    * start. `onBatch` receives each drift row — wire it to a retrain
-    * queue.
+    * start.
     */
   def int8AppendPipeline(indexDir: String, grid: DataFrame,
-      centroids: DataFrame, sinkDir: String, retrainRatio: Double = 0.9,
-      onBatch: (Long, Row) => Unit = (_, _) => ())
+      centroids: DataFrame, sinkDir: String, retrainRatio: Double = 0.9)
       : (DataFrame, Long) => Unit = {
-    val spark = grid.sparkSession
-    import spark.implicits._
-    // Pin the quantizer ONCE (a 1-row grid + nCentroids centroids —
-    // bounded by construction). The pinned rows drive the seal-or-check
-    // below with no further jobs, and every per-batch encode runs on
-    // the LOCAL relations — an expensive caller plan (a training DAG
-    // handed in as `centroids`) executes exactly once per pipeline
-    // construction, never once per seal field plus once per batch.
-    val (gridL, gridRows) = pinWithRows(grid)
-    val (centsL, centRows) = pinWithRows(centroids)
-    // Seal-or-check the artifact against the pinned quantizer: shape
-    // (dim from the grid row, centroid count) plus the value digest —
-    // a reconstruction with ANY different quantizer over these codes
-    // would silently mis-encode every future append.
-    val dim = gridRows(0).getAs[scala.collection.Seq[Double]]("lo").size
-    StoreManifest.sealOrCheck(spark, indexDir, Seq(
-        "kind" -> "int8-codes", "dim" -> dim.toString,
-        "nCentroids" -> centRows.length.toString,
-        "quantizerDigest" -> quantizerDigest(Seq(
-          (grid.schema, gridRows), (centroids.schema, centRows)))),
-      "int8 code artifact", StoreManifest.InlineFileName)
-    // The baseline is COLLECTED into a local one-row relation, not
-    // persisted over the parquet scan: each append write triggers
-    // Spark's refreshByPath on `indexDir`, which RE-CACHES any cached
-    // plan scanning that path — a persisted baseline would silently
-    // recompute over the grown artifact and measure every batch against
-    // a yardstick its own appends keep moving. A pinned scalar is also
-    // the production posture (calibration from a reference snapshot,
-    // refreshed on retrain — the curation funnel's qMin/qMax pattern).
-    val baseline = Seq(Similarity.indexedFit(spark.read.parquet(indexDir),
-        gridL, centsL).head().getDouble(0))
-      .toDF("fit_indexed")
-    (batch: DataFrame, batchId: Long) => {
-      val n = batch.count()
-      if (n > 0) {
-        import spark.implicits._
-        val encoded = Similarity.int8Encode(batch, gridL, centsL)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          encoded.write.mode("append").parquet(indexDir)
-          val d = Similarity.indexDriftFromCodes(encoded, gridL, centsL,
-            baseline, retrainRatio).head()
-          val row = (batchId, n, d.getAs[Double]("fit_new"),
-            d.getAs[Double]("drift"), d.getAs[Long]("retrain"))
-          onBatch(batchId, Row(row._1, row._2, row._3, row._4, row._5))
-          Seq(row).toDF("batch_id", "n_rows", "fit_new", "drift", "retrain")
-            .write.mode("append").parquet(sinkDir)
-        } finally encoded.unpersist(blocking = false)
-      }
-    }
+    val pins = Seq(grid, centroids).map(pinWithRows)
+    val dim = pins.head._2(0).getAs[scala.collection.Seq[Double]]("lo").size
+    appendPipeline(int8Tier(grid.sparkSession, dim, pins(1)._2.length,
+      retrainRatio), indexDir, pins, sinkDir)
   }
 
   /** The PQ tier's CLOSED loop — [[int8AppendPipeline]]'s shape over
@@ -285,61 +505,16 @@ object IndexMaintenance {
     * once on the pinned `codebooks` ([[Similarity.pqEncode]]), append
     * the codes to the stored table, and emit one (batch_id, n_rows,
     * tv_max, retrain) row against the PRE-APPEND code-usage histogram
-    * (aggregated once at start; appends never shift the yardstick —
-    * retrain = 1 says rebuild codebooks, artifact, and histogram).
+    * (retrain = 1 says rebuild codebooks, artifact, and histogram). The
+    * sealed `ksub` is derived from the trained table, which may
+    * legitimately hold fewer codewords than requested.
     */
   def pqAppendPipeline(codesDir: String, codebooks: DataFrame,
-      sinkDir: String, m: Int = 4, dim: Int = 64, maxTv: Double = 0.2,
-      onBatch: (Long, Row) => Unit = (_, _) => ())
+      sinkDir: String, m: Int = 4, dim: Int = 64, maxTv: Double = 0.2)
       : (DataFrame, Long) => Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = codebooks.sparkSession
-    import spark.implicits._
-    // Pin the codebooks ONCE (m·ksub rows — bounded by construction);
-    // int8AppendPipeline's rationale: the pinned rows drive the seal
-    // with no further jobs and the per-batch encodes run on the local
-    // relation, so a training DAG handed in as `codebooks` executes
-    // exactly once per pipeline construction.
-    val (cbL, cbRows) = pinWithRows(codebooks)
-    // Seal-or-check against the pinned codebooks — int8AppendPipeline's
-    // gate for the PQ tier (ksub derived from the trained table, which
-    // may legitimately hold fewer codewords than requested).
-    StoreManifest.sealOrCheck(spark, codesDir, Seq(
-        "kind" -> "pq-codes", "dim" -> dim.toString, "m" -> m.toString,
-        "ksub" -> (cbRows.length / m).toString,
-        "quantizerDigest" -> quantizerDigest(Seq((codebooks.schema, cbRows)))),
-      "pq code artifact", StoreManifest.InlineFileName)
-    // Pinned as LOCAL relations, not persisted over the parquet scan —
-    // int8AppendPipeline's refreshByPath rationale: an append write
-    // re-caches any cached plan scanning `codesDir`, so a persisted
-    // histogram would recompute over the grown artifact. m·ksub + 1
-    // rows — driver-collectable by construction.
-    val codes0 = spark.read.parquet(codesDir)
-    val hIdx = codes0.groupBy("sub", "code").agg(count(lit(1)).as("n_idx"))
-      .select(col("sub").cast("int"), col("code").cast("int"), col("n_idx"))
-      .collect().toSeq
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-      .toDF("sub", "code", "n_idx")
-    val tIdx = Seq(codes0.agg(countDistinct("vec_id").cast("double"))
-      .head().getDouble(0)).toDF("t_idx")
-    (batch: DataFrame, batchId: Long) => {
-      val n = batch.count()
-      if (n > 0) {
-        import spark.implicits._
-        val encoded = Similarity.pqEncode(batch, cbL, m, dim)
-          .select("vec_id", "sub", "code")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          encoded.write.mode("append").parquet(codesDir)
-          val d = Similarity.pqDriftFromCodes(encoded, hIdx, tIdx,
-            cbL, maxTv).head()
-          val row = (batchId, n, d.getAs[Double]("tv_max"), d.getAs[Long]("retrain"))
-          onBatch(batchId, Row(row._1, row._2, row._3, row._4))
-          Seq(row).toDF("batch_id", "n_rows", "tv_max", "retrain")
-            .write.mode("append").parquet(sinkDir)
-        } finally encoded.unpersist(blocking = false)
-      }
-    }
+    val pins = Seq(pinWithRows(codebooks))
+    appendPipeline(pqTier(codebooks.sparkSession, dim, m,
+      pins.head._2.length / m, maxTv), codesDir, pins, sinkDir)
   }
 
   /** The IVF-PQ serving tier's CLOSED loop — [[pqAppendPipeline]]'s
@@ -349,126 +524,34 @@ object IndexMaintenance {
     * ([[Similarity.ivfCellAssign]] — broadcast argmax, one map-side
     * pass), PQ-encode on the pinned codebooks, join, append — and emit
     * one (batch_id, n_rows, tv_cell, retrain) drift row against the
-    * PRE-APPEND cell-usage histogram.
+    * PRE-APPEND cell-usage histogram. retrain = 1 says rebuild
+    * centroids + codebooks + artifact — the corpus-scale job
+    * [[ivfPqRebuildingPipeline]] closes over a generation store, for
+    * callers owning a bare code artifact rather than a store to act on
+    * themselves.
     *
-    * The drift signal is the IVF analog of the PQ tier's code-usage
-    * total variation: tv_cell = ½·Σ|p_batch(cell) − p_index(cell)|.
-    * A coarse partition whose arrival mix diverges from the indexed
-    * mix is the serving-tier failure mode — probes concentrate on hot
-    * cells and the bounded-candidate guarantee erodes — and that is
-    * precisely a distribution distance on the cell id, computable from
-    * the batch's own assignments with no corpus access. The histogram
-    * is aggregated ONCE at construction (nCentroids rows, pinned
-    * local; the refreshByPath rationale of the flat tiers), so appends
-    * never move the yardstick they are measured against; retrain = 1
-    * says rebuild centroids + codebooks + artifact — the corpus-scale
-    * job [[ivfPqRebuildingPipeline]] closes over a generation store
-    * (inline or off-path), for callers owning a bare code artifact
-    * rather than a store to act on themselves.
-    *
-    * At scale each batch costs O(batch): one broadcast argmax pass,
-    * one broadcast-LUT encode pass, one append of the batch's own
-    * rows, one nCentroids-row drift join. The stored artifact is read
-    * exactly once, at construction.
+    * At scale each batch costs O(batch): broadcast argmax passes, one
+    * broadcast-LUT encode pass, one append of the batch's own rows, one
+    * nCentroids-row drift join. The stored artifact is read exactly
+    * once, at construction.
     */
   def ivfPqAppendPipeline(codesDir: String, centroids: DataFrame,
       codebooks: DataFrame, sinkDir: String, m: Int = 4, dim: Int = 64,
-      maxTv: Double = 0.2,
-      onBatch: (Long, Row) => Unit = (_, _) => ())
-      : (DataFrame, Long) => Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = codebooks.sparkSession
-    import spark.implicits._
-    // Pin BOTH quantizer tables once ([[pqAppendPipeline]]'s posture):
-    // the pinned rows drive the seal, and per-batch assign/encode run
-    // on the local relations.
-    val (centsL, centRows) = pinWithRows(centroids)
-    val (cbL, cbRows) = pinWithRows(codebooks)
-    StoreManifest.sealOrCheck(spark, codesDir, Seq(
-        "kind" -> "ivfpq-codes", "dim" -> dim.toString, "m" -> m.toString,
-        "ksub" -> (cbRows.length / m).toString,
-        "nCentroids" -> centRows.length.toString,
-        "quantizerDigest" -> quantizerDigest(Seq(
-          (centroids.schema, centRows), (codebooks.schema, cbRows)))),
-      "ivf-pq code artifact", StoreManifest.InlineFileName)
-    // Pre-append cell-usage histogram, pinned local (≤ nCentroids + 1
-    // rows — the artifact carries `cell` on every (vec, sub) row, so
-    // distinct vec first).
-    val codes0 = spark.read.parquet(codesDir)
-    val hIdx = pinLocal(codes0.select("vec_id", "cell").distinct()
-      .groupBy("cell").agg(count(lit(1)).as("n_idx")))
-    val tIdx = codes0.agg(countDistinct("vec_id").cast("double"))
-      .head().getDouble(0)
-    // Fail-loudly posture of latestGen: an empty seed artifact would
-    // make every per-batch tv division NaN — drift silently disabled.
-    require(tIdx > 0,
-      s"ivf-pq code artifact at $codesDir holds no vectors — " +
-        "seed the index before constructing the append pipeline")
-    (batch: DataFrame, batchId: Long) => {
-      val n = batch.count()
-      if (n > 0) {
-        import spark.implicits._
-        val cells = Similarity.ivfCellAssign(batch, centsL)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val encoded = Similarity.pqEncode(batch, cbL, m, dim)
-            .select("vec_id", "sub", "code")
-            .join(cells, "vec_id")
-          encoded.write.mode("append").parquet(codesDir)
-          val tv = cellTv(cells, hIdx, tIdx)
-          val row = (batchId, n, tv, if (tv > maxTv) 1L else 0L)
-          onBatch(batchId, Row(row._1, row._2, row._3, row._4))
-          Seq(row).toDF("batch_id", "n_rows", "tv_cell", "retrain")
-            .write.mode("append").parquet(sinkDir)
-        } finally cells.unpersist(blocking = false)
-      }
-    }
+      maxTv: Double = 0.2): (DataFrame, Long) => Unit = {
+    val pins = Seq(centroids, codebooks).map(pinWithRows)
+    appendPipeline(ivfPqTier(codebooks.sparkSession, dim, m,
+      pins(1)._2.length / m, pins.head._2.length, maxTv), codesDir, pins,
+      sinkDir)
   }
 
-  // ------------------------------------------------------------------
-  // The RETRAIN leg — rebuild-and-swap, closing the loop the append
-  // pipelines open. The *AppendPipeline pair detects drift and emits
-  // retrain = 1; the *RebuildingPipeline pair ACTS on it: retrain the
-  // quantizer on the full vector log, rewrite the artifact, re-pin the
-  // baseline, resume appends on the new generation — all inside the
-  // same foreachBatch, so the loop is ingest → append → drift →
-  // rebuild → quiet with no operator runbook in between.
-  //
-  // Store layout (self-contained under one root):
-  //   root/vectors/            raw (vec_id, embedding) log — the
-  //                            corpus seed + every arrival; the
-  //                            authoritative retrain input (a rebuild
-  //                            is a corpus-scale job BY DESIGN — rare
-  //                            and signal-driven, it re-reads this log
-  //                            once; appends never do)
-  //   root/gen-N/...           one directory per quantizer GENERATION:
-  //                            int8 → grid/ centroids/ codes/;
-  //                            PQ   → codebooks/ codes/
-  //   root/gen-N/COMMITTED     marker written LAST — the swap's commit
-  //                            point. A crash mid-rebuild leaves an
-  //                            uncommitted gen dir that every reader
-  //                            ignores; the drift signal re-fires on
-  //                            the next batch and the retry overwrites
-  //                            the orphan. Readers always resolve
-  //                            [[latestGen]] = max committed N.
-  //
-  // Replay honesty: the vectors/codes appends stay at-least-once (the
-  // parquet-append caveat), so a replayed batch can duplicate rows in
-  // BOTH logs. Rebuilds neutralize what they can: training and
-  // re-encoding run over vectors deduped by vec_id, so each rebuild
-  // starts from a clean corpus and only inter-rebuild appends can carry
-  // duplicates.
-  // ------------------------------------------------------------------
-
-  private def genDir(root: String, gen: Long) = GenStore.dir(root, gen)
-
-  /** Generation-store code tables are CELL-PARTITIONED on disk: the
-    * partition column (`pcid` int8 / `pcell` ivf-pq) DUPLICATES the
-    * in-row cell column, so every existing reader (pins, histograms,
-    * catch-up anti-joins, spec differentials) sees the same data
-    * columns it always did, while a pruning reader filters on the
+  /** Write `df`'s code rows to `dir`. A generation store's code table is
+    * CELL-PARTITIONED on disk (`cells` = (cell column, partition
+    * column): `pcid` int8 / `pcell` ivf-pq): the partition column
+    * DUPLICATES the in-row cell column, so every existing reader (pins,
+    * histograms, catch-up anti-joins, spec differentials) sees the same
+    * data columns it always did, while a pruning reader filters on the
     * partition column and scans only the probed cells' files. The
-    * round-13 ServingProbe measured why: at n=500k the ivf-pq serve
+    * round-13 serving measurement showed why: at n=500k the ivf-pq serve
     * paid 20 s/batch scanning all n·m code rows before the cell join
     * pruned — the probed-cells arithmetic held for the JOIN, not the
     * I/O. With `pcell=` dirs the scan itself becomes
@@ -479,26 +562,26 @@ object IndexMaintenance {
     * cell lands as ONE file instead of one file per (cell × writing
     * task) — without it a w-task writer fragments every cell w ways,
     * and the per-file open/footer overhead multiplies exactly where
-    * the bulk-serve regime scans everything (round-14 ServingProbe
-    * measures the two layouts side by side; SCALE.md). Appends keep
-    * `compact = false`: a micro-batch is small, and paying a shuffle
-    * per batch to co-locate a handful of rows per cell buys nothing —
-    * file-count hygiene for the append tail is the REBUILD's job
-    * (which rewrites the codes table compacted). Skew stance: one
-    * task writes a whole cell, so a pathological giant cell serializes
-    * through one writer — at the 3 GB/cell production target that is
-    * the standard partitionBy-compaction tradeoff; cells beyond
-    * task-sized want a salt column splitting them into bounded file
-    * chunks, which readers ignore (partition pruning keys only on
-    * `partCol`).
+    * the bulk-serve regime scans everything (SCALE.md measures the two
+    * layouts side by side). Appends keep `compact = false`: a
+    * micro-batch is small, and paying a shuffle per batch to co-locate a
+    * handful of rows per cell buys nothing — file-count hygiene for the
+    * append tail is the REBUILD's job. Skew stance: one task writes a
+    * whole cell, so a pathological giant cell serializes through one
+    * writer — at the 3 GB/cell production target that is the standard
+    * partitionBy-compaction tradeoff; cells beyond task-sized want a
+    * salt column splitting them into bounded file chunks, which readers
+    * ignore (partition pruning keys only on the partition column).
     */
-  private def writeCellPartitioned(df: DataFrame, cellCol: String,
-      partCol: String, dir: String, mode: String,
-      compact: Boolean = false): Unit = {
-    val tagged = df.withColumn(partCol, df(cellCol))
-    val out = if (compact) tagged.repartition(col(partCol)) else tagged
-    out.write.partitionBy(partCol).mode(mode).parquet(dir)
-  }
+  private def writeCodes(df: DataFrame, cells: Option[(String, String)],
+      dir: String, mode: String, compact: Boolean = false): Unit =
+    cells match {
+      case Some((cellCol, partCol)) =>
+        val tagged = df.withColumn(partCol, df(cellCol))
+        val out = if (compact) tagged.repartition(col(partCol)) else tagged
+        out.write.partitionBy(partCol).mode(mode).parquet(dir)
+      case None => df.write.mode(mode).parquet(dir)
+    }
 
   /** Prune a cell-partitioned code table to `cells`, dropping the
     * partition column; a FLAT table (pre-partitioning layout, or an
@@ -508,10 +591,10 @@ object IndexMaintenance {
     * The prune is CONDITIONAL on selectivity: when the batch's probed
     * union covers half the cells or more (a large random query batch —
     * the bulk-mining regime), filtering buys nothing the scan wouldn't
-    * read anyway and the per-partition file overhead costs (round-13
-    * ServingProbe: int8 n=500k, batch=64·nProbe=8 probes 512/707 cells
-    * — the "pruned" serve measured 2.8× the flat one). Below half —
-    * the latency regime (small batches) and clustered workloads — the
+    * read anyway and the per-partition file overhead costs (round 13:
+    * int8 n=500k, batch=64·nProbe=8 probes 512/707 cells — the
+    * "pruned" serve measured 2.8× the flat one). Below half — the
+    * latency regime (small batches) and clustered workloads — the
     * filter skips whole partitions at scan time.
     */
   private def pruneCells(codes: DataFrame, partCol: String,
@@ -522,15 +605,12 @@ object IndexMaintenance {
       else codes.drop(partCol)
     } else codes
 
-  /** Raw-arrival staging for an in-flight OFF-PATH rebuild (`async =
-    * true`): while generation `gen` is being built from a frozen
-    * snapshot, each batch's arrivals are also parked here so the swap
-    * can encode exactly the build-window rows on the new quantizer.
-    * Lives UNDER the generation dir, so a crashed build's staging is
-    * reaped with its orphan by the next submission's delete.
+  /** Raw-arrival staging for an in-flight off-path build of generation
+    * `gen`. Lives UNDER the generation dir, so a crashed build's staging
+    * is reaped with its orphan.
     */
   private def stagingDir(root: String, gen: Long) =
-    s"${genDir(root, gen)}/pending-vectors"
+    s"${GenStore.dir(root, gen)}/pending-vectors"
 
   /** The vector log's data-file list at this instant. Taken in the
     * STREAM thread at rebuild submission — the single writer — so the
@@ -547,9 +627,6 @@ object IndexMaintenance {
       .map(_.getPath.toString)
   }
 
-  private def deleteQuiet(spark: SparkSession, path: String): Unit =
-    GenStore.deleteQuiet(spark, path)
-
   /** Highest COMMITTED generation under `root` — the one readers and
     * appenders use. Fails loudly on a store with no committed
     * generation (init first; an uncommitted orphan alone means a
@@ -557,20 +634,6 @@ object IndexMaintenance {
     */
   def latestGen(spark: SparkSession, root: String): Long =
     GenStore.latest(spark, root)
-
-  private def commitGen(spark: SparkSession, root: String, gen: Long): Unit =
-    GenStore.commit(spark, root, gen)
-
-  /** Bounded driver pin: collect `df` (caller guarantees a small,
-    * construction-bounded row count — a 1-row grid, nCentroids
-    * centroids, m·ksub codebook rows) into a LOCAL relation, immune to
-    * the refreshByPath re-cache the append writes fire on the store
-    * paths ([[int8AppendPipeline]]'s rationale, SCALE.md's trap).
-    */
-  private def pinLocal(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
 
   /** Refuse to init over a LIVE store (any committed generation):
     * re-initing would overwrite the manifest and the vector log while
@@ -598,272 +661,136 @@ object IndexMaintenance {
     graft.operators.Similarity.invalidateArtifacts(root)
   }
 
-  /** Create an int8 generation store: persist the MANIFEST (shape
-    * parameters every later pipeline construction is checked against),
-    * seed the vector log with `corpus`, train generation 0
-    * (grid + centroids), encode, commit. Refuses a root that already
-    * holds a committed generation (see [[guardInit]]).
+  /** Create a `tier` generation store: persist the MANIFEST (the shape
+    * every later pipeline construction is checked against), seed the
+    * vector log with `corpus`, write generation 0, commit. Refuses a
+    * root that already holds a committed generation ([[guardInit]]).
+    */
+  private def initStore(tier: Tier, root: String, corpus: DataFrame): Unit = {
+    guardInit(tier.spark, root, tier.storeEntries, s"${tier.label} store")
+    corpus.select("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$root/vectors")
+    writeGen(tier, root, 0L, tier.spark.read.parquet(s"$root/vectors"))
+    GenStore.commit(tier.spark, root, 0L)
+  }
+
+  /** Write generation `gen` of a `tier` store from the retrain input
+    * `vecs` — train, write the quantizer tables, then the codes encoded
+    * on the WRITTEN tables read back (each training plan executes once,
+    * its own write; codes ≡ committed quantizer by construction instead
+    * of resting on the plans re-executing deterministically), compacted
+    * per cell. The caller writes `COMMITTED`.
+    */
+  private def writeGen(tier: Tier, root: String, gen: Long,
+      vecs: DataFrame): Unit = {
+    val d = GenStore.dir(root, gen)
+    tier.tables.zip(tier.train(vecs, Seq(root, gen))).foreach {
+      case (t, df) => df.write.mode("overwrite").parquet(s"$d/$t")
+    }
+    writeCodes(tier.encode(vecs, tier.tables.map(t =>
+        t -> tier.spark.read.parquet(s"$d/$t")).toMap),
+      tier.cells, s"$d/codes", "overwrite", compact = true)
+  }
+
+  /** THE rebuilding loop — the protocol in the object header, for any
+    * tier. Construction checks the store's manifest against `tier`,
+    * pins the latest committed generation, and reaps both crash windows:
+    * a staging dir under that (committed) generation and any
+    * uncommitted generation above it (single-writer, so nothing is in
+    * flight at construction).
+    */
+  private def rebuildingPipeline(root: String, sinkDir: String, tier: Tier,
+      onRebuild: (Long, Long) => Unit, async: Boolean,
+      rebuildGate: () => Unit, onBuildError: (Long, Throwable) => Unit)
+      : (DataFrame, Long) => Unit = {
+    val spark = tier.spark
+    StoreManifest.check(spark, root, tier.storeEntries, s"${tier.label} store")
+    def codes(g: Long) = s"${GenStore.dir(root, g)}/codes"
+    def pin(g: Long, q: Quant) =
+      new Pinned(tier, q, codes(g), tier.cells, Some(g))
+    var gen = latestGen(spark, root)
+    var p = pin(gen, tier.pinQuant(root, gen))
+    GenStore.deleteQuiet(spark, stagingDir(root, gen))
+    GenStore.dropUncommittedAbove(spark, root, gen)
+    val builds = new GenStore.OffPathBuild(spark, root,
+      s"graft-${tier.kind}-rebuild", rebuildGate, onBuildError)
+    (batch: DataFrame, batchId: Long) => withArrivals(batch) { (arrivals, n) =>
+      // SWAP a finished off-path build before this batch is processed,
+      // so the batch lands on the new generation.
+      if (async) builds.swap { g2 =>
+        val q2 = tier.pinQuant(root, g2)
+        val sd = stagingDir(root, g2)
+        if (GenStore.fs(spark, sd).exists(new Path(sd))) {
+          // Catch-up = staged rows the snapshot did not already encode.
+          val fresh = spark.read.parquet(sd).dropDuplicates("vec_id")
+            .join(spark.read.parquet(codes(g2))
+                .select(col(tier.idCol).as("vec_id")),
+              Seq("vec_id"), "left_anti")
+          writeCodes(tier.encode(fresh, q2), tier.cells, codes(g2), "append")
+        }
+        GenStore.commit(spark, root, g2)
+        GenStore.deleteQuiet(spark, sd)
+        gen = g2; p = pin(g2, q2)
+      }.foreach(onRebuild(batchId, _))
+      arrivals.write.mode("append").parquet(s"$root/vectors")
+      // An in-flight build's snapshot is frozen — park this batch's raw
+      // arrivals for the swap's catch-up encode.
+      builds.target.foreach(g =>
+        arrivals.write.mode("append").parquet(stagingDir(root, g)))
+      if (p.append(arrivals, n, batchId, sinkDir)) {
+        if (!async) {
+          writeGen(tier, root, gen + 1,
+            spark.read.parquet(s"$root/vectors").dropDuplicates("vec_id"))
+          GenStore.commit(spark, root, gen + 1)
+          gen += 1; p = pin(gen, tier.pinQuant(root, gen))
+          onRebuild(batchId, gen)
+        } else if (builds.target.isEmpty) {
+          val target = gen + 1
+          val snapshot = vectorSnapshot(spark, root)
+          builds.submit(batchId, target) { () =>
+            writeGen(tier, root, target,
+              spark.read.parquet(snapshot: _*).dropDuplicates("vec_id"))
+          }
+        }
+      }
+    }
+  }
+
+  /** Create an int8 generation store (grid + centroids + cell-partitioned
+    * codes) — [[initStore]]. Refuses a root that already holds a
+    * committed generation.
     */
   def initInt8Store(spark: SparkSession, root: String, corpus: DataFrame,
       nCentroids: Int = 16, lloydIters: Int = 2, trainN: Int = 4096,
-      seedPlanes: Int = 6, dim: Int = 64): Unit = {
-    guardInit(spark, root, int8StoreEntries(dim, nCentroids), "int8 store")
-    corpus.select("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$root/vectors")
-    val vecs = spark.read.parquet(s"$root/vectors")
-    val grid = Similarity.int8Stats(vecs, dim)
-    val cents = Similarity.trainCentroids(vecs, nCentroids, lloydIters,
-      trainN, seedPlanes, dim,
-      // generation-addressed artifact id: the plan-keyed cache would
-      // alias rebuilds (same $root/vectors path, grown content)
-      artifactKey = Some(Seq(root, 0L)))
-    writeInt8Gen(spark, root, 0L, vecs, grid, cents)
-  }
+      seedPlanes: Int = 6, dim: Int = 64): Unit =
+    initStore(int8Tier(spark, dim, nCentroids, lloydIters = lloydIters,
+      trainN = trainN, seedPlanes = seedPlanes), root, corpus)
 
-  /** Write one full int8 generation (centroids → grid → codes →
-    * COMMITTED — the marker last, so a partial write is never
-    * resolvable) and return nothing; `vecs` is the deduped retrain
-    * input. The codes are encoded on the WRITTEN centroids/grid read
-    * back from parquet, not on the training plans: each training plan
-    * executes exactly once (its own write), and codes ≡ committed
-    * quantizer holds by construction instead of resting on the plans
-    * re-executing deterministically.
-    */
-  private def writeInt8Gen(spark: SparkSession, root: String, gen: Long,
-      vecs: DataFrame, grid: DataFrame, cents: DataFrame,
-      commit: Boolean = true): Unit = {
-    val d = genDir(root, gen)
-    cents.write.mode("overwrite").parquet(s"$d/centroids")
-    grid.write.mode("overwrite").parquet(s"$d/grid")
-    writeCellPartitioned(Similarity.int8Encode(vecs,
-        spark.read.parquet(s"$d/grid"), spark.read.parquet(s"$d/centroids")),
-      "cid", "pcid", s"$d/codes", "overwrite", compact = true)
-    if (commit) commitGen(spark, root, gen)
-  }
-
-  /** [[int8AppendPipeline]] WITH the retrain leg: per batch, log the
-    * raw arrivals, encode on the CURRENT generation's pinned quantizer,
-    * append the codes, emit the drift row (now carrying `gen`) — and
-    * when it says retrain, rebuild generation N+1 from the full vector
-    * log (dedup → retrain grid + centroids → re-encode → commit),
-    * re-pin quantizer + baseline, and resume appends on the new
-    * generation. StreamingSpec drives a planted shift through the whole
+  /** [[int8AppendPipeline]] WITH the retrain leg, over an
+    * [[initInt8Store]] root: per batch, log the raw arrivals, encode on
+    * the CURRENT generation's pinned quantizer, append the codes, emit
+    * the drift row (now carrying `gen`) — and when it says retrain,
+    * rebuild generation N+1 from the deduped vector log (retrain grid +
+    * centroids, re-encode, commit), re-pin quantizer + baseline, and
+    * resume appends on the new generation; inline or, with `async =
+    * true`, off-path (the protocol and its hooks are in the object
+    * header). StreamingSpec drives a planted shift through the whole
     * loop: quiet → retrain trips → rebuild → the next batches measure
     * quiet against the NEW baseline.
-    *
-    * At scale: appends stay O(batch); a rebuild is one corpus-scale
-    * training + encode pass, paid only when the signal fires. The
-    * quantizer and baseline live as driver-local pins (grid 1 row,
-    * centroids nCentroids rows, fit 1 double — bounded by
-    * construction), re-pinned only on swap.
-    *
-    * `async = true` moves the corpus-scale rebuild OFF the batch path
-    * (the 100 TB availability stance — inline, a rebuild stalls
-    * ingestion for the full train+encode; see SCALE.md). The retrain
-    * signal SUBMITS a build of generation N+1 to a daemon thread over a
-    * file-list snapshot of the vector log (taken in the stream thread —
-    * the single writer — so it cannot race an append) while batches
-    * keep appending to generation N; each build-window batch also
-    * parks its raw arrivals under `gen-(N+1)/pending-vectors`. The
-    * first batch after the build finishes runs the SWAP, still in the
-    * stream thread: encode the staged build-window arrivals on the new
-    * quantizer, append to the new codes, write `COMMITTED` (the atomic
-    * swap point, covering the catch-up), re-pin, delete staging. Swap
-    * cost is O(build-window arrivals) + one scan of the COMPACT code
-    * table for the new baseline — never the raw corpus. The catch-up
-    * encode anti-joins staging against the built snapshot's codes, so
-    * a vec_id re-sent during the build window is encoded once —
-    * async ≡ inline, which dedups the full log. Crash at any point: an
-    * uncommitted gen dir (staging included) is invisible to readers
-    * and reaped at the next pipeline construction, by the next
-    * submission, or — for a surfaced build failure — in the failure
-    * branch itself, so an orphan never outlives the next observation
-    * even if drift subsides. A build failure is surfaced through
-    * `onBuildError` on the next batch (default rethrows; an overriding
-    * hook may log and return, after which the drift signal re-submits —
-    * self-healing). `rebuildGate` runs in the builder thread before
-    * any read: a test hook to hold the build window open
-    * deterministically.
     */
   def int8RebuildingPipeline(spark: SparkSession, root: String,
       sinkDir: String,
       nCentroids: Int = 16, lloydIters: Int = 2, trainN: Int = 4096,
       seedPlanes: Int = 6, dim: Int = 64, retrainRatio: Double = 0.9,
-      onBatch: (Long, Row) => Unit = (_, _) => (),
       onRebuild: (Long, Long) => Unit = (_, _) => (),
       async: Boolean = false,
       rebuildGate: () => Unit = () => (),
       onBuildError: (Long, Throwable) => Unit = (_, e) => throw e)
-      : (DataFrame, Long) => Unit = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    // Construction-time gate: the store's persisted shape must match
-    // this pipeline's parameters — a mismatched `dim`/`nCentroids`
-    // reconstruction would mis-encode every append and train wrongly
-    // shaped future generations.
-    StoreManifest.check(spark, root, int8StoreEntries(dim, nCentroids),
-      "int8 store")
-    // Generation state, pinned ONCE at pipeline construction (and again
-    // only on swap): the stored index is scanned exactly once for the
-    // baseline fit, appends stay O(batch), and a restarted driver
-    // re-constructs the pipeline and re-pins from the committed store —
-    // no in-memory state to lose.
-    var gen = latestGen(spark, root)
-    var grid = pinLocal(spark.read.parquet(s"${genDir(root, gen)}/grid"))
-    var cents = pinLocal(spark.read.parquet(s"${genDir(root, gen)}/centroids"))
-    var baseline = Seq(Similarity.indexedFit(
-        spark.read.parquet(s"${genDir(root, gen)}/codes"), grid, cents)
-      .head().getDouble(0)).toDF("fit_indexed")
-    // A staging dir on the LATEST (committed) generation is a crash
-    // between the swap's commit and its staging delete — the rows were
-    // already folded into the codes before the commit; reap it. And an
-    // UNCOMMITTED generation above the committed frontier is a build
-    // that died before its commit point — single-writer, so nothing is
-    // in flight at construction; reap it too (it holds a partial
-    // artifact plus a staging dir, and if drift has subsided no future
-    // submission would ever overwrite it).
-    deleteQuiet(spark, stagingDir(root, gen))
-    GenStore.dropUncommittedAbove(spark, root, gen)
-    // Off-path build state. `built`/`failed` cross the builder→stream
-    // thread boundary; `buildingGen` is touched by the stream thread
-    // only (-1 = no build in flight). `failed` carries (batchId,
-    // targetGen, error) so the surfacing branch can reap the orphan.
-    val built = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val failed = new java.util.concurrent.atomic
-      .AtomicReference[(Long, Long, Throwable)](null)
-    var buildingGen = -1L
-    (batch: DataFrame, batchId: Long) => {
-      val n = batch.count()
-      if (n > 0) {
-        if (async) {
-          // Surface a failed build before anything else: reap the
-          // orphan target dir eagerly (if drift has subsided it would
-          // otherwise persist indefinitely), then clear `buildingGen`
-          // to re-arm submission for the still-firing drift signal.
-          val f = failed.getAndSet(null)
-          if (f != null) {
-            deleteQuiet(spark, genDir(root, f._2))
-            buildingGen = -1L
-            onBuildError(f._1, f._3)
-          }
-          // SWAP: a build finished since the last batch. Encode the
-          // staged build-window arrivals on the new quantizer, commit
-          // (the atomic point — covers the catch-up), re-pin from the
-          // committed store, reap staging. Runs before this batch is
-          // processed, so the batch lands on the new generation.
-          val g2 = built.get()
-          if (g2 >= 0) {
-            val sd = stagingDir(root, g2)
-            val newGrid =
-              pinLocal(spark.read.parquet(s"${genDir(root, g2)}/grid"))
-            val newCents =
-              pinLocal(spark.read.parquet(s"${genDir(root, g2)}/centroids"))
-            // Catch-up = staged rows the SNAPSHOT didn't already cover:
-            // a vec_id re-sent during the build window is in both the
-            // frozen snapshot (its first arrival) and staging (its
-            // replay) — without the anti-join it would be encoded twice
-            // in gen N+1, where the inline rebuild (which dedups the
-            // full log) encodes it once. One anti-join against the
-            // compact built code table keeps async ≡ inline.
-            if (GenStore.fs(spark, sd).exists(new Path(sd)))
-              writeCellPartitioned(Similarity.int8Encode(
-                  spark.read.parquet(sd).dropDuplicates("vec_id")
-                    .join(spark.read.parquet(s"${genDir(root, g2)}/codes")
-                        .select(col("neighbor_id").as("vec_id")),
-                      Seq("vec_id"), "left_anti"),
-                  newGrid, newCents),
-                "cid", "pcid", s"${genDir(root, g2)}/codes", "append")
-            commitGen(spark, root, g2)
-            deleteQuiet(spark, sd)
-            gen = g2; grid = newGrid; cents = newCents
-            baseline = Seq(Similarity.indexedFit(
-                spark.read.parquet(s"${genDir(root, gen)}/codes"), grid, cents)
-              .head().getDouble(0)).toDF("fit_indexed")
-            built.set(-1L); buildingGen = -1L
-            onRebuild(batchId, gen)
-          }
-        }
-        val arrivals = batch.select(col("vec_id"), col("embedding"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          arrivals.write.mode("append").parquet(s"$root/vectors")
-          // An in-flight build's snapshot is frozen — park this batch's
-          // raw arrivals for the swap's catch-up encode.
-          if (async && buildingGen >= 0)
-            arrivals.write.mode("append")
-              .parquet(stagingDir(root, buildingGen))
-          val encoded = Similarity.int8Encode(arrivals, grid, cents)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            writeCellPartitioned(encoded, "cid", "pcid",
-              s"${genDir(root, gen)}/codes", "append")
-            val d = Similarity.indexDriftFromCodes(encoded, grid, cents,
-              baseline, retrainRatio).head()
-            val row = (batchId, n, d.getAs[Double]("fit_new"),
-              d.getAs[Double]("drift"), d.getAs[Long]("retrain"), gen)
-            onBatch(batchId, Row(row._1, row._2, row._3, row._4, row._5, row._6))
-            Seq(row).toDF("batch_id", "n_rows", "fit_new", "drift",
-              "retrain", "gen").write.mode("append").parquet(sinkDir)
-            if (row._5 == 1L && !async) {
-              // INLINE REBUILD: full vector log, deduped (replay
-              // insurance), trained and encoded into generation N+1;
-              // commit, then swap the pins — READ BACK from the
-              // committed store, not from the training plans
-              // (re-executing those would run training twice and rest
-              // committed-codes/pinned-quantizer consistency on plan
-              // determinism; pqRebuildingPipeline's pinHist is the same
-              // posture). The next batch appends to gen N+1 and
-              // measures against the retrained baseline.
-              val vecs = spark.read.parquet(s"$root/vectors")
-                .dropDuplicates("vec_id")
-              writeInt8Gen(spark, root, gen + 1, vecs,
-                Similarity.int8Stats(vecs, dim),
-                Similarity.trainCentroids(vecs, nCentroids,
-                  lloydIters, trainN, seedPlanes, dim,
-                  artifactKey = Some(Seq(root, gen + 1))))
-              gen += 1
-              grid = pinLocal(spark.read.parquet(s"${genDir(root, gen)}/grid"))
-              cents = pinLocal(
-                spark.read.parquet(s"${genDir(root, gen)}/centroids"))
-              baseline = Seq(Similarity.indexedFit(
-                  spark.read.parquet(s"${genDir(root, gen)}/codes"), grid, cents)
-                .head().getDouble(0)).toDF("fit_indexed")
-              onRebuild(batchId, gen)
-            } else if (row._5 == 1L && buildingGen < 0) {
-              // SUBMIT the off-path build: snapshot the vector log's
-              // file list HERE (single-writer thread — no append can
-              // race the listing), clear any crash orphan of the target
-              // generation (stale staging included), hand the frozen
-              // snapshot to a daemon builder. Batches keep landing on
-              // gen N until the build finishes.
-              buildingGen = gen + 1
-              val target = buildingGen
-              deleteQuiet(spark, genDir(root, target))
-              val snapshot = vectorSnapshot(spark, root)
-              val t = new Thread(() => {
-                try {
-                  rebuildGate()
-                  val vecs = spark.read.parquet(snapshot: _*)
-                    .dropDuplicates("vec_id")
-                  writeInt8Gen(spark, root, target, vecs,
-                    Similarity.int8Stats(vecs, dim),
-                    Similarity.trainCentroids(vecs, nCentroids,
-                      lloydIters, trainN, seedPlanes, dim,
-                      artifactKey = Some(Seq(root, target))),
-                    commit = false)
-                  built.set(target)
-                } catch {
-                  case e: Throwable => failed.set((batchId, target, e))
-                }
-              }, s"graft-int8-rebuild-gen-$target")
-              t.setDaemon(true)
-              t.start()
-            }
-          } finally encoded.unpersist(blocking = false)
-        } finally arrivals.unpersist(blocking = false)
-      }
-    }
-  }
+      : (DataFrame, Long) => Unit =
+    rebuildingPipeline(root, sinkDir,
+      int8Tier(spark, dim, nCentroids, retrainRatio, lloydIters, trainN,
+        seedPlanes),
+      onRebuild, async, rebuildGate, onBuildError)
 
   /** Streamed SERVING leg for the int8 generation store — the read path
     * that completes the tier's lifecycle (init → append → drift-driven
@@ -903,26 +830,24 @@ object IndexMaintenance {
       nCentroids: Int = 16, dim: Int = 64,
       onResult: (Long, Long, DataFrame) => Unit,
       filter: Option[DataFrame] = None): (DataFrame, Long) => Unit = {
-    StoreManifest.check(spark, root, int8StoreEntries(dim, nCentroids),
-      "int8 store")
+    val tier = int8Tier(spark, dim, nCentroids)
+    StoreManifest.check(spark, root, tier.storeEntries, "int8 store")
     var gen = -1L
-    var grid: DataFrame = null
-    var cents: DataFrame = null
+    var q: Quant = null
     (batch: DataFrame, batchId: Long) => {
       val g = latestGen(spark, root)
       if (g != gen) { // first batch, or a rebuild swapped generations
-        grid = pinLocal(spark.read.parquet(s"${genDir(root, g)}/grid"))
-        cents = pinLocal(spark.read.parquet(s"${genDir(root, g)}/centroids"))
+        q = tier.pinQuant(root, g)
         gen = g
       }
       // Cell-pruned scan: the batch's probed cells (a ≤ |batch|·nProbe
       // driver pin, the same ranking the query tail computes) filter
       // the partitioned code table BEFORE the scan — per batch the
       // files read are the probed cells', O(n·nProbe/nCentroids) rows,
-      // not the artifact (ServingProbe's round-13 diagnosis).
+      // not the artifact (the round-13 serving diagnosis).
       val codes = pruneCells(
-        spark.read.parquet(s"${genDir(root, gen)}/codes"), "pcid",
-        Similarity.probedCells(batch, cents, nProbe), nCentroids)
+        spark.read.parquet(s"${GenStore.dir(root, gen)}/codes"), "pcid",
+        Similarity.probedCells(batch, q("centroids"), nProbe), nCentroids)
       // The float log may hold replayed (duplicate) vec_ids; the re-rank
       // join must see each neighbor once.
       val corpus = spark.read.parquet(s"$root/vectors").dropDuplicates("vec_id")
@@ -943,8 +868,8 @@ object IndexMaintenance {
         case None => (codes, corpus)
       }
       onResult(batchId, gen,
-        Similarity.queryInt8Index(batch, fCodes, grid, cents, fCorpus,
-          k, rerankDepth, nProbe))
+        Similarity.queryInt8Index(batch, fCodes, q("grid"), q("centroids"),
+          fCorpus, k, rerankDepth, nProbe))
     }
   }
 
@@ -964,25 +889,23 @@ object IndexMaintenance {
       nCentroids: Int = 16, m: Int = 4, ksub: Int = 16, dim: Int = 64,
       onResult: (Long, Long, DataFrame) => Unit,
       filter: Option[DataFrame] = None): (DataFrame, Long) => Unit = {
-    StoreManifest.check(spark, root,
-      ivfPqStoreEntries(dim, m, ksub, nCentroids), "ivfpq store")
+    val tier = ivfPqTier(spark, dim, m, ksub, nCentroids)
+    StoreManifest.check(spark, root, tier.storeEntries, "ivfpq store")
     var gen = -1L
-    var cents: DataFrame = null
-    var cb: DataFrame = null
+    var q: Quant = null
     (batch: DataFrame, batchId: Long) => {
       val g = latestGen(spark, root)
       if (g != gen) {
-        cents = pinLocal(spark.read.parquet(s"${genDir(root, g)}/centroids"))
-        cb = pinLocal(spark.read.parquet(s"${genDir(root, g)}/codebooks"))
+        q = tier.pinQuant(root, g)
         gen = g
       }
       // Same cell-pruned scan as the int8 serve — this tier is where
-      // ServingProbe measured the unpruned n·m-row scan dominating
-      // (20 s/batch at n=500k); the `pcell=` filter makes the scan
-      // itself O(n·m·nProbe/nCentroids).
+      // the unpruned n·m-row scan was measured dominating (20 s/batch
+      // at n=500k); the `pcell=` filter makes the scan itself
+      // O(n·m·nProbe/nCentroids).
       val codes = pruneCells(
-        spark.read.parquet(s"${genDir(root, gen)}/codes"), "pcell",
-        Similarity.probedCells(batch, cents, nProbe), nCentroids)
+        spark.read.parquet(s"${GenStore.dir(root, gen)}/codes"), "pcell",
+        Similarity.probedCells(batch, q("centroids"), nProbe), nCentroids)
       val corpus = spark.read.parquet(s"$root/vectors").dropDuplicates("vec_id")
       // PRE-filtered serve — the int8 leg's q_sim18 rationale verbatim:
       // allowed ids drop non-matching candidates before the ADC rank.
@@ -994,418 +917,76 @@ object IndexMaintenance {
         case None => (codes, corpus)
       }
       onResult(batchId, gen,
-        Similarity.queryIvfPqIndex(batch, fCodes, cents, cb, fCorpus,
-          k, rerankDepth, nProbe, m, dim))
+        Similarity.queryIvfPqIndex(batch, fCodes, q("centroids"),
+          q("codebooks"), fCorpus, k, rerankDepth, nProbe, m, dim))
     }
   }
 
-  /** Create a PQ generation store: persist the MANIFEST, seed the
-    * vector log, train generation-0 codebooks, encode, commit. Refuses
-    * a root that already holds a committed generation ([[guardInit]]).
+  /** Create a PQ generation store (codebooks + flat codes) —
+    * [[initStore]]. Refuses a root that already holds a committed
+    * generation.
     */
   def initPqStore(spark: SparkSession, root: String, corpus: DataFrame,
       m: Int = 4, ksub: Int = 16, iters: Int = 2, trainN: Int = 1024,
-      dim: Int = 64): Unit = {
-    guardInit(spark, root, pqStoreEntries(dim, m, ksub), "pq store")
-    corpus.select("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$root/vectors")
-    val vecs = spark.read.parquet(s"$root/vectors")
-    writePqGen(spark, root, 0L, vecs,
-      Similarity.trainPqCodebooks(vecs, m, ksub, iters, trainN, dim,
-        artifactKey = Some(Seq(root, 0L))), m, dim)
-  }
+      dim: Int = 64): Unit =
+    initStore(pqTier(spark, dim, m, ksub, iters = iters, trainN = trainN),
+      root, corpus)
 
-  /** [[writeInt8Gen]]'s shape for PQ: codes are encoded on the WRITTEN
-    * codebooks read back from parquet — training executes once, codes
-    * ≡ committed codebooks by construction.
-    */
-  private def writePqGen(spark: SparkSession, root: String, gen: Long,
-      vecs: DataFrame, codebooks: DataFrame, m: Int, dim: Int,
-      commit: Boolean = true): Unit = {
-    val d = genDir(root, gen)
-    codebooks.write.mode("overwrite").parquet(s"$d/codebooks")
-    Similarity.pqEncode(vecs, spark.read.parquet(s"$d/codebooks"), m, dim)
-      .select("vec_id", "sub", "code")
-      .write.mode("overwrite").parquet(s"$d/codes")
-    if (commit) commitGen(spark, root, gen)
-  }
-
-  /** [[pqAppendPipeline]] WITH the retrain leg — [[int8RebuildingPipeline]]'s
-    * shape for the PQ tier: codebooks + code-usage histogram are the
-    * pinned generation state; a tripped tv_max rebuilds codebooks and
-    * codes from the deduped vector log into generation N+1 and re-pins
-    * the histogram, so post-rebuild batches of the (now indexed)
-    * steady-state mix measure quiet. `async`/`rebuildGate`/
-    * `onBuildError` are [[int8RebuildingPipeline]]'s off-path protocol:
-    * snapshot → daemon build → staged build-window catch-up → commit →
-    * re-pin, with the swap paying O(window) + one scan of the compact
-    * code table, never the raw corpus.
+  /** [[pqAppendPipeline]] WITH the retrain leg, over an [[initPqStore]]
+    * root: codebooks + code-usage histogram are the pinned generation
+    * state; a tripped tv_max rebuilds codebooks and codes from the
+    * deduped vector log into generation N+1 and re-pins the histogram,
+    * so post-rebuild batches of the (now indexed) steady-state mix
+    * measure quiet. Inline or off-path as in the object header.
     */
   def pqRebuildingPipeline(spark: SparkSession, root: String,
       sinkDir: String,
       m: Int = 4, ksub: Int = 16, iters: Int = 2, trainN: Int = 1024,
       dim: Int = 64, maxTv: Double = 0.2,
-      onBatch: (Long, Row) => Unit = (_, _) => (),
       onRebuild: (Long, Long) => Unit = (_, _) => (),
       async: Boolean = false,
       rebuildGate: () => Unit = () => (),
       onBuildError: (Long, Throwable) => Unit = (_, e) => throw e)
-      : (DataFrame, Long) => Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // Construction-time gate — int8RebuildingPipeline's rationale for
-    // the PQ shape (`dim`/`m`/`ksub`).
-    StoreManifest.check(spark, root, pqStoreEntries(dim, m, ksub),
-      "pq store")
-    def pinHist(g: Long): (DataFrame, DataFrame, DataFrame) = {
-      val codes = spark.read.parquet(s"${genDir(root, g)}/codes")
-      // m·ksub + 1 rows — the bounded histogram pin
-      // ([[pqAppendPipeline]]'s refreshByPath rationale).
-      (pinLocal(spark.read.parquet(s"${genDir(root, g)}/codebooks")),
-        pinLocal(codes.groupBy("sub", "code")
-          .agg(count(lit(1)).as("n_idx"))),
-        Seq(codes.agg(countDistinct("vec_id").cast("double"))
-          .head().getDouble(0)).toDF("t_idx"))
-    }
-    // Generation state pinned once at construction —
-    // [[int8RebuildingPipeline]]'s restart-safe posture.
-    var gen = latestGen(spark, root)
-    var (codebooks, hIdx, tIdx) = pinHist(gen)
-    // Crash reaping at construction — int8RebuildingPipeline's
-    // rationale: a committed-gen staging dir is a crash between commit
-    // and staging delete; an uncommitted gen above the frontier is a
-    // build that died before its commit point.
-    deleteQuiet(spark, stagingDir(root, gen))
-    GenStore.dropUncommittedAbove(spark, root, gen)
-    val built = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val failed = new java.util.concurrent.atomic
-      .AtomicReference[(Long, Long, Throwable)](null)
-    var buildingGen = -1L
-    (batch: DataFrame, batchId: Long) => {
-      val n = batch.count()
-      if (n > 0) {
-        if (async) {
-          val f = failed.getAndSet(null)
-          if (f != null) {
-            deleteQuiet(spark, genDir(root, f._2))
-            buildingGen = -1L
-            onBuildError(f._1, f._3)
-          }
-          // SWAP — [[int8RebuildingPipeline]]'s protocol: staged
-          // catch-up encode on the new codebooks, commit, re-pin the
-          // histogram over the full (snapshot + catch-up) code table.
-          val g2 = built.get()
-          if (g2 >= 0) {
-            val sd = stagingDir(root, g2)
-            val newCb =
-              pinLocal(spark.read.parquet(s"${genDir(root, g2)}/codebooks"))
-            // Anti-join the staged catch-up against the built snapshot's
-            // codes — int8RebuildingPipeline's rationale: a vec_id
-            // re-sent during the build window must not be encoded twice
-            // in gen N+1 (async ≡ inline, which dedups the full log).
-            if (GenStore.fs(spark, sd).exists(new Path(sd)))
-              Similarity.pqEncode(
-                  spark.read.parquet(sd).dropDuplicates("vec_id")
-                    .join(spark.read
-                        .parquet(s"${genDir(root, g2)}/codes")
-                        .select("vec_id"),
-                      Seq("vec_id"), "left_anti"),
-                  newCb, m, dim)
-                .select("vec_id", "sub", "code")
-                .write.mode("append").parquet(s"${genDir(root, g2)}/codes")
-            commitGen(spark, root, g2)
-            deleteQuiet(spark, sd)
-            gen = g2
-            val swapped = pinHist(gen)
-            codebooks = swapped._1; hIdx = swapped._2; tIdx = swapped._3
-            built.set(-1L); buildingGen = -1L
-            onRebuild(batchId, gen)
-          }
-        }
-        val arrivals = batch.select(col("vec_id"), col("embedding"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          arrivals.write.mode("append").parquet(s"$root/vectors")
-          if (async && buildingGen >= 0)
-            arrivals.write.mode("append")
-              .parquet(stagingDir(root, buildingGen))
-          val encoded = Similarity.pqEncode(arrivals, codebooks, m, dim)
-            .select("vec_id", "sub", "code")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            encoded.write.mode("append").parquet(s"${genDir(root, gen)}/codes")
-            val d = Similarity.pqDriftFromCodes(encoded, hIdx, tIdx,
-              codebooks, maxTv).head()
-            val row = (batchId, n, d.getAs[Double]("tv_max"),
-              d.getAs[Long]("retrain"), gen)
-            onBatch(batchId, Row(row._1, row._2, row._3, row._4, row._5))
-            Seq(row).toDF("batch_id", "n_rows", "tv_max", "retrain", "gen")
-              .write.mode("append").parquet(sinkDir)
-            if (row._4 == 1L && !async) {
-              val vecs = spark.read.parquet(s"$root/vectors")
-                .dropDuplicates("vec_id")
-              writePqGen(spark, root, gen + 1, vecs,
-                Similarity.trainPqCodebooks(vecs, m, ksub, iters, trainN, dim,
-                  artifactKey = Some(Seq(root, gen + 1))),
-                m, dim)
-              gen += 1
-              val swapped = pinHist(gen)
-              codebooks = swapped._1; hIdx = swapped._2; tIdx = swapped._3
-              onRebuild(batchId, gen)
-            } else if (row._4 == 1L && buildingGen < 0) {
-              // SUBMIT — int8RebuildingPipeline's off-path protocol.
-              buildingGen = gen + 1
-              val target = buildingGen
-              deleteQuiet(spark, genDir(root, target))
-              val snapshot = vectorSnapshot(spark, root)
-              val t = new Thread(() => {
-                try {
-                  rebuildGate()
-                  val vecs = spark.read.parquet(snapshot: _*)
-                    .dropDuplicates("vec_id")
-                  writePqGen(spark, root, target, vecs,
-                    Similarity.trainPqCodebooks(vecs, m, ksub, iters,
-                      trainN, dim, artifactKey = Some(Seq(root, target))),
-                    m, dim, commit = false)
-                  built.set(target)
-                } catch {
-                  case e: Throwable => failed.set((batchId, target, e))
-                }
-              }, s"graft-pq-rebuild-gen-$target")
-              t.setDaemon(true)
-              t.start()
-            }
-          } finally encoded.unpersist(blocking = false)
-        } finally arrivals.unpersist(blocking = false)
-      }
-    }
-  }
+      : (DataFrame, Long) => Unit =
+    rebuildingPipeline(root, sinkDir,
+      pqTier(spark, dim, m, ksub, maxTv, iters, trainN),
+      onRebuild, async, rebuildGate, onBuildError)
 
   /** Create an IVF-PQ generation store — the q_sim10 serving tier's
-    * composite artifact under the [[GenStore]] protocol: persist the
-    * MANIFEST (`dim`/`m`/`ksub`/`nCentroids` — the shape every later
-    * pipeline construction is checked against), seed the vector log,
-    * train generation-0 coarse centroids AND PQ codebooks, assign +
-    * encode, commit. Refuses a root that already holds a committed
-    * generation ([[guardInit]]). One `trainN` drives both trainers —
-    * both sample by the same hash-top-N discipline.
+    * composite artifact (centroids + codebooks + cell-partitioned
+    * (vec_id, sub, code, cell) codes) — [[initStore]]. Refuses a root
+    * that already holds a committed generation.
     */
   def initIvfPqStore(spark: SparkSession, root: String, corpus: DataFrame,
       nCentroids: Int = 16, m: Int = 4, ksub: Int = 16,
       lloydIters: Int = 2, trainN: Int = 1024, seedPlanes: Int = 6,
-      dim: Int = 64): Unit = {
-    guardInit(spark, root, ivfPqStoreEntries(dim, m, ksub, nCentroids),
-      "ivf-pq store")
-    corpus.select("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$root/vectors")
-    val vecs = spark.read.parquet(s"$root/vectors")
-    writeIvfPqGen(spark, root, 0L, vecs,
-      Similarity.trainCentroids(vecs, nCentroids, lloydIters, trainN,
-        seedPlanes, dim, artifactKey = Some(Seq(root, 0L))),
-      Similarity.trainPqCodebooks(vecs, m, ksub, lloydIters, trainN, dim,
-        artifactKey = Some(Seq(root, 0L))),
-      m, dim)
-  }
+      dim: Int = 64): Unit =
+    initStore(ivfPqTier(spark, dim, m, ksub, nCentroids,
+      lloydIters = lloydIters, trainN = trainN, seedPlanes = seedPlanes),
+      root, corpus)
 
-  /** [[writeInt8Gen]]'s shape for the composite tier: centroids and
-    * codebooks are written first, the (vec_id, sub, code, cell) codes
-    * are produced on the WRITTEN quantizers read back from parquet —
-    * each training plan executes exactly once (its own write), and
-    * codes ≡ committed quantizers holds by construction. The cell join
-    * is inner on vec_id, so zero-norm vectors (which
-    * [[Similarity.ivfCellAssign]] drops) never enter the artifact —
-    * the same exclusion the append path applies.
-    */
-  private def writeIvfPqGen(spark: SparkSession, root: String, gen: Long,
-      vecs: DataFrame, cents: DataFrame, codebooks: DataFrame, m: Int,
-      dim: Int, commit: Boolean = true): Unit = {
-    val d = genDir(root, gen)
-    cents.write.mode("overwrite").parquet(s"$d/centroids")
-    codebooks.write.mode("overwrite").parquet(s"$d/codebooks")
-    writeCellPartitioned(
-      Similarity.pqEncode(vecs, spark.read.parquet(s"$d/codebooks"), m, dim)
-        .select("vec_id", "sub", "code")
-        .join(Similarity.ivfCellAssign(vecs,
-          spark.read.parquet(s"$d/centroids")), "vec_id"),
-      "cell", "pcell", s"$d/codes", "overwrite", compact = true)
-    if (commit) commitGen(spark, root, gen)
-  }
-
-  /** [[ivfPqAppendPipeline]] WITH the retrain leg — the serving tier's
-    * drift signal finally has its actuator ([[int8RebuildingPipeline]]'s
-    * protocol on the composite artifact): per batch, log the raw
-    * arrivals, assign coarse cells + PQ-encode on the CURRENT
-    * generation's pinned quantizer pair, append the (vec_id, sub, code,
-    * cell) rows, emit the (batch_id, n_rows, tv_cell, retrain, gen)
-    * drift row — and when tv_cell trips, rebuild generation N+1 from
-    * the deduped vector log (retrain centroids AND codebooks, re-assign
-    * + re-encode, commit) and re-pin quantizers + cell histogram, so
-    * post-rebuild batches of the now-indexed mix measure quiet.
-    *
-    * `async`/`rebuildGate`/`onBuildError` are the off-path protocol:
-    * the trip SUBMITS a daemon build over a frozen file-list snapshot
-    * while batches keep appending to gen N and parking raw arrivals in
-    * `gen-(N+1)/pending-vectors`; the first batch after the build
-    * finishes swaps — catch-up assign+encode of the staged window
-    * (anti-joined against the built snapshot's vec_ids, so a replayed
-    * vec_id encodes once: async ≡ inline, which dedups the full log),
-    * COMMITTED marker (the atomic point), re-pin, staging reaped. This
+  /** [[ivfPqAppendPipeline]] WITH the retrain leg, over an
+    * [[initIvfPqStore]] root — the serving tier's drift signal with its
+    * actuator: when tv_cell trips, rebuild generation N+1 from the
+    * deduped vector log (retrain centroids AND codebooks, re-assign +
+    * re-encode, commit) and re-pin quantizers + cell histogram, so
+    * post-rebuild batches of the now-indexed mix measure quiet. This
     * tier's rebuild is the most expensive of the three (two trainings +
-    * two corpus passes), which is exactly why it must be off-path at
-    * 100 TB: the swap pays O(build-window) + one scan of the compact
-    * code table, never the raw corpus.
+    * two corpus passes), which is exactly why it must be off-path
+    * (`async = true`, the object header's protocol) at 100 TB.
     */
   def ivfPqRebuildingPipeline(spark: SparkSession, root: String,
       sinkDir: String,
       nCentroids: Int = 16, m: Int = 4, ksub: Int = 16,
       lloydIters: Int = 2, trainN: Int = 1024, seedPlanes: Int = 6,
       dim: Int = 64, maxTv: Double = 0.2,
-      onBatch: (Long, Row) => Unit = (_, _) => (),
       onRebuild: (Long, Long) => Unit = (_, _) => (),
       async: Boolean = false,
       rebuildGate: () => Unit = () => (),
       onBuildError: (Long, Throwable) => Unit = (_, e) => throw e)
-      : (DataFrame, Long) => Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    StoreManifest.check(spark, root,
-      ivfPqStoreEntries(dim, m, ksub, nCentroids), "ivf-pq store")
-    // Generation state: BOTH quantizer tables plus the cell-usage
-    // histogram, pinned local at construction and re-pinned only on
-    // swap ([[int8RebuildingPipeline]]'s restart-safe posture; the
-    // histogram is ≤ nCentroids + 1 rows, the refreshByPath rationale).
-    def pinState(g: Long): (DataFrame, DataFrame, DataFrame, Double) = {
-      val codes = spark.read.parquet(s"${genDir(root, g)}/codes")
-      (pinLocal(spark.read.parquet(s"${genDir(root, g)}/centroids")),
-        pinLocal(spark.read.parquet(s"${genDir(root, g)}/codebooks")),
-        pinLocal(codes.select("vec_id", "cell").distinct()
-          .groupBy("cell").agg(count(lit(1)).as("n_idx"))),
-        codes.agg(countDistinct("vec_id").cast("double"))
-          .head().getDouble(0))
-    }
-    var gen = latestGen(spark, root)
-    var (cents, codebooks, hIdx, tIdx) = pinState(gen)
-    deleteQuiet(spark, stagingDir(root, gen))
-    GenStore.dropUncommittedAbove(spark, root, gen)
-    val built = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val failed = new java.util.concurrent.atomic
-      .AtomicReference[(Long, Long, Throwable)](null)
-    var buildingGen = -1L
-    // The batch's composite encode — shared by the append path and the
-    // swap's catch-up: PQ codes joined with the coarse assignment, both
-    // on the GIVEN (pinned) quantizers.
-    def assignEncode(rows: DataFrame, cn: DataFrame,
-        cb: DataFrame): DataFrame =
-      Similarity.pqEncode(rows, cb, m, dim)
-        .select("vec_id", "sub", "code")
-        .join(Similarity.ivfCellAssign(rows, cn), "vec_id")
-    (batch: DataFrame, batchId: Long) => {
-      val n = batch.count()
-      if (n > 0) {
-        if (async) {
-          val f = failed.getAndSet(null)
-          if (f != null) {
-            deleteQuiet(spark, genDir(root, f._2))
-            buildingGen = -1L
-            onBuildError(f._1, f._3)
-          }
-          // SWAP — the off-path protocol's commit point on this tier.
-          val g2 = built.get()
-          if (g2 >= 0) {
-            val sd = stagingDir(root, g2)
-            val newCents =
-              pinLocal(spark.read.parquet(s"${genDir(root, g2)}/centroids"))
-            val newCb =
-              pinLocal(spark.read.parquet(s"${genDir(root, g2)}/codebooks"))
-            if (GenStore.fs(spark, sd).exists(new Path(sd))) {
-              // Anti-join against the built snapshot's vec_ids
-              // ([[int8RebuildingPipeline]]'s rationale): a vec_id
-              // re-sent during the build window encodes exactly once.
-              val fresh = spark.read.parquet(sd).dropDuplicates("vec_id")
-                .join(spark.read.parquet(s"${genDir(root, g2)}/codes")
-                    .select("vec_id"),
-                  Seq("vec_id"), "left_anti")
-              writeCellPartitioned(assignEncode(fresh, newCents, newCb),
-                "cell", "pcell", s"${genDir(root, g2)}/codes", "append")
-            }
-            commitGen(spark, root, g2)
-            deleteQuiet(spark, sd)
-            gen = g2
-            val swapped = pinState(gen)
-            cents = swapped._1; codebooks = swapped._2
-            hIdx = swapped._3; tIdx = swapped._4
-            built.set(-1L); buildingGen = -1L
-            onRebuild(batchId, gen)
-          }
-        }
-        val arrivals = batch.select(col("vec_id"), col("embedding"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          arrivals.write.mode("append").parquet(s"$root/vectors")
-          if (async && buildingGen >= 0)
-            arrivals.write.mode("append")
-              .parquet(stagingDir(root, buildingGen))
-          val cells = Similarity.ivfCellAssign(arrivals, cents)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            writeCellPartitioned(
-              Similarity.pqEncode(arrivals, codebooks, m, dim)
-                .select("vec_id", "sub", "code")
-                .join(cells, "vec_id"),
-              "cell", "pcell", s"${genDir(root, gen)}/codes", "append")
-            val tv = cellTv(cells, hIdx, tIdx)
-            val row = (batchId, n, tv, if (tv > maxTv) 1L else 0L, gen)
-            onBatch(batchId, Row(row._1, row._2, row._3, row._4, row._5))
-            Seq(row).toDF("batch_id", "n_rows", "tv_cell", "retrain", "gen")
-              .write.mode("append").parquet(sinkDir)
-            if (row._4 == 1L && !async) {
-              // INLINE REBUILD: both trainings over the deduped log,
-              // re-assign + re-encode into gen N+1, commit, re-pin —
-              // training plans execute once via [[writeIvfPqGen]]'s
-              // written-quantizer read-back.
-              val vecs = spark.read.parquet(s"$root/vectors")
-                .dropDuplicates("vec_id")
-              writeIvfPqGen(spark, root, gen + 1, vecs,
-                Similarity.trainCentroids(vecs, nCentroids, lloydIters,
-                  trainN, seedPlanes, dim,
-                  artifactKey = Some(Seq(root, gen + 1))),
-                Similarity.trainPqCodebooks(vecs, m, ksub, lloydIters,
-                  trainN, dim, artifactKey = Some(Seq(root, gen + 1))),
-                m, dim)
-              gen += 1
-              val swapped = pinState(gen)
-              cents = swapped._1; codebooks = swapped._2
-              hIdx = swapped._3; tIdx = swapped._4
-              onRebuild(batchId, gen)
-            } else if (row._4 == 1L && buildingGen < 0) {
-              // SUBMIT — the off-path protocol, verbatim.
-              buildingGen = gen + 1
-              val target = buildingGen
-              deleteQuiet(spark, genDir(root, target))
-              val snapshot = vectorSnapshot(spark, root)
-              val t = new Thread(() => {
-                try {
-                  rebuildGate()
-                  val vecs = spark.read.parquet(snapshot: _*)
-                    .dropDuplicates("vec_id")
-                  writeIvfPqGen(spark, root, target, vecs,
-                    Similarity.trainCentroids(vecs, nCentroids, lloydIters,
-                      trainN, seedPlanes, dim,
-                      artifactKey = Some(Seq(root, target))),
-                    Similarity.trainPqCodebooks(vecs, m, ksub, lloydIters,
-                      trainN, dim, artifactKey = Some(Seq(root, target))),
-                    m, dim, commit = false)
-                  built.set(target)
-                } catch {
-                  case e: Throwable => failed.set((batchId, target, e))
-                }
-              }, s"graft-ivfpq-rebuild-gen-$target")
-              t.setDaemon(true)
-              t.start()
-            }
-          } finally cells.unpersist(blocking = false)
-        } finally arrivals.unpersist(blocking = false)
-      }
-    }
-  }
+      : (DataFrame, Long) => Unit =
+    rebuildingPipeline(root, sinkDir,
+      ivfPqTier(spark, dim, m, ksub, nCentroids, maxTv, lloydIters, trainN,
+        seedPlanes),
+      onRebuild, async, rebuildGate, onBuildError)
 }

@@ -311,8 +311,9 @@ object StreamingDedup {
     * `Int.MaxValue` disables.
     *
     * `asyncCompact = true` moves the O(index) rewrite OFF the batch
-    * path — [[IndexMaintenance]]'s off-path rebuild protocol applied to
-    * the compaction (the 100 TB availability stance: inline, the
+    * path — the off-path build of [[GenStore.OffPathBuild]], shared
+    * with [[IndexMaintenance]]'s rebuilding pipelines, applied to the
+    * compaction (the 100 TB availability stance: inline, the
     * rewrite stalls ingestion for the full index copy; see SCALE.md).
     * The growth trigger SUBMITS a clustered copy of a frozen file-list
     * snapshot of generation N to a daemon thread (the listing taken in
@@ -419,15 +420,10 @@ object StreamingDedup {
     // (a restarted pipeline re-learns it at the cost of at most one
     // early compaction).
     var lastPostCompact = -1L
-    // Off-path compaction state — [[IndexMaintenance]]'s protocol:
-    // `built`/`failed` cross the copier→stream thread boundary;
-    // `compactingGen` and the snapshot file sets are stream-thread-only
-    // (-1 = no copy in flight). `failed` carries (batchId, targetGen,
-    // error) so the surfacing branch can reap the orphan.
-    val built = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val failed = new java.util.concurrent.atomic
-      .AtomicReference[(Long, Long, Throwable)](null)
-    var compactingGen = -1L
+    // Off-path compaction ([[GenStore.OffPathBuild]]); the snapshot
+    // file sets are stream-thread-only.
+    val copies = new GenStore.OffPathBuild(spark, indexDir,
+      "graft-index-compact", compactGate, onCompactError)
     var snapBands: Set[String] = Set.empty
     var snapToks: Set[String] = Set.empty
     (batch: DataFrame, batchId: Long) => {
@@ -438,48 +434,34 @@ object StreamingDedup {
       val n = arrivals0.count()
       if (n == 0) arrivals0.unpersist(blocking = false)
       else {
-        if (asyncCompact) {
-          // Surface a failed copy before anything else: reap the orphan
-          // target dir, clear the in-flight flag so the still-standing
-          // growth trigger re-submits.
-          val f = failed.getAndSet(null)
-          if (f != null) {
-            GenStore.deleteQuiet(spark, GenStore.dir(indexDir, f._2))
-            compactingGen = -1L
-            onCompactError(f._1, f._3)
-          }
-          // SWAP: the copy finished since the last batch. Carry the
-          // listing delta — every file appended to the old generation
-          // during the copy window — into the new generation AS-IS
-          // (pure file movement; clustering the window's few small
-          // files can wait for the next compaction), then commit, drop
-          // the old generation, and re-learn the post-compaction floor.
-          // The delta comes from the CACHE (kept exact through the copy
-          // window), not a directory walk.
-          val g2 = built.get()
-          if (g2 >= 0) {
-            val from = GenStore.dir(indexDir, g2 - 1)
-            val to = GenStore.dir(indexDir, g2)
-            if (cacheGen != g2 - 1) refreshCache(g2 - 1)
-            val deltaBands = bandFiles.filterNot(snapBands.contains)
-            val deltaToks = toksFiles.filterNot(snapToks.contains)
-            if (deltaBands.nonEmpty)
-              readFiles(spark, bandsSchema, s"$from/bands", deltaBands)
-                .write.partitionBy("band", "pslot").mode("append")
-                .parquet(s"$to/bands")
-            if (deltaToks.nonEmpty)
-              readFiles(spark, toksSchema, s"$from/toks", deltaToks)
-                .write.partitionBy("tslot").mode("append")
-                .parquet(s"$to/toks")
-            GenStore.commit(spark, indexDir, g2)
-            GenStore.dropBelow(spark, indexDir, g2)
-            refreshCache(g2)
-            lastPostCompact = (bandFiles.size + toksFiles.size).toLong
-            built.set(-1L); compactingGen = -1L
-            snapBands = Set.empty; snapToks = Set.empty
-            onCompact(batchId, g2)
-          }
-        }
+        // SWAP: the copy finished since the last batch. Carry the
+        // listing delta — every file appended to the old generation
+        // during the copy window — into the new generation AS-IS (pure
+        // file movement; clustering the window's few small files can
+        // wait for the next compaction), then commit, drop the old
+        // generation, and re-learn the post-compaction floor. The delta
+        // comes from the CACHE (kept exact through the copy window), not
+        // a directory walk.
+        if (asyncCompact) copies.swap { g2 =>
+          val from = GenStore.dir(indexDir, g2 - 1)
+          val to = GenStore.dir(indexDir, g2)
+          if (cacheGen != g2 - 1) refreshCache(g2 - 1)
+          val deltaBands = bandFiles.filterNot(snapBands.contains)
+          val deltaToks = toksFiles.filterNot(snapToks.contains)
+          if (deltaBands.nonEmpty)
+            readFiles(spark, bandsSchema, s"$from/bands", deltaBands)
+              .write.partitionBy("band", "pslot").mode("append")
+              .parquet(s"$to/bands")
+          if (deltaToks.nonEmpty)
+            readFiles(spark, toksSchema, s"$from/toks", deltaToks)
+              .write.partitionBy("tslot").mode("append")
+              .parquet(s"$to/toks")
+          GenStore.commit(spark, indexDir, g2)
+          GenStore.dropBelow(spark, indexDir, g2)
+          refreshCache(g2)
+          lastPostCompact = (bandFiles.size + toksFiles.size).toLong
+          snapBands = Set.empty; snapToks = Set.empty
+        }.foreach(onCompact(batchId, _))
         // Resolve the generation at batch start, and compact FIRST if
         // the growth bound is crossed — so this batch's reads and
         // appends all target the surviving generation (inline mode; in
@@ -495,31 +477,21 @@ object StreamingDedup {
             gen = compactIndex(spark, indexDir, gen)
             refreshCache(gen)
             lastPostCompact = (bandFiles.size + toksFiles.size).toLong
-          } else if (compactingGen < 0) {
+          } else if (copies.target.isEmpty) {
             // SUBMIT the off-path copy: snapshot the file lists HERE
-            // (single-writer thread — no append can race the cache),
-            // clear any crash orphan of the target, hand the frozen
-            // lists to a daemon copier. The snapshot IS the cache.
-            compactingGen = gen + 1
-            val target = compactingGen
-            GenStore.deleteQuiet(spark, GenStore.dir(indexDir, target))
+            // (single-writer thread — no append can race the cache) and
+            // hand the frozen lists to the copier. The snapshot IS the
+            // cache.
+            val target = gen + 1
             val fromDir = GenStore.dir(indexDir, gen)
             val bandSnap = bandFiles
             val tokSnap = toksFiles
             snapBands = bandSnap.toSet
             snapToks = tokSnap.toSet
-            val t = new Thread(() => {
-              try {
-                compactGate()
-                writeCompacted(spark, indexDir, target, bandSnap, tokSnap,
-                  fromDir)
-                built.set(target)
-              } catch {
-                case e: Throwable => failed.set((batchId, target, e))
-              }
-            }, s"graft-index-compact-gen-$target")
-            t.setDaemon(true)
-            t.start()
+            copies.submit(batchId, target) { () =>
+              writeCompacted(spark, indexDir, target, bandSnap, tokSnap,
+                fromDir)
+            }
           }
         }
         // Fold closed survivor partitions into a sealed segment every

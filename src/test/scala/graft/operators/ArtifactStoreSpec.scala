@@ -26,6 +26,39 @@ class ArtifactStoreSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[(String, Long)] =
     df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
+  test("invalidated entries stay evictable: their bytes and files are reclaimed") {
+    val (oldCap, oldGrace) = (sys.props.get(capProp), sys.props.get(graceProp))
+    try {
+      System.setProperty(capProp, "1") // 1 byte: always over budget
+      System.setProperty(graceProp, "0")
+      def evicted = Similarity.memoStats.get("art:evicted").map(_._2).getOrElse(0L)
+      val x = make("inv-x")
+      val dirX = dirOf(x)
+      assert(dirX.exists)
+      // Invalidation makes x unreachable; it must not make it unevictable
+      // (its bytes would hold the store over the cap for good).
+      Similarity.invalidateArtifacts("inv-x")
+      val before = evicted
+      make("inv-y")
+      assert(!dirX.exists, s"an invalidated entry must be reclaimed: $dirX")
+      assert(evicted > before, "the reclaim counts as an eviction")
+      val x2 = make("inv-x")
+      val dirX2 = dirOf(x2)
+      assert(rows(x2) == Set(("inv-x", 1L), ("inv-x", 2L)))
+      assert(dirX2.exists && dirX2 != dirX,
+        s"an invalidated key rebuilds into a fresh dir: $dirX2 vs $dirX")
+    } finally {
+      oldCap match {
+        case Some(v) => System.setProperty(capProp, v)
+        case None => System.clearProperty(capProp)
+      }
+      oldGrace match {
+        case Some(v) => System.setProperty(graceProp, v)
+        case None => System.clearProperty(graceProp)
+      }
+    }
+  }
+
   test("capped store: LRU eviction, deleted paths never served, graced entries survive") {
     val (oldCap, oldGrace) = (sys.props.get(capProp), sys.props.get(graceProp))
     try {

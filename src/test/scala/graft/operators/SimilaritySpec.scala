@@ -565,8 +565,15 @@ class SimilaritySpec extends SparkSpec {
         r.getSeq[Double](2))).toSet
     }
     val first = snapshot()
+    def pqMisses = Similarity.memoStats.get("art:pq").map(_._2).getOrElse(0L)
+    val misses = pqMisses
+    // Drop both tiers: the in-memory memo and the disk artifact (the
+    // session is a key part of every storeCached key), so the second
+    // snapshot really retrains instead of re-reading the first's parquet.
     Similarity.releaseCaches()
+    Similarity.invalidateArtifacts(spark)
     assert(snapshot() == first, "retraining after a cache drop must reproduce the codebooks")
+    assert(pqMisses == misses + 1, "the second snapshot must retrain (one art:pq miss)")
   }
 
   test("hardNegatives excludes same-label vectors however close they rank") {

@@ -184,6 +184,31 @@ class AsyncRebuildSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/gen-0/codes").count() == 48 + 12)
   }
 
+  test("pq async rebuild: a staging dir left under a COMMITTED generation " +
+      "(crash between the swap's commit and its staging delete) is reaped " +
+      "at construction") {
+    val root = Files.createTempDirectory("graft-pqasyncstaged").toString
+    val sink = Files.createTempDirectory("graft-pqasyncstagedsink").toString
+    IndexMaintenance.initPqStore(spark, root,
+      vecs(0 until 48, sameDist).toDF("vec_id", "embedding"),
+      m = 2, ksub = 4, iters = 2, trainN = 64, dim = 8)
+    // The swap folds staged rows into the codes BEFORE its commit, so a
+    // leftover staging dir under the committed generation is garbage.
+    vecs(900 until 904, sameDist).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$root/gen-0/pending-vectors")
+    val fn = IndexMaintenance.pqRebuildingPipeline(spark, root, sink,
+      m = 2, ksub = 4, iters = 2, trainN = 64, dim = 8, async = true)
+    assert(!exists(s"$root/gen-0/pending-vectors"),
+      "construction reaps the committed generation's staging dir")
+    // A quiet batch adds exactly its own m codes per vector to gen 0.
+    fn(vecs(100 until 148, sameDist).toDF("vec_id", "embedding"), 0L)
+    assert(IndexMaintenance.latestGen(spark, root) == 0L)
+    val codes = spark.read.parquet(s"$root/gen-0/codes")
+    assert(codes.count() == (48 + 48) * 2)
+    assert(codes.where("vec_id >= 900").count() == 0,
+      "no staged row leaks into the codes")
+  }
+
   test("int8 async rebuild under the streaming engine: the closed loop " +
       "converges end-to-end with natural build timing") {
     // The latch-gated tests above prove the protocol deterministically;

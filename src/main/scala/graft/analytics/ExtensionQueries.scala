@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{TextFunctions => TF}
 import graft.multimodal.{Multimodal => MM}
@@ -600,9 +601,20 @@ object ExtensionQueries {
         nCentroids = 16, lloydIters = 2, trainN = 1024, seedPlanes = 6, dim = 64)
       .orderBy("vec_a", "vec_b")
 
-  val embeddingNearDupAnnSql: String = {
-    val (training, cFinal) = ivfTrainingCtes(16, 2, 1024, seedPlanes = 6, dim = 64)
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+  val embeddingNearDupAnnSql: String = nearDupAnnSql(
+    "(SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)",
+    dim = 64, threshold = 0.25)
+
+  /** The one near-dup ANN oracle (q_dd8, q_mm6, q_mm9, q_mm12): the
+    * `v` CTE body (vec_id, e DOUBLE[]) — unstripped, its `|` margins
+    * are stripped with the template's — then the shared IVF training
+    * replay, nearest-cell assignment (rounded cosine, ties to the
+    * lowest cid; zero vectors never pair), and within-cell pairs at
+    * rounded cosine ≥ `threshold`.
+    */
+  private def nearDupAnnSql(v: String, dim: Int, threshold: Double): String = {
+    val (training, cFinal) = ivfTrainingCtes(16, 2, 1024, seedPlanes = 6, dim = dim)
+    s"""WITH v AS $v,
        |$training,
        |ca AS (SELECT vec_id, e, cid FROM (
        |    SELECT v.vec_id, v.e, c.cid,
@@ -614,7 +626,7 @@ object ExtensionQueries {
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |         round(list_cosine_similarity(a.e, b.e), 6) AS cos
        |  FROM ca a JOIN ca b ON a.cid = b.cid AND a.vec_id < b.vec_id)
-       |WHERE cos >= 0.25 ORDER BY vec_a, vec_b""".stripMargin
+       |WHERE cos >= $threshold ORDER BY vec_a, vec_b""".stripMargin
   }
 
   // ---------------------------------------------------------------- DD-9
@@ -1171,7 +1183,13 @@ object ExtensionQueries {
       .join(embs.select(col("vec_id"), col("label").cast("long").as("label")),
         "vec_id")
       .groupBy("label")
-      .agg(count(lit(1)).as("n_vecs"), round(avg("err"), 6).as("avg_err"),
+      // Exact mean: each err is a fixed-order sum of 6dp-rounded
+      // residuals, so as DECIMAL(38,6) the average no longer depends on
+      // the order rows arrive from the shuffle (a double avg could flip
+      // a 6dp rounding tie between runs).
+      .agg(count(lit(1)).as("n_vecs"),
+        round(avg(col("err").cast(DecimalType(38, 6))), 6).cast("double")
+          .as("avg_err"),
         round(max("err"), 6).as("max_err"))
       .orderBy("label")
   }
@@ -1892,30 +1910,36 @@ object ExtensionQueries {
     * structured BMPs ([[MM.bmpClassImage]] — 16 near-duplicate families
     * differing by one pixel) are decoded and probed at 8 fixed
     * coordinates ([[MM.bmpProbeEmbeddings]] — the most decode-sensitive
-    * embedding possible). The trained-IVF cells block the corpus, exact
-    * cosine ≥ 0.98 verifies within cells. The oracle replays feature
-    * formula + the shared IVF training CTEs — the same replay q_dd8
-    * certifies against. Subset doc_id % 9 = 4 bounds pair volume (the
-    * within-cell join is the operator's documented quadratic-in-cell
-    * cost, not the query's); 9 is COPRIME with the class
-    * modulus 16, so all 16 near-dup families stay represented (an even
-    * subset modulus reaches only the odd classes).
+    * embedding possible), then [[modalityNearDupAnn]]. The oracle
+    * replays feature formula + the shared IVF training CTEs — the same
+    * replay q_dd8 certifies against.
     */
   def imageNearDupAnn(spark: SparkSession, dir: String): DataFrame =
+    modalityNearDupAnn(spark, dir, "mm_bmp")(docs =>
+      MM.bmpProbeEmbeddings(MM.synthBmpAssets(docs, MM.bmpClassImage)))
+
+  /** The one builder of the modality near-dup family (q_mm6, q_mm9,
+    * q_mm12): `probe` embeds the class-structured assets of the
+    * doc_id % 9 = 4 subset, [[Dedup.embeddingNearDupsAnn]] cells them
+    * on the pinned IVF training and keeps within-cell pairs at exact
+    * cosine ≥ 0.98. The subset bounds pair volume (the within-cell join
+    * is the operator's documented quadratic-in-cell cost, not the
+    * query's); 9 is COPRIME with the class modulus 16, so all 16
+    * near-dup families stay represented (an even subset modulus reaches
+    * only the odd classes). The decode closure makes the corpus plan
+    * key-unstable, so the artifact is keyed by (modality, dir) — which
+    * IS the corpus identity.
+    */
+  private def modalityNearDupAnn(spark: SparkSession, dir: String,
+      modality: String)(probe: DataFrame => DataFrame): DataFrame =
     Dedup.embeddingNearDupsAnn(
-        MM.bmpProbeEmbeddings(MM.synthBmpAssets(
-          Tables.documents(spark, dir).where(col("doc_id") % 9 === 4),
-          MM.bmpClassImage)),
+        probe(Tables.documents(spark, dir).where(col("doc_id") % 9 === 4)),
         threshold = 0.98, nCentroids = 16, lloydIters = 2, trainN = 1024,
-        seedPlanes = 6, dim = 8,
-        // the decode closure makes the corpus plan key-unstable; the
-        // (modality, dir) pair IS the corpus identity
-        artifactKey = Some(Seq("mm_bmp", dir)))
+        seedPlanes = 6, dim = 8, artifactKey = Some(Seq(modality, dir)))
       .orderBy("vec_a", "vec_b")
 
-  val imageNearDupAnnSql: String = {
-    val (training, cFinal) = ivfTrainingCtes(16, 2, 1024, seedPlanes = 6, dim = 8)
-    s"""WITH v AS (SELECT doc_id AS vec_id,
+  val imageNearDupAnnSql: String = nearDupAnnSql(
+    """(SELECT doc_id AS vec_id,
        |    list_transform(range(8), j -> CAST(2 * (
        |      CASE WHEN j % 3 = 0 THEN
        |             ((doc_id % 16) * 17 + 3 * (j % 5)) % 255
@@ -1924,20 +1948,8 @@ object ExtensionQueries {
        |             ((doc_id % 16) * 29 + 5 * (j % 5) + 1) % 255
        |           ELSE ((doc_id % 16) * 41 + (j % 5) + 22) % 255
        |      END) - 255 AS DOUBLE)) AS e
-       |  FROM documents WHERE doc_id % 9 = 4),
-       |$training,
-       |ca AS (SELECT vec_id, e, cid FROM (
-       |    SELECT v.vec_id, v.e, c.cid,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |             ORDER BY round(list_cosine_similarity(v.e, c.ce), 6) DESC, c.cid) AS rn
-       |    FROM v CROSS JOIN $cFinal c)
-       |  WHERE rn = 1 AND list_dot_product(e, e) > 0)
-       |SELECT vec_a, vec_b, cos FROM (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         round(list_cosine_similarity(a.e, b.e), 6) AS cos
-       |  FROM ca a JOIN ca b ON a.cid = b.cid AND a.vec_id < b.vec_id)
-       |WHERE cos >= 0.98 ORDER BY vec_a, vec_b""".stripMargin
-  }
+       |  FROM documents WHERE doc_id % 9 = 4)""",
+    dim = 8, threshold = 0.98)
 
   // ----------------------------------------------------------------- MM-7
   /** Image RESIZE — the remaining verb of the multimodal tier's
@@ -2021,40 +2033,20 @@ object ExtensionQueries {
     * audio ([[MM.wavClassSamples]] — 16 near-dup families differing by
     * one sample count). One dedup engine, three modalities (text
     * embeddings q_dd8, image q_mm6, audio here); only the probe
-    * changes. Subset doc_id % 9 = 4 (coprime with the class modulus,
-    * all families represented), trained-IVF cells block, exact cosine
-    * ≥ 0.98 verifies within cells.
+    * changes ([[modalityNearDupAnn]]).
     */
   def audioNearDupAnn(spark: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDupsAnn(
-        MM.wavProbeEmbeddings(MM.synthWavAssetsBy(
-          Tables.documents(spark, dir).where(col("doc_id") % 9 === 4),
-          MM.wavClassSamples)),
-        threshold = 0.98, nCentroids = 16, lloydIters = 2, trainN = 1024,
-        seedPlanes = 6, dim = 8, artifactKey = Some(Seq("mm_wav", dir)))
-      .orderBy("vec_a", "vec_b")
+    modalityNearDupAnn(spark, dir, "mm_wav")(docs =>
+      MM.wavProbeEmbeddings(MM.synthWavAssets(docs, samplesOf = MM.wavClassSamples)))
 
-  val audioNearDupAnnSql: String = {
-    val (training, cFinal) = ivfTrainingCtes(16, 2, 1024, seedPlanes = 6, dim = 8)
-    s"""WITH v AS (SELECT doc_id AS vec_id,
+  val audioNearDupAnnSql: String = nearDupAnnSql(
+    """(SELECT doc_id AS vec_id,
        |    list_transform(range(8), j -> CAST(
        |      ((doc_id % 16) * 31 + 7 * j * 7) % 4096 - 2048
        |      + CASE WHEN j = 0 THEN (doc_id // 16) % 2 ELSE 0 END
        |      AS DOUBLE)) AS e
-       |  FROM documents WHERE doc_id % 9 = 4),
-       |$training,
-       |ca AS (SELECT vec_id, e, cid FROM (
-       |    SELECT v.vec_id, v.e, c.cid,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |             ORDER BY round(list_cosine_similarity(v.e, c.ce), 6) DESC, c.cid) AS rn
-       |    FROM v CROSS JOIN $cFinal c)
-       |  WHERE rn = 1 AND list_dot_product(e, e) > 0)
-       |SELECT vec_a, vec_b, cos FROM (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         round(list_cosine_similarity(a.e, b.e), 6) AS cos
-       |  FROM ca a JOIN ca b ON a.cid = b.cid AND a.vec_id < b.vec_id)
-       |WHERE cos >= 0.98 ORDER BY vec_a, vec_b""".stripMargin
-  }
+       |  FROM documents WHERE doc_id % 9 = 4)""",
+    dim = 8, threshold = 0.98)
 
   // ---------------------------------------------------------------- MM-10
   /** REAL AVI decode ([[graft.multimodal.AviCodec]]) — the VIDEO
@@ -2141,22 +2133,14 @@ object ExtensionQueries {
     * ([[MM.aviClassFrames]] — 16 near-dup families differing by one
     * byte of one frame). One dedup engine, FOUR modalities (text
     * q_dd8, image q_mm6, audio q_mm9, video here); only the probe
-    * changes. Subset doc_id % 9 = 4 (coprime with the class modulus,
-    * all families represented), trained-IVF cells block, exact cosine
-    * ≥ 0.98 verifies within cells.
+    * changes ([[modalityNearDupAnn]]).
     */
   def videoNearDupAnn(spark: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDupsAnn(
-        MM.aviProbeEmbeddings(MM.synthAviAssets(
-          Tables.documents(spark, dir).where(col("doc_id") % 9 === 4),
-          MM.aviClassFrames)),
-        threshold = 0.98, nCentroids = 16, lloydIters = 2, trainN = 1024,
-        seedPlanes = 6, dim = 8, artifactKey = Some(Seq("mm_avi", dir)))
-      .orderBy("vec_a", "vec_b")
+    modalityNearDupAnn(spark, dir, "mm_avi")(docs =>
+      MM.aviProbeEmbeddings(MM.synthAviAssets(docs, MM.aviClassFrames)))
 
-  val videoNearDupAnnSql: String = {
-    val (training, cFinal) = ivfTrainingCtes(16, 2, 1024, seedPlanes = 6, dim = 8)
-    s"""WITH v AS (SELECT doc_id AS vec_id,
+  val videoNearDupAnnSql: String = nearDupAnnSql(
+    """(SELECT doc_id AS vec_id,
        |    list_transform(range(8), j -> CAST(2 * (
        |      CASE WHEN j % 3 = 0 THEN
        |             ((doc_id % 16) * 17 + 3 * (j % 5) + 7 * (j % 3)
@@ -2168,20 +2152,8 @@ object ExtensionQueries {
        |           ELSE ((doc_id % 16) * 41 + (j % 5) + 11 * (j % 3)
        |              + 19 * (j % 2)) % 255
        |      END) - 255 AS DOUBLE)) AS e
-       |  FROM documents WHERE doc_id % 9 = 4),
-       |$training,
-       |ca AS (SELECT vec_id, e, cid FROM (
-       |    SELECT v.vec_id, v.e, c.cid,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |             ORDER BY round(list_cosine_similarity(v.e, c.ce), 6) DESC, c.cid) AS rn
-       |    FROM v CROSS JOIN $cFinal c)
-       |  WHERE rn = 1 AND list_dot_product(e, e) > 0)
-       |SELECT vec_a, vec_b, cos FROM (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |         round(list_cosine_similarity(a.e, b.e), 6) AS cos
-       |  FROM ca a JOIN ca b ON a.cid = b.cid AND a.vec_id < b.vec_id)
-       |WHERE cos >= 0.98 ORDER BY vec_a, vec_b""".stripMargin
-  }
+       |  FROM documents WHERE doc_id % 9 = 4)""",
+    dim = 8, threshold = 0.98)
 
   // ---------------------------------------------------------------- MM-13
   /** INTERLEAVED audio+video AVI decode ([[AviCodec.decodeAV]]) — the

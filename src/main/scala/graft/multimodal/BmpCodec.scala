@@ -27,14 +27,14 @@ object BmpCodec {
     * with [[AviCodec]], whose '00db' frame chunks carry the same pixel
     * layout (a DIB with no file header).
     */
-  private[multimodal] def rowSize(width: Int): Int = ((3 * width + 3) / 4) * 4
+  private[multimodal] def rowSize(width: Int): Long = (3L * width + 3) / 4 * 4
 
   /** Serialize the DIB pixel array alone (bottom-up rows, BGR, 4-byte
     * row padding) — the layout both a BMP's pixel section and an AVI
     * '00db' frame chunk carry.
     */
   private[multimodal] def encodeDib(img: BmpImage): Array[Byte] = {
-    val rs = rowSize(img.width)
+    val rs = rowSize(img.width).toInt
     val out = new Array[Byte](rs * img.height)
     var y = img.height - 1 // bottom-up: last image row stored first
     var p = 0
@@ -59,7 +59,7 @@ object BmpCodec {
     */
   private[multimodal] def decodeDib(bytes: Array[Byte], offset: Int,
       width: Int, height: Int): BmpImage = {
-    val rs = rowSize(width)
+    val rs = rowSize(width).toInt
     val n = width * height
     val (b, g, r) = (new Array[Int](n), new Array[Int](n), new Array[Int](n))
     var y = 0
@@ -80,6 +80,44 @@ object BmpCodec {
     BmpImage(width, height, b, g, r)
   }
 
+  /** The 40-byte BITMAPINFOHEADER of a 24-bit BI_RGB DIB holding
+    * `dibLen` pixel bytes — a BMP's second header and an AVI 'vids'
+    * stream's strf body alike.
+    */
+  private[multimodal] def putInfoHeader(buf: ByteBuffer, width: Int,
+      height: Int, dibLen: Int): ByteBuffer =
+    buf.putInt(40).putInt(width).putInt(height)
+      .putShort(1) // planes
+      .putShort(24) // bits per pixel
+      .putInt(0) // BI_RGB (uncompressed)
+      .putInt(dibLen).putInt(2835).putInt(2835).putInt(0).putInt(0)
+
+  /** Read a BITMAPINFOHEADER at `buf`'s position (biSize is the
+    * caller's to judge) and refuse everything outside the supported
+    * surface: non-positive dims (top-down DIBs included), planes != 1,
+    * a bit depth other than 24, compression, and a pixel array larger
+    * than the `room` bytes the payload has for it. The array size is
+    * computed in Long, so a hostile width cannot wrap the row stride
+    * negative and slip past that bound into a huge or negative
+    * allocation. Returns (width, height, pixel-array bytes).
+    */
+  private[multimodal] def readInfoHeader(buf: ByteBuffer, room: Long,
+      fail: String => Nothing): (Int, Int, Int) = {
+    buf.getInt // biSize
+    val width = buf.getInt
+    val height = buf.getInt
+    if (width <= 0) fail(s"width $width")
+    if (height <= 0) fail(s"height $height (top-down DIBs unsupported)")
+    if (buf.getShort != 1) fail("planes != 1")
+    val bpp = buf.getShort
+    if (bpp != 24) fail(s"$bpp bpp (only 24 supported)")
+    if (buf.getInt != 0) fail("compressed DIB unsupported")
+    val dibLen = rowSize(width) * height
+    if (dibLen > room)
+      fail(s"${width}x$height pixel data ($dibLen bytes) overruns payload")
+    (width, height, dibLen.toInt)
+  }
+
   /** Encode top-down row-major (b, g, r) channel arrays as a 24-bit
     * uncompressed BMP (bottom-up storage, padded rows).
     */
@@ -89,12 +127,7 @@ object BmpCodec {
     // BITMAPFILEHEADER
     buf.put('B'.toByte).put('M'.toByte).putInt(54 + dib.length)
       .putShort(0).putShort(0).putInt(54)
-    // BITMAPINFOHEADER
-    buf.putInt(40).putInt(img.width).putInt(img.height)
-      .putShort(1) // planes
-      .putShort(24) // bits per pixel
-      .putInt(0) // BI_RGB (uncompressed)
-      .putInt(dib.length).putInt(2835).putInt(2835).putInt(0).putInt(0)
+    putInfoHeader(buf, img.width, img.height, dib.length)
     buf.put(dib)
     buf.array()
   }
@@ -111,19 +144,11 @@ object BmpCodec {
     buf.getInt // file size — advisory
     buf.getShort; buf.getShort
     val dataOffset = buf.getInt
-    val hdrSize = buf.getInt
+    if (dataOffset < 54) fail(s"pixel data offset $dataOffset inside the headers")
+    val hdrSize = buf.getInt(14) // biSize, re-read by readInfoHeader
     if (hdrSize < 40) fail(s"DIB header $hdrSize < BITMAPINFOHEADER 40")
-    val width = buf.getInt
-    val height = buf.getInt
-    if (width <= 0) fail(s"width $width")
-    if (height <= 0) fail(s"height $height (top-down DIBs unsupported)")
-    if (buf.getShort != 1) fail("planes != 1")
-    val bpp = buf.getShort
-    if (bpp != 24) fail(s"$bpp bpp (only 24 supported)")
-    if (buf.getInt != 0) fail("compressed BMP unsupported")
-    val rs = rowSize(width)
-    if (dataOffset < 54 || dataOffset.toLong + rs.toLong * height > bytes.length)
-      fail("pixel data overruns payload")
+    val (width, height, _) =
+      readInfoHeader(buf, bytes.length.toLong - dataOffset, fail)
     decodeDib(bytes, dataOffset, width, height)
   }
 

@@ -27,6 +27,35 @@ object WavCodec {
   /** Decoded audio: sample rate + the PCM samples (mono 16-bit). */
   final case class WavAudio(sampleRate: Int, samples: Array[Short])
 
+  /** The 16-byte PCMWAVEFORMAT block of mono PCM-16 at `sampleRate` —
+    * a WAV's fmt chunk body and an AVI 'auds' stream's strf body alike.
+    */
+  private[multimodal] def putPcmFormat(buf: ByteBuffer, sampleRate: Int): ByteBuffer =
+    buf.putShort(1) // PCM format tag
+      .putShort(1) // channels: mono
+      .putInt(sampleRate)
+      .putInt(sampleRate * 2) // byte rate = rate * channels * 2
+      .putShort(2) // block align
+      .putShort(16) // bits per sample
+
+  /** Read a PCMWAVEFORMAT block at `buf`'s position and refuse anything
+    * but mono PCM-16 (format tag 1, one channel, 16 bits). Returns
+    * (sample rate, block align) — the byte rate is advisory.
+    */
+  private[multimodal] def readPcmFormat(buf: ByteBuffer,
+      fail: String => Nothing): (Int, Int) = {
+    val fmtTag = buf.getShort
+    if (fmtTag != 1) fail(s"format tag $fmtTag (only PCM=1 supported)")
+    val channels = buf.getShort
+    if (channels != 1) fail(s"$channels channels (only mono supported)")
+    val sampleRate = buf.getInt
+    buf.getInt // byte rate
+    val blockAlign = buf.getShort
+    val bits = buf.getShort
+    if (bits != 16) fail(s"$bits bits/sample (only 16 supported)")
+    (sampleRate, blockAlign)
+  }
+
   /** Encode mono 16-bit PCM samples as a canonical 44-byte-header WAV. */
   def encode(samples: Array[Short], sampleRate: Int): Array[Byte] = {
     val dataLen = samples.length * 2
@@ -34,12 +63,7 @@ object WavCodec {
     buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
       .put("WAVE".getBytes("US-ASCII"))
     buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1) // PCM format tag
-      .putShort(1) // channels: mono
-      .putInt(sampleRate)
-      .putInt(sampleRate * 2) // byte rate = rate * channels * 2
-      .putShort(2) // block align
-      .putShort(16) // bits per sample
+    putPcmFormat(buf, sampleRate)
     buf.put("data".getBytes("US-ASCII")).putInt(dataLen)
     samples.foreach(buf.putShort)
     buf.array()
@@ -74,15 +98,7 @@ object WavCodec {
       if (id == "fmt ") {
         if (size < 16) fail(s"fmt chunk too small ($size)")
         val p0 = buf.position()
-        val fmtTag = buf.getShort
-        if (fmtTag != 1) fail(s"format tag $fmtTag (only PCM=1 supported)")
-        val channels = buf.getShort
-        if (channels != 1) fail(s"$channels channels (only mono supported)")
-        sampleRate = buf.getInt
-        buf.getInt // byte rate
-        buf.getShort // block align
-        val bits = buf.getShort
-        if (bits != 16) fail(s"$bits bits/sample (only 16 supported)")
+        sampleRate = readPcmFormat(buf, fail)._1
         buf.position(p0 + size + (size & 1)) // word-aligned skip of extensions
         haveFmt = true
       } else if (id == "data") {

@@ -1843,6 +1843,40 @@ object Similarity {
       .select("query_id", "neighbor_id", "acos", "rank")
   }
 
+  /** Reference form of [[pqAdcTopK]]: the flat broadcast-LUT join it
+    * replaced — codes ⋈ the per-(query, sub, cid) lookup table, the m
+    * lookups per (query, vector) pair re-aggregated by [[subspaceSum]].
+    * Kept only so SimilaritySpec can pin the pivoted form ≡ this one in
+    * acos, rank and tie order; it explodes |queries|·|corpus|·m rows,
+    * so nothing serves from it.
+    */
+  private[graft] def pqAdcTopKFlat(queries: DataFrame, codes: DataFrame,
+      codebooks: DataFrame, k: Int, m: Int = 4, dim: Int = 64): DataFrame = {
+    val lut = subvectors(queries, m, dim)
+      .withColumnRenamed("vec_id", "query_id")
+      .join(broadcast(codebooks), Seq("sub"))
+      .select(col("query_id"), col("sub"), col("cid"),
+        VF.dot(col("s"), col("ce")).as("qc"),
+        VF.dot(col("ce"), col("ce")).as("cc"))
+    val qn = subvectors(queries, m, dim)
+      .groupBy(col("vec_id").as("query_id"))
+      .agg(sqrt(subspaceSum(m, col("sub"), VF.dot(col("s"), col("s")))).as("qn"))
+    val scored = codes
+      .join(broadcast(lut),
+        codes("sub") === lut("sub") && codes("code") === lut("cid"))
+      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+      .agg(subspaceSum(m, codes("sub"), col("qc")).as("dot"),
+        subspaceSum(m, codes("sub"), col("cc")).as("rn2"))
+    val w = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
+    scored
+      .join(broadcast(qn), "query_id")
+      .where(col("query_id") =!= col("neighbor_id") && col("rn2") > 0 && col("qn") > 0)
+      .withColumn("acos", round(col("dot") / (col("qn") * sqrt(col("rn2"))), 6))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select("query_id", "neighbor_id", "acos", "rank")
+  }
+
   /** The production PQ serving path: ADC candidate generation at
     * `rerankDepth`, then exact float cosine over the survivors alone —
     * the same candidates-then-exact composition [[ivfTopKInt8]] uses,

@@ -233,6 +233,75 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  private def md5(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytes)
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  test("codec output bytes pinned by MD5 over the Multimodal laws") {
+    import Multimodal._
+    def wav(law: Long => (Int, Array[Short]))(d: Long) = {
+      val (rate, samples) = law(d); WavCodec.encode(samples, rate)
+    }
+    val encoders: Seq[(String, Long => Array[Byte])] = Seq(
+      "wav" -> wav(wavSamples),
+      "wavClass" -> wav(wavClassSamples),
+      "bmp" -> (d => BmpCodec.encode(bmpImage(d))),
+      "bmpClass" -> (d => BmpCodec.encode(bmpClassImage(d))),
+      "avi" -> (d => AviCodec.encode(aviFrames(d), fps = 10)),
+      "aviClass" -> (d => AviCodec.encode(aviClassFrames(d), fps = 10)),
+      "av" -> { d =>
+        val (rate, samples) = avSamples(d)
+        AviCodec.encodeAV(aviFrames(d), 10, samples, rate)
+      })
+    // Captured from the encoders before the shared-header fold.
+    val pinned = Map(
+      "wav/0" -> "fe14d2cefde12bf15daaa00af01aca48",
+      "wav/5" -> "af187a5de5b88509cd27779611d40ed0",
+      "wav/17" -> "d96539cb26f536fb5e547166ba13f203",
+      "wavClass/0" -> "fe14d2cefde12bf15daaa00af01aca48",
+      "wavClass/5" -> "0b1ca67afcca04edd9318c6263a39b96",
+      "wavClass/17" -> "2dcf3e460041000ce09e5942b5b8e5f7",
+      "bmp/0" -> "0e1b660dbf9b456ea52d69e546f71ac2",
+      "bmp/5" -> "e1aac71de42e82868870385738342d9b",
+      "bmp/17" -> "32a1a9cd8d2b56e3e1cf9ccc0bedb9e6",
+      "bmpClass/0" -> "0e1b660dbf9b456ea52d69e546f71ac2",
+      "bmpClass/5" -> "a1c8f4c23c13f37c7becc89b91713757",
+      "bmpClass/17" -> "db640610509573bea6a57fbddadc4e50",
+      "avi/0" -> "a9a433944cf0957beb99d07e78e3396e",
+      "avi/5" -> "df3796019293ffb8201732abaca29b60",
+      "avi/17" -> "af71859949fc4b56706988baac5497c1",
+      "aviClass/0" -> "a9a433944cf0957beb99d07e78e3396e",
+      "aviClass/5" -> "0acae1997580ab03d5b95a15d82f0d17",
+      "aviClass/17" -> "8e7ed6a969524bee0e3e734ddff60e40",
+      "av/0" -> "89a80a614b19e8a1b3a31913b4398b2c",
+      "av/5" -> "f59ce1cf05170b96f1016c55330092e7",
+      "av/17" -> "cc5fc46a375f9cbaaa556be384186b22")
+    val got = for ((name, enc) <- encoders; d <- Seq(0L, 5L, 17L))
+      yield s"$name/$d" -> md5(enc(d))
+    assert(got.toMap == pinned)
+  }
+
+  test("oversized DIB dims refuse as malformed instead of escaping tryDecode") {
+    // 24-bit BI_RGB at width 0x30000000: 3·w overflows Int, so a row
+    // stride computed in Int goes negative, passes the overrun check and
+    // dies in `new Array[Int](w·h < 0)`. Height 3 keeps w·h negative,
+    // so nothing large is ever allocated.
+    val w = 0x30000000
+    val bmp = BmpCodec.encode(Multimodal.bmpImage(0L))
+    java.nio.ByteBuffer.wrap(bmp).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(18, w).putInt(22, 3)
+    intercept[IllegalArgumentException](BmpCodec.decode(bmp))
+    assert(BmpCodec.tryDecode(bmp).isEmpty)
+    // The AVI equivalent: avih and strf both declare the same dims.
+    // Offsets (fixed by encode): avih width/height at 64/68, strf
+    // biWidth/biHeight at 176/180.
+    val avi = AviCodec.encode(Multimodal.aviFrames(0L), fps = 10)
+    val ab = java.nio.ByteBuffer.wrap(avi).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    ab.putInt(64, w).putInt(68, 3).putInt(176, w).putInt(180, 3)
+    intercept[IllegalArgumentException](AviCodec.decode(avi))
+    assert(AviCodec.tryDecode(avi).isEmpty)
+  }
+
   test("class images: one-pixel perturbation, valid bytes, stable dims per class") {
     for (c <- 0 until 16) {
       val a = Multimodal.bmpClassImage(c.toLong) // d/16 even

@@ -477,6 +477,25 @@ class SimilaritySpec extends SparkSpec {
     assert(reranked == exact, s"re-rank must be exact over covering candidates:\n$reranked\n$exact")
   }
 
+  test("PQ ADC: pivoted pqAdcTopK ≡ the flat LUT-join reference in acos, rank and ties") {
+    // Clustered corpus, then the same corpus plus exact copies of
+    // cluster 0 (ids 100..104): copies get identical codes, so their
+    // acos tie and only the neighbor_id tie-break orders them.
+    val planted = clustered.union(clustered.where(col("vec_id") < 5)
+      .select((col("vec_id") + 100).as("vec_id"), col("embedding")))
+    for (corpus <- Seq(clustered, planted)) {
+      val cb = Similarity.trainPqCodebooks(corpus, m = 2, ksub = 4,
+        iters = 2, trainN = 1024, dim = 8)
+      val codes = Similarity.pqEncode(corpus, cb, m = 2, dim = 8)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+          .sortBy(r => (r._1, r._4)).toSeq
+      val pivoted = rows(Similarity.pqAdcTopK(corpus, codes, cb, k = 8, m = 2, dim = 8))
+      val flat = rows(Similarity.pqAdcTopKFlat(corpus, codes, cb, k = 8, m = 2, dim = 8))
+      assert(pivoted.nonEmpty && pivoted == flat)
+    }
+  }
+
   test("IVF×PQ: probing the own cell + ADC + re-rank finds the cluster neighbors") {
     // Interleaved ids (id % 3 = cluster) as in the ivfTopK test, so the
     // three coarse cells map onto the three clusters; nProbe=1 then

@@ -2570,7 +2570,7 @@ object ExtensionQueries {
       .where(col("na") > 0)
       .crossJoin(broadcast(bench))
       .withColumn("cos",
-        round(VF.dot(col("embedding"), col("eb")) / (col("na") * col("nb")), 6))
+        VF.roundedCosine(col("embedding"), col("eb"), col("na"), col("nb")))
       .where(col("cos") >= 0.25)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_bench_hits"), max("cos").as("max_cos"))

@@ -41,6 +41,15 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
 
+  /** Cosine over PRECOMPUTED norms `na`/`nb`, rounded to 6dp — the score
+    * every similarity ranking sorts on. Rounding absorbs the two
+    * engines' different fp summation orders (the DuckDB oracles round
+    * the same way), so ties fall to the id tie-break, not to noise.
+    * Callers drop zero norms first: under ANSI the division throws.
+    */
+  def roundedCosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
+
   /** Euclidean (L2) distance. */
   def l2Distance(a: Column, b: Column): Column =
     sqrt(aggregate(

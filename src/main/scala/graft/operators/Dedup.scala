@@ -494,8 +494,8 @@ object Dedup {
     * missed — the standard SemDeDup trade; raise `nCentroids` for
     * smaller cells and lower recall, or lower it for the reverse).
     * Output: (`vec_a`, `vec_b`, `cos`).
-    */
-  /** `artifactKey`: see [[Similarity.trainCentroids]] — required for
+    *
+    * `artifactKey`: see [[Similarity.trainCentroids]] — required for
     * corpora whose plans embed typed closures (the multimodal decode
     * stages), which cannot key the artifact cache by plan.
     */
@@ -505,48 +505,32 @@ object Dedup {
       artifactKey: Option[Seq[Any]] = None): DataFrame = {
     val centroids = Similarity.trainCentroids(embs, nCentroids, lloydIters,
         trainN, seedPlanes, dim, artifactKey)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-    // Corpus cell assignment — the same partial-before-exchange argmax
-    // as ivfTopK (one row per vector crosses the wire, not ×nCentroids).
-    // MEMOIZED (Similarity slot "cells"): the self-join below references
-    // it twice and Spark does not reuse the exchange across differently
-    // aliased sides (measured: zero ReusedExchange, assignment ran
-    // twice) — persisting makes this the built-once cell index the
-    // production flow persists anyway, computed in ONE corpus pass.
-    // storeCached, not the LRU memo: the dd/mm near-dup family cycles
-    // ~10 distinct (corpus, centroid) cell-assignment configs per full
-    // board — more than the memo's capacity, so every pass re-ran an
-    // eager corpus encode per evicted config (r19 memostats: cells
-    // hits=3 misses=10). The disk tier holds every config at zero
-    // executor-memory cost; the assignment is deterministic (6dp
-    // cosine, cid tie-break), and at 100 TB this artifact is exactly
-    // what the IndexMaintenance generation stores persist.
-    val cellsPlan = embs
-      .select(col("vec_id"), col("embedding"), VF.l2Norm(col("embedding")).as("nrm"))
-      .where(col("nrm") > 0)
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"),
-        col("embedding"), col("nrm"))).as("m"))
-      .select(col("vec_id"), col("m.embedding").as("e"), col("m.nrm").as("nrm"),
-        (-col("m.negcid")).as("cid"))
-    // Session folded into explicit keys — see Similarity.trainCentroids.
-    val cells = artifactKey match {
-      case Some(k) => Similarity.storeCachedKeyed("cells",
-        embs.sparkSession +: (k ++ Seq(nCentroids, lloydIters, trainN,
-          seedPlanes, dim)),
-        cellsPlan)
-      case None => Similarity.storeCached("cells", cellsPlan)
-    }
+    // Corpus cell assignment — the shared argmax (one row per vector
+    // crosses the wire, not ×nCentroids). Store-cached (slot "cells"):
+    // the self-join below references it twice and Spark does not reuse
+    // the exchange across differently aliased sides (measured: zero
+    // ReusedExchange, assignment ran twice) — persisting makes this the
+    // built-once cell index the production flow persists anyway,
+    // computed in ONE corpus pass. The disk tier, not the LRU memo: the
+    // dd/mm near-dup family cycles ~10 distinct (corpus, centroid)
+    // cell-assignment configs per full board — more than the memo's
+    // capacity, so every pass re-ran an eager corpus encode per evicted
+    // config (r19 memostats: cells hits=3 misses=10). The disk tier
+    // holds every config at zero executor-memory cost; the assignment is
+    // deterministic (6dp cosine, cid tie-break), and at 100 TB this
+    // artifact is exactly what the IndexMaintenance generation stores
+    // persist.
+    val cells = Similarity.storeArtifact("cells", artifactKey,
+      Seq(nCentroids, lloydIters, trainN, seedPlanes, dim),
+      Similarity.cellArgmax(Similarity.normed(embs, "vec_id", "e", "nrm"),
+        "vec_id", "e", "nrm", centroids, "e", "nrm"))
     val a = cells.select(col("cid"), col("vec_id").as("vec_a"),
       col("e").as("ea"), col("nrm").as("na"))
     val b = cells.select(col("cid"), col("vec_id").as("vec_b"),
       col("e").as("eb"), col("nrm").as("nb"))
     a.join(b, Seq("cid"))
       .where(col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(VF.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6))
+      .withColumn("cos", VF.roundedCosine(col("ea"), col("eb"), col("na"), col("nb")))
       .where(col("cos") >= threshold)
       .select("vec_a", "vec_b", "cos")
   }
@@ -861,7 +845,7 @@ object Dedup {
       VF.l2Norm(col("embedding")).as("nb"))
     a.where(col("na") > 0).crossJoin(b.where(col("nb") > 0))
       .where(col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(VF.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6))
+      .withColumn("cos", VF.roundedCosine(col("ea"), col("eb"), col("na"), col("nb")))
       .where(col("cos") >= threshold)
       .select("vec_a", "vec_b", "cos")
   }

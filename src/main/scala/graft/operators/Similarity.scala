@@ -21,24 +21,6 @@ import graft.functions.{VectorFunctions => VF}
   */
 object Similarity {
 
-  /** Bounded cross-invocation memoization of derived index state — the
-    * trained centroid table ([[trainCentroids]], slot "trained") and the
-    * cell-assigned corpus ([[graft.operators.Dedup.embeddingNearDupsAnn]],
-    * slot "cells") are SHARED STATE (a production index is built once
-    * and consumed by every query), keyed by canonicalized logical plan
-    * (corpus + every hyperparameter: identical plans ⇒ identical
-    * deterministic results) — q_sim3 reps, q_sim5 (same quantizer), and
-    * SimilaritySpec all reuse one training instead of re-running the
-    * DAG per invocation. Each slot is a small bounded LRU
-    * ([[memoCapacity]] entries, evictee unpersisted), so the handful of
-    * distinct index configs a session interleaves stay warm while the
-    * executor store stays capped — round 3 leaked every run's caches
-    * (ADVICE), which incidentally memoized reps; this keeps the win
-    * and drops the leak.
-    * [[releaseCaches]] clears the registry explicitly; a DataFrame
-    * returned earlier keeps working afterwards (its cache is gone, so
-    * consuming it just recomputes).
-    */
   /** Per-slot LRU capacity. One entry per slot (round 4) thrashes as
     * soon as a session interleaves MORE distinct index configs than
     * slots — the hardened round-6 bench (passes interleaved across all
@@ -49,6 +31,25 @@ object Similarity {
     * growth; the cap is what matters, not capacity 1).
     */
   private val memoCapacity = 4
+
+  /** Bounded cross-invocation memoization of derived index state — the
+    * encoded int8 index (slot "int8index"), the PQ code table
+    * ("pqcodes"), its pivoted serving layout ("adcvecs") and the IVF
+    * cell table ("ivfcells") are SHARED STATE (a production index is
+    * built once and consumed by every query), keyed by canonicalized
+    * logical plan (corpus + every hyperparameter: identical plans ⇒
+    * identical deterministic results), so repeat invocations reuse one
+    * build instead of re-running the DAG. Each slot is a small bounded
+    * LRU ([[memoCapacity]] entries, evictee unpersisted), so the handful
+    * of distinct index configs a session interleaves stay warm while
+    * the executor store stays capped — round 3 leaked every run's
+    * caches (ADVICE), which incidentally memoized reps; this keeps the
+    * win and drops the leak. Trained quantizers and near-dup cell
+    * tables live in the disk tier instead ([[storeCached]]).
+    * [[releaseCaches]] clears the registry explicitly; a DataFrame
+    * returned earlier keeps working afterwards (its cache is gone, so
+    * consuming it just recomputes).
+    */
   private val memoCache = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.LinkedHashMap[Any, DataFrame]]
   private val memoLocks =
@@ -76,21 +77,6 @@ object Similarity {
   private def safeUnpersist(df: DataFrame): Unit =
     if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
 
-  /** Memoize DataFrames per `slot`, keyed by (session, canonicalized
-    * plan): a repeat call with an identical plan returns the
-    * already-persisted table; each slot holds at most [[memoCapacity]]
-    * entries in LRU order, unpersisting the evictee. Materializes
-    * eagerly — consumers broadcast these tables, and concurrent
-    * broadcast builds racing an unmaterialized cache BOTH compute the
-    * plan (measured: a full extra training run).
-    *
-    * Locking is PER SLOT: the materializing `count()` can be a whole
-    * training run, so holding a global lock across it would serialize
-    * unrelated slots (a "trained" build would block a concurrent
-    * "cells" lookup). Two misses on DIFFERENT slots compute
-    * concurrently; within one slot, a racing call for the same key
-    * waits and then hits — never double-computes.
-    */
   // Per-slot (hits, misses) — the observability the LRU-sizing decisions
   // rest on: a slot whose miss count grows with bench passes is CYCLING
   // (every miss re-runs an eager corpus pass), one that misses once per
@@ -290,6 +276,21 @@ object Similarity {
     storeCachedKeyed(slot,
       Seq(df.sparkSession, df.queryExecution.analyzed.canonicalized), df)
 
+  /** A trained build artifact keyed the way its builder was asked to key
+    * it: by the caller's `artifactKey` (corpus identity) plus the
+    * hyperparameters `params` when given, else by its canonicalized
+    * plan. The session is folded into explicit keys too (round 20,
+    * ADVICE): a second SparkSession re-using a (root, gen) identity must
+    * build its own artifact — the cached entry pins the BUILD session
+    * for the parquet read, and a stopped session's DataFrame is
+    * unusable.
+    */
+  private[graft] def storeArtifact(slot: String, artifactKey: Option[Seq[Any]],
+      params: Seq[Any], df: DataFrame): DataFrame = artifactKey match {
+    case Some(k) => storeCachedKeyed(slot, df.sparkSession +: (k ++ params), df)
+    case None => storeCached(slot, df)
+  }
+
   /** Store-cached brute-force ground truth (`query_id`, `neighbor_id`)
     * — the audit family's shared pay-for-truth table. Deterministic
     * (6dp-rounded cosines, id tie-breaks), so one build per (JVM,
@@ -308,6 +309,21 @@ object Similarity {
       bruteForceTopK(queries, corpus, k)
         .select(col("query_id"), col("neighbor_id")))
 
+  /** Memoize DataFrames per `slot`, keyed by (session, canonicalized
+    * plan): a repeat call with an identical plan returns the
+    * already-persisted table; each slot holds at most [[memoCapacity]]
+    * entries in LRU order, unpersisting the evictee. Materializes
+    * eagerly — consumers broadcast these tables, and concurrent
+    * broadcast builds racing an unmaterialized cache BOTH compute the
+    * plan (measured: a full extra training run).
+    *
+    * Locking is PER SLOT: the materializing `count()` can be a whole
+    * corpus encode, so holding a global lock across it would serialize
+    * unrelated slots (an "int8index" build would block a concurrent
+    * "pqcodes" lookup). Two misses on DIFFERENT slots compute
+    * concurrently; within one slot, a racing call for the same key
+    * waits and then hits — never double-computes.
+    */
   private[operators] def memoized(slot: String, df: DataFrame): DataFrame = {
     val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized): Any
     val lock = memoLocks.computeIfAbsent(slot, _ => new AnyRef)
@@ -399,33 +415,56 @@ object Similarity {
     }.reduce(_ unionByName _).orderBy("k_dims")
   }
 
+  /** `df`'s (`vec_id`, `embedding`) as (`id`, `e`, `carry`…, `n`) with
+    * `n` the L2 norm — the normed-vector side every scorer below reads,
+    * its norm computed once per vector so each pair costs one dot fold.
+    */
+  private[graft] def normed(df: DataFrame, id: String, e: String, n: String,
+      carry: Column*): DataFrame =
+    df.select((col("vec_id").as(id) +: col("embedding").as(e) +: carry) :+
+      VF.l2Norm(col("embedding")).as(n): _*)
+
+  /** Row number per `by` over (`score` desc, `neighbor_id`) — the total
+    * order every top-k in this tier cuts on — kept where ≤ `k`.
+    */
+  private def topK(df: DataFrame, k: Int, score: String = "cos",
+      rank: String = "rank", by: Seq[String] = Seq("query_id")): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(by.map(col): _*)
+        .orderBy(col(score).desc, col("neighbor_id"))))
+      .where(col(rank) <= k)
+
   /** Exact top-k neighbors by cosine for each query vector.
     * `queries`/`corpus` must both have (`vec_id`, `embedding`); self-pairs
     * are excluded. The query side is broadcast — the corpus never
     * shuffles for the join; the only exchange is the per-query top-k
     * (k·|queries| rows).
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopK(queries, corpus, k, labels = false)
+
+  /** The exact scoring join + bounded top-k behind [[bruteForceTopK]]
+    * and [[hardNegatives]]; with `labels` the label inequality rides the
+    * join condition. Zero-norm vectors have no defined cosine (0/0 =
+    * NaN, which the two engines ORDER differently) — excluded on both
+    * sides.
+    */
+  private def exactTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+      labels: Boolean): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // Precompute each side's L2 norm once per vector — the pairwise step
-    // then costs a single dot-product fold per pair instead of three.
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      VF.l2Norm(col("embedding")).as("qn"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
-      VF.l2Norm(col("embedding")).as("nn"))
-    // Zero-norm vectors have no defined cosine (0/0 = NaN, which the
-    // two engines ORDER differently) — excluded on both sides.
+    def lab(as: String) = if (labels) Seq(col("label").as(as)) else Nil
+    val q = normed(queries, "query_id", "qe", "qn", lab("q_lab"): _*)
+    val c = normed(corpus, "neighbor_id", "ne", "nn", lab("c_lab"): _*)
+    val notSelf = col("query_id") =!= col("neighbor_id")
     val scored = c.where(col("nn") > 0).join(broadcast(q.where(col("qn") > 0)),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
+        if (labels) notSelf && col("q_lab") =!= col("c_lab") else notSelf)
+      .select(col("query_id"), col("neighbor_id"),
+        VF.roundedCosine(col("qe"), col("ne"), col("qn"), col("nn")).as("cos"))
     // Single-pass bounded top-k (TopKAggregator): map-side partial heaps
     // of size ≤ k merge per query — the shuffle carries k·partitions rows
     // per query, not the whole scored corpus like a window sort would.
     // Ordering (score desc, id asc) matches the window form exactly.
-    scored.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .as[(Long, Long, Double)]
+    scored.as[(Long, Long, Double)]
       .groupByKey(_._1)
       .agg(new TopKAggregator.TopK(k).toColumn.name("topk"))
       .flatMap { case (qid, items) =>
@@ -458,29 +497,12 @@ object Similarity {
     * (q_sim11/q_sim12 pattern).
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      col("label").as("q_lab"), VF.l2Norm(col("embedding")).as("qn"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
-      col("label").as("c_lab"), VF.l2Norm(col("embedding")).as("nn"))
-    val scored = c.where(col("nn") > 0).join(broadcast(q.where(col("qn") > 0)),
-        col("query_id") =!= col("neighbor_id") && col("q_lab") =!= col("c_lab"))
-      .withColumn("cos",
-        round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-    val topk = scored.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .agg(new TopKAggregator.TopK(k).toColumn.name("topk"))
-      .flatMap { case (qid, items) =>
-        items.zipWithIndex.map { case (s, i) => (qid, s.id, s.score, (i + 1).toLong) }
-      }
-      .toDF("query_id", "neighbor_id", "cos", "rank")
     val qLab = queries.select(col("vec_id").as("query_id"),
       col("label").as("query_label"))
     val nLab = corpus.select(col("vec_id").as("neighbor_id"),
       col("label").as("neighbor_label"))
-    topk.join(qLab, "query_id").join(nLab, "neighbor_id")
+    exactTopK(queries, corpus, k, labels = true)
+      .join(qLab, "query_id").join(nLab, "neighbor_id")
       .select(col("query_id"), col("query_label"), col("neighbor_id"),
         col("neighbor_label"), col("cos"), col("rank"))
   }
@@ -503,55 +525,36 @@ object Similarity {
     require(rerankDepth >= k, s"rerankDepth ($rerankDepth) must be >= k ($k)")
     val centroids = trainCentroids(corpus, nCentroids, lloydIters, trainN,
         seedPlanes, dim)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-    val stats = int8Stats(corpus, dim)
-    val assigned = int8CorpusCells(corpus, centroids, stats)
+    val assigned = int8CorpusCells(corpus, centroids, int8Stats(corpus, dim))
       .select("neighbor_id", "re", "rn", "cid")
       .join(corpus.select(col("vec_id").as("neighbor_id"),
         col("label").as("n_lab")), "neighbor_id")
+    int8Query(queries, assigned, centroids, corpus, k, rerankDepth, nProbe,
+      labels = true)
+  }
 
-    val wq = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
-    val queryCells = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("label").as("q_lab"), VF.l2Norm(col("embedding")).as("qn"))
+  /** Exact float re-rank of candidate (`query_id`, `neighbor_id`) pairs:
+    * the float vectors and norms join back for the survivors alone
+    * (queries broadcast, an id-keyed corpus join — at scale the point
+    * lookups a columnar store serves without a scan), then rounded
+    * cosine → rank ≤ k. Zero-norm vectors drop at the inner joins —
+    * identical output to filtering them before candidate generation.
+    * With `labels` both sides' `label` rides along as
+    * `query_label`/`neighbor_label`.
+    */
+  private[graft] def exactRerank(survivors: DataFrame, queries: DataFrame,
+      corpus: DataFrame, k: Int, labels: Boolean = false): DataFrame = {
+    def lab(as: String) = if (labels) Seq(col("label").as(as)) else Nil
+    val qv = normed(queries, "query_id", "qe", "qn", lab("query_label"): _*)
       .where(col("qn") > 0)
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6))
-      .withColumn("crank", row_number().over(wq))
-      .where(col("crank") <= nProbe)
-      .select(col("query_id"), col("qe"), col("qn"), col("q_lab"), col("cid"))
-
-    // Candidate rank over probed cells, DIFFERENT-label rows only — the
-    // label test rides the candidate filter so every rerankDepth slot
-    // holds a genuine negative.
-    val wa = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
-    val survivors = assigned
-      .join(broadcast(queryCells), Seq("cid"))
-      .where(col("query_id") =!= col("neighbor_id") &&
-        col("q_lab") =!= col("n_lab"))
-      .withColumn("acos",
-        round(VF.dot(col("qe"), col("re")) / (col("qn") * col("rn")), 6))
-      .withColumn("arank", row_number().over(wa))
-      .where(col("arank") <= rerankDepth)
-      .select("query_id", "neighbor_id")
-
-    val qv = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), col("label").as("query_label"),
-      VF.l2Norm(col("embedding")).as("qfn")).where(col("qfn") > 0)
-    val cv = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ne"), col("label").as("neighbor_label"),
-      VF.l2Norm(col("embedding")).as("nn")).where(col("nn") > 0)
-    val wf = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    survivors
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos",
-        round(VF.dot(col("qe"), col("ne")) / (col("qfn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(wf).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "query_label", "neighbor_id", "neighbor_label",
-        "cos", "rank")
+    val cv = normed(corpus, "neighbor_id", "ne", "nn", lab("neighbor_label"): _*)
+      .where(col("nn") > 0)
+    val ids = if (labels) Seq("query_id", "query_label", "neighbor_id", "neighbor_label")
+      else Seq("query_id", "neighbor_id")
+    topK(survivors.join(broadcast(qv), "query_id").join(cv, "neighbor_id")
+        .withColumn("cos",
+          VF.roundedCosine(col("qe"), col("ne"), col("qn"), col("nn"))), k)
+      .select(ids.map(col) :+ col("cos") :+ col("rank").cast("long").as("rank"): _*)
   }
 
   /** Deterministic pseudo-random hyperplane weights in [-1, 1] (both
@@ -618,9 +621,7 @@ object Similarity {
     * Everything is reproducible across engines (the q_sim3 oracle
     * re-runs the identical training in DuckDB SQL):
     *  - the training sample is the `trainN` vectors with the lowest
-    *    `md5("ivf:" || vec_id)` — a content-hash-ranked pseudo-random
-    *    sample, computed as a distributed top-N
-    *    (`TakeOrderedAndProject`), never a full sort;
+    *    `md5("ivf:" || vec_id)` ([[trainingSample]]);
     *  - seeds are BUCKET EXEMPLARS: the sample is sign-bucketed by
     *    `seedPlanes` plan-time md5-derived hyperplanes (the
     *    [[planeWeights]] family, offset so the quantizer's planes are
@@ -632,10 +633,10 @@ object Similarity {
     *    split a doubly-seeded cluster — the classic local optimum —
     *    while distinct clusters land in distinct sign buckets;
     *  - each Lloyd step assigns by cosine ROUNDED to 6dp (ties broken by
-    *    cid) and re-centers with the SPHERICAL mean (per-dimension avg
-    *    of unit vectors) rounded to 6dp — rounding on both engines
-    *    absorbs their different fp summation orders, and the tie-break
-    *    makes the rounded argmax total;
+    *    cid — [[cellArgmax]]) and re-centers with the SPHERICAL mean
+    *    (per-dimension avg of unit vectors) rounded to 6dp — rounding on
+    *    both engines absorbs their different fp summation orders, and
+    *    the tie-break makes the rounded argmax total;
     *  - a cell that loses all members keeps its previous centroid
     *    (mirrored as a LEFT JOIN + COALESCE in the oracle).
     *
@@ -648,8 +649,8 @@ object Similarity {
     * corpus-wide work stays in [[ivfTopK]]'s single cell-assignment
     * pass. At 100 TB you raise `trainN` (e.g. 100k), not the iteration
     * count — Lloyd on a hash-uniform sample converges the same.
-    */
-  /** `artifactKey`: explicit identity for the store-cache when the
+    *
+    * `artifactKey`: explicit identity for the store-cache when the
     * corpus PLAN cannot key itself — a corpus built through typed
     * closures (mapPartitions decode stages, the multimodal probe
     * embeddings) canonicalizes differently on every invocation, so the
@@ -674,21 +675,7 @@ object Similarity {
     // are unaffected.
     val sp = math.max(seedPlanes,
       (if (nCentroids <= 1) 0 else 32 - Integer.numberOfLeadingZeros(nCentroids - 1)) + 2)
-    val keyed = corpus
-      .select(col("vec_id"), col("embedding"),
-        md5(concat(lit("ivf:"), col("vec_id").cast("string"))).as("hk"))
-      .where(VF.normSq(col("embedding")) > 0)
-    // Distributed top-N by hash key: TakeOrderedAndProject, so the
-    // sample never routes the corpus through one partition. PERSISTED:
-    // seeding references the sample three times and every Lloyd step
-    // once more — unpersisted, each reference re-scans the whole corpus
-    // to recompute the top-N (at 100 TB that is ~5 corpus scans for one
-    // training run); cached, training costs ONE corpus scan plus
-    // trainN-row work. The sample is bounded (trainN rows) so the cache
-    // never outgrows a single executor's store; MEMORY_AND_DISK spills
-    // rather than recomputes under pressure.
-    val tr = keyed.orderBy("hk", "vec_id").limit(trainN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tr = trainingSample(corpus, "ivf:", trainN)
     // Bucket-exemplar seeding over the (small) sample: one sign table,
     // exemplar = lowest (hk, vec_id) per bucket, biggest buckets first.
     val buckets = signBuckets(tr.select(col("vec_id"), col("embedding")),
@@ -706,23 +693,8 @@ object Similarity {
         transform(col("embedding"), x => x.cast("double")).as("ce"))
 
     val trained = (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val c = broadcast(cents.select(col("cid"), col("ce"),
-        VF.l2Norm(col("ce")).as("cn")))
-      // Argmax as a hash aggregate (max over (cos, -cid) structs), not a
-      // window: partial aggregation collapses the ×nCentroids candidate
-      // rows map-side BEFORE the exchange and there is no sort. The
-      // (rounded cos, -cid) key is total, so ties resolve to the lowest
-      // cid — identical to the window form the oracle replays.
-      val assigned = tr
-        .select(col("vec_id"), col("embedding"), VF.l2Norm(col("embedding")).as("nrm"))
-        .crossJoin(c)
-        .withColumn("acos",
-          round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
-        .groupBy("vec_id")
-        .agg(max(struct(col("acos"), (-col("cid")).as("negcid"),
-          col("embedding"), col("nrm"))).as("m"))
-        .select(col("m.embedding").as("embedding"), col("m.nrm").as("nrm"),
-          (-col("m.negcid")).as("cid"))
+      val assigned = cellArgmax(normed(tr, "vec_id", "embedding", "nrm"),
+        "vec_id", "embedding", "nrm", cents, "embedding", "nrm")
       // SPHERICAL mean: average unit vectors (x/‖v‖), not raw
       // components — the cosine-geometry centroid (centroid scale never
       // matters downstream, only direction). On the synthetic corpus the
@@ -749,27 +721,111 @@ object Similarity {
           coalesce(when(VF.normSq(col("ce_new")) > 0, col("ce_new")), col("ce"))
             .as("ce"))
     }
-    // Store-cache by the canonicalized plan (see storeCached): the
-    // trained table is a tiny (≤ nCentroids rows) "train once, serve
-    // forever" artifact — a repeat call with the same corpus + params
-    // reads scratch parquet instead of re-running Lloyd, for ANY
-    // number of distinct configs a session cycles (the in-memory memo's
-    // capacity bound was the r15..r17 bimodality). Then drop the
-    // sample cache (only the training itself reads it — on a cache hit
-    // the mark was never materialized, so unpersist just unregisters).
-    // The session is folded into explicit keys too (round 20, ADVICE):
-    // a second SparkSession re-using a (root, gen) identity must build
-    // its own artifact — the cached entry pins the BUILD session for
-    // the parquet read, and a stopped session's DataFrame is unusable.
-    val out = artifactKey match {
-      case Some(k) => storeCachedKeyed("trained",
-        corpus.sparkSession +: (k ++ Seq(nCentroids, iters, trainN, sp, dim)),
-        trained)
-      case None => storeCached("trained", trained)
-    }
-    tr.unpersist(blocking = false)
-    out
+    // Store-cache (see storeArtifact): the trained table is a tiny
+    // (≤ nCentroids rows) "train once, serve forever" artifact — a
+    // repeat call with the same corpus + params reads scratch parquet
+    // instead of re-running Lloyd, for ANY number of distinct configs a
+    // session cycles (the in-memory memo's capacity bound was the
+    // r15..r17 bimodality). Then drop the sample cache (only the
+    // training itself reads it — on a cache hit the mark was never
+    // materialized, so unpersist just unregisters).
+    try storeArtifact("trained", artifactKey,
+      Seq(nCentroids, iters, trainN, sp, dim), trained)
+    finally tr.unpersist(blocking = false)
   }
+
+  /** The `trainN` non-zero vectors of `corpus` with the lowest
+    * `md5(salt || vec_id)` (kept as `hk`) — a content-hash-ranked
+    * pseudo-random sample both engines reproduce, computed as a
+    * distributed top-N (TakeOrderedAndProject), so the sample never
+    * routes the corpus through one partition and never fully sorts it.
+    * PERSISTED: seeding references the sample several times and every
+    * Lloyd step once more — unpersisted, each reference re-scans the
+    * whole corpus to recompute the top-N (at 100 TB that is ~5 corpus
+    * scans for one training run); cached, training costs ONE corpus
+    * scan plus trainN-row work. The sample is bounded (trainN rows) so
+    * the cache never outgrows a single executor's store;
+    * MEMORY_AND_DISK spills rather than recomputes under pressure. The
+    * trainer releases it once its artifact is stored.
+    */
+  private def trainingSample(corpus: DataFrame, salt: String,
+      trainN: Int): DataFrame =
+    corpus
+      .select(col("vec_id"), col("embedding"),
+        md5(concat(lit(salt), col("vec_id").cast("string"))).as("hk"))
+      .where(VF.normSq(col("embedding")) > 0)
+      .orderBy("hk", "vec_id").limit(trainN)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** A centroid table (`cid`, `ce`) with its norms `cn` — the side every
+    * cell argmax and probe scores against (≤ nCentroids rows; callers
+    * broadcast it).
+    */
+  private[graft] def normedCentroids(centroids: DataFrame): DataFrame =
+    centroids.select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
+
+  /** Rounded cosine of vector `e` (norm `n`, id `id`) against the normed
+    * centroid on its row, failing loudly when the score is NULL: past
+    * the zero-norm filter that means the vector's length differs from
+    * the centroids' (the native dot is NULL on a length mismatch), and
+    * a NULL score would silently lose every argmax (cell 0 wins) and
+    * sort last in every probe — the same stance as [[lshTopK]]'s
+    * plan-time dim check.
+    */
+  private def cellCos(id: String, e: String, n: String): Column =
+    coalesce(VF.roundedCosine(col(e), col("ce"), col(n), col("cn")),
+      raise_error(concat(lit("vector "), col(id).cast("string"),
+        lit(" does not match the centroid dimension"))))
+
+  /** The IVF cell argmax — the per-row cost of every index build: each
+    * vector of `vecs` (id `id`, vector `e`, norm `n`) against the
+    * broadcast `centroids` (`cid`, `ce`), as a hash aggregate over
+    * (rounded cosine, -cid, `carry`…) structs, not a window: partial
+    * aggregation collapses the ×nCentroids candidate rows map-side
+    * BEFORE the exchange (one row per vector crosses the wire; struct
+    * max has no mutable hash buffer, so it plans as a partial+final
+    * SortAggregate) and there is no sort. The key is total, so ties go
+    * to the lowest cid — identical to the rank-1 window the oracles
+    * replay. Zero-norm vectors (no defined cosine; under ANSI the
+    * division throws) drop first, and a vector of the wrong length
+    * fails loudly ([[cellCos]]). Returns (`id`, `carry`…, `cid`).
+    */
+  private[graft] def cellArgmax(vecs: DataFrame, id: String, e: String,
+      n: String, centroids: DataFrame, carry: String*): DataFrame =
+    vecs.where(col(n) > 0)
+      .crossJoin(broadcast(normedCentroids(centroids)))
+      .withColumn("ccos", cellCos(id, e, n))
+      .groupBy(id)
+      .agg(max(struct(col("ccos") +: (-col("cid")).as("negcid") +:
+        carry.map(col): _*)).as("m"))
+      .select((col(id) +: carry.map(c => col(s"m.$c").as(c))) :+
+        (-col("m.negcid")).as("cid"): _*)
+
+  /** The query-side probe: the `nProbe` cells nearest each query vector
+    * — a row_number window over (rounded cosine desc, cid), so ties go
+    * to the lowest cid (the order the oracles replay) — over
+    * |queries|×nCentroids rows, the small side by construction. Same
+    * zero-norm filter and dimension guard as [[cellArgmax]]. Returns
+    * (`query_id`, `qe`, `carry`…, `qn`, `cid`, `ce`, `cn`, `ccos`,
+    * `crank`).
+    */
+  private[graft] def probeCells(queries: DataFrame, centroids: DataFrame,
+      nProbe: Int, carry: Column*): DataFrame = {
+    requireProbe(nProbe)
+    normed(queries, "query_id", "qe", "qn", carry: _*)
+      .where(col("qn") > 0)
+      .crossJoin(broadcast(normedCentroids(centroids)))
+      .withColumn("ccos", cellCos("query_id", "qe", "qn"))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))))
+      .where(col("crank") <= nProbe)
+  }
+
+  /** A probe depth below 1 selects no cell, so every result built on it
+    * would be silently empty.
+    */
+  private def requireProbe(nProbe: Int): Unit =
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
 
   /** IVF-style approximate top-k: a coarse quantizer partitions the
     * corpus into cells; queries probe the `nProbe` nearest cells and
@@ -779,9 +835,10 @@ object Similarity {
     * iterations over a hash-ranked sample (replacing the earlier
     * first-N-vec_ids placeholder, whose seeds inherit the id order's
     * correlations and at production scale leave cell sizes unbounded).
-    * Cell assignment is a broadcast join + windowed argmax — the corpus
-    * shuffles once, on the cell id; at 100 TB the cell-assigned corpus
-    * is the persisted index and queries touch nProbe/nCentroids of it.
+    * Cell assignment is a broadcast join + aggregate argmax
+    * ([[cellArgmax]]) — the corpus shuffles once, on the vector id; at
+    * 100 TB the cell-assigned corpus is the persisted index and queries
+    * touch nProbe/nCentroids of it.
     *
     * Defaults: scale `nCentroids` as ≈ √n (cell size n/k and probe cost
     * k then grow together as √n — 32k cells at 10⁹ vectors is still a
@@ -798,58 +855,35 @@ object Similarity {
       nCentroids: Int = 16, nProbe: Int = 8,
       lloydIters: Int = 2, trainN: Int = 4096,
       seedPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    // trainCentroids returns an ALREADY persisted+materialized table
-    // (and owns its cache lifetime — see releaseCaches), so the
-    // concurrent-broadcast race is closed there; the cn projection here
-    // recomputes per consumer over nCentroids rows, which is free.
     val centroids = trainCentroids(corpus, nCentroids, lloydIters, trainN,
         seedPlanes, dim)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-
-    def assign(df: DataFrame, idCol: String, keep: Int): DataFrame = {
-      val scored = df
-        .select(col("vec_id").as(idCol), col("embedding"),
-          VF.l2Norm(col("embedding")).as("nrm"))
-        .crossJoin(broadcast(centroids))
-        .withColumn("ccos",
-          round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
-      if (keep == 1)
-        // Corpus-side cell assignment — THE per-row cost at scale. An
-        // agg argmax (max over (cos, -cid) structs; compiles to a
-        // partial+final SortAggregate since struct max has no mutable
-        // hash buffer) collapses the ×nCentroids candidates map-side,
-        // so the exchange carries one row per vector instead of
-        // nCentroids; same result as the rank-1 window (total key,
-        // lowest cid on ties — the ordering the oracle replays).
-        scored.groupBy(col(idCol))
-          .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"),
-            col("embedding"), col("nrm"))).as("m"))
-          .select(col(idCol), col("m.embedding").as("embedding"),
-            col("m.nrm").as("nrm"), (-col("m.negcid")).as("cid"))
-      else {
-        // Query-side nProbe ranking: a window over |queries|×nCentroids
-        // rows — the small side by construction.
-        val w = Window.partitionBy(idCol).orderBy(col("ccos").desc, col("cid"))
-        scored.withColumn("crank", row_number().over(w))
-          .where(col("crank") <= keep)
-          .select(col(idCol), col("embedding"), col("nrm"), col("cid"))
-      }
-    }
-
-    val corpusCells = assign(corpus, "neighbor_id", keep = 1)
-      .withColumnRenamed("embedding", "ne").withColumnRenamed("nrm", "nn")
-    val queryCells = assign(queries, "query_id", keep = nProbe)
-      .withColumnRenamed("embedding", "qe").withColumnRenamed("nrm", "qn")
-
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    corpusCells.where(col("nn") > 0)
-      .join(broadcast(queryCells.where(col("qn") > 0)), Seq("cid"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    val queryCells = probeCells(queries, centroids, nProbe)
+      .select("query_id", "qe", "qn", "cid")
+    topK(cellPairs(corpusCells(corpus, centroids), queryCells), k)
+      .select(col("query_id"), col("neighbor_id"), col("cos"),
+        col("rank").cast("long").as("rank"))
   }
+
+  /** The float IVF tier's corpus side: (`neighbor_id`, `ne`, `carry`…,
+    * `nn`) assigned to cells by [[cellArgmax]], `carry` riding map-side
+    * through the argmax.
+    */
+  private def corpusCells(corpus: DataFrame, centroids: DataFrame,
+      carry: String*): DataFrame =
+    cellArgmax(normed(corpus, "neighbor_id", "ne", "nn", carry.map(col): _*),
+      "neighbor_id", "ne", "nn", centroids, "ne" +: "nn" +: carry: _*)
+
+  /** Candidate pairs of the float IVF tier: every corpus vector in a cell
+    * its query probes, self-pairs excluded, scored by rounded cosine.
+    * `corpusCells` carries (`neighbor_id`, `ne`, `nn`, `cid`),
+    * `queryCells` (`query_id`, `qe`, `qn`, `cid`); the query side is
+    * broadcast.
+    */
+  private def cellPairs(corpusCells: DataFrame, queryCells: DataFrame): DataFrame =
+    corpusCells.join(broadcast(queryCells), Seq("cid"))
+      .where(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos",
+        VF.roundedCosine(col("qe"), col("ne"), col("qn"), col("nn")))
 
   /** Recall@k audit of the IVF probe against brute-force ground truth —
     * the serving-quality measurement a production ANN deployment runs
@@ -864,84 +898,22 @@ object Similarity {
     *
     * Scale shape: the quantizer trains ONCE (not once per probe depth);
     * query cells are ranked to `max(nProbes)` in a single window and the
-    * per-depth views are residues of that one candidate join (a
-    * broadcast nProbes-row level table, `crank <= nprobe`), so corpus
-    * work is identical to one `ivfTopK` call at the deepest setting.
-    * Candidates and ground truth are each computed once
-    * (localCheckpoint) and feed both the hit join and the count
-    * aggregates. Ground truth is O(|corpus|·|queries|) by definition —
-    * the audit runs on a bounded held-out query sample, never the
-    * corpus against itself.
+    * per-depth views are residues of that one candidate join
+    * ([[auditCandidates]]), so corpus work is identical to one
+    * `ivfTopK` call at the deepest setting. Candidates and ground truth
+    * are each computed once and feed both the hit join and the count
+    * aggregates ([[recallRows]]). Ground truth is O(|corpus|·|queries|)
+    * by definition — the audit runs on a bounded held-out query sample,
+    * never the corpus against itself.
     */
   def ivfRecallAudit(queries: DataFrame, corpus: DataFrame, k: Int,
       nProbes: Seq[Int], nCentroids: Int = 16,
       lloydIters: Int = 2, trainN: Int = 4096,
       seedPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    require(nProbes.nonEmpty, "nProbes must be non-empty")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val maxProbe = nProbes.max
-
-    val exact = cachedTruth(queries, corpus, k)
-
-    val centroids = trainCentroids(corpus, nCentroids, lloydIters, trainN,
-        seedPlanes, dim)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-    def scored(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vec_id").as(idCol), col("embedding"),
-        VF.l2Norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
-    // Corpus cells: the same agg-argmax as ivfTopK (one row per vector
-    // crosses the exchange).
-    val corpusCells = scored(corpus, "neighbor_id")
-      .groupBy(col("neighbor_id"))
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"),
-        col("embedding"), col("nrm"))).as("m"))
-      .select(col("neighbor_id"), col("m.embedding").as("ne"),
-        col("m.nrm").as("nn"), (-col("m.negcid")).as("cid"))
-    // Query cells ranked to the DEEPEST probe; crank survives so every
-    // shallower depth is a filter, not a recomputation.
-    val qw = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
-    val queryCells = scored(queries, "query_id")
-      .withColumn("crank", row_number().over(qw))
-      .where(col("crank") <= maxProbe)
-      .select(col("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cid"), col("crank"))
-
-    val levels = broadcast(nProbes.sorted.toDF("nprobe"))
-    val cand = graft.util.ScratchCheckpoints.register(
-      corpusCells.where(col("nn") > 0)
-        .join(broadcast(queryCells.where(col("qn") > 0)), Seq("cid"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("cos",
-          round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-        .join(levels, col("crank") <= col("nprobe"))
-        .select("nprobe", "query_id", "neighbor_id", "cos")
-        .localCheckpoint())
-
-    val apw = Window.partitionBy("nprobe", "query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val approx = cand
-      .withColumn("rank", row_number().over(apw))
-      .where(col("rank") <= k)
-      .select("nprobe", "query_id", "neighbor_id")
-
-    val truthAgg = exact.agg(count(lit(1)).as("n_truth"),
-      countDistinct("query_id").as("n_queries"))
-    val hitAgg = approx
-      .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("nprobe").agg(count(lit(1)).as("n_hit"))
-    cand.groupBy("nprobe").agg(count(lit(1)).as("n_cand"))
-      .join(hitAgg, Seq("nprobe"), "left")
-      .crossJoin(broadcast(truthAgg))
-      .select(col("nprobe"), col("n_queries"), col("n_truth"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        round(coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_truth"), 6)
-          .as("recall"),
-        col("n_cand"))
-      .orderBy("nprobe")
+    val cand = auditCandidates(queries, corpus, nProbes,
+      trainCentroids(corpus, nCentroids, lloydIters, trainN, seedPlanes, dim))
+    val approx = topK(cand, k, by = Seq("nprobe", "query_id"))
+    recallRows(approx, cand, cachedTruth(queries, corpus, k)).orderBy("nprobe")
   }
 
   /** FILTERED ANN audit — the pre-filter vs post-filter law every
@@ -972,105 +944,87 @@ object Similarity {
     * deepening K by ~1/selectivity (not probing deeper), which is
     * just pre-filter's candidate volume paid later and larger.
     * Same determinism contract as [[ivfRecallAudit]] (6dp-rounded
-    * cosines, id tie-breaks, zero-norm exclusion on both engines).
+    * cosines, id tie-breaks, zero-norm exclusion on both engines), and
+    * the same candidate build and summary rows.
     */
   def filteredIvfRecallAudit(queries: DataFrame, corpus: DataFrame,
       labelValue: Int, k: Int, nProbes: Seq[Int], nCentroids: Int = 16,
       lloydIters: Int = 2, trainN: Int = 4096,
       seedPlanes: Int = 6, dim: Int = 64,
       deepenFactor: Int = 10): DataFrame = {
-    require(nProbes.nonEmpty, "nProbes must be non-empty")
     require(deepenFactor >= 1, s"deepenFactor must be >= 1, got $deepenFactor")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val maxProbe = nProbes.max
-
-    val exact = cachedTruth(queries,
-      corpus.where(col("label") === labelValue), k)
-
-    val centroids = trainCentroids(corpus, nCentroids, lloydIters, trainN,
-        seedPlanes, dim)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-    def scored(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vec_id").as(idCol), col("embedding"),
-        VF.l2Norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
     // Full-corpus cells, label carried map-side (the shared index
     // serves every predicate; the label column rides the same scan to
     // the filter stage — no second corpus join).
-    val corpusCells = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("label"), VF.l2Norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
-      .groupBy(col("neighbor_id"))
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"),
-        col("embedding"), col("nrm"), col("label"))).as("m"))
-      .select(col("neighbor_id"), col("m.embedding").as("ne"),
-        col("m.nrm").as("nn"), (-col("m.negcid")).as("cid"),
-        col("m.label").as("label"))
-    val qw = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
-    val queryCells = scored(queries, "query_id")
-      .withColumn("crank", row_number().over(qw))
-      .where(col("crank") <= maxProbe)
-      .select(col("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cid"), col("crank"))
-
-    val levels = broadcast(nProbes.sorted.toDF("nprobe"))
-    val cand = graft.util.ScratchCheckpoints.register(
-      corpusCells.where(col("nn") > 0)
-        .join(broadcast(queryCells.where(col("qn") > 0)), Seq("cid"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("cos",
-          round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-        .join(levels, col("crank") <= col("nprobe"))
-        .select("nprobe", "query_id", "neighbor_id", "cos", "label")
-        .localCheckpoint())
-
-    val apw = Window.partitionBy("nprobe", "query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
+    val cand = auditCandidates(queries, corpus, nProbes,
+      trainCentroids(corpus, nCentroids, lloydIters, trainN, seedPlanes, dim),
+      "label")
+    val exact = cachedTruth(queries,
+      corpus.where(col("label") === labelValue), k)
+    val matches = col("label") === labelValue
+    val byDepth = Seq("nprobe", "query_id")
     // PRE: predicate before ranking — every slot goes to a match.
-    val pre = cand.where(col("label") === labelValue)
-      .withColumn("rank", row_number().over(apw))
-      .where(col("rank") <= k)
-      .select("nprobe", "query_id", "neighbor_id")
+    val pre = topK(cand.where(matches), k, by = byDepth)
     // POST: rank everything, filter after — survivors ≤ k.
-    val post = cand
-      .withColumn("rank", row_number().over(apw))
-      .where(col("rank") <= k && col("label") === labelValue)
-      .select("nprobe", "query_id", "neighbor_id")
+    val post = topK(cand, k, by = byDepth).where(matches)
     // POST-DEEP: the documented fix — deepen the retrieved set by
     // ~1/selectivity, filter, THEN take k of the survivors. Recall
     // should recover to pre-filter's; the price is the deep ranking.
-    val kDeep = k * deepenFactor
-    val postDeep = cand
-      .withColumn("rank", row_number().over(apw))
-      .where(col("rank") <= kDeep && col("label") === labelValue)
-      .withColumn("rank2", row_number().over(apw))
-      .where(col("rank2") <= k)
-      .select("nprobe", "query_id", "neighbor_id")
+    val postDeep = topK(topK(cand, k * deepenFactor, by = byDepth).where(matches),
+      k, rank = "rank2", by = byDepth)
+    def rows(apx: DataFrame, cands: DataFrame, tag: String): DataFrame =
+      recallRows(apx, cands, exact).select(lit(tag).as("strategy"), col("*"))
+    rows(pre, cand.where(matches), "pre")
+      .unionByName(rows(post, cand, "post"))
+      .unionByName(rows(postDeep, cand, "post_deep"))
+      .orderBy("strategy", "nprobe")
+  }
 
+  /** The IVF audits' per-depth candidate table (`nprobe`, `query_id`,
+    * `neighbor_id`, `cos`, `carry`…): corpus cells assigned once, query
+    * cells ranked to the DEEPEST probe with `crank` kept, so every
+    * shallower depth is a broadcast-level filter (`crank <= nprobe`)
+    * over ONE candidate join, not a recomputation. Checkpointed once:
+    * it feeds both the per-depth ranking and the count aggregates.
+    * `centroids` is evaluated after the depth checks, so a bad depth
+    * fails before any training runs.
+    */
+  private def auditCandidates(queries: DataFrame, corpus: DataFrame,
+      nProbes: Seq[Int], centroids: => DataFrame, carry: String*): DataFrame = {
+    require(nProbes.nonEmpty, "nProbes must be non-empty")
+    nProbes.foreach(requireProbe)
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val cents = centroids
+    val queryCells = probeCells(queries, cents, nProbes.max)
+      .select("query_id", "qe", "qn", "cid", "crank")
+    val levels = broadcast(nProbes.sorted.toDF("nprobe"))
+    graft.util.ScratchCheckpoints.register(
+      cellPairs(corpusCells(corpus, cents, carry: _*), queryCells)
+        .join(levels, col("crank") <= col("nprobe"))
+        .select(("nprobe" +: "query_id" +: "neighbor_id" +: "cos" +: carry).map(col): _*)
+        .localCheckpoint())
+  }
+
+  /** One row per probe depth of an IVF audit: `n_hit` = ground-truth
+    * (`exact`) neighbors recovered by the depth's top-k (`approx`),
+    * `recall` = n_hit/n_truth, and `n_cand` = the candidate volume that
+    * depth scored (`cands`) — the cost axis. A depth that recovers
+    * nothing keeps its row with n_hit 0.
+    */
+  private def recallRows(approx: DataFrame, cands: DataFrame,
+      exact: DataFrame): DataFrame = {
     val truthAgg = exact.agg(count(lit(1)).as("n_truth"),
       countDistinct("query_id").as("n_queries"))
-    def summarize(apx: DataFrame, candOf: DataFrame, tag: String): DataFrame = {
-      val hits = apx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("nprobe").agg(count(lit(1)).as("n_hit"))
-      candOf.groupBy("nprobe").agg(count(lit(1)).as("n_cand"))
-        .join(hits, Seq("nprobe"), "left")
-        .crossJoin(broadcast(truthAgg))
-        .select(lit(tag).as("strategy"), col("nprobe"), col("n_queries"),
-          col("n_truth"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double")
-            / col("n_truth"), 6).as("recall"),
-          col("n_cand"))
-    }
-    summarize(pre, cand.where(col("label") === labelValue), "pre")
-      .unionByName(summarize(post, cand, "post"))
-      .unionByName(summarize(postDeep, cand, "post_deep"))
-      .orderBy("strategy", "nprobe")
+    val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy("nprobe").agg(count(lit(1)).as("n_hit"))
+    val nHit = coalesce(col("n_hit"), lit(0L))
+    cands.groupBy("nprobe").agg(count(lit(1)).as("n_cand"))
+      .join(hits, Seq("nprobe"), "left")
+      .crossJoin(broadcast(truthAgg))
+      .select(col("nprobe"), col("n_queries"), col("n_truth"), nHit.as("n_hit"),
+        round(nHit.cast("double") / col("n_truth"), 6).as("recall"),
+        col("n_cand"))
   }
 
   /** Per-dimension quantization grid for the int8 index: ONE row with
@@ -1097,9 +1051,10 @@ object Similarity {
     * production index stores the 2·dim-double grid ONCE, see
     * [[int8Index]]), reconstruct midpoints, and assign cells on the
     * reconstruction — after encoding, the index sees codes only. Cell
-    * assignment is the same partial-before-exchange struct-argmax as
-    * [[ivfTopK]]: one row per vector crosses the wire, not ×nCentroids.
-    * Returns (`neighbor_id`, `qcode`, `re`, `rn`, `cid`).
+    * assignment is [[cellArgmax]] (one row per vector crosses the wire,
+    * not ×nCentroids); its zero-norm filter drops the midpoint vectors
+    * that are zero-norm in degenerate grids. Returns (`neighbor_id`,
+    * `qcode`, `re`, `rn`, `cid`).
     */
   private def int8CorpusCells(corpus: DataFrame, centroids: DataFrame,
       stats: DataFrame): DataFrame = {
@@ -1111,17 +1066,7 @@ object Similarity {
       .select(col("neighbor_id"), col("qcode"),
         QE.int8Recon(col("qcode"), col("lo"), col("hi")).as("re"))
       .withColumn("rn", VF.l2Norm(col("re")))
-      // Midpoint vectors are zero-norm only in degenerate grids; the
-      // guard keeps the cosine NaN-free on both engines.
-      .where(col("rn") > 0)
-    recon.crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("re"), col("ce")) / (col("rn") * col("cn")), 6))
-      .groupBy("neighbor_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"),
-        col("qcode"), col("re"), col("rn"))).as("m"))
-      .select(col("neighbor_id"), col("m.qcode").as("qcode"),
-        col("m.re").as("re"), col("m.rn").as("rn"), (-col("m.negcid")).as("cid"))
+    cellArgmax(recon, "neighbor_id", "re", "rn", centroids, "qcode", "re", "rn")
   }
 
   /** The PERSISTED int8 index artifact: (`neighbor_id`, `cid`, `qcode`)
@@ -1163,11 +1108,9 @@ object Similarity {
     * can never hit again, evicting the trainings that do.
     */
   def int8Encode(corpus: DataFrame, grid: DataFrame,
-      centroids: DataFrame): DataFrame = {
-    val cents = centroids.select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-    int8CorpusCells(corpus, cents, grid)
+      centroids: DataFrame): DataFrame =
+    int8CorpusCells(corpus, centroids, grid)
       .select("neighbor_id", "cid", "qcode")
-  }
 
   /** INCREMENTAL index maintenance — the "train once, serve forever"
     * artifact gains an append path: new corpus vectors are encoded on
@@ -1219,13 +1162,11 @@ object Similarity {
     */
   private def reconFit(recon: DataFrame, centroids: DataFrame,
       alias: String): DataFrame = {
-    val cents = broadcast(
-      centroids.select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn")))
     recon.withColumn("rn", VF.l2Norm(col("re")))
       .where(col("rn") > 0)
-      .crossJoin(cents)
+      .crossJoin(broadcast(normedCentroids(centroids)))
       .withColumn("ccos",
-        round(VF.dot(col("re"), col("ce")) / (col("rn") * col("cn")), 6))
+        VF.roundedCosine(col("re"), col("ce"), col("rn"), col("cn")))
       .groupBy(col("rid"))
       .agg(max("ccos").as("best"))
       .agg((round(sum("best"), 6) / count(lit(1))).as(alias))
@@ -1327,62 +1268,39 @@ object Similarity {
     require(rerankDepth >= k, s"rerankDepth ($rerankDepth) must be >= k ($k)")
     val centroids = trainCentroids(corpus, nCentroids, lloydIters, trainN,
         seedPlanes, dim)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
-    val stats = int8Stats(corpus, dim)
-
-    val assigned = int8CorpusCells(corpus, centroids, stats)
+    val assigned = int8CorpusCells(corpus, centroids, int8Stats(corpus, dim))
       .select("neighbor_id", "re", "rn", "cid")
     int8Query(queries, assigned, centroids, corpus, k, rerankDepth, nProbe)
   }
 
-  /** Query tail shared by [[ivfTopKInt8]] (in-plan build) and
-    * [[queryInt8Index]] (persisted index): float probe → int8 candidate
-    * rank → exact float re-rank. `assigned` carries (`neighbor_id`,
-    * `re`, `rn`, `cid`); `centroids` carries (`cid`, `ce`, `cn`).
+  /** Query tail shared by [[ivfTopKInt8]] (in-plan build),
+    * [[queryInt8Index]] (persisted index) and [[hardNegativesInt8]]:
+    * float probe → int8 candidate rank → exact float re-rank.
+    * `assigned` carries (`neighbor_id`, `re`, `rn`, `cid`); `centroids`
+    * carries (`cid`, `ce`). With `labels`, `assigned` also carries the
+    * corpus label as `n_lab`, and only DIFFERENT-label pairs enter the
+    * candidate rank — the label test rides the candidate filter, so
+    * every rerankDepth slot holds a genuine negative.
     */
   private def int8Query(queries: DataFrame, assigned: DataFrame,
       centroids: DataFrame, corpus: DataFrame, k: Int,
-      rerankDepth: Int, nProbe: Int): DataFrame = {
-    // Query-side probe: float queries rank the nProbe nearest cells —
-    // a window over |queries|×nCentroids rows, the small side.
-    val wq = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
-    val queryCells = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VF.l2Norm(col("embedding")).as("qn"))
-      .where(col("qn") > 0)
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6))
-      .withColumn("crank", row_number().over(wq))
-      .where(col("crank") <= nProbe)
-      .select(col("query_id"), col("qe"), col("qn"), col("cid"))
-
+      rerankDepth: Int, nProbe: Int, labels: Boolean = false): DataFrame = {
+    val lab = if (labels) Seq("q_lab") else Nil
+    val queryCells = probeCells(queries, centroids, nProbe,
+        lab.map(l => col("label").as(l)): _*)
+      .select((Seq("query_id", "qe", "qn") ++ lab :+ "cid").map(col): _*)
+    val notSelf = col("query_id") =!= col("neighbor_id")
     // Int8-side candidate ranking; only the top rerankDepth per query
     // survive to the float re-rank. (acos desc, neighbor_id) is a total
     // order, so the cutoff is deterministic cross-engine.
-    val wa = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
-    val survivors = assigned
-      .join(broadcast(queryCells), Seq("cid"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("acos",
-        round(VF.dot(col("qe"), col("re")) / (col("qn") * col("rn")), 6))
-      .withColumn("arank", row_number().over(wa))
-      .where(col("arank") <= rerankDepth)
+    val survivors = topK(assigned
+        .join(broadcast(queryCells), Seq("cid"))
+        .where(if (labels) notSelf && col("q_lab") =!= col("n_lab") else notSelf)
+        .withColumn("acos",
+          VF.roundedCosine(col("qe"), col("re"), col("qn"), col("rn"))),
+        rerankDepth, score = "acos", rank = "arank")
       .select("query_id", "neighbor_id")
-
-    // Exact float re-rank of survivors only.
-    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      VF.l2Norm(col("embedding")).as("qn")).where(col("qn") > 0)
-    val cv = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
-      VF.l2Norm(col("embedding")).as("nn")).where(col("nn") > 0)
-    val wf = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    survivors
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos", round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(wf).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    exactRerank(survivors, queries, corpus, k, labels)
   }
 
   /** Serve top-k from a PERSISTED int8 index — the production read path:
@@ -1399,28 +1317,14 @@ object Similarity {
       rerankDepth: Int = 30, nProbe: Int = 8): DataFrame = {
     import graft.functions.{QuantExpressions => QE}
     require(rerankDepth >= k, s"rerankDepth ($rerankDepth) must be >= k ($k)")
-    val cents = centroids.select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
     val assigned = index.crossJoin(broadcast(grid))
       .select(col("neighbor_id"), col("cid"),
         QE.int8Recon(col("qcode"), col("lo"), col("hi")).as("re"))
       .withColumn("rn", VF.l2Norm(col("re")))
       .where(col("rn") > 0)
-    int8Query(queries, assigned, cents, corpus, k, rerankDepth, nProbe)
+    int8Query(queries, assigned, centroids, corpus, k, rerankDepth, nProbe)
   }
 
-  /** Approximate top-k: L independent random-hyperplane tables; a
-    * candidate is any corpus vector sharing a bucket with the query in at
-    * least one table; candidates are re-ranked by exact cosine. Recall
-    * rises with `tables` and falls with `planes` (bucket granularity).
-    *
-    * Defaults measured on the synthetic embeddings (weak neighbor
-    * structure — top-10 cosines ≈ 0.3-0.4, near LSH's worst case):
-    * planes=8/tables=4 → recall@10 ≈ 0.12; planes=6/tables=8 ≈ 0.4 at
-    * ~4× the candidates. Corpora with real cluster structure sit far
-    * above both; [[ivfTopK]] (measured 0.88 here) is the better fit when
-    * neighbors share coarse cells. Scale: planes should grow ~log2 of
-    * corpus size to keep bucket sizes constant.
-    */
   /** LSH candidate pairs BEFORE the exact re-rank — the bucket-collision
     * stage of [[lshTopK]], exposed (like
     * [[graft.operators.Dedup.simhashCandidates]]) so candidate volume —
@@ -1456,28 +1360,26 @@ object Similarity {
       .dropDuplicates("query_id", "neighbor_id")
   }
 
+  /** Approximate top-k: L independent random-hyperplane tables; a
+    * candidate is any corpus vector sharing a bucket with the query in at
+    * least one table; candidates are re-ranked by exact cosine. Recall
+    * rises with `tables` and falls with `planes` (bucket granularity).
+    *
+    * Defaults measured on the synthetic embeddings (weak neighbor
+    * structure — top-10 cosines ≈ 0.3-0.4, near LSH's worst case):
+    * planes=8/tables=4 → recall@10 ≈ 0.12; planes=6/tables=8 ≈ 0.4 at
+    * ~4× the candidates. Corpora with real cluster structure sit far
+    * above both; [[ivfTopK]] (measured 0.88 here) is the better fit when
+    * neighbors share coarse cells. Scale: planes should grow ~log2 of
+    * corpus size to keep bucket sizes constant.
+    */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       planes: Int = 6, tables: Int = 8, dim: Int = 64,
-      flip1: Boolean = false): DataFrame = {
+      flip1: Boolean = false): DataFrame =
     // Vectors and norms join back for the surviving candidates alone
     // (the same join-back shape the generated oracle uses).
-    val candidates = lshCandidates(queries, corpus, planes, tables, dim, flip1)
-    // Zero-norm vectors (no defined cosine) drop at this inner join —
-    // identical output to filtering them before bucketing.
-    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      VF.l2Norm(col("embedding")).as("qn")).where(col("qn") > 0)
-    val cv = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
-      VF.l2Norm(col("embedding")).as("nn")).where(col("nn") > 0)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    candidates
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos",
-        round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
+    exactRerank(lshCandidates(queries, corpus, planes, tables, dim, flip1),
+      queries, corpus, k)
 
   // ------------------------------------------------------------------ PQ
   /** (vec_id, sub, s) — each vector split into `m` contiguous
@@ -1511,9 +1413,10 @@ object Similarity {
     *    (hash, vec_id) order. Subspaces are `dim/m`-dimensional, so the
     *    sign-bucket spreading [[trainCentroids]] needs for one global
     *    quantizer is overkill here — `m` independent low-dim problems
-    *    with hash-uniform seeds converge the same (IvfProbe-style
-    *    measurement in SimilaritySpec: planted subspace clusters are
-    *    separated at iters=2);
+    *    with hash-uniform seeds converge the same (SCALE.md "Product
+    *    quantization (round 6)" has the measured recall table, and
+    *    SimilaritySpec pins planted subspace clusters separated at
+    *    iters=2);
     *  - Lloyd assigns by SQUARED L2 rounded to 6dp (d² = s·s − 2·s·c +
     *    c·c, ties to the lowest cid), re-centers with the per-dimension
     *    RAW mean rounded to 6dp (L2 geometry — not the spherical mean,
@@ -1526,22 +1429,14 @@ object Similarity {
     * same two shuffles, not m sequential jobs. Scale: training touches
     * only the trainN-row sample; codebooks are `m·ksub·dim/m` doubles
     * (dim total per codeword row) — always broadcastable.
+    *
+    * `artifactKey`: see [[trainCentroids]].
     */
-  /** `artifactKey`: see [[trainCentroids]]. */
   def trainPqCodebooks(corpus: DataFrame, m: Int = 4, ksub: Int = 16,
       iters: Int = 2, trainN: Int = 1024, dim: Int = 64,
       artifactKey: Option[Seq[Any]] = None): DataFrame = {
     require(ksub <= 256, s"ksub=$ksub must fit a one-byte code")
-    val keyed = corpus
-      .select(col("vec_id"), col("embedding"),
-        md5(concat(lit("pq:"), col("vec_id").cast("string"))).as("hk"))
-      .where(VF.normSq(col("embedding")) > 0)
-    // Persisted for the same reason trainCentroids persists its sample:
-    // seeding + every Lloyd step re-reads it, and unpersisted each
-    // reference is a fresh corpus-wide top-N scan. Released once the
-    // memoized codebooks below are materialized.
-    val tr = keyed.orderBy("hk", "vec_id").limit(trainN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tr = trainingSample(corpus, "pq:", trainN)
     val tsv = subvectors(tr, m, dim, extraCols = Seq("hk"))
     val wSeed = Window.partitionBy("sub").orderBy("hk", "vec_id")
     val seeds = tsv.withColumn("rn", row_number().over(wSeed))
@@ -1549,18 +1444,7 @@ object Similarity {
       .select(col("sub"), (col("rn") - 1).cast("long").as("cid"),
         col("s").as("ce"))
     val trained = (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val c = broadcast(cents.select(col("sub"), col("cid"), col("ce"),
-        VF.dot(col("ce"), col("ce")).as("cc")))
-      // Argmin as a hash aggregate over (d², cid) structs (partial
-      // aggregation collapses the ×ksub candidate rows map-side), same
-      // shape as trainCentroids' argmax.
-      val assigned = tsv
-        .withColumn("ss", VF.dot(col("s"), col("s")))
-        .join(c, Seq("sub"))
-        .withColumn("d2",
-          round(col("ss") - lit(2.0) * VF.dot(col("s"), col("ce")) + col("cc"), 6))
-        .groupBy("vec_id", "sub")
-        .agg(min(struct(col("d2"), col("cid"), col("s"))).as("mn"))
+      val assigned = nearestCodeword(tsv, cents, "s")
         .select(col("sub"), col("mn.cid").as("cid"), col("mn.s").as("s"))
       val updated = assigned
         .select(col("sub"), col("cid"), posexplode(col("s")).as(Seq("d", "x")))
@@ -1572,17 +1456,33 @@ object Similarity {
       cents.join(updated, Seq("sub", "cid"), "left")
         .select(col("sub"), col("cid"), coalesce(col("ue"), col("ce")).as("ce"))
     }
-    // storeCached materializes eagerly (writes the artifact or returns
-    // the stored table), so the training sample is releasable as soon
-    // as it returns; codebooks are m·ksub rows — the same tiny
+    // storeArtifact materializes eagerly (writes the artifact or
+    // returns the stored table), so the training sample is releasable
+    // as soon as it returns; codebooks are m·ksub rows — the same tiny
     // train-once artifact class as the IVF centroids.
-    // Session folded into explicit keys — see trainCentroids.
-    try artifactKey match {
-      case Some(k) => storeCachedKeyed("pq",
-        corpus.sparkSession +: (k ++ Seq(m, ksub, iters, trainN, dim)), trained)
-      case None => storeCached("pq", trained)
-    }
+    try storeArtifact("pq", artifactKey, Seq(m, ksub, iters, trainN, dim), trained)
     finally tr.unpersist(blocking = false)
+  }
+
+  /** The PQ argmin: per (`vec_id`, `sub`) subvector `s` of `subs`, the
+    * nearest codeword of `codebooks` (`sub`, `cid`, `ce`) by SQUARED L2
+    * rounded to 6dp (d² = s·s − 2·s·c + c·c), ties to the lowest cid, as
+    * `mn` = min(struct(d2, cid, `carry`…)) — a hash aggregate whose
+    * partials collapse the ×ksub candidate rows map-side (the
+    * [[cellArgmax]] shape), so the exchange carries (vec_id, sub,
+    * best-struct) only. The codebooks are broadcast.
+    */
+  private def nearestCodeword(subs: DataFrame, codebooks: DataFrame,
+      carry: String*): DataFrame = {
+    val c = broadcast(codebooks.select(col("sub"), col("cid"), col("ce"),
+      VF.dot(col("ce"), col("ce")).as("cc")))
+    subs
+      .withColumn("ss", VF.dot(col("s"), col("s")))
+      .join(c, Seq("sub"))
+      .withColumn("d2",
+        round(col("ss") - lit(2.0) * VF.dot(col("s"), col("ce")) + col("cc"), 6))
+      .groupBy("vec_id", "sub")
+      .agg(min(struct(col("d2") +: col("cid") +: carry.map(col): _*)).as("mn"))
   }
 
   /** PQ-encode a corpus against trained codebooks: (`vec_id`, `sub`,
@@ -1594,19 +1494,10 @@ object Similarity {
     * best-struct) only).
     */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame, m: Int = 4,
-      dim: Int = 64): DataFrame = {
-    val c = broadcast(codebooks.select(col("sub"), col("cid"), col("ce"),
-      VF.dot(col("ce"), col("ce")).as("cc")))
-    subvectors(corpus, m, dim)
-      .withColumn("ss", VF.dot(col("s"), col("s")))
-      .join(c, Seq("sub"))
-      .withColumn("d2",
-        round(col("ss") - lit(2.0) * VF.dot(col("s"), col("ce")) + col("cc"), 6))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("d2"), col("cid"))).as("mn"))
+      dim: Int = 64): DataFrame =
+    nearestCodeword(subvectors(corpus, m, dim), codebooks)
       .select(col("vec_id"), col("sub"), col("mn.cid").as("code"),
         col("mn.d2").as("err"))
-  }
 
   /** The corpus-side PQ code table as a MEMOIZED build artifact —
     * [[int8IndexWith]]'s rationale for the PQ tier: the encoded corpus
@@ -1731,18 +1622,6 @@ object Similarity {
     (0 until m).map(i => sum(when(sub === i, v).otherwise(lit(0.0))))
       .reduce(_ + _)
 
-  /** Asymmetric-distance (ADC) top-k over PQ codes: each query computes
-    * its m·ksub lookup table of subvector·codeword dot products ONCE
-    * (queries × broadcast codebooks — tiny), then scores every corpus
-    * vector as the sum of m table lookups on its codes, never touching
-    * corpus floats. The approximate similarity is the dot product with
-    * the RECONSTRUCTION, normalized by query norm and reconstructed
-    * norm — the FAISS IVF-PQ serving shape re-expressed relationally:
-    * codes ⋈ broadcast LUT, two partial-aggregated sums, one top-k.
-    * Memory at scale: the scored table is m bytes + one id per corpus
-    * row; exactness is [[pqEncode]]'s `err` audit + the caller's choice
-    * of m/ksub, not this operator's concern.
-    */
   /** The per-query ADC lookup table PIVOTED to one flat array per
     * query — `qlut[sub·ksub + cid] = q_sub · codeword(sub, cid)` — plus
     * the query norm, in ONE aggregate (one exchange; the norm is the
@@ -1817,7 +1696,26 @@ object Similarity {
         lit(i) * ksub + element_at(ncodes, i + 1).cast("int") + 1))
       .reduce(_ + _)
 
-  /** Round-21 shape (VERDICT r20 #1): the flat broadcast-LUT join
+  /** The rounded ADC cosine of a (pivoted corpus row, pivoted query
+    * LUT) pair: [[adcDot]] over the query norm `qn` and the
+    * reconstructed norm √`rn2`.
+    */
+  private def adcCos(m: Int): Column =
+    round(adcDot(col("qlut"), col("ksub"), col("ncodes"), m)
+      / (col("qn") * sqrt(col("rn2"))), 6)
+
+  /** Asymmetric-distance (ADC) top-k over PQ codes: each query computes
+    * its m·ksub lookup table of subvector·codeword dot products ONCE
+    * (queries × broadcast codebooks — tiny), then scores every corpus
+    * vector as the sum of m table lookups on its codes, never touching
+    * corpus floats. The approximate similarity is the dot product with
+    * the RECONSTRUCTION, normalized by query norm and reconstructed
+    * norm — the FAISS IVF-PQ serving shape re-expressed relationally:
+    * codes ⋈ broadcast LUT, two partial-aggregated sums, one top-k.
+    * Memory at scale: the scored table is m bytes + one id per corpus
+    * row; exactness is [[pqEncode]]'s `err` audit + the caller's choice
+    * of m/ksub, not this operator's concern.    *
+    * Round-21 shape (VERDICT r20 #1): the flat broadcast-LUT join
     * exploded |queries|·|corpus|·m rows (10M at sf0.1) through a hash
     * aggregate just to sum m lookups per (query, vector) pair. Pivoting
     * both sides first (codes → one row per vector, LUT → one flat
@@ -1832,15 +1730,12 @@ object Similarity {
       codebooks: DataFrame, k: Int, m: Int = 4, dim: Int = 64): DataFrame = {
     val vecs = memoized("adcvecs", adcCorpusSide(codes, codebooks, m))
     val qside = adcQuerySide(queries, codebooks, m, dim)
-    val w = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
-    vecs.join(broadcast(qside), col("vec_id") =!= col("query_id"))
-      .where(col("rn2") > 0 && col("qn") > 0)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(adcDot(col("qlut"), col("ksub"), col("ncodes"), m)
-          / (col("qn") * sqrt(col("rn2"))), 6).as("acos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "acos", "rank")
+    topK(vecs.join(broadcast(qside), col("vec_id") =!= col("query_id"))
+        .where(col("rn2") > 0 && col("qn") > 0)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          adcCos(m).as("acos")), k, score = "acos")
+      .select(col("query_id"), col("neighbor_id"), col("acos"),
+        col("rank").cast("long").as("rank"))
   }
 
   /** Reference form of [[pqAdcTopK]]: the flat broadcast-LUT join it
@@ -1867,26 +1762,30 @@ object Similarity {
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(subspaceSum(m, codes("sub"), col("qc")).as("dot"),
         subspaceSum(m, codes("sub"), col("cc")).as("rn2"))
-    val w = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
-    scored
-      .join(broadcast(qn), "query_id")
-      .where(col("query_id") =!= col("neighbor_id") && col("rn2") > 0 && col("qn") > 0)
-      .withColumn("acos", round(col("dot") / (col("qn") * sqrt(col("rn2"))), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "acos", "rank")
+    topK(scored
+        .join(broadcast(qn), "query_id")
+        .where(col("query_id") =!= col("neighbor_id") && col("rn2") > 0 && col("qn") > 0)
+        .withColumn("acos", round(col("dot") / (col("qn") * sqrt(col("rn2"))), 6)),
+        k, score = "acos")
+      .select(col("query_id"), col("neighbor_id"), col("acos"),
+        col("rank").cast("long").as("rank"))
   }
 
-  /** The production PQ serving path: ADC candidate generation at
-    * `rerankDepth`, then exact float cosine over the survivors alone —
-    * the same candidates-then-exact composition [[ivfTopKInt8]] uses,
-    * with the candidate tier 16× smaller (m bytes/vector). The full
-    * corpus is touched only through its code table; float vectors are
-    * fetched for ≤ `rerankDepth` rows per query (an id-keyed join —
-    * at scale the point lookups a columnar store serves without a
-    * scan). Recall == the ADC candidate recall at `rerankDepth`
-    * (PqProbe measures it; the exact re-rank loses nothing).
+  /** Coarse-cell assignment — the IVF build/append primitive: cosine
+    * argmax of every corpus vector against the (broadcast) centroid
+    * table ([[cellArgmax]]: ties to the lower cid, zero-norm vectors
+    * dropped, a vector of the wrong length fails loudly). ONE map-side
+    * pass over `corpus` followed by the partial-before-exchange
+    * struct-argmax: the per-row candidate fan-out is combined map-side,
+    * so the shuffle carries one row per vector, not one per (vector,
+    * centroid). `centroids` needs (cid, ce); a precomputed `cn` norm
+    * column is recomputed harmlessly. Returns (vec_id, cell).
     */
+  def ivfCellAssign(corpus: DataFrame, centroids: DataFrame): DataFrame =
+    cellArgmax(normed(corpus, "vec_id", "embedding", "nrm"),
+        "vec_id", "embedding", "nrm", centroids)
+      .select(col("vec_id"), col("cid").as("cell"))
+
   /** The composed IVF×PQ index — FAISS's workhorse layout re-expressed
     * relationally: the coarse k-means quantizer ([[trainCentroids]])
     * partitions the corpus into cells, each vector is stored as m PQ
@@ -1900,35 +1799,10 @@ object Similarity {
     * memoized, so index construction is one corpus scan each for cells
     * and codes, amortized across every query batch. Shapes: cell
     * assignment is the partial-before-exchange struct-argmax
-    * ([[ivfTopK]]); ADC is the broadcast-LUT join ([[pqAdcTopK]]) with
-    * the cell join pre-filtering candidates; the re-rank tail is
-    * [[pqTopKReranked]]'s id-keyed float join.
+    * ([[cellArgmax]]); ADC is the broadcast-LUT join ([[pqAdcTopK]])
+    * with the cell join pre-filtering candidates; the re-rank tail is
+    * [[exactRerank]]'s id-keyed float join.
     */
-  /** Coarse-cell assignment — the IVF build/append primitive: cosine
-    * argmax of every corpus vector against the (broadcast) centroid
-    * table, ties to the lower cid, zero-norm vectors dropped. ONE
-    * map-side pass over `corpus` followed by the partial-before-
-    * exchange struct-argmax ([[ivfTopK]]'s shape): the per-row
-    * candidate fan-out is combined map-side, so the shuffle carries one
-    * row per vector, not one per (vector, centroid). `centroids` needs
-    * (cid, ce); a precomputed `cn` norm column is recomputed
-    * harmlessly. Returns (vec_id, cell).
-    */
-  def ivfCellAssign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val c = broadcast(centroids.select(col("cid"), col("ce"),
-      VF.l2Norm(col("ce")).as("cn")))
-    corpus
-      .select(col("vec_id"), col("embedding"),
-        VF.l2Norm(col("embedding")).as("nrm"))
-      .where(col("nrm") > 0)
-      .crossJoin(c)
-      .withColumn("ccos",
-        round(VF.dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 6))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("cid")).as("negcid"))).as("mx"))
-      .select(col("vec_id"), (-col("mx.negcid")).as("cell"))
-  }
-
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       rerankDepth: Int = 50, nCentroids: Int = 16, nProbe: Int = 4,
       lloydIters: Int = 2, trainN: Int = 1024, seedPlanes: Int = 6,
@@ -1936,7 +1810,6 @@ object Similarity {
     require(rerankDepth >= k, s"rerankDepth=$rerankDepth must cover k=$k")
     val centroids = trainCentroids(corpus, nCentroids, lloydIters, trainN,
         seedPlanes, dim)
-      .select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
     // Both corpus-wide build passes are memoized artifacts: the cell
     // table and the PQ code table are "train/encode once, serve
     // forever" state, and without the cache every serve rep re-ran both
@@ -1965,37 +1838,24 @@ object Similarity {
       k: Int, rerankDepth: Int = 50, nProbe: Int = 4,
       m: Int = 4, dim: Int = 64): DataFrame = {
     require(rerankDepth >= k, s"rerankDepth=$rerankDepth must cover k=$k")
-    val cents = centroids.select(col("cid"), col("ce"),
-      VF.l2Norm(col("ce")).as("cn"))
     ivfPqQuery(queries,
-      adcCorpusSide(codes, codebooks, m, extraCols = Seq("cell")), cents,
+      adcCorpusSide(codes, codebooks, m, extraCols = Seq("cell")), centroids,
       codebooks, corpus, k, rerankDepth, nProbe, m, dim)
   }
 
   /** The DISTINCT coarse cells a query batch will probe — the same
-    * ranking the query tails compute ((cosine, cid) row_number ≤
-    * nProbe), collected as a bounded driver pin (≤ |queries|·nProbe
-    * ids, ≤ nCentroids distinct). A cell-PARTITIONED code table
-    * (IndexMaintenance's `pcid=`/`pcell=` layout) filters on this set
-    * so the serve scans only the probed cells' files; because the
-    * ranking is identical to the tails', the pruned table still holds
-    * every row the candidate join would touch.
+    * ranking the query tails compute ([[probeCells]]), collected as a
+    * bounded driver pin (≤ |queries|·nProbe ids, ≤ nCentroids
+    * distinct). A cell-PARTITIONED code table (IndexMaintenance's
+    * `pcid=`/`pcell=` layout) filters on this set so the serve scans
+    * only the probed cells' files; because the ranking is identical to
+    * the tails', the pruned table still holds every row the candidate
+    * join would touch.
     */
   def probedCells(queries: DataFrame, centroids: DataFrame,
-      nProbe: Int): Seq[Long] = {
-    val cents = centroids.select(col("cid"), col("ce"),
-      VF.l2Norm(col("ce")).as("cn"))
-    val wq = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
-    queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VF.l2Norm(col("embedding")).as("qn"))
-      .where(col("qn") > 0)
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        round(VF.dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6))
-      .withColumn("crank", row_number().over(wq))
-      .where(col("crank") <= nProbe)
+      nProbe: Int): Seq[Long] =
+    probeCells(queries, centroids, nProbe)
       .select("cid").distinct().collect().map(_.getLong(0)).toSeq
-  }
 
   /** Query tail shared by [[ivfPqTopK]] (in-plan build) and
     * [[queryIvfPqIndex]] (persisted store): coarse probe → ADC over the
@@ -2006,70 +1866,40 @@ object Similarity {
   private def ivfPqQuery(queries: DataFrame, vecs: DataFrame,
       centroids: DataFrame, cb: DataFrame, corpus: DataFrame, k: Int,
       rerankDepth: Int, nProbe: Int, m: Int, dim: Int): DataFrame = {
-    val wProbe = Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))
-    val probed = queries
-      .select(col("vec_id").as("query_id"), col("embedding"),
-        VF.l2Norm(col("embedding")).as("qn"))
-      .where(col("qn") > 0)
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        round(VF.dot(col("embedding"), col("ce")) / (col("qn") * col("cn")), 6))
-      .withColumn("crank", row_number().over(wProbe))
-      .where(col("crank") <= nProbe)
+    val probed = probeCells(queries, centroids, nProbe)
       .select(col("query_id"), col("cid").as("cell"))
     // ADC over the probed cells only: the cell join prunes candidates
     // BEFORE any scoring. Round-21 shape (pqAdcTopK's): both sides
     // pivoted, the score is m array-indexed lookups into the broadcast
     // per-query LUT — no (query, vec, sub) row explosion, no
     // re-aggregation; bit-identical scores/ranks (see pqAdcTopK).
-    val wAdc = Window.partitionBy("query_id").orderBy(col("acos").desc, col("neighbor_id"))
-    val cands = vecs
-      .join(broadcast(probed), Seq("cell"))
-      .join(broadcast(adcQuerySide(queries, cb, m, dim)), Seq("query_id"))
-      .where(col("query_id") =!= col("vec_id") && col("rn2") > 0)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(adcDot(col("qlut"), col("ksub"), col("ncodes"), m)
-          / (col("qn") * sqrt(col("rn2"))), 6).as("acos"))
-      .withColumn("arank", row_number().over(wAdc))
-      .where(col("arank") <= rerankDepth)
+    val cands = topK(vecs
+        .join(broadcast(probed), Seq("cell"))
+        .join(broadcast(adcQuerySide(queries, cb, m, dim)), Seq("query_id"))
+        .where(col("query_id") =!= col("vec_id") && col("rn2") > 0)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          adcCos(m).as("acos")),
+        rerankDepth, score = "acos", rank = "arank")
       .select("query_id", "neighbor_id")
-    val qv = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), VF.l2Norm(col("embedding")).as("qfn"))
-      .where(col("qfn") > 0)
-    val cv = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ne"), VF.l2Norm(col("embedding")).as("nn"))
-      .where(col("nn") > 0)
-    val wFinal = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cands
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos",
-        round(VF.dot(col("qe"), col("ne")) / (col("qfn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(wFinal).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    exactRerank(cands, queries, corpus, k)
   }
 
+  /** The production PQ serving path: ADC candidate generation at
+    * `rerankDepth`, then exact float cosine over the survivors alone
+    * ([[exactRerank]]) — the same candidates-then-exact composition
+    * [[ivfTopKInt8]] uses, with the candidate tier 16× smaller (m
+    * bytes/vector). The full corpus is touched only through its code
+    * table; float vectors are fetched for ≤ `rerankDepth` rows per
+    * query (an id-keyed join — at scale the point lookups a columnar
+    * store serves without a scan). Recall == the ADC candidate recall
+    * at `rerankDepth` (SCALE.md "Product quantization (round 6)",
+    * cand-recall@50 column; the exact re-rank loses nothing).
+    */
   def pqTopKReranked(queries: DataFrame, corpus: DataFrame,
       codes: DataFrame, codebooks: DataFrame, k: Int,
       rerankDepth: Int = 50, m: Int = 4, dim: Int = 64): DataFrame = {
     require(rerankDepth >= k, s"rerankDepth=$rerankDepth must cover k=$k")
-    val cands = pqAdcTopK(queries, codes, codebooks, k = rerankDepth, m, dim)
-      .select("query_id", "neighbor_id")
-    val qv = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), VF.l2Norm(col("embedding")).as("qn"))
-      .where(col("qn") > 0)
-    val cv = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ne"), VF.l2Norm(col("embedding")).as("nn"))
-      .where(col("nn") > 0)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cands
-      .join(broadcast(qv), "query_id")
-      .join(cv, "neighbor_id")
-      .withColumn("cos",
-        round(VF.dot(col("qe"), col("ne")) / (col("qn") * col("nn")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    exactRerank(pqAdcTopK(queries, codes, codebooks, k = rerankDepth, m, dim)
+      .select("query_id", "neighbor_id"), queries, corpus, k)
   }
 }

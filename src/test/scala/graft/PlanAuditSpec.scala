@@ -294,6 +294,31 @@ class PlanAuditSpec extends SparkSpec {
       "candidate ranking must read Int8Recon midpoints: " + p.take(800))
   }
 
+  test("q_sim14: int8 mining reads trained centroids from the artifact store; corpus cells stay the agg argmax") {
+    val p = plan("q_sim14_hard_negatives_ann")
+    assert(p.contains("graft_artifacts") && p.contains("/trained_"),
+      "trained centroids must come from the store-cached artifact: " + p.take(800))
+    assert(!p.contains("windowspecdefinition(neighbor_id"),
+      "corpus cell assignment must stay the agg argmax, not a window over neighbor_id")
+  }
+
+  test("q_sim18: the filtered audit reads trained centroids from the artifact store; corpus cells stay the agg argmax") {
+    // The centroids feed the checkpointed candidate join, so the final
+    // plan shows only the truth artifact; the training itself must be a
+    // store hit on a rebuild, never a second Lloyd run.
+    plan("q_sim18_filtered_ann")
+    def trained = graft.operators.Similarity.memoStats.getOrElse("art:trained", (0L, 0L))
+    val (hits0, misses0) = trained
+    val p = plan("q_sim18_filtered_ann")
+    val (hits1, misses1) = trained
+    assert(hits1 > hits0 && misses1 == misses0,
+      s"trained centroids must be served from the artifact store: ($hits0, $misses0) -> ($hits1, $misses1)")
+    assert(p.contains("graft_artifacts"),
+      "ground truth must come from the store-cached artifact: " + p.take(800))
+    assert(!p.contains("windowspecdefinition(neighbor_id"),
+      "corpus cell assignment must stay the agg argmax, not a window over neighbor_id")
+  }
+
   test("QuantizeInt8 + Int8Recon compile under CODEGEN_ONLY (no janino fallback)") {
     import org.apache.spark.sql.functions._
     import graft.functions.{QuantExpressions => QE}

@@ -308,6 +308,76 @@ class SimilaritySpec extends SparkSpec {
     assert(messages(ex).exists(_.contains("embedding dim must be")), ex.getMessage)
   }
 
+  test("a zero vector in the corpus or the queries leaves the float IVF builders' rows unchanged") {
+    // Under ANSI the cosine divides by a zero norm and throws unless the
+    // norm filter runs before scoring, in the argmax and in the probe.
+    val labeled = clustered.withColumn("label", (col("vec_id") / 5).cast("int"))
+    val zero = Seq((99L, Seq.fill(8)(0f), 0)).toDF("vec_id", "embedding", "label")
+    val withZero = labeled.unionByName(zero)
+    val q = labeled.where(col("vec_id") < 2)
+    val qz = withZero.where(col("vec_id") < 2 || col("vec_id") === 99)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    def builders(qs: org.apache.spark.sql.DataFrame, cs: org.apache.spark.sql.DataFrame) = Seq(
+      rows(Similarity.ivfTopK(qs, cs, k = 4, nCentroids = 3, nProbe = 2, dim = 8)
+        .orderBy("query_id", "rank")),
+      rows(Similarity.ivfRecallAudit(qs, cs, k = 4, nProbes = Seq(1, 3),
+        nCentroids = 3, dim = 8)),
+      rows(Similarity.filteredIvfRecallAudit(qs, cs, labelValue = 1, k = 4,
+        nProbes = Seq(1, 3), nCentroids = 3, dim = 8)))
+    val clean = builders(q, labeled)
+    assert(clean.forall(_.nonEmpty), s"reference rows: $clean")
+    assert(builders(q, withZero) == clean, "zero vector in the corpus")
+    assert(builders(qz, labeled) == clean, "zero vector in the queries")
+  }
+
+  test("a vector whose length differs from the centroids' fails loudly in cell assignment and probing") {
+    // float_vector_dot is NULL on a length mismatch; a NULL score would
+    // lose every argmax (cell 0) and sort last in every probe.
+    val cents = Seq((0L, Seq.fill(8)(1.0)),
+      (1L, Seq.tabulate(8)(i => if (i % 2 == 0) 1.0 else -1.0))).toDF("cid", "ce")
+    val short = Seq((99L, Seq(1f, 2f, 3f))).toDF("vec_id", "embedding")
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+    def named(ex: Throwable) = messages(ex).exists(m =>
+      m.contains("vector 99") && m.contains("centroid dimension"))
+    val assign = intercept[Exception] {
+      Similarity.ivfCellAssign(short, cents).collect()
+    }
+    assert(named(assign), assign.getMessage)
+    val probe = intercept[Exception] {
+      Similarity.probedCells(short, cents, nProbe = 1)
+    }
+    assert(named(probe), probe.getMessage)
+  }
+
+  test("a probe depth below 1 is refused, not silently dropped") {
+    val q = clustered.where(col("vec_id") < 2)
+    intercept[IllegalArgumentException] {
+      Similarity.ivfRecallAudit(q, clustered, k = 4, nProbes = Seq(0, 2),
+        nCentroids = 3, dim = 8)
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(q, clustered, k = 4, nCentroids = 3, nProbe = 0, dim = 8)
+    }
+  }
+
+  test("cell ties on the rounded cosine go to the lowest cid; probes rank by (cosine desc, cid)") {
+    // Hand-built 2-d centroids, listed high cid first. Against (1, 0):
+    // cid 5 scores 1/√2 = 0.70710678 and cid 4 scores 0.70710675 —
+    // distinct raw cosines, one rounded value 0.707107; cid 7 scores
+    // 0.995037, cid 1 scores 0.
+    val cents = Seq((7L, Seq(1.0, 0.1)), (5L, Seq(1.0, 1.0)),
+      (4L, Seq(1.0, 1.0000001)), (1L, Seq(0.0, 1.0))).toDF("cid", "ce")
+    val v = Seq((10L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    val tied = cents.where(col("cid") =!= 7)
+    assert(Similarity.ivfCellAssign(v, tied).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq == Seq((10L, 4L)), "equal rounded cosine → lowest cid")
+    def probed(n: Int) = Similarity.probedCells(v, cents, nProbe = n).toSet
+    assert(probed(1) == Set(7L))
+    assert(probed(2) == Set(7L, 4L), "the tie at depth 2 goes to cid 4, not 5")
+    assert(probed(3) == Set(7L, 4L, 5L))
+  }
+
   test("appendToInt8Index ≡ rebuild on the union, given unchanged centroids/grid") {
     // 60-vector corpus; index built on the first 48, then 12 appended.
     val all = (0 until 60).map { id =>

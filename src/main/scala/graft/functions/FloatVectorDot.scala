@@ -52,26 +52,13 @@ case class FloatVectorDot(left: Expression, right: Expression)
     case _ => false
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // Match the zip_with+aggregate fold (and SQL) semantics exactly:
-    // length mismatch or any null element ⇒ NULL, not a partial sum.
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    val (ld, rd) = (isDouble(left.dataType), isDouble(right.dataType))
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (ld) x.getDouble(i) else x.getFloat(i).toDouble
-      val yv = if (rd) y.getDouble(i) else y.getFloat(i).toDouble
-      s += xv * yv
-      i += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dot(a.asInstanceOf[ArrayData], isDouble(left.dataType),
+      b.asInstanceOf[ArrayData], isDouble(right.dataType))
 
+  // VectorKernels.dot's loop, generated inline: the kernel's nullable
+  // result is a boxed Double, one allocation per row on the hottest
+  // expression of every similarity plan.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       // freshName for every local: multiple dot expressions can land in

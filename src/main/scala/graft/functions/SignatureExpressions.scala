@@ -457,60 +457,24 @@ case class HyperplaneBuckets(child: Expression, weights: Seq[Seq[Double]],
   override def prettyName: String = "hyperplane_buckets"
   override def nullable: Boolean = true
 
-  private[graft] def dimCheck(n: Int): Unit =
-    if (n != dim) throw new IllegalStateException(
-      s"signBuckets: embedding dim must be $dim (got $n)")
-
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    dimCheck(arr.numElements())
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var bucket = 0L
-      var p = 0
-      while (p < planes) {
-        val wr = w(t * planes + p)
-        var proj = 0.0
-        var d = 0
-        while (d < dim) {
-          if (!arr.isNullAt(d)) proj += arr.getFloat(d).toDouble * wr(d)
-          d += 1
-        }
-        if (proj > 0) bucket |= (1L << p)
-        p += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
+    VectorKernels.dimCheck(arr.numElements(), dim)
+    new GenericArrayData(Array.tabulate(tables)(t =>
+      VectorKernels.signBucket(arr, w, t * planes, planes, dim)))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wRef = ctx.addReferenceObj("hpbW", w, "double[][]")
-    val self = ctx.addReferenceObj("hpbSelf", this, this.getClass.getName)
     nullSafeCodeGen(ctx, ev, a => {
       val out = ctx.freshName("hpbOut")
       val t = ctx.freshName("hpbT")
-      val p = ctx.freshName("hpbP")
-      val d = ctx.freshName("hpbD")
-      val w = ctx.freshName("hpbWrow")
-      val proj = ctx.freshName("hpbProj")
-      val bucket = ctx.freshName("hpbBucket")
       s"""
-         |$self.dimCheck($a.numElements());
+         |graft.functions.VectorKernels.dimCheck($a.numElements(), $dim);
          |long[] $out = new long[$tables];
          |for (int $t = 0; $t < $tables; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $p = 0; $p < $planes; $p++) {
-         |    double[] $w = $wRef[$t * $planes + $p];
-         |    double $proj = 0.0;
-         |    for (int $d = 0; $d < $dim; $d++) {
-         |      if (!$a.isNullAt($d)) $proj += (double) $a.getFloat($d) * $w[$d];
-         |    }
-         |    if ($proj > 0) $bucket |= (1L << $p);
-         |  }
-         |  $out[$t] = $bucket;
+         |  $out[$t] = graft.functions.VectorKernels.signBucket(
+         |    $a, $wRef, $t * $planes, $planes, $dim);
          |}
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
        """.stripMargin

@@ -13,16 +13,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the corpus is touched ONCE (the word-frequency
   * aggregate — the same wordcount shuffle every TXT operator bottoms
-  * out in); every learning round then runs over the VOCABULARY table
-  * (bounded: unique words, not corpus rows), which is checkpointed at
-  * entry. Per round: one vocabulary-keyed pair-count aggregate, a
-  * top-1 (TakeOrderedAndProject — never a global sort), and a narrow
-  * per-row merge apply. The winning pair is collected to the driver —
-  * a documented bounded pin (exactly ONE row per round, `nMerges`
-  * total), the same posture as the quantizer pins in
-  * [[graft.streaming.IndexMaintenance]]; the alternative (a broadcast
-  * cross-join per round) would stack `nMerges` limit-subqueries into
-  * one lineage and re-execute the prefix exponentially.
+  * out in) and the vocabulary (unique words, not corpus rows) is
+  * collected to the driver, where every learning round runs in memory
+  * ([[learnLocal]]): zero Spark jobs per round, so the round count is
+  * a driver-loop length, not a job count (see the VOCAB-SCALE STANCE
+  * block). [[learn]] keeps the one-job-per-round Spark form as the
+  * pinned reference.
   *
   * Symbol states are SPACE-PREFIXED strings (`" l o w"`), so applying
   * a merge is a literal non-overlapping left-to-right
@@ -39,20 +35,29 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** The learning loop: returns the learned merge rows AND the final
-    * per-word symbol state (`w`, `state`, `freq`) with every merge
-    * applied — the trained tokenizer's view of the vocabulary, consumed
-    * by [[tokenCounts]].
+  /** The corpus word frequencies (`w`, `freq`): one explode + one
+    * word-keyed aggregate — the only corpus pass training makes.
     */
-  private def learn(docs: DataFrame, nMerges: Int)
+  private def wordFreq(docs: DataFrame): DataFrame =
+    docs.select(explode(split(col("text"), " ")).as("w"))
+      .where(col("w") =!= "")
+      .groupBy("w").agg(count(lit(1)).as("freq"))
+
+  /** The distributed learning loop — the reference form [[learnLocal]]
+    * is pinned against (BpeSpec), reached from specs only: per round one
+    * vocabulary-keyed pair-count aggregate, a top-1
+    * (TakeOrderedAndProject — never a global sort), a ONE-row collect
+    * of the winning pair and a narrow per-row merge apply over the
+    * checkpointed vocabulary table. Returns the learned merge rows AND
+    * the final per-word symbol state (`w`, `state`, `freq`) with every
+    * merge applied.
+    */
+  private[graft] def learn(docs: DataFrame, nMerges: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
 
-    val wf = docs.select(explode(split(col("text"), " ")).as("w"))
-      .where(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("freq"))
     val base = graft.util.ScratchCheckpoints.register(
-      wf.select(col("w"),
+      wordFreq(docs).select(col("w"),
         concat(lit(" "), concat_ws(" ", split(col("w"), ""))).as("state"),
         col("freq"))
         .localCheckpoint())
@@ -71,7 +76,7 @@ object Bpe {
         .agg(sum("freq").as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1)
-        .collect() // bounded pin: ONE row per round (see scaladoc)
+        .collect()
       require(top.nonEmpty,
         s"BPE round $i found no adjacent pairs — corpus has no multi-char words")
       val (l, r, cnt) =
@@ -83,12 +88,13 @@ object Bpe {
     (merges.result(), state)
   }
 
-  /** Store-cached ([[Similarity.storeCachedKeyed]], keyed on the input
-    * plan + nMerges): the merge table is a trained-tokenizer artifact —
-    * deterministic, tiny (nMerges rows), and the product of a
-    * sequential driver loop (one job + one 1-row collect per round)
-    * that no consumer should re-run per invocation. Same artifact
-    * class as the PQ codebooks.
+  /** The learned merge table: ONE corpus wordcount, ONE collect of the
+    * unpruned vocabulary (`w`, `freq` — no order or limit: the learner
+    * does not depend on vocabulary order), then [[learnLocal]] on the
+    * driver. Store-cached ([[Similarity.storeCachedKeyed]], keyed on the
+    * input plan + nMerges): the table is a trained-tokenizer artifact —
+    * deterministic, tiny (nMerges rows) — that no consumer should
+    * re-learn per invocation. Same artifact class as the PQ codebooks.
     */
   def learnMerges(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -96,30 +102,33 @@ object Bpe {
     Similarity.storeCachedKeyed("bpe",
         Seq(spark, docs.queryExecution.analyzed.canonicalized, nMerges,
           "merges"),
-        learn(docs, nMerges)._1.toDF("rank", "lhs", "rhs", "merged", "cnt"))
+        learnLocal(wordFreq(docs).as[(String, Long)].collect(), nMerges)
+          .toDF("rank", "lhs", "rhs", "merged", "cnt"))
       // the parquet read is unordered; merge ORDER is the tokenizer
       // (consumers fold the merges in rank order)
       .orderBy("rank")
   }
 
   // ------------------------------------------------------------------
-  // VOCAB-SCALE STANCE. [[learnMerges]] runs one Spark job + one 1-row
-  // collect PER MERGE ROUND — bounded and correct, but a production
-  // vocabulary is ~32k merges = 32k sequential jobs; the driver loop,
-  // not the data, becomes the clock. The 100 TB path is
-  // [[learnMergesLocal]]: ONE corpus wordcount shuffle (the same
-  // aggregate every TXT operator bottoms out in), ONE bounded driver
-  // collect of the frequency-pruned vocabulary (`minFreq`/`maxVocab` —
-  // the pruning every production tokenizer trainer applies; unpruned,
-  // the pin is all distinct words, which Sennrich-style training
-  // assumes fits memory anyway), then the full merge loop IN MEMORY
-  // with incremental pair-count maintenance — zero jobs per round —
-  // and distributed exact APPLY via [[textCount]]/[[tokenCounts]]'
-  // literal-replace meter. Learned tables are IDENTICAL to the
-  // distributed loop's by construction (spec-pinned, quirk included —
-  // see applyMerge); rounds cost microseconds instead of jobs, so
-  // nMerges 6 → 32k changes the driver loop's length, not the
-  // cluster's work. BpeProbe measures both laws at nMerges 6/64/256.
+  // VOCAB-SCALE STANCE. Every production path — [[learnMerges]],
+  // [[learnMergesLocal]] and, through the merge table, [[tokenCounts]]
+  // — learns through [[learnLocal]]: ONE corpus wordcount shuffle (the
+  // same aggregate every TXT operator bottoms out in), ONE driver
+  // collect of the vocabulary, then the full merge loop IN MEMORY with
+  // incremental pair-count maintenance — zero jobs per round — and
+  // distributed exact APPLY via [[textCount]]/[[tokenCounts]]'
+  // literal-replace meter. The driver holds the vocabulary: per
+  // distinct word its symbol array and its pair-index entries, so
+  // memory is linear in the distinct words' total length; [[learnMergesLocal]]'s
+  // `minFreq`/`maxVocab` bound it where the unpruned vocabulary does
+  // not fit (the pruning every production tokenizer trainer applies;
+  // Sennrich-style training assumes the vocabulary fits memory
+  // anyway). Learned tables are IDENTICAL to the distributed
+  // [[learn]]'s by construction (spec-pinned, quirk included — see
+  // applyMerge); rounds cost microseconds instead of a job and a
+  // 1-row collect each (the reference form: ~32k sequential jobs for a
+  // production 32k-merge vocabulary), so nMerges 6 → 32k changes the
+  // driver loop's length, not the cluster's work.
   // ------------------------------------------------------------------
 
   /** Unsigned UTF-8 byte comparison — Spark's binary string ordering,
@@ -145,7 +154,7 @@ object Bpe {
     * fusing the whole next symbol (" a ba" + merge (a,b) → " aba").
     * Left-to-right, non-overlapping, scan resumes after the fused pair.
     * The in-memory learner must reproduce this byte-for-byte or its
-    * table diverges from [[learnMerges]]'/the oracle's — BpeSpec pins
+    * table diverges from [[learn]]'s/the oracle's — BpeSpec pins
     * the quirk corpus.
     */
   private def applyMerge(syms: Array[String], l: String, r: String): Array[String] = {
@@ -161,8 +170,8 @@ object Bpe {
   }
 
   /** In-memory merge-table learning over a collected (word, freq)
-    * vocabulary: identical output to [[learnMerges]] on the same
-    * vocabulary, zero Spark jobs per round. Incremental bookkeeping:
+    * vocabulary, in any order: identical output to the distributed
+    * [[learn]] on the same vocabulary, zero Spark jobs per round. Incremental bookkeeping:
     * exact adjacent-pair counts (overlapping positions, the zip count)
     * in a tree ordered by (cnt desc, l, r) for O(log) best-pair
     * selection, plus an occurrence index keyed by (left symbol, first
@@ -246,26 +255,23 @@ object Bpe {
     merges.result()
   }
 
-  /** The production learning path (see the stance block above): one
-    * corpus wordcount, one bounded vocabulary collect (`minFreq` drops
-    * hapax-class words, `maxVocab` hard-caps the pin — deterministic
-    * freq-desc/word tie-break), then [[learnLocal]]. With no pruning
-    * the table is IDENTICAL to [[learnMerges]] (BpeSpec); with pruning
-    * it is the standard trainer trade (rare words cannot influence
-    * merges anyway at sensible thresholds).
+  /** [[learnMerges]] with vocabulary pruning (see the stance block
+    * above): `minFreq` drops hapax-class words, `maxVocab` hard-caps the
+    * collected vocabulary (deterministic freq-desc/word tie-break), then
+    * [[learnLocal]]. With no pruning the table is [[learnMerges]]'; with
+    * pruning it is the standard trainer trade (rare words cannot
+    * influence merges anyway at sensible thresholds).
     */
   def learnMergesLocal(docs: DataFrame, nMerges: Int, minFreq: Long = 1L,
       maxVocab: Int = 1 << 22): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab = docs.select(explode(split(col("text"), " ")).as("w"))
-      .where(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("freq"))
+    val vocab = wordFreq(docs)
       .where(col("freq") >= minFreq)
       .orderBy(col("freq").desc, col("w"))
       .limit(maxVocab)
       .as[(String, Long)]
-      .collect() // bounded pin: the pruned vocabulary (see stance block)
+      .collect()
     learnLocal(vocab, nMerges).toDF("rank", "lhs", "rhs", "merged", "cnt")
   }
 
@@ -304,22 +310,23 @@ object Bpe {
     * longest-match of [[graft.functions.SubwordExpressions]] (the two
     * disagree in general; this is the one the learned table defines).
     *
-    * The trained per-word state is vocabulary-sized; the corpus pass is
-    * one explode + one hash join on the word (vocabulary side is the
-    * SMALL side at scale) + a per-doc aggregate. Documents with no
-    * words (empty text) have no rows, matching the word explode.
-    * Returns (`doc_id`, `n_words`, `n_chars`, `n_tokens`,
-    * `compression` = chars/token, 6dp).
+    * The per-word token count is the learned merge table
+    * ([[learnMerges]] — a store hit when the session already learned
+    * it, so the tokenizer is never trained twice) applied to the
+    * vocabulary by [[textCount]]'s ordered literal-replace fold — the
+    * fold the distributed learner applies, so it equals the learner's
+    * final per-word state by construction. The corpus pass is one
+    * explode + one hash join on the word (vocabulary side is the SMALL
+    * side at scale) + a per-doc aggregate. Documents with no words
+    * (empty text) have no rows, matching the word explode. Returns
+    * (`doc_id`, `n_words`, `n_chars`, `n_tokens`, `compression` =
+    * chars/token, 6dp).
     */
   def tokenCounts(docs: DataFrame, nMerges: Int): DataFrame = {
-    // the trained per-word state is the tokenizer's OTHER artifact —
-    // vocabulary-sized, deterministic, store-cached like the merges
-    val trained = Similarity.storeCachedKeyed("bpe",
-        Seq(docs.sparkSession,
-          docs.queryExecution.analyzed.canonicalized, nMerges, "state"),
-        learn(docs, nMerges)._2)
-      .select(col("w"),
-        size(split(expr("substring(state, 2)"), " ")).cast("long").as("n_tok"))
+    val merges = learnMerges(docs, nMerges).collect()
+      .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq
+    val trained = wordFreq(docs)
+      .select(col("w"), textCount(merges)(col("w")).as("n_tok"))
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "")
       .join(trained, "w")

@@ -520,10 +520,11 @@ object Dedup {
     // deterministic (6dp cosine, cid tie-break), and at 100 TB this
     // artifact is exactly what the IndexMaintenance generation stores
     // persist.
-    val cells = Similarity.storeArtifact("cells", artifactKey,
-      Seq(nCentroids, lloydIters, trainN, seedPlanes, dim),
+    val cells = Similarity.storeArtifact("cells", artifactKey, embs,
+        Seq(nCentroids, lloydIters, trainN, seedPlanes, dim)) {
       Similarity.cellArgmax(Similarity.normed(embs, "vec_id", "e", "nrm"),
-        "vec_id", "e", "nrm", centroids, "e", "nrm"))
+        "vec_id", "e", "nrm", centroids, "e", "nrm")
+    }
     val a = cells.select(col("cid"), col("vec_id").as("vec_a"),
       col("e").as("ea"), col("nrm").as("na"))
     val b = cells.select(col("cid"), col("vec_id").as("vec_b"),

@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions => VF}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import graft.functions.{VectorFunctions => VF, VectorKernels => VK}
 
 /** Similarity search over embedding columns (SURVEY.md §2.6 SIM-1 and the
   * ANN scale path).
@@ -277,19 +280,18 @@ object Similarity {
       Seq(df.sparkSession, df.queryExecution.analyzed.canonicalized), df)
 
   /** A trained build artifact keyed the way its builder was asked to key
-    * it: by the caller's `artifactKey` (corpus identity) plus the
-    * hyperparameters `params` when given, else by its canonicalized
-    * plan. The session is folded into explicit keys too (round 20,
-    * ADVICE): a second SparkSession re-using a (root, gen) identity must
-    * build its own artifact — the cached entry pins the BUILD session
-    * for the parquet read, and a stopped session's DataFrame is
-    * unusable.
+    * it: by the caller's `artifactKey` (corpus identity) when given, else
+    * by the canonicalized plan of its `input`, plus the hyperparameters
+    * `params` — so a hit never plans the build. The session is folded
+    * into every key (round 20, ADVICE): a second SparkSession re-using a
+    * (root, gen) identity must build its own artifact — the cached entry
+    * pins the BUILD session for the parquet read, and a stopped
+    * session's DataFrame is unusable.
     */
   private[graft] def storeArtifact(slot: String, artifactKey: Option[Seq[Any]],
-      params: Seq[Any], df: DataFrame): DataFrame = artifactKey match {
-    case Some(k) => storeCachedKeyed(slot, df.sparkSession +: (k ++ params), df)
-    case None => storeCached(slot, df)
-  }
+      input: DataFrame, params: Seq[Any])(build: => DataFrame): DataFrame =
+    storeCachedKeyed(slot, input.sparkSession +: (artifactKey.getOrElse(
+      Seq(input.queryExecution.analyzed.canonicalized)) ++ params), build)
 
   /** Store-cached brute-force ground truth (`query_id`, `neighbor_id`)
     * — the audit family's shared pay-for-truth table. Deterministic
@@ -626,112 +628,200 @@ object Similarity {
     *    `seedPlanes` plan-time md5-derived hyperplanes (the
     *    [[planeWeights]] family, offset so the quantizer's planes are
     *    independent of [[lshTopK]]'s), and the lowest-hash member of
-    *    each of the `nCentroids` largest buckets seeds one cell. Unlike
-    *    first-N-ids or plain hash-order seeds, this spreads seeds across
-    *    the corpus's angular structure: k seeds drawn blindly miss a
-    *    cluster with probability ≈ k·(1-1/k)^k ≈ k/e, and Lloyd cannot
-    *    split a doubly-seeded cluster — the classic local optimum —
-    *    while distinct clusters land in distinct sign buckets;
+    *    each of the `nCentroids` largest buckets (ties to the lower
+    *    bucket) seeds one cell. Unlike first-N-ids or plain hash-order
+    *    seeds, this spreads seeds across the corpus's angular
+    *    structure: k seeds drawn blindly miss a cluster with
+    *    probability ≈ k·(1-1/k)^k ≈ k/e, and Lloyd cannot split a
+    *    doubly-seeded cluster — the classic local optimum — while
+    *    distinct clusters land in distinct sign buckets;
     *  - each Lloyd step assigns by cosine ROUNDED to 6dp (ties broken by
-    *    cid — [[cellArgmax]]) and re-centers with the SPHERICAL mean
-    *    (per-dimension avg of unit vectors) rounded to 6dp — rounding on
-    *    both engines absorbs their different fp summation orders, and
-    *    the tie-break makes the rounded argmax total;
-    *  - a cell that loses all members keeps its previous centroid
-    *    (mirrored as a LEFT JOIN + COALESCE in the oracle).
+    *    cid, as in [[cellArgmax]]) and re-centers with the SPHERICAL
+    *    mean (per-dimension avg of unit vectors, summed in sample order)
+    *    rounded to 6dp — rounding on both engines absorbs their
+    *    different fp summation orders, and the tie-break makes the
+    *    rounded argmax total;
+    *  - a cell that loses all members, or whose rounded mean cancels to
+    *    the zero vector, keeps its previous centroid (mirrored as a LEFT
+    *    JOIN + COALESCE in the oracle).
     *
     * If the sample fills fewer than `nCentroids` sign buckets (tiny or
     * degenerate corpora) the quantizer returns that many cells — still
-    * correct downstream, just coarser.
+    * correct downstream, just coarser. A sample vector whose length is
+    * not `dim` fails the seeding ("embedding dim must be").
     *
-    * Scale: training touches only the `trainN`-row sample (broadcast
-    * centroids, tiny per-iteration shuffles of trainN·dim rows); the
+    * Scale: training runs on the DRIVER over its bounded input. The
+    * corpus is scanned once — the distributed top-`trainN` of
+    * [[trainingSample]], collected — and the driver then holds
+    * `trainN × dim` floats (~1 MB at the default 4096 × 64, ~25 MB at
+    * `trainN` 100k) and runs the seeding and every Lloyd step in memory
+    * through the expressions' own loop bodies
+    * ([[graft.functions.VectorKernels]]): `trainN × nCentroids` dots per
+    * step, microseconds at the default shape. A cold call runs 4 Spark
+    * jobs at q_sim3's shape; the same steps as Spark plans ran 37. The
     * corpus-wide work stays in [[ivfTopK]]'s single cell-assignment
     * pass. At 100 TB you raise `trainN` (e.g. 100k), not the iteration
     * count — Lloyd on a hash-uniform sample converges the same.
+    * [[trainCentroidsSpark]] keeps the Spark-plan form as the pinned
+    * reference.
     *
-    * `artifactKey`: explicit identity for the store-cache when the
-    * corpus PLAN cannot key itself — a corpus built through typed
-    * closures (mapPartitions decode stages, the multimodal probe
-    * embeddings) canonicalizes differently on every invocation, so the
-    * plan-keyed cache would rebuild each time (measured r19: the mm
-    * family's trained/cells artifacts missed every rep). The caller
-    * asserts the key identifies the corpus CONTENT (e.g. (modality,
-    * corpus dir)); the hyperparameters are appended automatically.
+    * Store-cached ([[storeArtifact]], slot "trained"): the table is a
+    * tiny (≤ nCentroids rows) "train once, serve forever" artifact keyed
+    * on (session, corpus plan, params), so a repeat call reads scratch
+    * parquet and plans no training at all. `artifactKey`: explicit
+    * identity for when the corpus PLAN cannot key itself — a corpus
+    * built through typed closures (mapPartitions decode stages, the
+    * multimodal probe embeddings) canonicalizes differently on every
+    * invocation, so the plan-keyed cache would rebuild each time
+    * (measured r19: the mm family's trained/cells artifacts missed
+    * every rep). The caller asserts the key identifies the corpus
+    * CONTENT (e.g. (modality, corpus dir)); the hyperparameters are
+    * appended automatically.
     */
   def trainCentroids(corpus: DataFrame, nCentroids: Int = 16,
       iters: Int = 2, trainN: Int = 4096,
       seedPlanes: Int = 6, dim: Int = 64,
       artifactKey: Option[Seq[Any]] = None): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    // The sign-bucket seeding can produce at most 2^seedPlanes distinct
-    // seeds — a fixed plane count silently CAPS the centroid count (the
-    // round-4 50k-vector measurement, SCALE.md, caught a √n count of
-    // 224 collapsing to 64 cells at the old fixed 6 planes). Derive the
-    // effective plane count as ceil(log2(nCentroids)) + 2 (4× bucket
-    // headroom so enough buckets are actually filled), floored at the
-    // caller's value; at the q_sim3/q_sim5 oracle shape (nCentroids=16,
-    // seedPlanes=6) the derived value is exactly 6, so pinned oracles
-    // are unaffected.
-    val sp = math.max(seedPlanes,
-      (if (nCentroids <= 1) 0 else 32 - Integer.numberOfLeadingZeros(nCentroids - 1)) + 2)
-    val tr = trainingSample(corpus, "ivf:", trainN)
-    // Bucket-exemplar seeding over the (small) sample: one sign table,
-    // exemplar = lowest (hk, vec_id) per bucket, biggest buckets first.
-    val buckets = signBuckets(tr.select(col("vec_id"), col("embedding")),
-        sp, tables = 1, dim = dim, tableOffset = -1)
-      .select(col("vec_id"), col("bucket"))
-      .join(tr.select(col("vec_id"), col("hk")), "vec_id")
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("bsize"), min(struct(col("hk"), col("vec_id"))).as("ex"))
-    val wSeed = Window.orderBy(col("bsize").desc, col("bucket"))
-    val seeds = buckets.orderBy(col("bsize").desc, col("bucket")).limit(nCentroids)
-      .withColumn("cid", (row_number().over(wSeed) - 1).cast("long"))
-      .select(col("cid"), col("ex.vec_id").as("vec_id"))
-      .join(tr, "vec_id")
-      .select(col("cid"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
-
-    val trained = (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val assigned = cellArgmax(normed(tr, "vec_id", "embedding", "nrm"),
-        "vec_id", "embedding", "nrm", cents, "embedding", "nrm")
-      // SPHERICAL mean: average unit vectors (x/‖v‖), not raw
-      // components — the cosine-geometry centroid (centroid scale never
-      // matters downstream, only direction). On the synthetic corpus the
-      // norms are concentrated so raw and spherical measure the same
-      // (SCALE.md round-4 SIM table, IVF quantizer notes); on real
-      // corpora with heavy-tailed norms the raw mean is pulled toward
-      // high-norm members.
-      val updated = assigned
-        .select(col("cid"), col("nrm"), posexplode(col("embedding")).as(Seq("d", "x")))
-        .groupBy("cid", "d")
-        .agg(round(avg(col("x").cast("double") / col("nrm")), 6).as("cx"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("cx")))),
-          s => s.getField("cx")).as("ce_new"))
-      // Keep the previous centroid when a cell EMPTIES (ce_new is null —
-      // the left join misses) or when the rounded spherical mean CANCELS
-      // to the zero vector (a zero-norm centroid has no direction: the
-      // downstream cosine divides by cn=0, and NaN ordering diverges
-      // between engines — Spark treats NaN as greatest, so such a cell
-      // would capture every vector). Both guards are mirrored in the
-      // q_sim3/q_sim5 oracle SQL.
-      cents.join(updated, Seq("cid"), "left")
-        .select(col("cid"),
-          coalesce(when(VF.normSq(col("ce_new")) > 0, col("ce_new")), col("ce"))
-            .as("ce"))
+    val sp = centroidPlanes(nCentroids, seedPlanes)
+    storeArtifact("trained", artifactKey, corpus,
+        Seq(nCentroids, iters, trainN, sp, dim)) {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      // Collected through the persisted sample, so the corpus is read
+      // once, inside the cache build — the same read the index rebuild's
+      // scan census (StreamingSpec) counts as training's memoized sample.
+      val tr = trainingSample(corpus, "ivf:", trainN)
+      val sample = try tr.select(col("embedding")).as[Array[Float]].collect()
+        .map(UnsafeArrayData.fromPrimitiveArray(_))
+        finally tr.unpersist(blocking = false)
+      val cents = lloydLocal(sample, nCentroids, iters, sp, dim)
+      spark.createDataFrame(java.util.Arrays.asList(
+        cents.indices.map(c => Row(c.toLong, cents(c).toSeq)): _*), centroidSchema)
     }
-    // Store-cache (see storeArtifact): the trained table is a tiny
-    // (≤ nCentroids rows) "train once, serve forever" artifact — a
-    // repeat call with the same corpus + params reads scratch parquet
-    // instead of re-running Lloyd, for ANY number of distinct configs a
-    // session cycles (the in-memory memo's capacity bound was the
-    // r15..r17 bimodality). Then drop the sample cache (only the
-    // training itself reads it — on a cache hit the mark was never
-    // materialized, so unpersist just unregisters).
-    try storeArtifact("trained", artifactKey,
-      Seq(nCentroids, iters, trainN, sp, dim), trained)
-    finally tr.unpersist(blocking = false)
+  }
+
+  /** The sign-bucket seeding can produce at most 2^planes distinct
+    * seeds — a fixed plane count silently CAPS the centroid count (the
+    * round-4 50k-vector measurement, SCALE.md, caught a √n count of 224
+    * collapsing to 64 cells at the old fixed 6 planes). The effective
+    * plane count is ceil(log2(nCentroids)) + 2 (4× bucket headroom so
+    * enough buckets are actually filled), floored at the caller's
+    * value; at the q_sim3/q_sim5 oracle shape (nCentroids=16,
+    * seedPlanes=6) it is exactly 6, so pinned oracles are unaffected.
+    */
+  private def centroidPlanes(nCentroids: Int, seedPlanes: Int): Int =
+    math.max(seedPlanes,
+      (if (nCentroids <= 1) 0 else 32 - Integer.numberOfLeadingZeros(nCentroids - 1)) + 2)
+
+  /** The trained table's schema — what the Spark-plan form stores. */
+  private val centroidSchema = StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("ce", ArrayType(DoubleType, containsNull = true))))
+
+  /** [[trainCentroids]]' seeding and Lloyd steps in memory over the
+    * collected sample (float vectors in (hash, vec_id) order), each
+    * value computed by the loop body of the expression the Spark-plan
+    * form evaluates ([[graft.functions.VectorKernels]]): sign buckets of
+    * the table -1 planes, left-to-right double dots, Spark's HALF_UP
+    * 6dp round, argmax ties to the lowest cid, spherical means summed in
+    * sample order, keep-previous for an emptied or zero-mean cell.
+    * Returns the centroids, index = cid.
+    */
+  private def lloydLocal(sample: Array[UnsafeArrayData], nCentroids: Int,
+      iters: Int, planes: Int, dim: Int): Array[Array[Double]] = {
+    val w = Array.tabulate(planes)(planeWeights(-1, _, dim))
+    // groupBy keeps the sample's (hash, vec_id) order inside a bucket,
+    // so a bucket's first member is its lowest-hash exemplar.
+    var cents = sample.indices.groupBy { i =>
+        VK.dimCheck(sample(i).numElements(), dim)
+        VK.signBucket(sample(i), w, 0, planes, dim)
+      }.toArray
+      .sortBy { case (bucket, members) => (-members.size, bucket) }.take(nCentroids)
+      .map { case (_, members) =>
+        Array.tabulate(dim)(sample(members.head).getFloat(_).toDouble) }
+    val norms = sample.map(v => math.sqrt(VK.dot(v, false, v, false)))
+    // Spark's double ordering; maxBy keeps the first (lowest cid) maximum.
+    val sparkOrder = Ordering.fromLessThan[Double](SQLOrderingUtil.compareDoubles(_, _) < 0)
+    for (_ <- 1 to iters if cents.nonEmpty) {
+      val ce = cents.map(UnsafeArrayData.fromPrimitiveArray(_))
+      val cn = ce.map(c => math.sqrt(VK.dot(c, true, c, true)))
+      val sums = Array.ofDim[Double](cents.length, dim)
+      val counts = new Array[Long](cents.length)
+      sample.indices.foreach { i =>
+        val v = sample(i)
+        val best = cents.indices.maxBy(c =>
+          VK.roundedCosine(VK.dot(v, false, ce(c), true), norms(i), cn(c)))(sparkOrder)
+        for (d <- 0 until dim) sums(best)(d) += v.getFloat(d).toDouble / norms(i)
+        counts(best) += 1
+      }
+      cents = cents.indices.map { c =>
+        if (counts(c) == 0) cents(c) else {
+          val mean = Array.tabulate(dim)(d => VK.round(sums(c)(d) / counts(c).toDouble, 6))
+          val m = UnsafeArrayData.fromPrimitiveArray(mean)
+          if (sparkOrder.gt(VK.dot(m, true, m, true), 0.0)) mean else cents(c)
+        }
+      }.toArray
+    }
+    cents
+  }
+
+  /** The Spark-plan form of [[trainCentroids]]' training — seeding and
+    * every Lloyd step as relational plans over the sample, several jobs
+    * per step — kept unstored as the reference the driver trainer is
+    * pinned against (SimilaritySpec: identical (`cid`, `ce`) rows).
+    * Returns the collected rows, releasing its sample.
+    */
+  private[graft] def trainCentroidsSpark(corpus: DataFrame, nCentroids: Int,
+      iters: Int, trainN: Int, seedPlanes: Int, dim: Int): Array[Row] = {
+    val sp = centroidPlanes(nCentroids, seedPlanes)
+    val tr = trainingSample(corpus, "ivf:", trainN)
+    try {
+      // Bucket-exemplar seeding over the (small) sample: one sign table,
+      // exemplar = lowest (hk, vec_id) per bucket, biggest buckets first.
+      val buckets = signBuckets(tr.select(col("vec_id"), col("embedding")),
+          sp, tables = 1, dim = dim, tableOffset = -1)
+        .select(col("vec_id"), col("bucket"))
+        .join(tr.select(col("vec_id"), col("hk")), "vec_id")
+        .groupBy("bucket")
+        .agg(count(lit(1)).as("bsize"), min(struct(col("hk"), col("vec_id"))).as("ex"))
+      val wSeed = Window.orderBy(col("bsize").desc, col("bucket"))
+      val seeds = buckets.orderBy(col("bsize").desc, col("bucket")).limit(nCentroids)
+        .withColumn("cid", (row_number().over(wSeed) - 1).cast("long"))
+        .select(col("cid"), col("ex.vec_id").as("vec_id"))
+        .join(tr, "vec_id")
+        .select(col("cid"),
+          transform(col("embedding"), x => x.cast("double")).as("ce"))
+      (1 to iters).foldLeft(seeds) { (cents, _) =>
+        val assigned = cellArgmax(normed(tr, "vec_id", "embedding", "nrm"),
+          "vec_id", "embedding", "nrm", cents, "embedding", "nrm")
+        // SPHERICAL mean: average unit vectors (x/‖v‖), not raw
+        // components — the cosine-geometry centroid (centroid scale never
+        // matters downstream, only direction). On the synthetic corpus the
+        // norms are concentrated so raw and spherical measure the same
+        // (SCALE.md round-4 SIM table, IVF quantizer notes); on real
+        // corpora with heavy-tailed norms the raw mean is pulled toward
+        // high-norm members.
+        val updated = assigned
+          .select(col("cid"), col("nrm"), posexplode(col("embedding")).as(Seq("d", "x")))
+          .groupBy("cid", "d")
+          .agg(round(avg(col("x").cast("double") / col("nrm")), 6).as("cx"))
+          .groupBy("cid")
+          .agg(transform(array_sort(collect_list(struct(col("d"), col("cx")))),
+            s => s.getField("cx")).as("ce_new"))
+        // Keep the previous centroid when a cell EMPTIES (ce_new is null —
+        // the left join misses) or when the rounded spherical mean CANCELS
+        // to the zero vector (a zero-norm centroid has no direction: the
+        // downstream cosine divides by cn=0, and NaN ordering diverges
+        // between engines — Spark treats NaN as greatest, so such a cell
+        // would capture every vector). Both guards are mirrored in the
+        // q_sim3/q_sim5 oracle SQL.
+        cents.join(updated, Seq("cid"), "left")
+          .select(col("cid"),
+            coalesce(when(VF.normSq(col("ce_new")) > 0, col("ce_new")), col("ce"))
+              .as("ce"))
+      }.collect()
+    } finally tr.unpersist(blocking = false)
   }
 
   /** The `trainN` non-zero vectors of `corpus` with the lowest
@@ -739,14 +829,14 @@ object Similarity {
     * pseudo-random sample both engines reproduce, computed as a
     * distributed top-N (TakeOrderedAndProject), so the sample never
     * routes the corpus through one partition and never fully sorts it.
-    * PERSISTED: seeding references the sample several times and every
-    * Lloyd step once more — unpersisted, each reference re-scans the
-    * whole corpus to recompute the top-N (at 100 TB that is ~5 corpus
-    * scans for one training run); cached, training costs ONE corpus
-    * scan plus trainN-row work. The sample is bounded (trainN rows) so
+    * PERSISTED: a trainer reads the corpus through it exactly once —
+    * [[trainCentroids]] collects it (`trainN × dim` floats on the
+    * driver), [[trainPqCodebooks]]' seeding and every Lloyd step read it
+    * again (unpersisted, each reference would re-scan the whole corpus
+    * to recompute the top-N). The sample is bounded (trainN rows) so
     * the cache never outgrows a single executor's store;
     * MEMORY_AND_DISK spills rather than recomputes under pressure. The
-    * trainer releases it once its artifact is stored.
+    * trainer releases it once it is done with it.
     */
   private def trainingSample(corpus: DataFrame, salt: String,
       trainN: Int): DataFrame =
@@ -765,17 +855,21 @@ object Similarity {
     centroids.select(col("cid"), col("ce"), VF.l2Norm(col("ce")).as("cn"))
 
   /** Rounded cosine of vector `e` (norm `n`, id `id`) against the normed
-    * centroid on its row, failing loudly when the score is NULL: past
-    * the zero-norm filter that means the vector's length differs from
-    * the centroids' (the native dot is NULL on a length mismatch), and
-    * a NULL score would silently lose every argmax (cell 0 wins) and
-    * sort last in every probe — the same stance as [[lshTopK]]'s
-    * plan-time dim check.
+    * centroid on its row; NULL for a vector with no positive norm (no
+    * defined cosine — and under ANSI the division would throw), so
+    * callers drop NULL scores AFTER ranking: a `where(n > 0)` ahead of
+    * the scoring is pushed below the projection that defines `n` and
+    * evaluates every vector's norm twice. A NULL dot past the norm test
+    * means the vector's length differs from the centroids' (the native
+    * dot is NULL on a length mismatch) and fails loudly — a NULL score
+    * would silently lose every argmax (cell 0 wins) and sort last in
+    * every probe; the same stance as [[lshTopK]]'s plan-time dim check.
     */
   private def cellCos(id: String, e: String, n: String): Column =
-    coalesce(VF.roundedCosine(col(e), col("ce"), col(n), col("cn")),
-      raise_error(concat(lit("vector "), col(id).cast("string"),
-        lit(" does not match the centroid dimension"))))
+    when(col(n) > 0,
+      coalesce(VF.roundedCosine(col(e), col("ce"), col(n), col("cn")),
+        raise_error(concat(lit("vector "), col(id).cast("string"),
+          lit(" does not match the centroid dimension")))))
 
   /** The IVF cell argmax — the per-row cost of every index build: each
     * vector of `vecs` (id `id`, vector `e`, norm `n`) against the
@@ -786,18 +880,18 @@ object Similarity {
     * max has no mutable hash buffer, so it plans as a partial+final
     * SortAggregate) and there is no sort. The key is total, so ties go
     * to the lowest cid — identical to the rank-1 window the oracles
-    * replay. Zero-norm vectors (no defined cosine; under ANSI the
-    * division throws) drop first, and a vector of the wrong length
-    * fails loudly ([[cellCos]]). Returns (`id`, `carry`…, `cid`).
+    * replay. Zero-norm vectors (no defined cosine) score NULL and drop
+    * after the aggregate, and a vector of the wrong length fails loudly
+    * ([[cellCos]]). Returns (`id`, `carry`…, `cid`).
     */
   private[graft] def cellArgmax(vecs: DataFrame, id: String, e: String,
       n: String, centroids: DataFrame, carry: String*): DataFrame =
-    vecs.where(col(n) > 0)
-      .crossJoin(broadcast(normedCentroids(centroids)))
+    vecs.crossJoin(broadcast(normedCentroids(centroids)))
       .withColumn("ccos", cellCos(id, e, n))
       .groupBy(id)
       .agg(max(struct(col("ccos") +: (-col("cid")).as("negcid") +:
         carry.map(col): _*)).as("m"))
+      .where(col("m.ccos").isNotNull)
       .select((col(id) +: carry.map(c => col(s"m.$c").as(c))) :+
         (-col("m.negcid")).as("cid"): _*)
 
@@ -805,20 +899,19 @@ object Similarity {
     * — a row_number window over (rounded cosine desc, cid), so ties go
     * to the lowest cid (the order the oracles replay) — over
     * |queries|×nCentroids rows, the small side by construction. Same
-    * zero-norm filter and dimension guard as [[cellArgmax]]. Returns
-    * (`query_id`, `qe`, `carry`…, `qn`, `cid`, `ce`, `cn`, `ccos`,
-    * `crank`).
+    * zero-norm drop (after the window) and dimension guard as
+    * [[cellArgmax]]. Returns (`query_id`, `qe`, `carry`…, `qn`, `cid`,
+    * `ce`, `cn`, `ccos`, `crank`).
     */
   private[graft] def probeCells(queries: DataFrame, centroids: DataFrame,
       nProbe: Int, carry: Column*): DataFrame = {
     requireProbe(nProbe)
     normed(queries, "query_id", "qe", "qn", carry: _*)
-      .where(col("qn") > 0)
       .crossJoin(broadcast(normedCentroids(centroids)))
       .withColumn("ccos", cellCos("query_id", "qe", "qn"))
       .withColumn("crank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("ccos").desc, col("cid"))))
-      .where(col("crank") <= nProbe)
+      .where(col("crank") <= nProbe && col("ccos").isNotNull)
   }
 
   /** A probe depth below 1 selects no cell, so every result built on it
@@ -1460,7 +1553,7 @@ object Similarity {
     // returns the stored table), so the training sample is releasable
     // as soon as it returns; codebooks are m·ksub rows — the same tiny
     // train-once artifact class as the IVF centroids.
-    try storeArtifact("pq", artifactKey, Seq(m, ksub, iters, trainN, dim), trained)
+    try storeArtifact("pq", artifactKey, corpus, Seq(m, ksub, iters, trainN, dim))(trained)
     finally tr.unpersist(blocking = false)
   }
 

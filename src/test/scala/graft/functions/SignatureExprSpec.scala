@@ -146,6 +146,33 @@ class SignatureExprSpec extends SparkSpec {
     assert(native == expected)
   }
 
+  test("HyperplaneBuckets compiles under CODEGEN_ONLY and matches interpreted eval") {
+    val (planes, dim) = (6, 64)
+    val weights: Seq[Seq[Double]] =
+      (0 until 2 * planes).map(i => Seq.tabulate(dim)(d => math.sin(31.0 * i + d)))
+    val embs = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    def buckets(confs: (String, String)*): Map[Long, (Seq[Long], Seq[Long])] = {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        // Two instances in ONE projection — the multi-instance scope
+        // that breaks codegen without fresh locals.
+        embs.select(col("vec_id"),
+            SE.hyperplaneBuckets(col("embedding"), weights, planes, dim).as("a"),
+            SE.hyperplaneBuckets(col("embedding"), weights.reverse, planes, dim).as("b"))
+          .collect().map(r => r.getLong(0) -> ((r.getSeq[Long](1), r.getSeq[Long](2))))
+          .toMap
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val codegen = buckets("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = buckets("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(codegen.nonEmpty && codegen == interpreted)
+  }
+
   test("both signature expressions compile under CODEGEN_ONLY (no janino fallback)") {
     val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")

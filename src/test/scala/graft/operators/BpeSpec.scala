@@ -155,4 +155,54 @@ class BpeSpec extends SparkSpec {
     assert(e.getMessage.contains("no adjacent pairs"),
       "pruned vocab exhausts after the aaaa merges")
   }
+
+  test("learnMerges ≡ the distributed reference learner (sf0.01 corpus, fuse-quirk corpus)") {
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.01")
+    assert(merges(Bpe.learnMerges(docs, nMerges = 12)).toSeq ==
+      Bpe.learn(docs, nMerges = 12)._1)
+    val words =
+      Seq.fill(10)("ba") ++ Seq.fill(6)("aba") ++ Seq.fill(8)("ab") ++
+        Seq.fill(3)("xy")
+    val quirk = Seq((0L, words.mkString(" "))).toDF("doc_id", "text")
+    assert(merges(Bpe.learnMerges(quirk, nMerges = 3)).toSeq ==
+      Bpe.learn(quirk, nMerges = 3)._1)
+  }
+
+  test("tokenCounts after learnMerges trains nothing; rows equal the reference learner's per-word state") {
+    import org.apache.spark.sql.functions._
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    Bpe.learnMerges(docs, nMerges = 6).collect()
+    def bpe = Similarity.memoStats.getOrElse("art:bpe", (0L, 0L))
+    val (hits0, misses0) = bpe
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val got = rows(Bpe.tokenCounts(docs, nMerges = 6))
+    val (hits1, misses1) = bpe
+    assert(misses1 == misses0 && hits1 > hits0,
+      s"art:bpe ($hits0, $misses0) -> ($hits1, $misses1)")
+    // The reference: the distributed learner's final per-word state.
+    val state = Bpe.learn(docs, nMerges = 6)._2
+      .select(col("w"),
+        size(split(expr("substring(state, 2)"), " ")).cast("long").as("n_tok"))
+    val reference = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .where(col("w") =!= "")
+      .join(state, "w")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_words"),
+        sum(length(col("w")).cast("long")).as("n_chars"),
+        sum(col("n_tok")).as("n_tokens"))
+      .withColumn("compression",
+        round(col("n_chars").cast("double") / col("n_tokens"), 6))
+      .orderBy("doc_id")
+    assert(got.nonEmpty && got == rows(reference))
+  }
+
+  test("a cold learnMerges runs a bounded number of Spark jobs, not one per merge round") {
+    // One vocabulary collect, the artifact write and the rank-ordered
+    // read-back: 7 jobs measured; the job-per-round loop ran 19 for the
+    // same call.
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .where(org.apache.spark.sql.functions.col("doc_id") =!= -7L)
+    val jobs = jobsRun(Bpe.learnMerges(docs, nMerges = 6).collect())
+    assert(jobs <= 9, s"cold learnMerges ran $jobs jobs")
+  }
 }

@@ -378,6 +378,89 @@ class SimilaritySpec extends SparkSpec {
     assert(probed(3) == Set(7L, 4L, 5L))
   }
 
+  private def centroidRows(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+
+  /** The driver trainer's stored table, pinned row for row to the
+    * Spark-plan reference trained on the same corpus and parameters.
+    */
+  private def pinnedTrainer(corpus: org.apache.spark.sql.DataFrame,
+      nCentroids: Int, iters: Int, dim: Int) = {
+    val driver = centroidRows(Similarity.trainCentroids(corpus, nCentroids,
+      iters, trainN = 1024, seedPlanes = 6, dim = dim).collect())
+    val reference = centroidRows(Similarity.trainCentroidsSpark(corpus,
+      nCentroids, iters, trainN = 1024, seedPlanes = 6, dim = dim))
+    assert(driver == reference, s"driver:\n$driver\nreference:\n$reference")
+    driver
+  }
+
+  test("driver trainer ≡ the Spark Lloyd reference: sf0.01 at q_sim3's shape, clustered, planted duplicates, iters 0") {
+    val embs = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
+    assert(pinnedTrainer(embs, nCentroids = 16, iters = 2, dim = 64).size == 16)
+    assert(pinnedTrainer(clustered, nCentroids = 3, iters = 2, dim = 8).size == 3)
+    val planted = clustered.union(clustered.where(col("vec_id") < 5)
+      .select((col("vec_id") + 100).as("vec_id"), col("embedding")))
+    assert(pinnedTrainer(planted, nCentroids = 3, iters = 2, dim = 8).size == 3)
+    // iters = 0 is the seeding alone: every centroid is a corpus vector.
+    val seeds = pinnedTrainer(embs, nCentroids = 16, iters = 0, dim = 64)
+    val vectors = embs.collect().map(_.getSeq[Float](1).map(_.toDouble)).toSet
+    assert(seeds.size == 16 && seeds.forall(c => vectors(c._2)))
+  }
+
+  test("driver trainer ≡ reference when the sample fills fewer sign buckets than nCentroids") {
+    val cells = pinnedTrainer(clustered, nCentroids = 16, iters = 2, dim = 8)
+    assert(cells.nonEmpty && cells.size < 16, s"${cells.size} cells")
+  }
+
+  test("driver trainer ≡ reference through a Lloyd step that empties a cell") {
+    // a and b straddle seed plane 0 (table -1, plane 0), so they land in
+    // different sign buckets and seed different cells, yet their rounded
+    // cosine is 1.0: the first step assigns both to the lower cid and
+    // the other cell empties, keeping its seed (a raw vector of norm ≈ 2,
+    // which no spherical mean reproduces).
+    val dim = 8
+    val w0 = Similarity.planeWeights(-1, 0, dim)
+    val r = Array.tabulate(dim)(d => if (d % 2 == 0) 1.0 else 0.5 + d / 10.0)
+    val along = r.zip(w0).map { case (x, y) => x * y }.sum / w0.map(x => x * x).sum
+    val u = r.zip(w0).map { case (x, y) => x - along * y }
+    def straddle(sign: Double) = u.zip(w0).map { case (x, y) => (x + sign * 2e-5 * y).toFloat }.toSeq
+    val corpus = clustered.union(
+      Seq((100L, straddle(1.0)), (101L, straddle(-1.0))).toDF("vec_id", "embedding"))
+    val seeds = pinnedTrainer(corpus, nCentroids = 32, iters = 0, dim = dim).toMap
+    val step = pinnedTrainer(corpus, nCentroids = 32, iters = 1, dim = dim)
+    assert(step.exists { case (cid, ce) => seeds(cid) == ce },
+      s"one cell must empty and keep its seed: $step")
+    pinnedTrainer(corpus, nCentroids = 32, iters = 2, dim = dim)
+  }
+
+  test("the driver trainer fails a wrong-length vector as the reference does; an empty corpus trains no cells in either") {
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+    val bad = clustered.union(Seq((99L, Seq(1f, 2f, 3f))).toDF("vec_id", "embedding"))
+    val driver = intercept[Exception] {
+      Similarity.trainCentroids(bad, 3, iters = 2, trainN = 1024, dim = 8).collect()
+    }
+    val reference = intercept[Exception] {
+      Similarity.trainCentroidsSpark(bad, 3, iters = 2, trainN = 1024,
+        seedPlanes = 6, dim = 8)
+    }
+    for (e <- Seq(driver, reference))
+      assert(messages(e).exists(_.contains("embedding dim must be 8 (got 3)")), e.getMessage)
+    val empty = clustered.where(col("vec_id") < 0)
+    assert(pinnedTrainer(empty, nCentroids = 3, iters = 2, dim = 8).isEmpty)
+  }
+
+  test("a cold trainCentroids runs a bounded number of Spark jobs, not several per Lloyd step") {
+    // One sample collect, the artifact write and the read-back: 4 jobs
+    // measured; the Spark-plan Lloyd loop ran 37 for the same call.
+    val corpus = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .where(col("vec_id") =!= -7L)
+    val jobs = jobsRun {
+      Similarity.trainCentroids(corpus, 16, iters = 2, trainN = 1024, dim = 64).collect()
+    }
+    assert(jobs <= 6, s"cold trainCentroids ran $jobs jobs")
+  }
+
   test("appendToInt8Index ≡ rebuild on the union, given unchanged centroids/grid") {
     // 60-vector corpus; index built on the first 48, then 12 appended.
     val all = (0 until 60).map { id =>

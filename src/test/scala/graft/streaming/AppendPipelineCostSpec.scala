@@ -56,22 +56,6 @@ class AppendPipelineCostSpec extends SparkSpec {
     }
   }
 
-  /** Flush the async ExecutionListenerBus before registering a counter.
-    * Listener events deliver asynchronously: under full-suite load a
-    * PRE-registration query's onSuccess (e.g. the index-build write,
-    * whose plan scans the quantizer parquet) can arrive AFTER the
-    * counter registers and inflate its count — the exact flake a
-    * backlogged bus produced in a 31-suite run. waitUntilEmpty() is
-    * private[spark] (public bytecode), hence the reflective call.
-    */
-  private def drainListenerBus(): Unit = {
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .foreach(_.invoke(bus))
-  }
-
   test("int8AppendPipeline: quantizer plan executes once at construction, " +
       "never per batch") {
     val base = vecs(0 until 48).toDF("vec_id", "embedding")

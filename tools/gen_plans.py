@@ -44,9 +44,11 @@ set before lineitem (ADV-2),
 `TakeOrderedAndProject` for top-k (REL-14), no Window and partial+final
 `HashAggregate` pairs in the MinHash signature build (DD-5), the
 id-pair-only candidate dedup followed by vector join-back in the LSH ANN
-path (SIM-2), the persisted (`InMemoryTableScan`) k-means training plus the
-partial-before-exchange argmax aggregate (not a corpus-wide window)
-for IVF cell assignment (SIM-3), the same shapes over the native
+path (SIM-2), the trained centroids read from the artifact store
+(`graft_artifacts` parquet; training runs on the driver, outside the
+plan) plus the partial-before-exchange argmax aggregate (not a
+corpus-wide window) for IVF cell assignment, each vector's norm
+computed once in the scan-side projection (SIM-3), the same shapes over the native
 quantize_int8/int8_recon byte codes plus the rerank-depth window and
 candidate-only float join-back in the int8 index path (SIM-5), the
 append path re-using the same encode/assign shapes over the new batch
